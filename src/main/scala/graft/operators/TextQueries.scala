@@ -529,7 +529,10 @@ object TextQueries {
       .select(col("word"), col("wc"), col("pos"), col("sym"))
     val wOrd = Window.partitionBy(col("word")).orderBy(col("pos"))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    for (r <- 1 to BpeTrainRounds) {
+    // a corpus whose words are all one symbol (or have merged down to
+    // one) has no adjacent pair left: training ends with fewer rules
+    var exhausted = false
+    for (r <- 1 to BpeTrainRounds if !exhausted) {
       val withNext = frame.withColumn("next_sym", lead(col("sym"), 1).over(wOrd))
       // The round's winning pair is ONE row (guide §5 — bounded collect):
       // the old form kept it as a 1-row frame, which (a) re-ran the whole
@@ -539,32 +542,35 @@ object TextQueries {
       // round for the crossJoin. Collecting turns the merge step into
       // literal predicates and the final result into a local relation —
       // same rows, same order, integer-exact.
-      val Array(bestRow) = withNext.filter(col("next_sym").isNotNull)
+      val best = withNext.filter(col("next_sym").isNotNull)
         .groupBy(col("sym").as("bl"), col("next_sym").as("br"))
         .agg(sum(col("wc")).as("bc"))
         .orderBy(col("bc").desc, col("bl").asc, col("br").asc).limit(1)
         .collect()
-      val (bl, br, bc) = (bestRow.getString(0), bestRow.getString(1), bestRow.getLong(2))
-      merges += ((r.toLong, bl, br, bc))
-      val stepped = withNext
-        .withColumn("is_cand", coalesce(
-          col("sym") === lit(bl) && col("next_sym") === lit(br), lit(false)))
-        .withColumn("crank",
-          sum(when(col("is_cand"), 1L).otherwise(0L)).over(wOrd))
-        .withColumn("isl", col("pos") - col("crank"))
-      val wIsl = Window.partitionBy(col("word"), col("isl"))
-      frame = stepped
-        .withColumn("min_cand",
-          min(when(col("is_cand"), col("crank"))).over(wIsl))
-        .withColumn("keep",
-          col("is_cand") && (col("crank") - col("min_cand")) % 2 === 0)
-        .withColumn("prev_keep", lag(col("keep"), 1, false).over(wOrd))
-        .filter(!coalesce(col("prev_keep"), lit(false)))
-        .withColumn("sym",
-          when(col("keep"), concat(lit(bl), lit(br))).otherwise(col("sym")))
-        .withColumn("pos", row_number().over(wOrd).cast(LongType))
-        .select(col("word"), col("wc"), col("pos"), col("sym"))
-        .localCheckpoint()
+      if (best.isEmpty) exhausted = true
+      else {
+        val (bl, br, bc) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+        merges += ((r.toLong, bl, br, bc))
+        val stepped = withNext
+          .withColumn("is_cand", coalesce(
+            col("sym") === lit(bl) && col("next_sym") === lit(br), lit(false)))
+          .withColumn("crank",
+            sum(when(col("is_cand"), 1L).otherwise(0L)).over(wOrd))
+          .withColumn("isl", col("pos") - col("crank"))
+        val wIsl = Window.partitionBy(col("word"), col("isl"))
+        frame = stepped
+          .withColumn("min_cand",
+            min(when(col("is_cand"), col("crank"))).over(wIsl))
+          .withColumn("keep",
+            col("is_cand") && (col("crank") - col("min_cand")) % 2 === 0)
+          .withColumn("prev_keep", lag(col("keep"), 1, false).over(wOrd))
+          .filter(!coalesce(col("prev_keep"), lit(false)))
+          .withColumn("sym",
+            when(col("keep"), concat(lit(bl), lit(br))).otherwise(col("sym")))
+          .withColumn("pos", row_number().over(wOrd).cast(LongType))
+          .select(col("word"), col("wc"), col("pos"), col("sym"))
+          .localCheckpoint()
+      }
     }
     import s.implicits._
     merges.toSeq.toDF("round", "merge_left", "merge_right", "pair_count")

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import java.io.ByteArrayOutputStream
-import java.nio.ByteBuffer
+import java.io.OutputStream
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Arrays
 
 /** AMQP 1.0 wire codec (OASIS AMQP v1.0 §1 "types", §2.4 "framing",
   * §2.7 "performatives", §3.2 "message format") — the piece the
@@ -35,6 +35,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   * output bit-for-bit (property-tested in Amqp10CodecPropertySpec:
   * decode∘encode = id and encode∘decode∘encode = encode over the full
   * value model, frames, and bare messages).
+  *
+  * Message sections skip that value model: a transfer payload is
+  * written from the [[AmqpMessage]] fields straight into one growable
+  * array, and read back field by field from the frame array it arrived
+  * in, building only the final message.
   */
 object Amqp10Codec {
 
@@ -73,78 +78,112 @@ object Amqp10Codec {
   }
 
   // ------------------------------------------------------------- encoding
-  final class Writer {
-    private val out = new ByteArrayOutputStream(256)
-    def bytes: Array[Byte] = out.toByteArray
-    def u8(v: Int): Writer = { out.write(v & 0xff); this }
-    def u16(v: Int): Writer = { u8(v >>> 8); u8(v) }
-    def u32(v: Long): Writer = { u16((v >>> 16).toInt); u16(v.toInt) }
+  /** Unsynchronized growable byte array. A list or map writes its
+    * content in place after a reserved 32-bit header
+    * ([[beginCompound]]); when the content turns out to fit the 8-bit
+    * form, [[endCompound]] shifts it down over the unused header bytes.
+    * Every value is thus written once, with no nested buffer to copy. */
+  final class Writer(initialCapacity: Int = 256) {
+    private var buf = new Array[Byte](initialCapacity)
+    private var pos = 0
+    def size: Int = pos
+    def bytes: Array[Byte] = Arrays.copyOf(buf, pos)
+    def copyRange(from: Int, until: Int): Array[Byte] = Arrays.copyOfRange(buf, from, until)
+    /** Drop everything from byte `n` on (`truncate(0)` empties it). */
+    def truncate(n: Int): Unit = { require(n >= 0 && n <= pos, s"truncate($n) of $pos bytes"); pos = n }
+    /** Hand everything written to `out` and start over empty. */
+    def drainTo(out: OutputStream): Unit = { out.write(buf, 0, pos); pos = 0 }
+    /** Read back what was written, without copying it. */
+    def reader: Reader = new Reader(buf, 0, pos)
+
+    private def ensure(n: Int): Unit =
+      if (n > buf.length - pos) buf = Arrays.copyOf(buf, math.max(buf.length * 2, pos + n))
+    def u8(v: Int): Writer = { ensure(1); buf(pos) = v.toByte; pos += 1; this }
+    def u16(v: Int): Writer = {
+      ensure(2); buf(pos) = (v >>> 8).toByte; buf(pos + 1) = v.toByte; pos += 2; this
+    }
+    def u32(v: Long): Writer = { ensure(4); putU32(pos, v); pos += 4; this }
     def u64(v: Long): Writer = { u32(v >>> 32); u32(v) }
-    def raw(bs: Array[Byte]): Writer = { out.write(bs, 0, bs.length); this }
+    def raw(bs: Array[Byte]): Writer = raw(bs, 0, bs.length)
+    def raw(bs: Array[Byte], off: Int, len: Int): Writer = {
+      ensure(len); System.arraycopy(bs, off, buf, pos, len); pos += len; this
+    }
+    /** Overwrite the four bytes at `at` (a field reserved earlier). */
+    def putU32(at: Int, v: Long): Unit = {
+      buf(at) = (v >>> 24).toByte; buf(at + 1) = (v >>> 16).toByte
+      buf(at + 2) = (v >>> 8).toByte; buf(at + 3) = v.toByte
+    }
+
+    /** Reserve constructor + size32 + count32; returns where content starts. */
+    def beginCompound(): Int = { ensure(9); pos += 9; pos }
+    /** Fill the header reserved by [[beginCompound]] for `count`
+      * elements: the 8-bit form `small size8 count8` when size (count
+      * byte + content) and count fit a byte, else `large size32 count32`. */
+    def endCompound(contentStart: Int, count: Int, small: Int, large: Int): Unit = {
+      val start = contentStart - 9
+      val len = pos - contentStart
+      if (len + 1 <= 255 && count <= 255) {
+        buf(start) = small.toByte; buf(start + 1) = (len + 1).toByte; buf(start + 2) = count.toByte
+        System.arraycopy(buf, contentStart, buf, start + 3, len)
+        pos -= 6
+      } else {
+        buf(start) = large.toByte
+        putU32(start + 1, len + 4L)
+        putU32(start + 5, count.toLong)
+      }
+    }
   }
 
   def encode(v: Any): Array[Byte] = { val w = new Writer; writeValue(w, v); w.bytes }
+
+  private def writeVariable(w: Writer, small: Int, large: Int, bs: Array[Byte]): Unit =
+    if (bs.length <= 255) w.u8(small).u8(bs.length).raw(bs)
+    else w.u8(large).u32(bs.length.toLong).raw(bs)
+
+  private def writeString(w: Writer, s: String): Unit =
+    if (s == null) w.u8(0x40) else writeVariable(w, 0xa1, 0xb1, s.getBytes(UTF_8))
+
+  private def writeSymbol(w: Writer, s: String): Unit =
+    writeVariable(w, 0xa3, 0xb3, s.getBytes(UTF_8))
+
+  private def writeInt(w: Writer, i: Int): Unit =
+    if (i >= -128 && i <= 127) w.u8(0x54).u8(i)
+    else w.u8(0x71).u32(i.toLong & 0xffffffffL)
+
+  private def writeLong(w: Writer, l: Long): Unit =
+    if (l >= -128 && l <= 127) w.u8(0x55).u8(l.toInt)
+    else w.u8(0x81).u64(l)
+
+  private def writeUInt(w: Writer, u: Long): Unit =
+    if (u == 0L) w.u8(0x43)
+    else if (u <= 255L) w.u8(0x52).u8(u.toInt)
+    else w.u8(0x70).u32(u)
 
   def writeValue(w: Writer, v: Any): Unit = v match {
     case null => w.u8(0x40)
     case b: java.lang.Boolean => w.u8(if (b) 0x41 else 0x42)
     case UByte(b) => w.u8(0x50).u8(b)
     case UShort(s) => w.u8(0x60).u16(s)
-    case UInt(u) =>
-      if (u == 0L) w.u8(0x43)
-      else if (u <= 255L) w.u8(0x52).u8(u.toInt)
-      else w.u8(0x70).u32(u)
+    case UInt(u) => writeUInt(w, u)
     case ULong(u) =>
       if (u == 0L) w.u8(0x44)
       else if (u >= 0 && u <= 255L) w.u8(0x53).u8(u.toInt)
       else w.u8(0x80).u64(u)
-    case i: Int =>
-      if (i >= -128 && i <= 127) w.u8(0x54).u8(i)
-      else w.u8(0x71).u32(i.toLong & 0xffffffffL)
-    case l: Long =>
-      if (l >= -128 && l <= 127) w.u8(0x55).u8(l.toInt)
-      else w.u8(0x81).u64(l)
+    case i: Int => writeInt(w, i)
+    case l: Long => writeLong(w, l)
     case f: Float => w.u8(0x72).u32(java.lang.Float.floatToIntBits(f).toLong & 0xffffffffL)
     case d: Double => w.u8(0x82).u64(java.lang.Double.doubleToLongBits(d))
     case Ts(ms) => w.u8(0x83).u64(ms)
     case u: java.util.UUID =>
       w.u8(0x98).u64(u.getMostSignificantBits).u64(u.getLeastSignificantBits)
-    case bs: Array[Byte] =>
-      if (bs.length <= 255) w.u8(0xa0).u8(bs.length).raw(bs)
-      else { w.u8(0xb0).u32(bs.length.toLong); w.raw(bs) }
-    case s: String =>
-      val bs = s.getBytes(UTF_8)
-      if (bs.length <= 255) w.u8(0xa1).u8(bs.length).raw(bs)
-      else { w.u8(0xb1).u32(bs.length.toLong); w.raw(bs) }
-    case Sym(s) =>
-      val bs = s.getBytes(UTF_8)
-      if (bs.length <= 255) w.u8(0xa3).u8(bs.length).raw(bs)
-      else { w.u8(0xb3).u32(bs.length.toLong); w.raw(bs) }
-    case xs: Seq[_] =>
-      if (xs.isEmpty) { w.u8(0x45); () }
-      else {
-        val body = new Writer
-        xs.foreach(writeValue(body, _))
-        val content = body.bytes
-        // list8: size counts the count byte itself plus the content
-        if (content.length + 1 <= 255 && xs.size <= 255)
-          w.u8(0xc0).u8(content.length + 1).u8(xs.size).raw(content)
-        else {
-          w.u8(0xd0).u32(content.length.toLong + 4).u32(xs.size.toLong)
-          w.raw(content)
-        }
-      }
+    case bs: Array[Byte] => writeVariable(w, 0xa0, 0xb0, bs)
+    case s: String => writeString(w, s)
+    case Sym(s) => writeSymbol(w, s)
+    case xs: Seq[_] => writeList(w, xs, writeValue(w, _))
     case AmqpWireMap(entries) =>
-      val body = new Writer
-      entries.foreach { case (k, x) => writeValue(body, k); writeValue(body, x) }
-      val content = body.bytes
-      val n = entries.size * 2
-      if (content.length + 1 <= 255 && n <= 255)
-        w.u8(0xc1).u8(content.length + 1).u8(n).raw(content)
-      else {
-        w.u8(0xd1).u32(content.length.toLong + 4).u32(n.toLong)
-        w.raw(content)
-      }
+      val at = w.beginCompound()
+      entries.foreach { case (k, x) => writeValue(w, k); writeValue(w, x) }
+      w.endCompound(at, entries.size * 2, 0xc1, 0xd1)
     case Described(d, value) =>
       w.u8(0x00)
       writeValue(w, d)
@@ -153,65 +192,130 @@ object Amqp10Codec {
       throw new IllegalArgumentException(s"cannot AMQP-encode ${other.getClass}: $other")
   }
 
+  /** Write a Scala model value (a message property, annotation or
+    * amqp-value body): Short/Byte widen to int, a non-empty Seq of pairs
+    * is a map, any other Seq or Array a list, a [[Described]] passes
+    * through, and an unknown type is stringified, as the reference does. */
+  private def writeModel(w: Writer, v: Any): Unit = v match {
+    case null => w.u8(0x40)
+    case d: Described => writeValue(w, d)
+    case s: String => writeString(w, s)
+    case b: Boolean => w.u8(if (b) 0x41 else 0x42)
+    case i: Int => writeInt(w, i)
+    case l: Long => writeLong(w, l)
+    case sh: Short => writeInt(w, sh.toInt)
+    case by: Byte => writeInt(w, by.toInt)
+    case f: Float => writeValue(w, f)
+    case d: Double => writeValue(w, d)
+    case bs: Array[Byte] => writeVariable(w, 0xa0, 0xb0, bs)
+    case entries: Seq[_] if entries.nonEmpty && entries.head.isInstanceOf[(_, _)] =>
+      val at = w.beginCompound()
+      var n = 0
+      entries.foreach { case (k, x) => writeModel(w, k); writeModel(w, x); n += 2 }
+      w.endCompound(at, n, 0xc1, 0xd1)
+    case xs: Seq[_] => writeList(w, xs, writeModel(w, _))
+    case xs: Array[_] => writeList(w, xs.toSeq, writeModel(w, _))
+    case other => writeString(w, other.toString) // reference stringifies unknown types
+  }
+
+  /** list0 when empty, else list8/list32 of `each` applied per element. */
+  private def writeList(w: Writer, xs: Seq[_], each: Any => Unit): Unit =
+    if (xs.isEmpty) w.u8(0x45)
+    else {
+      val at = w.beginCompound()
+      var n = 0
+      xs.foreach { x => each(x); n += 1 }
+      w.endCompound(at, n, 0xc0, 0xd0)
+    }
+
   // ------------------------------------------------------------- decoding
-  final class Reader(buf: ByteBuffer) {
-    def this(bs: Array[Byte]) = this(ByteBuffer.wrap(bs))
-    def hasRemaining: Boolean = buf.hasRemaining
-    def u8(): Int = buf.get() & 0xff
-    def u16(): Int = (u8() << 8) | u8()
-    def u32(): Long = (u16().toLong << 16) | u16().toLong
-    def u64(): Long = (u32() << 32) | u32()
-    def raw(n: Int): Array[Byte] = { val bs = new Array[Byte](n); buf.get(bs); bs }
+  /** Reads values out of `buf[pos, end)`. Every length taken off the
+    * wire is checked against `end` before it is used: a size field that
+    * points past the end of the frame throws instead of reading on. */
+  final class Reader(buf: Array[Byte], private var pos: Int, end: Int) {
+    def this(bs: Array[Byte]) = this(bs, 0, bs.length)
+    def hasRemaining: Boolean = pos < end
+    def position: Int = pos
+
+    /** A length, size or count field: at most the bytes still unread
+      * (every counted element and every sized byte takes at least one). */
+    def bounded(n: Long): Int = { if (n < 0 || n > end - pos) overrun(n); n.toInt }
+    /** Claim the next `n` bytes; returns where they start. */
+    private def take(n: Int): Int = {
+      if (n < 0 || n > end - pos) overrun(n)
+      val p = pos
+      pos += n
+      p
+    }
+    private def overrun(n: Long): Nothing = throw new IllegalArgumentException(
+      s"AMQP length $n points past the end of the frame (${end - pos} bytes left)")
+    def u8(): Int = buf(take(1)) & 0xff
+    def u16(): Int = { val p = take(2); ((buf(p) & 0xff) << 8) | (buf(p + 1) & 0xff) }
+    def u32(): Long = { val p = take(4); int32(p) & 0xffffffffL }
+    def u64(): Long = { val p = take(8); (int32(p).toLong << 32) | (int32(p + 4) & 0xffffffffL) }
+    private def int32(p: Int): Int =
+      ((buf(p) & 0xff) << 24) | ((buf(p + 1) & 0xff) << 16) |
+        ((buf(p + 2) & 0xff) << 8) | (buf(p + 3) & 0xff)
+    def skip(n: Int): Unit = take(n)
+    def raw(n: Int): Array[Byte] = { val p = take(n); Arrays.copyOfRange(buf, p, p + n) }
+    def utf8(n: Int): String = { val p = take(n); new String(buf, p, n, UTF_8) }
   }
 
   def decode(bs: Array[Byte]): Any = readValue(new Reader(bs))
 
-  def readValue(r: Reader): Any = {
-    val c = r.u8()
-    c match {
-      case 0x00 =>
-        val d = readValue(r)
-        Described(d, readValue(r))
-      case 0x40 => null
-      case 0x41 => java.lang.Boolean.TRUE
-      case 0x42 => java.lang.Boolean.FALSE
-      case 0x56 => java.lang.Boolean.valueOf(r.u8() != 0)
-      case 0x50 => UByte(r.u8())
-      case 0x60 => UShort(r.u16())
-      case 0x43 => UInt(0L)
-      case 0x52 => UInt(r.u8().toLong)
-      case 0x70 => UInt(r.u32())
-      case 0x44 => ULong(0L)
-      case 0x53 => ULong(r.u8().toLong)
-      case 0x80 => ULong(r.u64())
-      case 0x51 => r.u8().toByte.toInt
-      case 0x61 => r.u16().toShort.toInt
-      case 0x54 => r.u8().toByte.toInt
-      case 0x71 => r.u32().toInt
-      case 0x55 => r.u8().toByte.toLong
-      case 0x81 => r.u64()
-      case 0x72 => java.lang.Float.intBitsToFloat(r.u32().toInt)
-      case 0x82 => java.lang.Double.longBitsToDouble(r.u64())
-      case 0x83 => Ts(r.u64())
-      case 0x98 => new java.util.UUID(r.u64(), r.u64())
-      case 0xa0 => r.raw(r.u8())
-      case 0xb0 => r.raw(r.u32().toInt)
-      case 0xa1 => new String(r.raw(r.u8()), UTF_8)
-      case 0xb1 => new String(r.raw(r.u32().toInt), UTF_8)
-      case 0xa3 => Sym(new String(r.raw(r.u8()), UTF_8))
-      case 0xb3 => Sym(new String(r.raw(r.u32().toInt), UTF_8))
-      case 0x45 => Vector.empty[Any]
-      case 0xc0 => { r.u8(); val n = r.u8(); Vector.fill(n)(readValue(r)) }
-      case 0xd0 => { r.u32(); val n = r.u32().toInt; Vector.fill(n)(readValue(r)) }
-      case 0xc1 =>
-        r.u8(); val n = r.u8()
-        AmqpWireMap(Vector.fill(n / 2)((readValue(r), readValue(r))))
-      case 0xd1 =>
-        r.u32(); val n = r.u32().toInt
-        AmqpWireMap(Vector.fill(n / 2)((readValue(r), readValue(r))))
-      case other =>
-        throw new IllegalArgumentException(f"unsupported AMQP constructor 0x$other%02x")
-    }
+  def readValue(r: Reader): Any = readValueWith(r, r.u8())
+
+  /** Read the value whose constructor byte `c` was already consumed. */
+  private def readValueWith(r: Reader, c: Int): Any = c match {
+    case 0x00 =>
+      val d = readValue(r)
+      Described(d, readValue(r))
+    case 0x40 => null
+    case 0x41 => java.lang.Boolean.TRUE
+    case 0x42 => java.lang.Boolean.FALSE
+    case 0x56 => java.lang.Boolean.valueOf(r.u8() != 0)
+    case 0x50 => UByte(r.u8())
+    case 0x60 => UShort(r.u16())
+    case 0x43 => UInt(0L)
+    case 0x52 => UInt(r.u8().toLong)
+    case 0x70 => UInt(r.u32())
+    case 0x44 => ULong(0L)
+    case 0x53 => ULong(r.u8().toLong)
+    case 0x80 => ULong(r.u64())
+    case 0x51 => r.u8().toByte.toInt
+    case 0x61 => r.u16().toShort.toInt
+    case 0x54 => r.u8().toByte.toInt
+    case 0x71 => r.u32().toInt
+    case 0x55 => r.u8().toByte.toLong
+    case 0x81 => r.u64()
+    case 0x72 => java.lang.Float.intBitsToFloat(r.u32().toInt)
+    case 0x82 => java.lang.Double.longBitsToDouble(r.u64())
+    case 0x83 => Ts(r.u64())
+    case 0x98 => new java.util.UUID(r.u64(), r.u64())
+    case 0xa0 => r.raw(r.u8())
+    case 0xb0 => r.raw(r.bounded(r.u32()))
+    case 0xa1 => r.utf8(r.u8())
+    case 0xb1 => r.utf8(r.bounded(r.u32()))
+    case 0xa3 => Sym(r.utf8(r.u8()))
+    case 0xb3 => Sym(r.utf8(r.bounded(r.u32())))
+    case 0x45 | 0xc0 | 0xd0 =>
+      val n = readCount(r, c)
+      Vector.fill(n)(readValue(r))
+    case 0xc1 | 0xd1 =>
+      val n = readCount(r, c)
+      AmqpWireMap(Vector.fill(n / 2)((readValue(r), readValue(r))))
+    case other =>
+      throw new IllegalArgumentException(f"unsupported AMQP constructor 0x$other%02x")
+  }
+
+  /** Element count of the list (0x45/0xc0/0xd0) or map (0xc1/0xd1)
+    * whose constructor `c` was consumed; its size field is checked
+    * against the frame, its content is left to read. */
+  private def readCount(r: Reader, c: Int): Int = c match {
+    case 0x45 => 0
+    case 0xc0 | 0xc1 => r.bounded(r.u8()); r.bounded(r.u8())
+    case 0xd0 | 0xd1 => r.bounded(r.u32()); r.bounded(r.u32())
+    case other => throw new IllegalArgumentException(f"expected a list or map, got 0x$other%02x")
   }
 
   // -------------------------------------------------- frames & performatives
@@ -223,19 +327,51 @@ object Amqp10Codec {
   val HeaderAmqp: Array[Byte] = Array[Byte]('A', 'M', 'Q', 'P', 0, 1, 0, 0)
   val HeaderSasl: Array[Byte] = Array[Byte]('A', 'M', 'Q', 'P', 3, 1, 0, 0)
 
-  case class Frame(frameType: Int, channel: Int, performative: Described,
-      payload: Array[Byte])
+  /** One frame. Its payload is `buf[payloadStart, payloadEnd)`: a
+    * decoded frame keeps the payload in the array the frame was read
+    * into, so a transfer's message decodes in place ([[payloadReader]]). */
+  final class Frame(val frameType: Int, val channel: Int, val performative: Described,
+      buf: Array[Byte], payloadStart: Int, payloadEnd: Int) {
+    def payloadLength: Int = payloadEnd - payloadStart
+    /** The payload as its own array (a copy unless the frame owns `buf` whole). */
+    def payload: Array[Byte] =
+      if (payloadStart == 0 && payloadEnd == buf.length) buf
+      else Arrays.copyOfRange(buf, payloadStart, payloadEnd)
+    def payloadReader: Reader = new Reader(buf, payloadStart, payloadEnd)
+    def appendPayload(w: Writer): Unit = w.raw(buf, payloadStart, payloadLength)
+    def writeTo(w: Writer): Unit = {
+      val start = beginFrame(w, frameType, channel, performative)
+      appendPayload(w)
+      endFrame(w, start)
+    }
+  }
+  object Frame {
+    def apply(frameType: Int, channel: Int, performative: Described,
+        payload: Array[Byte]): Frame =
+      new Frame(frameType, channel, performative, payload, 0, payload.length)
+  }
 
   /** Frame = size(4) doff(1, =2: no extended header) type(1) channel(2)
-    * body. Body = performative (described list) ++ payload. */
+    * body. Body = performative (described list) ++ payload. Writes all
+    * but the size, which [[endFrame]] fills once the payload is written;
+    * returns the frame's start. */
+  def beginFrame(w: Writer, frameType: Int, channel: Int, performative: Described): Int = {
+    val start = w.size
+    w.u32(0L).u8(2).u8(frameType).u16(channel)
+    writeValue(w, performative)
+    start
+  }
+
+  def endFrame(w: Writer, start: Int): Unit = w.putU32(start, (w.size - start).toLong)
+
   def encodeFrame(f: Frame): Array[Byte] = {
-    val body = encode(f.performative) ++ f.payload
-    val w = new Writer
-    w.u32(8L + body.length).u8(2).u8(f.frameType).u16(f.channel).raw(body)
+    val w = new Writer(64 + f.payloadLength)
+    f.writeTo(w)
     w.bytes
   }
 
-  /** Decode one frame from its full bytes (size prefix included). */
+  /** Decode one frame from its full bytes (size prefix included). The
+    * frame's payload stays in `bs`. */
   def decodeFrame(bs: Array[Byte]): Frame = {
     val r = new Reader(bs)
     val size = r.u32()
@@ -243,13 +379,9 @@ object Amqp10Codec {
     val doff = r.u8()
     val ftype = r.u8()
     val channel = r.u16()
-    r.raw(doff * 4 - 8) // extended header, unused
-    val buf = ByteBuffer.wrap(bs, doff * 4, bs.length - doff * 4)
-    val rr = new Reader(buf)
-    val perf = readValue(rr).asInstanceOf[Described]
-    val payload = new Array[Byte](buf.remaining())
-    buf.get(payload)
-    Frame(ftype, channel, perf, payload)
+    r.skip(doff * 4 - 8) // extended header, unused
+    val perf = readValue(r).asInstanceOf[Described]
+    new Frame(ftype, channel, perf, bs, r.position, bs.length)
   }
 
   /** §2.7 / §3.2 / §4.5 / §5.3 descriptor codes. */
@@ -315,53 +447,82 @@ object Amqp10Codec {
     case other => throw new IllegalArgumentException(s"symbolic descriptor: $other")
   }
 
-  /** Tolerant form for message sections: an unknown (e.g. custom
-    * vendor-symbol) descriptor maps to -1 so the section is skipped
-    * instead of failing the whole message. */
-  private def descriptorCodeOrUnknown(d: Described): Long = d.descriptor match {
-    case ULong(c) => c
-    case UInt(c) => c
-    case Sym(n) => SymbolicDescriptors.getOrElse(n, -1L)
-    case _ => -1L
-  }
-
   /** Performative field access with trailing-null tolerance. */
-  def field(d: Described, i: Int): Any = d.value match {
+  def field(d: Described, i: Int): Any = listField(d.value, i)
+
+  private def listField(list: Any, i: Int): Any = list match {
     case xs: Vector[_] => if (i < xs.length) xs(i) else null
     case other => throw new IllegalArgumentException(s"not a list performative: $other")
   }
 
   // ------------------------------------------------------ message sections
-  /** Encode an [[AmqpMessage]] as an AMQP 1.0 bare message (§3.2):
-    * message-annotations, properties, application-properties, then the
-    * body section. Delivery annotations carry transport metadata added
-    * by the endpoint (e.g. the assigned sequence number), not here. */
   /** Annotation marking a body that is pre-serialized JSON text (an
     * [[AmqpJsonBody]] from a sink round-trip) rather than a plain string
     * amqp-value — provenance the envelope's body_type column preserves. */
   val JsonBodyAnnotation = "x-graft-body-json"
 
-  /** Delivery annotations + bare message in ONE buffer — the transfer
-    * payload both produce paths send per message; fusing the two
-    * encodes avoids an extra array and copy on the hot path. */
+  /** Delivery annotations + bare message: the transfer payload both
+    * produce paths send per message. §3.2 section order: header,
+    * delivery-annotations, then the bare message — the header must lead
+    * the TRANSFER payload too, not just a standalone encode, or a
+    * spec-compliant peer parsing sections in order drops the ttl. */
+  def writeTransferPayload(w: Writer, deliveryAnns: Seq[(String, Any)], m: AmqpMessage): Unit = {
+    writeHeader(w, m)
+    writeMapSection(w, Desc.DeliveryAnnotations, deliveryAnns)
+    writeBareSections(w, m)
+  }
+
   def encodeTransferPayload(deliveryAnns: Seq[(String, Any)], m: AmqpMessage): Array[Byte] = {
     val w = new Writer
-    // §3.2 section order: header, delivery-annotations, then the bare
-    // message — the header must lead the TRANSFER payload too, not just
-    // a standalone encode, or a spec-compliant peer parsing sections in
-    // order drops the ttl.
-    writeHeader(w, m)
-    writeValue(w, Described(ULong(Desc.DeliveryAnnotations),
-      AmqpWireMap(deliveryAnns.map { case (k, v) => (Sym(k): Any, anyToWire(v)) }.toVector)))
-    writeBareSections(w, m)
+    writeTransferPayload(w, deliveryAnns, m)
     w.bytes
+  }
+
+  /** Encode an [[AmqpMessage]] as an AMQP 1.0 bare message (§3.2):
+    * message-annotations, properties, application-properties, then the
+    * body section (led by the header when the message has a ttl).
+    * Delivery annotations carry transport metadata added by the
+    * endpoint (e.g. the assigned sequence number), not here. */
+  def writeMessage(w: Writer, m: AmqpMessage): Unit = {
+    writeHeader(w, m)
+    writeBareSections(w, m)
   }
 
   def encodeMessage(m: AmqpMessage): Array[Byte] = {
     val w = new Writer
-    writeHeader(w, m)
-    writeBareSections(w, m)
+    writeMessage(w, m)
     w.bytes
+  }
+
+  /** Delivery annotations (§3.2.2) prepended to a bare message: the
+    * transport-metadata channel an endpoint uses for e.g. the assigned
+    * sequence number — consumed by the peer, never part of the bare
+    * message the application sees. */
+  def encodeDeliveryAnnotations(entries: Seq[(String, Any)]): Array[Byte] = {
+    val w = new Writer
+    writeMapSection(w, Desc.DeliveryAnnotations, entries)
+    w.bytes
+  }
+
+  /** `0x00` + the section's descriptor as a smallulong. */
+  private def writeSectionStart(w: Writer, code: Long): Unit =
+    w.u8(0x00).u8(0x53).u8(code.toInt)
+
+  /** A map section of model values: symbol keys for annotations, string
+    * keys for application properties. The JSON-body marker, when asked
+    * for, is its last entry. */
+  private def writeMapSection(w: Writer, code: Long, entries: Seq[(String, Any)],
+      symbolKeys: Boolean = true, jsonMarker: Boolean = false): Unit = {
+    writeSectionStart(w, code)
+    val at = w.beginCompound()
+    var n = 0
+    entries.foreach { case (k, v) =>
+      if (symbolKeys) writeSymbol(w, k) else writeString(w, k)
+      writeModel(w, v)
+      n += 2
+    }
+    if (jsonMarker) { writeSymbol(w, JsonBodyAnnotation); w.u8(0x41); n += 2 }
+    w.endCompound(at, n, 0xc1, 0xd1)
   }
 
   /** §3.2: the header section, when present, precedes every other
@@ -370,59 +531,49 @@ object Amqp10Codec {
   private def writeHeader(w: Writer, m: AmqpMessage): Unit =
     m.ttlMillis.foreach { t =>
       require(t >= 0 && t <= 0xFFFFFFFFL, s"ttl out of uint range: $t")
-      writeValue(w, described(Desc.Header, null, null, UInt(t)))
+      writeSectionStart(w, Desc.Header)
+      val at = w.beginCompound()
+      w.u8(0x40).u8(0x40)
+      writeUInt(w, t)
+      w.endCompound(at, 3, 0xc0, 0xd0)
     }
 
   private def writeBareSections(w: Writer, m: AmqpMessage): Unit = {
-    val anns = m.body match {
-      case AmqpJsonBody(_) => m.messageAnnotations :+ (JsonBodyAnnotation -> true)
-      case _ => m.messageAnnotations
-    }
-    if (anns.nonEmpty)
-      writeValue(w, Described(ULong(Desc.MessageAnnotations),
-        AmqpWireMap(anns.map { case (k, v) => (Sym(k): Any, anyToWire(v)) }.toVector)))
+    val json = m.body.isInstanceOf[AmqpJsonBody]
+    if (m.messageAnnotations.nonEmpty || json)
+      writeMapSection(w, Desc.MessageAnnotations, m.messageAnnotations, jsonMarker = json)
     if (m.messageId.isDefined || m.to.isDefined || m.subject.isDefined ||
-        m.replyTo.isDefined || m.correlationId.isDefined)
-      writeValue(w, described(Desc.Properties,
-        m.messageId.orNull, null /* user-id */, m.to.orNull, m.subject.orNull,
-        m.replyTo.orNull, m.correlationId.orNull))
+        m.replyTo.isDefined || m.correlationId.isDefined) {
+      // §1.4: trailing null fields are omitted; user-id (field 1) is null
+      val fields = Array[String](m.messageId.orNull, null, m.to.orNull, m.subject.orNull,
+        m.replyTo.orNull, m.correlationId.orNull)
+      var count = fields.length
+      while (count > 0 && fields(count - 1) == null) count -= 1
+      writeSectionStart(w, Desc.Properties)
+      if (count == 0) w.u8(0x45)
+      else {
+        val at = w.beginCompound()
+        var i = 0
+        while (i < count) { writeString(w, fields(i)); i += 1 }
+        w.endCompound(at, count, 0xc0, 0xd0)
+      }
+    }
     if (m.applicationProperties.nonEmpty)
-      writeValue(w, Described(ULong(Desc.ApplicationProperties),
-        AmqpWireMap(m.applicationProperties.map { case (k, v) => (k: Any, anyToWire(v)) }.toVector)))
+      writeMapSection(w, Desc.ApplicationProperties, m.applicationProperties, symbolKeys = false)
     m.body match {
-      case AmqpValueBody(v) => writeValue(w, Described(ULong(Desc.AmqpValue), anyToWire(v)))
+      case AmqpValueBody(v) => writeSectionStart(w, Desc.AmqpValue); writeModel(w, v)
       case AmqpJsonBody(j) =>
         // provenance rides the JsonBodyAnnotation added above, so a
         // source→sink→source wire hop keeps body_type stable
-        writeValue(w, Described(ULong(Desc.AmqpValue), j))
-      case AmqpDataBody(bs) => writeValue(w, Described(ULong(Desc.Data), bs))
-      case AmqpOtherBody => writeValue(w, Described(ULong(Desc.AmqpSequence), Vector.empty[Any]))
+        writeSectionStart(w, Desc.AmqpValue); writeString(w, j)
+      case AmqpDataBody(bs) => writeSectionStart(w, Desc.Data); writeValue(w, bs)
+      case AmqpOtherBody => writeSectionStart(w, Desc.AmqpSequence); w.u8(0x45)
     }
-  }
-
-  /** Scala model value → wire value (maps become AmqpWireMap etc.). */
-  def anyToWire(v: Any): Any = v match {
-    case null => null
-    case d: Described => d
-    case s: String => s
-    case b: Boolean => java.lang.Boolean.valueOf(b)
-    case i: Int => i
-    case l: Long => l
-    case sh: Short => sh.toInt
-    case by: Byte => by.toInt
-    case f: Float => f
-    case d: Double => d
-    case bs: Array[Byte] => bs
-    case entries: Seq[_] if entries.nonEmpty && entries.head.isInstanceOf[(_, _)] =>
-      AmqpWireMap(entries.asInstanceOf[Seq[(Any, Any)]]
-        .map { case (k, x) => (anyToWire(k), anyToWire(x)) }.toVector)
-    case xs: Seq[_] => xs.map(anyToWire).toVector
-    case xs: Array[_] => xs.toVector.map(anyToWire)
-    case other => other.toString // reference stringifies unknown types
   }
 
   /** Wire value → Scala model value. */
   def wireToAny(v: Any): Any = v match {
+    case s: String => s
     case null => null
     case b: java.lang.Boolean => b.booleanValue()
     case UByte(b) => b
@@ -437,14 +588,6 @@ object Amqp10Codec {
     case other => other
   }
 
-  /** Delivery annotations (§3.2.2) prepended to a bare message: the
-    * transport-metadata channel an endpoint uses for e.g. the assigned
-    * sequence number — consumed by the peer, never part of the bare
-    * message the application sees. */
-  def encodeDeliveryAnnotations(entries: Seq[(String, Any)]): Array[Byte] =
-    encode(Described(ULong(Desc.DeliveryAnnotations),
-      AmqpWireMap(entries.map { case (k, v) => (Sym(k): Any, anyToWire(v)) }.toVector)))
-
   /** Decode a bare message (§3.2) back to the [[AmqpMessage]] model.
     * Section handling mirrors the reference's converter: header and
     * footer are transport-level and dropped; amqp-sequence keeps the
@@ -453,58 +596,109 @@ object Amqp10Codec {
   def decodeMessage(bs: Array[Byte]): AmqpMessage = decodeTransferPayload(bs)._1
 
   /** Like [[decodeMessage]], also returning the delivery annotations. */
-  def decodeTransferPayload(bs: Array[Byte]): (AmqpMessage, Vector[(String, Any)]) = {
-    val r = new Reader(bs)
-    var m = AmqpMessage()
+  def decodeTransferPayload(bs: Array[Byte]): (AmqpMessage, Vector[(String, Any)]) =
+    decodeTransferPayload(new Reader(bs))
+
+  /** Decode the sections in what is left of `r` (a frame's payload, read
+    * in place) field by field into one [[AmqpMessage]]. A malformed
+    * section throws; no partly filled message is returned. */
+  def decodeTransferPayload(r: Reader): (AmqpMessage, Vector[(String, Any)]) = {
+    var messageId, to, subject, replyTo, correlationId: Option[String] = None
+    var applicationProperties: Seq[(String, Any)] = Nil
+    var messageAnnotations: Seq[(String, Any)] = Nil
+    var body: AmqpBody = AmqpOtherBody
+    var ttlMillis: Option[Long] = None
     var deliveryAnns = Vector.empty[(String, Any)]
     while (r.hasRemaining) {
-      val d = readValue(r).asInstanceOf[Described]
-      descriptorCodeOrUnknown(d) match {
+      val c = r.u8()
+      if (c != 0x00)
+        throw new IllegalArgumentException(f"message section starts with 0x$c%02x, not a descriptor")
+      readSectionCode(r) match {
         case Desc.Properties =>
-          def s(i: Int): Option[String] = field(d, i) match {
-            case null => None
-            case x: String => Some(x)
-            case other => Some(String.valueOf(wireToAny(other)))
+          val n = r.u8() match {
+            case l @ (0x45 | 0xc0 | 0xd0) => readCount(r, l)
+            case other => throw new IllegalArgumentException(f"properties section is 0x$other%02x, not a list")
           }
-          m = m.copy(messageId = s(0), to = s(2), subject = s(3),
-            replyTo = s(4), correlationId = s(5))
-        case Desc.ApplicationProperties =>
-          val entries = d.value.asInstanceOf[AmqpWireMap].entries
-            .map { case (k, v) => (String.valueOf(wireToAny(k)), wireToAny(v)) }
-          m = m.copy(applicationProperties = entries)
-        case Desc.MessageAnnotations =>
-          val entries = d.value.asInstanceOf[AmqpWireMap].entries
-            .map { case (k, v) => (String.valueOf(wireToAny(k)), wireToAny(v)) }
-          m = m.copy(messageAnnotations = entries)
-        case Desc.AmqpValue =>
-          m = m.copy(body = AmqpValueBody(wireToAny(d.value)))
-        case Desc.Data =>
-          m = m.copy(body = AmqpDataBody(d.value.asInstanceOf[Array[Byte]]))
-        case Desc.AmqpSequence =>
-          m = m.copy(body = AmqpOtherBody)
-        case Desc.DeliveryAnnotations =>
-          deliveryAnns = d.value.asInstanceOf[AmqpWireMap].entries
-            .map { case (k, v) => (String.valueOf(wireToAny(k)), wireToAny(v)) }
+          messageId = None; to = None; subject = None; replyTo = None; correlationId = None
+          var i = 0
+          while (i < n) {
+            val c = r.u8()
+            i match {
+              case 0 => messageId = readStringField(r, c)
+              case 2 => to = readStringField(r, c)
+              case 3 => subject = readStringField(r, c)
+              case 4 => replyTo = readStringField(r, c)
+              case 5 => correlationId = readStringField(r, c)
+              case _ => readValueWith(r, c)
+            }
+            i += 1
+          }
+        case Desc.ApplicationProperties => applicationProperties = readEntries(r)
+        case Desc.MessageAnnotations => messageAnnotations = readEntries(r)
+        case Desc.DeliveryAnnotations => deliveryAnns = readEntries(r)
+        case Desc.AmqpValue => body = AmqpValueBody(wireToAny(readValue(r)))
+        case Desc.Data => body = AmqpDataBody(readValue(r).asInstanceOf[Array[Byte]])
+        case Desc.AmqpSequence => readValue(r); body = AmqpOtherBody
         case Desc.Header =>
           // field 3 (index 2) is ttl: uint milliseconds. Other header
           // fields stay transport-level and dropped (as the reference's
           // converter does — AMQPJsonFunction.scala:38-54 reads none).
-          field(d, 2) match {
-            case UInt(t) => m = m.copy(ttlMillis = Some(t))
+          listField(readValue(r), 2) match {
+            case UInt(t) => ttlMillis = Some(t)
             case _ => ()
           }
-        case Desc.Footer => ()
-        case other => () // unknown section: keep the message, skip the section
+        case _ => readValue(r) // footer or unknown section: skip it, keep the message
       }
     }
-    if (m.messageAnnotations.exists(_._1 == JsonBodyAnnotation)) {
-      val body = m.body match {
+    if (messageAnnotations.exists(_._1 == JsonBodyAnnotation)) {
+      body = body match {
         case AmqpValueBody(s: String) => AmqpJsonBody(s)
         case other => other
       }
-      m = m.copy(body = body,
-        messageAnnotations = m.messageAnnotations.filterNot(_._1 == JsonBodyAnnotation))
+      messageAnnotations = messageAnnotations.filterNot(_._1 == JsonBodyAnnotation)
     }
-    (m, deliveryAnns)
+    (AmqpMessage(messageId, to, subject, replyTo, correlationId, applicationProperties,
+      messageAnnotations, body, ttlMillis), deliveryAnns)
+  }
+
+  /** A section's descriptor. Tolerant: an unknown (e.g. custom
+    * vendor-symbol) descriptor maps to -1 so the section is skipped
+    * instead of failing the whole message. */
+  private def readSectionCode(r: Reader): Long = r.u8() match {
+    case 0x53 => r.u8().toLong
+    case c => readValueWith(r, c) match {
+      case ULong(code) => code
+      case UInt(code) => code
+      case Sym(n) => SymbolicDescriptors.getOrElse(n, -1L)
+      case _ => -1L
+    }
+  }
+
+  /** A properties field as the envelope's string (constructor `c` read). */
+  private def readStringField(r: Reader, c: Int): Option[String] = c match {
+    case 0x40 => None
+    case 0xa1 => Some(r.utf8(r.u8()))
+    case 0xb1 => Some(r.utf8(r.bounded(r.u32())))
+    case _ => Some(String.valueOf(wireToAny(readValueWith(r, c))))
+  }
+
+  /** A map section's entries: keys as strings, values as model values. */
+  private def readEntries(r: Reader): Vector[(String, Any)] = {
+    val c = r.u8()
+    if (c != 0xc1 && c != 0xd1)
+      throw new IllegalArgumentException(f"expected a map section, got 0x$c%02x")
+    val pairs = readCount(r, c) / 2
+    val b = Vector.newBuilder[(String, Any)]
+    var i = 0
+    while (i < pairs) {
+      val key = r.u8() match {
+        case 0xa3 | 0xa1 => r.utf8(r.u8())
+        case 0xb3 | 0xb1 => r.utf8(r.bounded(r.u32()))
+        case k => String.valueOf(wireToAny(readValueWith(r, k)))
+      }
+      b += ((key, wireToAny(readValue(r))))
+      i += 1
+    }
+    b.result()
   }
 }

@@ -45,16 +45,23 @@ class Amqp10Endpoint(host: String, port: Int,
   private val received = mutable.Map[String, mutable.ArrayBuffer[(Long, Long)]]()
 
   // ------------------------------------------------------------ transport
-  private def sendFrame(perf: Described, payload: Array[Byte] = Array.emptyByteArray): Unit =
-    writeAll(out, encodeFrame(Frame(FrameTypeAmqp, 0, perf, payload)))
+  /** Every AMQP-layer frame is written here first. The pipelined produce
+    * paths emit hundreds of transfer frames back-to-back, and a flush
+    * (= syscall + packet under TCP_NODELAY) per ~70-byte frame was the
+    * produce bottleneck (profiled: flushes, not encode, dominate), so
+    * frames collect until [[flushFrames]]. Callers MUST flush before
+    * awaiting any response or the peer never sees the request. */
+  private val frames = new Writer(WriteChunk)
 
-  /** Write without flushing — the pipelined produce paths emit hundreds
-    * of transfer frames back-to-back, and a flush (= syscall + packet
-    * under TCP_NODELAY) per ~70-byte frame was the produce bottleneck
-    * (profiled: flushes, not encode, dominate). Callers MUST flush
-    * before awaiting any response or the peer never sees the request. */
-  private def sendFrameUnflushed(perf: Described, payload: Array[Byte]): Unit =
-    out.write(encodeFrame(Frame(FrameTypeAmqp, 0, perf, payload)))
+  private def flushFrames(): Unit = {
+    frames.drainTo(out)
+    out.flush()
+  }
+
+  private def sendFrame(perf: Described): Unit = {
+    endFrame(frames, beginFrame(frames, FrameTypeAmqp, 0, perf))
+    flushFrames()
+  }
 
   private def connect(): Unit = {
     sock = tls match {
@@ -64,6 +71,7 @@ class Amqp10Endpoint(host: String, port: Int,
     sock.setTcpNoDelay(true)
     in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
     out = new BufferedOutputStream(sock.getOutputStream)
+    frames.truncate(0) // frames a dead connection never sent
     nextHandle = 0L; nextDeliveryId = 0L
     senderLinks.clear(); received.clear(); declaredTxns.clear()
     stagingHandle = -1L; coordinatorHandle = -1L
@@ -224,37 +232,30 @@ class Amqp10Endpoint(host: String, port: Int,
     coordinatorHandle
   }
 
-  /** Send one transfer's frames (chunked to the negotiated frame size)
-    * WITHOUT waiting for its disposition; returns the delivery-id. */
-  private def transferFrames(handle: Long, payload: Array[Byte],
-      txnId: Option[String]): Long = {
+  /** Write one transfer's frames (chunked to the negotiated frame size)
+    * WITHOUT waiting for its disposition; returns the delivery-id.
+    * Single-transfer callers flush via transfer(); the pipelined batch
+    * paths flush once per batch before draining. */
+  private def transferFrames(handle: Long, txnId: Option[String])(
+      payload: Writer => Unit): Long = {
     val did = nextDeliveryId
     nextDeliveryId += 1
     val state = txnId
       .map(t => described(Desc.TransactionalState, t.getBytes(UTF_8)))
       .orNull
-    var off = 0
-    var done = false
-    while (!done) {
-      val end = math.min(off + serverPayloadChunk, payload.length)
-      val more = end < payload.length
-      // unflushed: single-transfer callers flush via transfer(); the
-      // pipelined batch paths flush once per batch before draining
-      sendFrameUnflushed(described(Desc.Transfer, UInt(handle), UInt(did),
-        did.toString.getBytes(UTF_8), UInt(0L), java.lang.Boolean.FALSE,
-        java.lang.Boolean.valueOf(more), null, state),
-        java.util.Arrays.copyOfRange(payload, off, end))
-      off = end
-      done = !more
-    }
+    val tag = did.toString.getBytes(UTF_8)
+    writeDelivery(frames, 0, serverPayloadChunk, more =>
+      described(Desc.Transfer, UInt(handle), UInt(did), tag, UInt(0L),
+        java.lang.Boolean.FALSE, java.lang.Boolean.valueOf(more), null, state))(payload)
+    if (frames.size >= WriteChunk) frames.drainTo(out)
     did
   }
 
   /** Transfer one message and return the broker's disposition state. */
-  private def transfer(handle: Long, payload: Array[Byte],
-      txnId: Option[String] = None): Described = {
-    transferFrames(handle, payload, txnId)
-    out.flush()
+  private def transfer(handle: Long, txnId: Option[String] = None)(
+      payload: Writer => Unit): Described = {
+    transferFrames(handle, txnId)(payload)
+    flushFrames()
     val disp = await(Desc.Disposition)
     field(disp.performative, 4).asInstanceOf[Described]
   }
@@ -269,8 +270,9 @@ class Amqp10Endpoint(host: String, port: Int,
     * epoch-idempotent discharge makes replays no-ops. */
   override def send(address: String, msg: AmqpMessage, timestampMicros: Long): Long =
     call {
-      val payload = encodeTransferPayload(Seq(TsAnnotation -> timestampMicros), msg)
-      val state = transfer(senderLink(address), payload)
+      val state = transfer(senderLink(address)) { w =>
+        writeTransferPayload(w, Seq(TsAnnotation -> timestampMicros), msg)
+      }
       descriptorCode2(state) match {
         case Right(EnqueuedOutcome) => asLong(field(state, 0))
         case Left(Desc.Rejected) => -1L
@@ -316,9 +318,9 @@ class Amqp10Endpoint(host: String, port: Int,
     call {
       val handle = senderLink(address)
       val dids = msgs.map { case (m, ts) =>
-        transferFrames(handle, encodeTransferPayload(Seq(TsAnnotation -> ts), m), None)
+        transferFrames(handle, None)(writeTransferPayload(_, Seq(TsAnnotation -> ts), m))
       }
-      out.flush() // the whole chunk in as few packets as the buffer allows
+      flushFrames() // the whole chunk in as few packets as the buffer allows
       val outcomes = mutable.Map[Long, Described]()
       while (outcomes.size < dids.size) {
         val disp = await(Desc.Disposition).performative
@@ -510,8 +512,8 @@ class Amqp10Endpoint(host: String, port: Int,
       // the overwhelmingly common case — bypass the buffer entirely:
       // this loop decodes the whole drain slice, so a per-message
       // byte-boxing buffer is measurable at 100k messages.
-      val chunks = mutable.Map[Long, (Long, java.io.ByteArrayOutputStream)]()
-      def complete(did: Long, payload: Array[Byte]): Unit = {
+      val chunks = mutable.Map[Long, (Long, Writer)]()
+      def complete(did: Long, payload: Reader): Unit = {
         val (msg, danns) = decodeTransferPayload(payload)
         val seq = danns.collectFirst { case (SeqAnnotation, v) => asLong(v) }
           .getOrElse(throw new IllegalStateException("transfer without seq annotation"))
@@ -528,14 +530,14 @@ class Amqp10Endpoint(host: String, port: Int,
             val more = asBool(field(f.performative, 5))
             chunks.get(sndHandle) match {
               case Some((did, b)) =>
-                b.write(f.payload, 0, f.payload.length)
-                if (!more) { chunks.remove(sndHandle); complete(did, b.toByteArray) }
+                f.appendPayload(b)
+                if (!more) { chunks.remove(sndHandle); complete(did, b.reader) }
               case None =>
                 val did = asLong(field(f.performative, 1))
-                if (!more) complete(did, f.payload) // fast path: no copy
+                if (!more) complete(did, f.payloadReader) // fast path: decoded in place
                 else {
-                  val b = new java.io.ByteArrayOutputStream(f.payload.length * 2)
-                  b.write(f.payload, 0, f.payload.length)
+                  val b = new Writer(f.payloadLength * 2)
+                  f.appendPayload(b)
                   chunks(sndHandle) = (did, b)
                 }
             }
@@ -584,9 +586,8 @@ class Amqp10Endpoint(host: String, port: Int,
   // ------------------------------------------------------- transactions
   private def declare(txn: String): Unit =
     if (!declaredTxns.contains(txn)) {
-      val payload = encodeMessage(AmqpMessage(
-        body = AmqpValueBody(described(Desc.Declare, txn))))
-      val state = transfer(coordinatorLink(), payload)
+      val state = transfer(coordinatorLink())(writeMessage(_, AmqpMessage(
+        body = AmqpValueBody(described(Desc.Declare, txn)))))
       require(descriptorCode2(state) == Left(Desc.Declared),
         s"declare refused: $state")
       declaredTxns += txn
@@ -601,7 +602,7 @@ class Amqp10Endpoint(host: String, port: Int,
       val marker = AmqpMessage(messageAnnotations = Seq(
         PartitionAnnotation -> partitionId, PartitionResetAnnotation -> true,
         EmptyStageAnnotation -> true))
-      transfer(handle, encodeMessage(marker), Some(txn))
+      transfer(handle, Some(txn))(writeMessage(_, marker))
       ()
     } else {
       // PIPELINED staging, same discipline as sendMany: the whole batch
@@ -620,10 +621,9 @@ class Amqp10Endpoint(host: String, port: Int,
             Seq(PartitionAnnotation -> partitionId) ++
             (if (overall == 0) Seq(PartitionResetAnnotation -> true) else Nil)
           overall += 1
-          transferFrames(handle,
-            encodeMessage(m.copy(messageAnnotations = anns)), Some(txn))
+          transferFrames(handle, Some(txn))(writeMessage(_, m.copy(messageAnnotations = anns)))
         }
-        out.flush() // the whole batch in as few packets as the buffer allows
+        flushFrames() // the whole batch in as few packets as the buffer allows
         val outcomes = mutable.Map[Long, Described]()
         while (outcomes.size < dids.size) {
           val disp = await(Desc.Disposition).performative
@@ -644,11 +644,10 @@ class Amqp10Endpoint(host: String, port: Int,
   private def discharge(txn: String, fail: Boolean,
       anns: Seq[(String, Any)]): Described = {
     declare(txn)
-    val payload = encodeMessage(AmqpMessage(
+    transfer(coordinatorLink())(writeMessage(_, AmqpMessage(
       messageAnnotations = anns,
       body = AmqpValueBody(described(Desc.Discharge, txn.getBytes(UTF_8),
-        java.lang.Boolean.valueOf(fail)))))
-    transfer(coordinatorLink(), payload)
+        java.lang.Boolean.valueOf(fail))))))
   }
 
   override def commitStaged(txn: String, queryId: String, epochId: Long,

@@ -138,16 +138,12 @@ private[streaming] object Amqp10Wire {
     while (true) {
       val size = in.readInt()
       require(size >= 8 && size <= MaxFrameSize * 2, s"bad frame size $size")
-      val rest = new Array[Byte](size - 4)
-      in.readFully(rest)
-      val doff = rest(0) & 0xff
-      if (size > doff * 4) { // non-empty body: a real performative
-        val all = new Array[Byte](size)
-        all(0) = (size >>> 24).toByte; all(1) = (size >>> 16).toByte
-        all(2) = (size >>> 8).toByte; all(3) = size.toByte
-        System.arraycopy(rest, 0, all, 4, rest.length)
-        return decodeFrame(all)
-      }
+      val all = new Array[Byte](size)
+      all(0) = (size >>> 24).toByte; all(1) = (size >>> 16).toByte
+      all(2) = (size >>> 8).toByte; all(3) = size.toByte
+      in.readFully(all, 4, size - 4)
+      val doff = all(4) & 0xff
+      if (size > doff * 4) return decodeFrame(all) // non-empty body: a real performative
     }
     throw new IllegalStateException("unreachable")
   }
@@ -211,6 +207,39 @@ private[streaming] object Amqp10Wire {
   }
 
   def amqpWireMap(entries: (Any, Any)*): AmqpWireMap = AmqpWireMap(entries.toVector)
+
+  /** Bytes of frames a writer collects before they go to the socket. */
+  val WriteChunk: Int = 1 << 16
+
+  /** Write one delivery into `w` as transfer frames on `channel`. The
+    * payload is encoded once, straight after a single-frame transfer
+    * performative (`transfer(false)`). Only a payload larger than
+    * `maxPayload` is copied out and re-cut into continuation frames,
+    * `transfer(true)` on all but the last. A payload that fails to
+    * encode leaves `w` as it was. */
+  def writeDelivery(w: Writer, channel: Int, maxPayload: Int,
+      transfer: Boolean => Described)(payload: Writer => Unit): Unit = {
+    val start = w.size
+    var from = start
+    try {
+      beginFrame(w, FrameTypeAmqp, channel, transfer(false))
+      from = w.size
+      payload(w)
+    } catch { case e: Throwable => w.truncate(start); throw e }
+    if (w.size - from <= maxPayload) endFrame(w, start)
+    else {
+      val bytes = w.copyRange(from, w.size)
+      w.truncate(start)
+      var off = 0
+      while (off < bytes.length) {
+        val end = math.min(off + maxPayload, bytes.length)
+        val frame = beginFrame(w, FrameTypeAmqp, channel, transfer(end < bytes.length))
+        w.raw(bytes, off, end - off)
+        endFrame(w, frame)
+        off = end
+      }
+    }
+  }
 
   /** Payload bytes per transfer frame given the peer's announced
     * max-frame-size (§2.7.1; null = unlimited). 128 bytes covers the
@@ -304,8 +333,11 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
       // the serve loop can guarantee none is ever held across a
       // stalled read (see the poller below).
       var replyDirty = false
+      // every frame this connection sends is written here first
+      val frames = new Writer(WriteChunk)
       def send(f: Frame): Unit = {
-        out.write(encodeFrame(f))
+        f.writeTo(frames)
+        frames.drainTo(out)
         if (in.available() == 0) { out.flush(); replyDirty = false }
         else replyDirty = true
       }
@@ -410,7 +442,7 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
       // links; continuation frames carry the handle but may omit the
       // delivery-id) and staged-transaction buffers. Single-frame
       // transfers never touch the buffer (the produce hot path).
-      val pending = mutable.Map[(Int, Long), (Described, java.io.ByteArrayOutputStream)]()
+      val pending = mutable.Map[(Int, Long), (Described, Writer)]()
       val txnStage = mutable.Map[(String, Int), mutable.ArrayBuffer[AmqpMessage]]()
 
       // §2.7.1: the peer's open announces ITS max-frame-size; frames we
@@ -429,29 +461,22 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
 
       def pushTransfers(ch: Int, handle: Long, address: String, from: Long, to: Long): Unit = {
         backing.fetch(address, from, to).foreach { case (seq, msg, ts) =>
-          val payload = encodeTransferPayload(
-            Seq(SeqAnnotation -> seq, TsAnnotation -> ts), msg)
           val did = nextOutgoingIds(ch)
           nextOutgoingIds(ch) = did + 1
           outgoing((ch, did)) = (address, seq)
-          var off = 0
-          var done = false
-          while (!done) {
-            val end = math.min(off + peerPayloadChunk, payload.length)
-            val more = end < payload.length
-            // unflushed: a drain slice is thousands of ~70-byte frames,
-            // and a flush (syscall + packet under TCP_NODELAY) per frame
-            // was the drain-push bottleneck — the buffered stream
-            // coalesces, the flush below seals the slice
-            out.write(encodeFrame(Frame(FrameTypeAmqp, ch,
-              described(Desc.Transfer, UInt(handle), UInt(did),
-                seq.toString.getBytes(UTF_8), UInt(0L), java.lang.Boolean.FALSE,
-                java.lang.Boolean.valueOf(more)),
-              java.util.Arrays.copyOfRange(payload, off, end))))
-            off = end
-            done = !more
+          val tag = seq.toString.getBytes(UTF_8)
+          writeDelivery(frames, ch, peerPayloadChunk, more =>
+            described(Desc.Transfer, UInt(handle), UInt(did), tag, UInt(0L),
+              java.lang.Boolean.FALSE, java.lang.Boolean.valueOf(more))) { w =>
+            writeTransferPayload(w, Seq(SeqAnnotation -> seq, TsAnnotation -> ts), msg)
           }
+          // unflushed: a drain slice is thousands of ~70-byte frames,
+          // and a flush (syscall + packet under TCP_NODELAY) per frame
+          // was the drain-push bottleneck — frames go out in 64 KiB
+          // writes, the flush below seals the slice
+          if (frames.size >= WriteChunk) frames.drainTo(out)
         }
+        frames.drainTo(out)
         out.flush()
       }
 
@@ -624,14 +649,14 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
             val more = asBool(field(perf, 5))
             val (first, payload) = pending.get((ch, handle)) match {
               case Some((p, b)) =>
-                b.write(f.payload, 0, f.payload.length)
+                f.appendPayload(b)
                 if (more) (null, null)
-                else { pending.remove((ch, handle)); (p, b.toByteArray) }
+                else { pending.remove((ch, handle)); (p, b.reader) }
               case None =>
-                if (!more) (perf, f.payload) // fast path: no copy
+                if (!more) (perf, f.payloadReader) // fast path: decoded in place
                 else {
-                  val b = new java.io.ByteArrayOutputStream(f.payload.length * 2)
-                  b.write(f.payload, 0, f.payload.length)
+                  val b = new Writer(f.payloadLength * 2)
+                  f.appendPayload(b)
                   pending((ch, handle)) = (perf, b)
                   (null, null)
                 }
@@ -659,7 +684,7 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
                   val txn = txnState.getOrElse(
                     throw new IllegalStateException("staging transfer without txn state"))
                   val pid = msg.messageAnnotations
-                    .collectFirst { case (PartitionAnnotation, v) => asLong(anyToWire(v)).toInt }
+                    .collectFirst { case (PartitionAnnotation, v) => asLong(v).toInt }
                     .getOrElse(0)
                   val reset = msg.messageAnnotations.exists(_._1 == PartitionResetAnnotation)
                   val isMarker = msg.messageAnnotations.exists(_._1 == EmptyStageAnnotation)
@@ -704,9 +729,9 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
                         } else {
                           val n = backing.commitStaged(txn,
                             String.valueOf(anns(QueryAnnotation)),
-                            asLong(anyToWire(anns(EpochAnnotation))),
+                            asLong(anns(EpochAnnotation)),
                             String.valueOf(anns(AddressAnnotation)),
-                            asLong(anyToWire(anns(TsAnnotation))),
+                            asLong(anns(TsAnnotation)),
                             // the annotation carries a real boolean (like
                             // the in-memory and TCP transports): an
                             // explicit `false` must not route per-message,

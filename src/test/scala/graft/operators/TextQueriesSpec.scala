@@ -128,6 +128,22 @@ class TextQueriesSpec extends SparkSpecBase {
     assert(cs == cs.sortBy(-_), "pair counts non-increasing over rounds")
   }
 
+  test("txt_bpe_train: a corpus that runs out of adjacent pairs ends training early") {
+    def train(texts: String*): Seq[(Long, String, String, Long)] = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "src0", t.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try TextQueries.txtBpeTrain(spark, dir).orderBy(col("round"))
+        .as[(Long, String, String, Long)].collect().toSeq
+      finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+    // one-character words: no pair exists, so no rule is learned
+    assert(train("a b c a", "b b") == Seq.empty)
+    // "ab" merges in round 1 and leaves every word a single symbol
+    assert(train("ab ab x", "ab") == Seq((1L, "a", "b", 3L)))
+  }
+
   test("corpus_curriculum: three contiguous easy-to-hard phases of ~equal token mass") {
     val rows = TextQueries.corpusCurriculum(spark, sfDir)
       .orderBy(col("phase"))

@@ -212,6 +212,20 @@ class Amqp10CodecPropertySpec extends AnyFunSuite {
     }, n = 60)
   }
 
+  test("messages: a str32 body sized past the payload's end throws, forAll") {
+    val text = "b" * 300
+    check(Prop.forAll(genMessage, Gen.chooseNum(1, 1 << 20)) { (m0, over) =>
+      val bs = encodeTransferPayload(Seq(Amqp10Wire.SeqAnnotation -> 1L),
+        m0.copy(body = AmqpValueBody(text)))
+      // the body is the last section: 00 53 77 b1 size32, then the text
+      java.nio.ByteBuffer.wrap(bs).putInt(bs.length - text.length - 4, text.length + over)
+      scala.util.Try(decodeTransferPayload(bs)) match {
+        case scala.util.Failure(_: IllegalArgumentException) => true
+        case _ => false
+      }
+    }, n = 100)
+  }
+
   test("messages: JSON-body provenance survives a wire hop (sink → source)") {
     val m = AmqpMessage(body = AmqpJsonBody("""{"a":[1,2],"b":"x"}"""),
       messageAnnotations = Seq("user-ann" -> "kept"))

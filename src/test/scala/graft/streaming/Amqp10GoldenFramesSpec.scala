@@ -22,7 +22,9 @@ import Amqp10Wire.{writeAll, EnqueuedOutcome}
   * (where it emits the same canonical constructor) re-encode them
   * bit-for-bit. The last test feeds the golden producer sequence to a
   * live [[Amqp10Server]] socket, proving the server accepts a
-  * spec-authored peer end to end.
+  * spec-authored peer end to end. The `encode golden` tests are the one
+  * exception to hand-encoding: they pin the codec's own output for the
+  * message model, byte for byte, so a rewrite cannot drift the format.
   *
   * Fixture arithmetic is spelled out per frame: list8 is
   * `0xc0 size count` where size counts the count byte plus the encoded
@@ -358,6 +360,237 @@ class Amqp10GoldenFramesSpec extends AnyFunSuite {
       "the server-side verification must accept the RFC's proof")
     assert("v=" + Scram.b64(Scram.serverSignature(salted, authMsg)) == serverFinal,
       "our ServerSignature must reproduce the RFC's published v=")
+  }
+
+  // ------------------------------------------- encoder output, byte-exact
+  // The encode goldens below pin the exact bytes the codec emits for the
+  // message model, so its output cannot drift when the encoder changes.
+  // Long runs of a repeated byte are spelled as `hex(head) ++ fill(n,
+  // byte)`; the one fixture too irregular for that (a 300-entry map) is
+  // pinned by its head, length and SHA-256.
+  private def fill(n: Int, b: Int): Array[Byte] = Array.fill(n)(b.toByte)
+  private def ascii(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private def sha256(bs: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(bs).map(b => f"${b & 0xff}%02x").mkString
+
+  private def assertBytes(got: Array[Byte], want: Array[Byte], what: String): Unit =
+    assert(java.util.Arrays.equals(got, want),
+      s"$what:\n got  ${got.map(b => f"${b & 0xff}%02x").mkString(" ")}\n want ${want.map(b => f"${b & 0xff}%02x").mkString(" ")}")
+
+  test("encode golden: header (ttl), message annotations and properties sections") {
+    val t = AmqpValueBody("t")
+    // header list [null, null, ttl]: uint0 / smalluint / uint
+    assertBytes(encodeMessage(AmqpMessage(ttlMillis = Some(0L), body = t)),
+      hex("00 53 70 c0 04 03 40 40 43  00 53 77 a1 01 74"), "ttl 0")
+    assertBytes(encodeMessage(AmqpMessage(ttlMillis = Some(200L), body = t)),
+      hex("00 53 70 c0 05 03 40 40 52 c8  00 53 77 a1 01 74"), "ttl 200")
+    assertBytes(encodeMessage(AmqpMessage(ttlMillis = Some(70000L), body = t)),
+      hex("00 53 70 c0 08 03 40 40 70 00 01 11 70  00 53 77 a1 01 74"), "ttl 70000")
+    // symbol-keyed annotations, then the JSON-body marker appended last
+    assertBytes(encodeMessage(AmqpMessage(
+      messageAnnotations = Seq("x-opt-a" -> "v", "x-opt-n" -> 42L),
+      body = AmqpJsonBody("{\"a\":1}"))),
+      hex("""00 53 72 c1 2c 06
+             a3 07 78 2d 6f 70 74 2d 61 a1 01 76
+             a3 07 78 2d 6f 70 74 2d 6e 55 2a
+             a3 11 78 2d 67 72 61 66 74 2d 62 6f 64 79 2d 6a 73 6f 6e 41
+             00 53 77 a1 07 7b 22 61 22 3a 31 7d"""), "annotations + JSON marker")
+    // properties: trailing nulls trimmed, user-id (field 1) always null
+    assertBytes(encodeMessage(AmqpMessage(messageId = Some("M1"))),
+      hex("00 53 73 c0 05 01 a1 02 4d 31  00 53 76 45"), "only message_id")
+    assertBytes(encodeMessage(AmqpMessage(correlationId = Some("C1"))),
+      hex("00 53 73 c0 0a 06 40 40 40 40 40 a1 02 43 31  00 53 76 45"), "only correlation_id")
+    assertBytes(encodeMessage(AmqpMessage(messageId = Some("M"), to = Some("T"),
+      subject = Some("S"), replyTo = Some("R"), correlationId = Some("C"))),
+      hex("""00 53 73 c0 11 06 a1 01 4d 40 a1 01 54 a1 01 53 a1 01 52 a1 01 43
+             00 53 76 45"""), "all five properties")
+  }
+
+  test("encode golden: application properties of each value type") {
+    val m = AmqpMessage(applicationProperties = Seq(
+      "str" -> "v", "int" -> 7, "bigint" -> 100000, "long" -> -3L,
+      "biglong" -> 1234567890123L, "bool" -> true, "short" -> 300.toShort,
+      "byte" -> 5.toByte, "float" -> 1.5f, "double" -> 2.25,
+      "bin" -> Array[Byte](1, 2, 3), "list" -> Seq(1, "a"), "map" -> Seq("k" -> 1L),
+      "empty" -> Seq.empty[Any], "null" -> null, "uuid" -> new java.util.UUID(1L, 2L)))
+    assertBytes(encodeMessage(m), hex(
+      """00 53 74 c1 cf 20
+         a1 03 73 74 72  a1 01 76
+         a1 03 69 6e 74  54 07
+         a1 06 62 69 67 69 6e 74  71 00 01 86 a0
+         a1 04 6c 6f 6e 67  55 fd
+         a1 07 62 69 67 6c 6f 6e 67  81 00 00 01 1f 71 fb 04 cb
+         a1 04 62 6f 6f 6c  41
+         a1 05 73 68 6f 72 74  71 00 00 01 2c
+         a1 04 62 79 74 65  54 05
+         a1 05 66 6c 6f 61 74  72 3f c0 00 00
+         a1 06 64 6f 75 62 6c 65  82 40 02 00 00 00 00 00 00
+         a1 03 62 69 6e  a0 03 01 02 03
+         a1 04 6c 69 73 74  c0 06 02 54 01 a1 01 61
+         a1 03 6d 61 70  c1 06 02 a1 01 6b 55 01
+         a1 05 65 6d 70 74 79  45
+         a1 04 6e 75 6c 6c  40
+         a1 04 75 75 69 64  a1 24""") ++
+      ascii("00000000-0000-0001-0000-000000000002") ++ hex("00 53 76 45"),
+      "one property per value type (short widens to int, a UUID is stringified)")
+  }
+
+  test("encode golden: each body kind") {
+    def body(b: AmqpBody) = encodeMessage(AmqpMessage(body = b))
+    assertBytes(body(AmqpValueBody("hello")), hex("00 53 77 a1 05 68 65 6c 6c 6f"), "str8")
+    assertBytes(body(AmqpValueBody("x" * 300)),
+      hex("00 53 77 b1 00 00 01 2c") ++ fill(300, 0x78), "str32")
+    assertBytes(body(AmqpDataBody(Array[Byte](0, 1, -1))), hex("00 53 75 a0 03 00 01 ff"), "vbin8")
+    assertBytes(body(AmqpDataBody(fill(256, 7))),
+      hex("00 53 75 b0 00 00 01 00") ++ fill(256, 7), "vbin32")
+    assertBytes(body(AmqpJsonBody("[1,2]")),
+      hex("""00 53 72 c1 15 02
+             a3 11 78 2d 67 72 61 66 74 2d 62 6f 64 79 2d 6a 73 6f 6e 41
+             00 53 77 a1 05 5b 31 2c 32 5d"""), "JSON text + marker")
+    assertBytes(body(AmqpOtherBody), hex("00 53 76 45"), "amqp-sequence")
+    assertBytes(body(AmqpValueBody(Vector(1L, "two", false))),
+      hex("00 53 77 c0 09 03 55 01 a1 03 74 77 6f 42"), "list value")
+    assertBytes(body(AmqpValueBody(Seq("a" -> 1, "b" -> "x"))),
+      hex("00 53 77 c1 0c 04 a1 01 61 54 01 a1 01 62 a1 01 78"), "map value")
+  }
+
+  test("encode golden: the 8-bit/32-bit compound size choice at its boundary") {
+    // list8 holds size (count byte + content) <= 255: content 254 fits,
+    // 255 and 256 take list32
+    def list(n: Int) = encodeMessage(AmqpMessage(body = AmqpValueBody(Vector("s" * (n - 2)))))
+    assertBytes(list(254), hex("00 53 77 c0 ff 01 a1 fc") ++ fill(252, 0x73), "list content 254")
+    assertBytes(list(255),
+      hex("00 53 77 d0 00 00 01 03 00 00 00 01 a1 fd") ++ fill(253, 0x73), "list content 255")
+    assertBytes(list(256),
+      hex("00 53 77 d0 00 00 01 04 00 00 00 01 a1 fe") ++ fill(254, 0x73), "list content 256")
+    def map(n: Int) = encodeMessage(AmqpMessage(applicationProperties = Seq("k" -> "m" * (n - 5))))
+    assertBytes(map(254),
+      hex("00 53 74 c1 ff 02 a1 01 6b a1 f9") ++ fill(249, 0x6d) ++ hex("00 53 76 45"),
+      "map content 254")
+    assertBytes(map(255),
+      hex("00 53 74 d1 00 00 01 03 00 00 00 02 a1 01 6b a1 fa") ++ fill(250, 0x6d) ++
+        hex("00 53 76 45"), "map content 255")
+    assertBytes(map(256),
+      hex("00 53 74 d1 00 00 01 04 00 00 00 02 a1 01 6b a1 fb") ++ fill(251, 0x6d) ++
+        hex("00 53 76 45"), "map content 256")
+    // the count decides too: 254 nulls fit list8, 255 nulls do not
+    assertBytes(encode(Vector.fill[Any](254)(null)), hex("c0 ff fe") ++ fill(254, 0x40), "254 nulls")
+    assertBytes(encode(Vector.fill[Any](255)(null)),
+      hex("d0 00 00 01 03 00 00 00 ff") ++ fill(255, 0x40), "255 nulls")
+    // 300 entries: map32 with count 600
+    val big = encodeMessage(AmqpMessage(
+      applicationProperties = (0 until 300).map(i => f"k$i%03d" -> i)))
+    assertBytes(big.take(20),
+      hex("00 53 74 d1 00 00 0b 68 00 00 02 58 a1 04 6b 30 30 30 54 00"), "300-entry map head")
+    assert(big.length == 2932)
+    assert(sha256(big) == "ccd9ae9349a6bcf37612854a761d8eeaa5ccb6b8d21aa5c65a8ee4b2a19ed86d")
+  }
+
+  test("encode golden: a transfer payload leads with header and delivery annotations") {
+    assertBytes(encodeTransferPayload(
+      Seq(Amqp10Wire.SeqAnnotation -> 7L, Amqp10Wire.TsAnnotation -> 1234567L),
+      AmqpMessage(messageId = Some("d7"), applicationProperties = Seq("k0" -> "ab", "k1" -> 99L),
+        body = AmqpValueBody("payload"), ttlMillis = Some(1000L))),
+      hex("""00 53 70 c0 08 03 40 40 70 00 00 03 e8
+             00 53 71 c1 28 04
+               a3 0b 78 2d 67 72 61 66 74 2d 73 65 71  55 07
+               a3 0d 78 2d 67 72 61 66 74 2d 74 73 2d 75 73  81 00 00 00 00 00 12 d6 87
+             00 53 73 c0 05 01 a1 02 64 37
+             00 53 74 c1 0f 04 a1 02 6b 30 a1 02 61 62 a1 02 6b 31 55 63
+             00 53 77 a1 07 70 61 79 6c 6f 61 64"""), "full transfer payload")
+    assertBytes(encodeTransferPayload(Nil, AmqpMessage()),
+      hex("00 53 71 c1 01 00  00 53 76 45"), "empty delivery annotations stay a map8")
+  }
+
+  test("encode golden: a live server cuts a large delivery at the peer's 1024-byte frame limit") {
+    val backing = new InMemoryAmqpBroker
+    backing.send("mf", AmqpMessage(messageId = Some("big"), applicationProperties = Seq("k" -> 1L),
+      body = AmqpValueBody("0123456789" * 250), ttlMillis = Some(5000L)), 11L)
+    backing.send("mf", AmqpMessage(messageId = Some("small"),
+      body = AmqpDataBody(Array[Byte](9, 8))), 12L)
+    // payload of the first delivery; 1024 - 128 = 896 payload bytes per frame
+    val payload = hex(
+      """00 53 70 c0 08 03 40 40 70 00 00 13 88
+         00 53 71 c1 21 04
+           a3 0b 78 2d 67 72 61 66 74 2d 73 65 71  55 01
+           a3 0d 78 2d 67 72 61 66 74 2d 74 73 2d 75 73  55 0b
+         00 53 73 c0 06 01 a1 03 62 69 67
+         00 53 74 c1 06 02 a1 01 6b 55 01
+         00 53 77 b1 00 00 09 c4""") ++ ascii("0123456789" * 250)
+    // transfer(handle 0, delivery-id 0, tag "1", format 0, settled false, more)
+    val more = hex("00 00 03 96 02 00 00 00  00 53 14 c0 09 06 43 43 a0 01 31 43 42 41")
+    val last = hex("00 00 03 2b 02 00 00 00  00 53 14 c0 09 06 43 43 a0 01 31 43 42 42")
+    val want = Seq(
+      more ++ payload.slice(0, 896),
+      more ++ payload.slice(896, 1792),
+      last ++ payload.slice(1792, payload.length),
+      hex("""00 00 00 51 02 00 00 00
+             00 53 14 c0 0a 06 43 52 01 a0 01 32 43 42 42
+             00 53 71 c1 21 04
+               a3 0b 78 2d 67 72 61 66 74 2d 73 65 71  55 02
+               a3 0d 78 2d 67 72 61 66 74 2d 74 73 2d 75 73  55 0c
+             00 53 73 c0 08 01 a1 05 73 6d 61 6c 6c
+             00 53 75 a0 02 09 08"""))
+    val server = new Amqp10Server(backing)
+    val sock = new Socket("127.0.0.1", server.port)
+    try {
+      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+      val out = new BufferedOutputStream(sock.getOutputStream)
+      def send(perf: Described): Unit =
+        writeAll(out, encodeFrame(Frame(FrameTypeAmqp, 0, perf, Array.emptyByteArray)))
+      def rawFrame(): Array[Byte] = {
+        val size = in.readInt()
+        val all = new Array[Byte](size)
+        java.nio.ByteBuffer.wrap(all).putInt(size)
+        in.readFully(all, 4, size - 4)
+        all
+      }
+      writeAll(out, HeaderAmqp)
+      in.readFully(new Array[Byte](8))
+      send(described(Desc.Open, "golden", null, UInt(1024L))); rawFrame()
+      send(described(Desc.Begin, null, UInt(0L), UInt(100L), UInt(100L))); rawFrame()
+      send(described(Desc.Attach, "rcv", UInt(0L), java.lang.Boolean.TRUE, null, null,
+        Described(ULong(Desc.Source), Vector("mf", null, null, null,
+          java.lang.Boolean.FALSE, null, null,
+          Amqp10Wire.amqpWireMap(Sym(Amqp10Wire.FromSeqFilter) -> 0L)))))
+      rawFrame()
+      send(described(Desc.Flow, UInt(0L), UInt(65535L), UInt(0L), UInt(65535L),
+        UInt(0L), UInt(0L), UInt(2L), UInt(0L), java.lang.Boolean.TRUE))
+      val got = Iterator.continually(rawFrame())
+        .takeWhile(f => descriptorCode(decodeFrame(f).performative) != Desc.Flow).toVector
+      assert(got.length == want.length, s"${got.length} transfer frames")
+      got.zip(want).zipWithIndex.foreach { case ((g, w), i) => assertBytes(g, w, s"frame $i") }
+    } finally { sock.close(); server.close() }
+  }
+
+  // ------------------------------------------- malformed input, in place
+  test("malformed: a size field past the end of the frame throws, never reads on") {
+    val bad = Seq(
+      "str32 body" -> "00 53 77 b1 00 00 10 00 41 42",
+      "str8 body" -> "00 53 77 a1 09 41 42",
+      "vbin32 body" -> "00 53 75 b0 7f ff ff ff 01",
+      "list32 properties" -> "00 53 73 d0 00 00 10 00 00 00 00 01 40",
+      "list32 count" -> "00 53 73 d0 00 00 00 05 00 00 10 00 40",
+      "list8 properties" -> "00 53 73 c0 30 01 40",
+      "map32 application properties" -> "00 53 74 d1 00 00 10 00 00 00 00 02 a1 01 6b 40",
+      "map8 annotations" -> "00 53 72 c1 40 02 a3 01 6b 40",
+      "str8 key" -> "00 53 74 c1 04 02 a1 09 6b",
+      "header list32" -> "00 53 70 d0 00 01 00 00 00 00 00 03 40 40 43")
+    bad.foreach { case (what, h) =>
+      intercept[IllegalArgumentException](decodeTransferPayload(hex(h)))
+      // the same bytes followed by data that would complete them: read in
+      // place, the decoder must stop at the payload's end, not the array's
+      val padded = hex(h) ++ fill(8192, 0x40)
+      val e = intercept[IllegalArgumentException](
+        decodeTransferPayload(new Reader(padded, 0, hex(h).length)))
+      assert(e.getMessage.contains("frame"), s"$what: ${e.getMessage}")
+    }
+    // a frame whose payload is cut mid-section, decoded from the frame
+    val whole = encodeTransferPayload(Seq(Amqp10Wire.SeqAnnotation -> 1L),
+      AmqpMessage(messageId = Some("m"), body = AmqpValueBody("x" * 400)))
+    val framed = encodeFrame(Frame(FrameTypeAmqp, 0, described(Desc.Transfer, UInt(0L)),
+      whole.dropRight(1)))
+    intercept[IllegalArgumentException](decodeTransferPayload(decodeFrame(framed).payloadReader))
   }
 
   // -------------------------------------- live server vs spec-authored peer
