@@ -15,7 +15,9 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
-  private def fileBytes(path: String): Long = {
+  /** Bytes of a table path: a file's length, or the summed lengths of a
+    * directory-style table's part files. */
+  private[graft] def fileBytes(path: String): Long = {
     val f = new java.io.File(path)
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(_.length()).sum
     else f.length()

@@ -1,8 +1,9 @@
 package graft.examples
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.streaming.{AmqpEndpointRegistry, AmqpMessage, AmqpTcpServer, AmqpValueBody, InMemoryAmqpBroker}
+import graft.streaming.{Amqp10Server, AmqpEndpointRegistry, AmqpMessage, AmqpValueBody, InMemoryAmqpBroker}
 
 /** The consumer-fleet topology the reference's broker deployments run
   * (README.md:5-9 in /root/reference — many workers on one queue),
@@ -13,7 +14,7 @@ import graft.streaming.{AmqpEndpointRegistry, AmqpMessage, AmqpTcpServer, AmqpVa
   * [[graft.streaming.AmqpSharedMicroBatchStream]]).
   *
   * Runs self-contained: a producer pumps a job queue over a real
-  * tcp:// socket, two "workers" drain it concurrently, and the demo
+  * amqp10:// socket, two "workers" drain it concurrently, and the demo
   * prints each worker's share plus the union's exactly-once proof.
   *
   * Usage: sbt "runMain graft.examples.CompetingConsumers"
@@ -28,12 +29,21 @@ object CompetingConsumers {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val server = new AmqpTcpServer(new InMemoryAmqpBroker)
-    val endpoint = s"tcp://127.0.0.1:${server.port}"
+    val server = new Amqp10Server(new InMemoryAmqpBroker)
+    val endpoint = s"amqp10://127.0.0.1:${server.port}"
     println(s"[demo] broker listening on $endpoint")
-    val producer = AmqpEndpointRegistry.endpoint(endpoint)
-
     val dir = java.nio.file.Files.createTempDirectory("competing-consumers")
+    try run(spark, endpoint, dir)
+    finally {
+      spark.stop()
+      AmqpEndpointRegistry.reset(endpoint)
+      server.close()
+      JavaUtils.deleteRecursively(dir.toFile)
+    }
+  }
+
+  private def run(spark: SparkSession, endpoint: String, dir: java.nio.file.Path): Unit = {
+    val producer = AmqpEndpointRegistry.endpoint(endpoint)
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
     def worker(idx: Int) =
       spark.readStream.format("amqp")
@@ -121,7 +131,5 @@ object CompetingConsumers {
       println(s"[demo] dead-lettered: ${r.getString(0)} " +
         s"annotations=${r.getMap[String, String](1)}")
     }
-    spark.stop()
-    server.close()
   }
 }

@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.streaming.{Amqp10Server, AmqpEndpointRegistry, AmqpMessage, AmqpTcpServer, AmqpValueBody, InMemoryAmqpBroker}
+import graft.streaming.{Amqp10Server, AmqpEndpointRegistry, AmqpMessage, AmqpValueBody, InMemoryAmqpBroker}
 
 /** Puts the AMQP source itself under the DuckDB oracle gate: a
   * deterministic slice of the `events` table is pumped through a broker
@@ -76,9 +77,9 @@ object IngestQueries {
       // the deployment knob.
       val srcBytes =
         try {
-          val dir = new java.io.File(d)
-          Option(dir.listFiles()).toSeq.flatten
-            .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+          Option(new java.io.File(d).listFiles()).toSeq.flatten
+            .filter(_.getName.endsWith(".parquet"))
+            .map(f => Tables.fileBytes(f.getPath)).sum
         } catch { case _: Throwable => 0L }
       val derived = math.min(s.sparkContext.defaultParallelism.toLong,
         math.max(4L, srcBytes / (32L << 20))).toString
@@ -129,15 +130,6 @@ object IngestQueries {
     s"amqps://127.0.0.1:${server.port}"
   }
 
-  /** One tcp:// server per JVM for the shared-subscription gate (the
-    * claim surface lives on mem://, tcp://, AND the amqp10:// wire —
-    * amqp_shared_consumers drives the compact-RPC transport,
-    * amqp_shared_wire the interoperable AMQP 1.0 framing). Per-run
-    * addresses keep warm runs independent. */
-  private lazy val tcpGateEndpoint: String = {
-    val server = new AmqpTcpServer(new InMemoryAmqpBroker)
-    s"tcp://127.0.0.1:${server.port}"
-  }
   private val sharedGateRun = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Resolve (endpoint, address) for one gate run. */
@@ -2432,8 +2424,8 @@ object IngestQueries {
 
   // ---------------------------------------------- amqp_shared_consumers
   /** SHARED SUBSCRIPTION under the oracle gate: TWO CONCURRENT consuming
-    * streams in one share group drain one address over the tcp:// wire
-    * (claims, renewals, and per-claim settlement all crossing the
+    * streams in one share group drain one address over the amqp10://
+    * wire (claims, renewals, and per-claim settlement all crossing the
     * socket), and the UNION of their outputs must hash-match the oracle
     * EXACTLY ONCE — a double-dispatched slice duplicates rows, a dropped
     * or stranded claim loses them, and either breaks the hash. The
@@ -2453,31 +2445,39 @@ object IngestQueries {
     * the `minMessagesPerTrigger`/`maxTriggerDelay` admission floor
     * (Kafka ReadMinRows parity) — held tails must still land exactly
     * once. */
-  def amqpSharedConsumers(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
+  def amqpSharedConsumers(s: SparkSession, d: String): DataFrame =
+    sharedConsumersGate(s, d, col("event_id") % 11 === 9, "jobs", "workers",
+      minRowsFloor = true)
+
+  /** Two consumers in share group `group` start BEFORE the pump of the
+    * `slice` of events (to address `prefix-<run>`) and drain it
+    * concurrently over the amqp10:// gate server; returns the union of
+    * their outputs. With `minRowsFloor` the consumers run under a 20-row
+    * admission floor with a 1 s delay ceiling (Kafka
+    * minOffsetsPerTrigger/maxTriggerDelay parity): claims below 20
+    * available rows hold until the ceiling, so an admission bug that
+    * drops or re-claims the held tail breaks the oracle. */
+  private def sharedConsumersGate(s: SparkSession, d: String, slice: Column,
+      prefix: String, group: String, minRowsFloor: Boolean): DataFrame = gatedStream(s, d) {
     import s.implicits._
-    val ep = tcpGateEndpoint
+    val ep = wireGateEndpoint
     val client = AmqpEndpointRegistry.endpoint(ep)
-    val address = s"jobs-${sharedGateRun.incrementAndGet()}"
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 11 === 9)
+    val address = s"$prefix-${sharedGateRun.incrementAndGet()}"
+    val rows = Tables.events(s, d).filter(slice)
       .select(col("event_id"), col("event_type"), col("value"))
       .collect()
-    require(rows.nonEmpty, "shared-consumers gate slice is empty")
-    val scratch = java.nio.file.Files.createTempDirectory("graft-shared-gate")
+    require(rows.nonEmpty, s"$group gate slice is empty")
+    val scratch = java.nio.file.Files.createTempDirectory(s"graft-shared-$prefix")
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String, Int)]()
     val perTrigger = math.max(20, rows.length / 6)
-    def consumer(idx: Int) =
-      s.readStream.format("amqp")
+    def consumer(idx: Int) = {
+      val reader = s.readStream.format("amqp")
         .option("endpoint", ep).option("address", address)
-        .option("sharedGroup", "workers")
+        .option("sharedGroup", group)
         .option("maxMessagesPerTrigger", perTrigger.toString)
-        // the gate runs UNDER the min-rows admission floor (Kafka
-        // minOffsetsPerTrigger/maxTriggerDelay parity): claims below 20
-        // available rows hold until the 1s ceiling — the floor is on the
-        // hash path, so an admission bug that drops or re-claims the
-        // held tail breaks the oracle
-        .option("minMessagesPerTrigger", "20")
-        .option("maxTriggerDelay", "1s")
+      (if (minRowsFloor)
+        reader.option("minMessagesPerTrigger", "20").option("maxTriggerDelay", "1s")
+      else reader)
         .load()
         .withColumn("cents",
           (col("body").cast(DecimalType(18, 2)) * 100).cast(IntegerType))
@@ -2489,6 +2489,7 @@ object IngestQueries {
           ()
         }
         .start()
+    }
     val q1 = consumer(1)
     val q2 = consumer(2)
     try {
@@ -2504,13 +2505,14 @@ object IngestQueries {
       // doc for why no fresh claim can slip in after that)
       q1.processAllAvailable(); q2.processAllAvailable()
       q1.processAllAvailable(); q2.processAllAvailable()
-      // the tail below the min-rows floor is HELD by admission (so
+      // a tail below the min-rows floor is HELD by admission (so
       // processAllAvailable can return before it lands) and fires at
-      // the 1s delay ceiling — the continuous triggers keep polling
+      // the 1s delay ceiling — the continuous triggers keep polling;
+      // without the floor everything has landed and this never waits
       val deadline = System.currentTimeMillis() + 60000
       while (emitted.size < rows.length && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
-    } finally { q1.stop(); q2.stop() }
+    } finally { q1.stop(); q2.stop(); JavaUtils.deleteRecursively(scratch.toFile) }
     import scala.jdk.CollectionConverters._
     val got = emitted.asScala.toSeq
     require(got.map(_._1).toSet == Set(1, 2),
@@ -2527,71 +2529,22 @@ object IngestQueries {
 
   // --------------------------------------------------- amqp_shared_wire
   /** SHARED SUBSCRIPTION over the INTEROPERABLE WIRE: the same
-    * two-concurrent-consumers contract as amqp_shared_consumers, but
-    * every claim, renewal, per-claim settlement, and fetch crosses REAL
+    * two-concurrent-consumers contract as amqp_shared_consumers, on its
+    * own slice and group and without the min-rows admission floor.
+    * Every claim, renewal, per-claim settlement, and fetch crosses REAL
     * AMQP 1.0 framing (claim RPCs ride probe attaches —
-    * [[graft.streaming.Amqp10Wire.ShareGroupProp]]) — the consumer-fleet
-    * topology against an actual AMQP 1.0 broker endpoint, which r8 could
-    * only run on the engine's compact RPC transport. The union of both
+    * [[graft.streaming.Amqp10Wire.ShareGroupProp]]). The union of both
     * consumers' outputs must hash the oracle exactly once: a claim
     * triple corrupted in wire encode/decode double-reads or drops rows,
     * and either breaks the hash.
     *
-    * Scale shape: identical to the tcp:// gate — admission is one probe
-    * attach per trigger per consumer (O(1) ledger arithmetic
+    * Scale shape: identical to amqp_shared_consumers — admission is one
+    * probe attach per trigger per consumer (O(1) ledger arithmetic
     * broker-side), reads are per-claim drain slices on pooled
     * per-reader connections; the wire adds framing, never coordination. */
-  def amqpSharedWire(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val ep = wireGateEndpoint
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val address = s"wirejobs-${sharedGateRun.incrementAndGet()}"
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 13 === 4)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect()
-    require(rows.nonEmpty, "shared-wire gate slice is empty")
-    val scratch = java.nio.file.Files.createTempDirectory("graft-shared-wire-gate")
-    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String, Int)]()
-    val perTrigger = math.max(20, rows.length / 6)
-    def consumer(idx: Int) =
-      s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address)
-        .option("sharedGroup", "wire-workers")
-        .option("maxMessagesPerTrigger", perTrigger.toString)
-        .load()
-        .withColumn("cents",
-          (col("body").cast(DecimalType(18, 2)) * 100).cast(IntegerType))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$scratch/ckpt$idx")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.select(col("message_id"), col("subject"), col("cents")).collect()
-            .foreach(r => emitted.add((idx, r.getString(0), r.getString(1), r.getInt(2))))
-          ()
-        }
-        .start()
-    val q1 = consumer(1)
-    val q2 = consumer(2)
-    try {
-      pumpAll(client, address, rows.toSeq.map { r =>
-          (AmqpMessage(
-            messageId = Some(r.getLong(0).toString),
-            subject = Some(r.getString(1)),
-            body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-        })
-      // double pass, same as the tcp gate: each consumer's first return
-      // can precede the other's in-flight claims
-      q1.processAllAvailable(); q2.processAllAvailable()
-      q1.processAllAvailable(); q2.processAllAvailable()
-    } finally { q1.stop(); q2.stop() }
-    import scala.jdk.CollectionConverters._
-    val got = emitted.asScala.toSeq
-    require(got.map(_._1).toSet == Set(1, 2),
-      s"work-sharing degenerated to one consumer: split " +
-        s"${got.groupBy(_._1).view.mapValues(_.size).toMap}")
-    got.map { case (_, id, et, c) => (id, et, c) }
-      .toDF("message_id", "event_type", "cents")
-  }
+  def amqpSharedWire(s: SparkSession, d: String): DataFrame =
+    sharedConsumersGate(s, d, col("event_id") % 13 === 4, "wirejobs", "wire-workers",
+      minRowsFloor = false)
 
   val amqpSharedWireSql: String =
     """SELECT CAST(event_id AS VARCHAR) AS message_id, event_type,
@@ -3022,7 +2975,7 @@ object IngestQueries {
     * the input with no coordination beyond the broker's lease ledger;
     * the output queue sees \|survivors\| messages exactly once. */
   def amqpSharedRelay(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val ep = tcpGateEndpoint
+    val ep = wireGateEndpoint
     val client = AmqpEndpointRegistry.endpoint(ep)
     val run = sharedGateRun.incrementAndGet()
     val in = s"relay-in-$run"
@@ -3060,7 +3013,7 @@ object IngestQueries {
     try {
       w1.processAllAvailable(); w2.processAllAvailable()
       w1.processAllAvailable(); w2.processAllAvailable()
-    } finally { w1.stop(); w2.stop() }
+    } finally { w1.stop(); w2.stop(); JavaUtils.deleteRecursively(scratch.toFile) }
     val relayed = s.read.format("amqp")
       .option("endpoint", ep).option("address", out)
       .option("propertyColumns", "worker")
@@ -3090,7 +3043,7 @@ object IngestQueries {
   /** SHARE-GROUP lag report under the oracle gate — the
     * consumer-group-describe for work-sharing groups
     * ([[graft.streaming.AmqpStreamOps.sharedLagReport]]), driven into a
-    * fully determined ledger state over the tcp:// wire: pump a slice,
+    * fully determined ledger state over the amqp10:// wire: pump a slice,
     * lease three equal claims to three workers, settle the first
     * (work done), let the third's lease lapse (worker died), keep the
     * second live — then one atomic ledger snapshot must report exactly
@@ -3104,7 +3057,7 @@ object IngestQueries {
     * Scale shape: one ledger-snapshot RPC per address, driver-side —
     * rows independent of backlog depth; nothing is fetched. */
   def amqpSharedLag(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val ep = tcpGateEndpoint
+    val ep = wireGateEndpoint
     val client = AmqpEndpointRegistry.endpoint(ep)
     val address = s"lag-${sharedGateRun.incrementAndGet()}"
     val rows = Tables.events(s, d)

@@ -17,12 +17,11 @@ import Amqp10Wire._
   * detached after, like the reference's per-receiver link lifecycle
   * (AMQPReceiver.scala:97-118 in /root/reference).
   *
-  * Disconnect parity (same contract as [[TcpAmqpEndpoint]]): on IO
-  * failure the client re-dials — re-running the header/SASL/open/begin
-  * handshake and re-attaching links lazily — then retries the
-  * interrupted operation once. SASL refusal throws SecurityException
-  * and is never retried (failed-SASL-connect restart-with-cause,
-  * AMQPReceiver.scala:92).
+  * Disconnect parity: on IO failure the client re-dials — re-running
+  * the header/SASL/open/begin handshake and re-attaching links lazily —
+  * then retries the interrupted operation once. SASL refusal throws
+  * SecurityException and is never retried (failed-SASL-connect
+  * restart-with-cause, AMQPReceiver.scala:92).
   */
 class Amqp10Endpoint(host: String, port: Int,
     username: Option[String] = None, password: Option[String] = None,
@@ -264,10 +263,10 @@ class Amqp10Endpoint(host: String, port: Int,
   /** At-least-once under reconnect: [[call]] re-dials and retries the
     * operation once after an IOException, so if the broker applied the
     * transfer but the connection died before the disposition was read,
-    * the retry enqueues the message a second time under a new seq (same
-    * contract as [[TcpAmqpEndpoint]]). Producers needing exactly-once
-    * must use the transactional path ([[stage]]/[[commitStaged]]), whose
-    * epoch-idempotent discharge makes replays no-ops. */
+    * the retry enqueues the message a second time under a new seq.
+    * Producers needing exactly-once must use the transactional path
+    * ([[stage]]/[[commitStaged]]), whose epoch-idempotent discharge
+    * makes replays no-ops. */
   override def send(address: String, msg: AmqpMessage, timestampMicros: Long): Long =
     call {
       val state = transfer(senderLink(address)) { w =>
@@ -363,6 +362,18 @@ class Amqp10Endpoint(host: String, port: Int,
       described(Desc.Source, address), null, null, null,
       null, null, null, null, props))
     val echo = await(Desc.Attach)
+    if (field(echo.performative, 5) == null) {
+      // refused (§2.6.3): the server's detach carries the reason; answer
+      // it to close the link and surface the refusal as the broker's own
+      // IllegalArgumentException — the connection stays usable
+      val detach = await(Desc.Detach)
+      sendFrame(described(Desc.Detach, UInt(handle), java.lang.Boolean.TRUE))
+      val why = field(detach.performative, 2) match {
+        case err: Described => String.valueOf(field(err, 1))
+        case _ => "no reason given"
+      }
+      throw new IllegalArgumentException(s"broker refused the request on '$address': $why")
+    }
     val echoProps = field(echo.performative, 13) match {
       case m: AmqpWireMap => m
       case _ => AmqpWireMap(Vector.empty)
@@ -433,7 +444,7 @@ class Amqp10Endpoint(host: String, port: Int,
     case other => throw new IllegalStateException(s"bad share-claim echo: $other")
   }
 
-  /** Same reconnect contract as [[TcpAmqpEndpoint.claim]]: a retried
+  /** Reconnect contract of [[call]] applied to claims: a retried
     * claim whose first reply was lost self-heals via lease expiry
     * (nobody reads the orphan's slices); renew/settle are idempotent
     * broker-side. */

@@ -113,7 +113,10 @@ private[streaming] object Amqp10Wire {
   val ShareStatsEchoProp = "x-graft-share-stats-echo"
   /** Poison-message policy (configureGroupPolicy): max-deliveries +
     * dead-letter address ride one probe attach; the echo acks with the
-    * applied ceiling. */
+    * applied ceiling. A policy the broker refuses is answered by a
+    * source-less attach echo and a detach carrying the reason
+    * (§2.6.3 link refusal), which the client raises as an
+    * IllegalArgumentException. */
   val SharePolicyMaxProp = "x-graft-share-max-deliveries"
   val SharePolicyDlqProp = "x-graft-share-dlq"
   val PartitionAnnotation = "x-graft-partition"
@@ -434,6 +437,9 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
       // to their SESSION (§2.5/§2.6): everything keys on (channel, …) so
       // two sessions reusing handle 0 or delivery-id 0 never collide.
       val links = mutable.Map[(Int, Long), Link]()
+      // links this server refused (attach answered by detach(error)):
+      // the peer's answering detach closes them without another echo
+      val refused = mutable.Set[(Int, Long)]()
       // (channel, delivery-id) -> (address, seq) for transfers we pushed
       val outgoing = mutable.Map[(Int, Long), (String, Long)]()
       val nextOutgoingIds = mutable.Map[Int, Long]().withDefaultValue(0L)
@@ -562,6 +568,7 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
                 case other =>
                   throw new IllegalStateException(s"bad share-id list: $other")
               }
+              var refusal: Option[String] = None
               val echoProps =
                 if (props.get(Sym(ShareGroupProp)).isDefined) {
                   val group = String.valueOf(props.get(Sym(ShareGroupProp)).get)
@@ -572,8 +579,12 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
                   if (props.get(Sym(SharePolicyMaxProp)).isDefined) {
                     val maxDel = asLong(props.get(Sym(SharePolicyMaxProp)).get).toInt
                     val dlq = props.get(Sym(SharePolicyDlqProp)).map(String.valueOf(_))
-                    backing.configureGroupPolicy(sourceAddr, group, maxDel, dlq)
-                    amqpWireMap(Sym(SharePolicyMaxProp) -> maxDel.toLong)
+                    try {
+                      backing.configureGroupPolicy(sourceAddr, group, maxDel, dlq)
+                      amqpWireMap(Sym(SharePolicyMaxProp) -> maxDel.toLong)
+                    } catch { case e: IllegalArgumentException =>
+                      refusal = Some(e.getMessage); null
+                    }
                   } else props.get(Sym(ShareSettleProp)) match {
                     case Some(ids) =>
                       val claimIds = shareIdList(ids)
@@ -624,10 +635,23 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
               // §2.7.3 attach fields: ..., 6 target, 7 unsettled,
               // 8 incomplete-unsettled, 9 initial-delivery-count,
               // 10 max-message-size, 11/12 capabilities, 13 properties
-              amqp(described(Desc.Attach, name, UInt(handle),
-                java.lang.Boolean.FALSE, null, null,
-                described(Desc.Source, sourceAddr), null, null, null,
-                UInt(0L), null, null, null, echoProps))
+              refusal match {
+                case None =>
+                  amqp(described(Desc.Attach, name, UInt(handle),
+                    java.lang.Boolean.FALSE, null, null,
+                    described(Desc.Source, sourceAddr), null, null, null,
+                    UInt(0L), null, null, null, echoProps))
+                case Some(why) =>
+                  // the broker refused the request (§2.6.3 link refusal):
+                  // an attach echo without a source, then detach(closed)
+                  // carrying the reason — the connection stays up
+                  links.remove((ch, handle))
+                  refused += ((ch, handle))
+                  amqp(described(Desc.Attach, name, UInt(handle),
+                    java.lang.Boolean.FALSE))
+                  amqp(described(Desc.Detach, UInt(handle), java.lang.Boolean.TRUE,
+                    described(Desc.Error, Sym("amqp:invalid-field"), why)))
+              }
             }
           case Desc.Flow =>
             // drain-mode credit on a consumer link: push the slice, then
@@ -770,13 +794,15 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
           case Desc.Detach =>
             val handle = asLong(field(perf, 0))
             links.remove((ch, handle))
-            amqp(described(Desc.Detach, UInt(handle), java.lang.Boolean.TRUE))
+            if (!refused.remove((ch, handle)))
+              amqp(described(Desc.Detach, UInt(handle), java.lang.Boolean.TRUE))
           case Desc.End =>
             // the whole session dies with its channel: links, half-read
             // transfers, the outgoing-delivery ledger, AND the transfer-id
             // counter — a re-begun session on this channel starts at
             // delivery-id 0, which is what the begin echo announces
             links.filterInPlace { case ((c, _), _) => c != ch }
+            refused.filterInPlace { case (c, _) => c != ch }
             pending.filterInPlace { case ((c, _), _) => c != ch }
             outgoing.filterInPlace { case ((c, _), _) => c != ch }
             nextOutgoingIds.remove(ch)

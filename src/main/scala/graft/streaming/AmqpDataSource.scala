@@ -259,7 +259,7 @@ object AmqpSourceConfig {
     // URI so every executor-side connection authenticates (reference:
     // PLAIN when credentials present, ANONYMOUS otherwise).
     val user = Option(o.get("username"))
-    val socketScheme = Seq("tcp://", "amqp10://", "amqps://").find(rawEndpoint.startsWith)
+    val socketScheme = Seq("amqp10://", "amqps://").find(rawEndpoint.startsWith)
     val endpoint = socketScheme match {
       case Some(scheme) if user.isDefined && !rawEndpoint.contains("@") =>
         s"$scheme${user.get}:${Option(o.get("password")).getOrElse("")}@${rawEndpoint.stripPrefix(scheme)}"

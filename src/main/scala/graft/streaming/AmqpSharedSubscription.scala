@@ -47,9 +47,9 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
   * Scale shape: claims are O(1) ledger arithmetic per trigger on the
   * driver (one RPC per address), slices split into bounded partitions
   * exactly like the default stream, and the broker holds per-group
-  * state proportional to LIVE claims, not history. Transports: mem://,
-  * tcp://, and the interoperable amqp10:///amqps:// wire (claim RPCs
-  * ride probe attaches — [[Amqp10Wire.ShareGroupProp]]) all carry the
+  * state proportional to LIVE claims, not history. Transports: mem://
+  * and the interoperable amqp10:///amqps:// wire (claim RPCs ride
+  * probe attaches — [[Amqp10Wire.ShareGroupProp]]) all carry the
   * claim surface; a transport without it fails loudly at the first
   * claim.
   */

@@ -17,9 +17,11 @@ import Amqp10Wire._
 /** End-to-end coverage of the `amqp10://` transport — the real AMQP 1.0
   * wire path (the protocol the reference speaks through Vert.x Proton;
   * its suites all run against an embedded broker over the wire,
-  * AMQPTestUtils.scala:66-91,213-266 in /root/reference). Mirrors
-  * AmqpTcpSpec's transport-parity cases, then adds what only a real
-  * framed protocol needs: multi-frame transfer reassembly (both
+  * AMQPTestUtils.scala:66-91,213-266 in the reference). Covers the
+  * transport-parity cases every socket endpoint owes the source and
+  * sink (operations, SASL, credential folding, reader pooling,
+  * connect failure, re-dial), then adds what only a real framed
+  * protocol needs: multi-frame transfer reassembly (both
   * directions, plus interleaved across links), and a raw wire-level
   * exchange driving header/open/begin/attach/transfer/disposition with
   * the codec alone — no [[Amqp10Endpoint]] in the loop.
@@ -387,8 +389,14 @@ class Amqp10Spec extends SparkSpecBase {
 
   test("client re-dials after a server drop (receiver-restart parity)") {
     val backing = new InMemoryAmqpBroker
-    // Fixed-range port below the ephemeral range — see AmqpTcpSpec's
-    // re-dial case for why an ephemeral port is a flake magnet.
+    // The reference restarts its receiver on TCP disconnect
+    // (AMQPReceiver.scala:124-142); our link must survive a broker
+    // bounce: same backing state, new server process on the same port.
+    // Bind BELOW the kernel's ephemeral range (32768+): an ephemeral
+    // port freed by server1.close() can be handed to any unrelated
+    // socket (Spark services, parallel suites) before server2 rebinds —
+    // a BindException flake. A fixed-range port only ever contends
+    // transiently with our own close, which the retry loops absorb.
     val server1 = {
       var srv: Amqp10Server = null
       var p = 22651
@@ -416,6 +424,85 @@ class Amqp10Spec extends SparkSpecBase {
         assert(bodies == Seq(AmqpValueBody("before"), AmqpValueBody("after")))
       } finally server2.close()
     } finally client.close()
+  }
+
+  test("failed connect surfaces a clean error (restart-with-cause parity)") {
+    // Reference: a failed initial connect restarts the receiver with
+    // "Connection to AMQP address not established" (AMQPReceiver.scala:92).
+    // Our pull model surfaces the connect failure to the driver/task,
+    // where Spark's retry machinery plays the restart role — the error
+    // must be the raw connection cause, not a hang or a swallowed null.
+    val dead = new Amqp10Endpoint("127.0.0.1", 1) // nothing listens on port 1
+    try {
+      val e = intercept[java.io.IOException](dead.latestSeq("addr"))
+      assert(e.getMessage != null)
+    } finally dead.close()
+  }
+
+  test("reader connection pool: dedicated per borrow, reused after release, drained on reset") {
+    withServer { (backing, ep) =>
+      backing.send("pool-addr", AmqpMessage(body = AmqpValueBody("p1")), 1L)
+      val shared = AmqpEndpointRegistry.endpoint(ep)
+      val r1 = AmqpEndpointRegistry.readerEndpoint(ep)
+      val r2 = AmqpEndpointRegistry.readerEndpoint(ep)
+      // readers never share the cached client, nor each other (the
+      // whole point: N drains proceed on N sockets)
+      assert(!(r1 eq shared) && !(r2 eq shared) && !(r1 eq r2))
+      assert(r1.fetch("pool-addr", 0, 1).map(_._2.body) == Seq(AmqpValueBody("p1")))
+      assert(r2.fetch("pool-addr", 0, 1).map(_._2.body) == Seq(AmqpValueBody("p1")))
+      // release → the same connection comes back (no redial per batch)
+      AmqpEndpointRegistry.releaseReaderEndpoint(ep, r1)
+      val r3 = AmqpEndpointRegistry.readerEndpoint(ep)
+      assert(r3 eq r1, "released connection must be reused")
+      AmqpEndpointRegistry.releaseReaderEndpoint(ep, r2)
+      AmqpEndpointRegistry.releaseReaderEndpoint(ep, r3)
+      assert(AmqpEndpointRegistry.readerPoolSize(ep) == 2)
+      // reset drains the pool: the next borrow dials a new connection
+      AmqpEndpointRegistry.reset(ep)
+      assert(AmqpEndpointRegistry.readerPoolSize(ep) == 0, "reset must drain the pool")
+      val r4 = AmqpEndpointRegistry.readerEndpoint(ep)
+      assert(!(r4 eq r1) && !(r4 eq r2), "no pooled connection survives a reset")
+      assert(r4.fetch("pool-addr", 0, 1).map(_._2.body) == Seq(AmqpValueBody("p1")))
+      AmqpEndpointRegistry.releaseReaderEndpoint(ep, r4)
+      // mem:// endpoints have no socket to pool: the shared broker
+      val mem = AmqpEndpointRegistry.readerEndpoint("mem://pool-spec")
+      assert(mem eq AmqpEndpointRegistry.endpoint("mem://pool-spec"))
+      AmqpEndpointRegistry.reset("mem://pool-spec")
+    }
+  }
+
+  test("username/password source options fold into amqp10:// and amqps:// URIs") {
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    def folded(endpoint: String, creds: (String, String)*): String =
+      AmqpSourceConfig(new CaseInsensitiveStringMap(
+        (("endpoint" -> endpoint) +: creds).toMap.asJava)).endpoint
+    assert(folded("amqp10://h:1234", "username" -> "alice", "password" -> "pw") ==
+      "amqp10://alice:pw@h:1234")
+    assert(folded("amqps://h:5671?sasl=SCRAM-SHA-256", "username" -> "alice",
+      "password" -> "pw") == "amqps://alice:pw@h:5671?sasl=SCRAM-SHA-256")
+    assert(folded("amqp10://bob:x@h:1234", "username" -> "alice") ==
+      "amqp10://bob:x@h:1234", "userinfo already in the URI wins")
+    assert(folded("mem://x", "username" -> "alice") == "mem://x",
+      "credentials only apply to socket transports")
+  }
+
+  test("unknown endpoint schemes are refused, not read as an empty in-process broker") {
+    for (ep <- Seq("tcp://h:1", "amqp://h:5672")) {
+      for (lookup <- Seq[String => AmqpEndpoint](
+          AmqpEndpointRegistry.endpoint, AmqpEndpointRegistry.readerEndpoint)) {
+        val e = intercept[IllegalArgumentException](lookup(ep))
+        assert(e.getMessage.contains("mem://, amqp10://, amqps://"), e.getMessage)
+      }
+      val e = intercept[Exception] {
+        val q = spark.readStream.format("amqp")
+          .option("endpoint", ep).option("address", "a").load()
+          .writeStream.format("memory").queryName("unknown_scheme").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => t.isInstanceOf[IllegalArgumentException] &&
+          t.getMessage.contains(s"unsupported endpoint '$ep'")), e.toString)
+    }
   }
 
   test("sink writes through amqp10://; exactly-once epoch commit holds remotely") {

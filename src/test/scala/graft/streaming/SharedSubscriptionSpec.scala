@@ -83,38 +83,6 @@ class SharedSubscriptionSpec extends SparkSpecBase {
     assert(b.settledUpTo("q2") == 10L, "the address floor advances over the settled prefix")
   }
 
-  test("claim surface round-trips the tcp:// transport") {
-    val backing = new InMemoryAmqpBroker
-    pump(backing, "q", 20)
-    val server = new AmqpTcpServer(backing)
-    val client = new TcpAmqpEndpoint("127.0.0.1", server.port)
-    try {
-      val cs = client.claim("q", "g", "worker-1", 15, 60000)
-      assert(cs.map(c => (c.fromExclusive, c.toInclusive)) == Seq((0L, 15L)))
-      assert(client.renewClaims("q", "g", "worker-1", cs, 60000).isEmpty)
-      assert(client.renewClaims("q", "g", "worker-2", cs, 60000) == cs.map(_.claimId),
-        "another owner's renew reports the claims lost")
-      client.settleClaims("q", "g", cs.map(_.claimId))
-      assert(client.fetch("q", 0, 20).map(_._1).forall(_ > 15))
-      // the poison policy crosses the socket (and refusals surface)
-      client.configureGroupPolicy("q", "g", 5, Some("q-dlq"))
-      intercept[Exception](client.configureGroupPolicy("q", "g", 5, None))
-      // a transport without the surface fails loudly, never degrades
-      val bare: AmqpEndpoint = new AmqpEndpoint {
-        def send(address: String, msg: AmqpMessage, timestampMicros: Long): Long = 0L
-        def latestSeq(address: String): Long = 0L
-        def fetch(address: String, fromExclusive: Long, toInclusive: Long): Seq[(Long, AmqpMessage, Long)] = Nil
-        def settle(address: String, upTo: Long): Unit = ()
-        def settledUpTo(address: String): Long = 0L
-        def stage(txn: String, partitionId: Int, msgs: Seq[AmqpMessage]): Unit = ()
-        def commitStaged(txn: String, queryId: String, epochId: Long, address: String,
-            timestampMicros: Long, routeByTo: Boolean): Int = 0
-        def abortStaged(txn: String): Unit = ()
-      }
-      intercept[UnsupportedOperationException](bare.claim("q", "g", "o", 1, 1000))
-    } finally { client.close(); server.close() }
-  }
-
   test("poison-message ceiling: a slice at max deliveries routes to the DLQ, annotated") {
     val (_, b) = freshBroker("poison")
     var now = 1000L
@@ -182,8 +150,26 @@ class SharedSubscriptionSpec extends SparkSpecBase {
       client.settleClaims("q", "g", cs.map(_.claimId))
       assert(client.fetch("q", 0, 40).map(_._1).forall(_ > 15))
       assert(client.settledUpTo("q") == 15L)
-      // the poison policy rides a probe attach too
+      // the poison policy rides a probe attach too; a refused policy
+      // comes back as the broker's refusal, and the connection survives
       client.configureGroupPolicy("q", "g", 7, Some("q-dlq"))
+      val refused = intercept[IllegalArgumentException](
+        client.configureGroupPolicy("q", "g", 5, None))
+      assert(refused.getMessage.contains("dead-letter address"), refused.getMessage)
+      assert(client.groupStats("q", "g") == backing.groupStats("q", "g"))
+      // a transport without the surface fails loudly, never degrades
+      val bare: AmqpEndpoint = new AmqpEndpoint {
+        def send(address: String, msg: AmqpMessage, timestampMicros: Long): Long = 0L
+        def latestSeq(address: String): Long = 0L
+        def fetch(address: String, fromExclusive: Long, toInclusive: Long): Seq[(Long, AmqpMessage, Long)] = Nil
+        def settle(address: String, upTo: Long): Unit = ()
+        def settledUpTo(address: String): Long = 0L
+        def stage(txn: String, partitionId: Int, msgs: Seq[AmqpMessage]): Unit = ()
+        def commitStaged(txn: String, queryId: String, epochId: Long, address: String,
+            timestampMicros: Long, routeByTo: Boolean): Int = 0
+        def abortStaged(txn: String): Unit = ()
+      }
+      intercept[UnsupportedOperationException](bare.claim("q", "g", "o", 1, 1000))
     } finally { client.close(); server.close() }
   }
 
@@ -300,9 +286,9 @@ class SharedSubscriptionSpec extends SparkSpecBase {
     val st = b.groupStats("q", "g")
     assert(st == AmqpGroupStats(headSeq = 40, dispatchedUpTo = 20,
       outstandingClaims = 0, outstandingRows = 0, redeliverableRows = 10), st)
-    // and over the tcp transport, the same snapshot crosses the socket
-    val server = new AmqpTcpServer(b)
-    val client = new TcpAmqpEndpoint("127.0.0.1", server.port)
+    // and over the amqp10:// wire, the same snapshot crosses the socket
+    val server = new Amqp10Server(b)
+    val client = new Amqp10Endpoint("127.0.0.1", server.port)
     try assert(client.groupStats("q", "g") == st)
     finally { client.close(); server.close() }
   }
