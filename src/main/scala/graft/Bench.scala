@@ -4,8 +4,6 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -23,12 +21,7 @@ import org.apache.spark.sql.SparkSession
   * are reported as -1 with the error listed in an "errors" field instead
   * of masquerading as a normal elapsed time.
   *
-  * Session tuning mirrors what a production deployment would set:
-  *  - shuffle.partitions = local cores (not the 200 default);
-  *  - AQE on (runtime coalescing + skew-join splitting);
-  *  - ICU case mappings OFF: Spark 4's collation-aware case mapping pays
-  *    a ~90s one-time static init on first upper()/lower(); the JVM case
-  *    mapping is identical for this (ASCII) data.
+  * The session and its warm-up come from [[GraftSession]].
   */
 object Bench {
   /** 1-minute load average — the ambient-contention annotation for the
@@ -65,19 +58,7 @@ object Bench {
     if (loadPre > warnLoad)
       System.err.println(f"[bench] WARNING: 1-min load $loadPre%.2f > $warnLoad%.2f — " +
         "wall-clock numbers in this snapshot are load-contaminated; prefer a quiet-host re-run")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions) // native functions + TopKRewrite
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // cached signature frames are tiny; columnar dictionary
-      // compression of cache batches profiled as a hot spot
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
 
     val results = mutable.LinkedHashMap[String, Double]()
     val errors = mutable.LinkedHashMap[String, String]()
@@ -125,38 +106,7 @@ object Bench {
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit()))
 
-    // untimed warm-up: dedicated throwaway plans, never one of the timed
-    // queries. This exercises the execution machinery end to end —
-    // parquet scan, shuffle agg, window functions, explode, broadcast
-    // join, cache write/read, array columns — because on this VM the
-    // first query otherwise absorbs ~60s of one-time cost (janino +
-    // whole-stage-codegen JIT, shuffle/agg machinery classloading, heap
-    // page-faulting). Measured: dedup_embedding_cosine 66s as the first
-    // timed query vs 6.3s warm, same plan, same data.
-    try {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val wt0 = System.nanoTime()
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag")
-        .agg(sum("l_quantity").as("s"), countDistinct("l_suppkey").as("d"))
-        .collect()
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select("doc_id", "text").limit(500).cache()
-      val tok = docs.select(col("doc_id"),
-        posexplode(split(trim(col("text")), " +")).as(Seq("pos", "tok")))
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      tok.withColumn("nx", lead(col("tok"), 1).over(w))
-        .groupBy(col("doc_id")).agg(min(hash(col("tok"))).as("h"))
-        .join(broadcast(docs.select(col("doc_id"))), "doc_id")
-        .count()
-      spark.read.parquet(s"$sfDir/embeddings.parquet").limit(200)
-        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("d0", "x")))
-        .groupBy(col("vec_id")).agg(sum(col("x") * col("x")).as("n2"))
-        .count()
-      spark.catalog.clearCache()
-      System.err.println(f"[bench] warmup done in ${(System.nanoTime() - wt0) / 1e9}%.1fs")
-    } catch { case e: Throwable => System.err.println(s"[bench] warmup: $e") }
+    GraftSession.warmUp(spark, sfDir, "bench")
 
     val t0 = System.nanoTime()
     // Streaming-ingest throughput FIRST (BENCH r2 lesson: it ran last and

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round measurement harness (guide §1): times individual
@@ -29,26 +28,13 @@ object Measure {
       else args(2).split(",").toSeq
     val reps = if (args.length > 3) args(3).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // experiment knob: override shuffle partitions independently of cores
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    var builder = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.ui.enabled", "false")
-    // experiment knob: arbitrary session confs, "k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder = builder.config(k, v)
-        case _ => ()
+    // experiment knob: arbitrary session confs, "k=v;k=v" (e.g.
+    // spark.sql.shuffle.partitions=4 to decouple partitions from cores)
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";")).map(_.split("=", 2)).collect {
+        case Array(k, v) if k.nonEmpty => k -> v
       }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus, extraConf)
     Files.createDirectories(Paths.get(outDir))
 
     // Decomposition aid (guide §1.5/§7.1, the UI is disabled here):
@@ -94,19 +80,9 @@ object Measure {
       })
     }
 
-    // Same warm-up as Bench: first-query JIT/classloading otherwise
-    // lands on whatever query runs first and poisons the comparison.
-    try {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag")
-        .agg(sum("l_quantity").as("s"), countDistinct("l_suppkey").as("d"))
-        .collect()
-      spark.read.parquet(s"$sfDir/documents.parquet").limit(200)
-        .select(col("doc_id"), explode(split(col("text"), " +")).as("tok"))
-        .groupBy("doc_id").agg(min(hash(col("tok")))).count()
-      ()
-    } catch { case e: Throwable => System.err.println(s"[measure] warmup: $e") }
+    // Bench's warm-up: first-query JIT/classloading otherwise lands on
+    // whatever query runs first and poisons the comparison.
+    GraftSession.warmUp(spark, sfDir, "measure")
 
     val results = mutable.LinkedHashMap[String, Double]()
     names.foreach { name =>

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -39,19 +37,7 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     val qTimeoutS = sys.env.getOrElse("SPARK_GRAFT_VERIFY_Q_TIMEOUT_S", "150").toLong
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions) // native functions + TopKRewrite
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // See Bench.scala: avoids a ~90s one-time ICU static init on
-      // first upper()/lower(); identical results on ASCII data.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

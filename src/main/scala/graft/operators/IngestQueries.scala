@@ -1,113 +1,193 @@
 package graft.operators
 
-import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, RelationalGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.Tables
-import graft.streaming.{Amqp10Server, AmqpEndpointRegistry, AmqpMessage, AmqpValueBody, InMemoryAmqpBroker}
+import graft.{Scratch, Tables}
+import graft.streaming.{Amqp10Server, AmqpEndpoint, AmqpEndpointRegistry, AmqpMessage, AmqpStreamOps, AmqpValueBody, InMemoryAmqpBroker}
 
-/** Puts the AMQP source itself under the DuckDB oracle gate: a
-  * deterministic slice of the `events` table is pumped through a broker
-  * (driver plays the producer, exactly like the reference's test
-  * senders — AMQPTestUtils.scala:99-125 in /root/reference), read back
-  * through `spark.read.format("amqp")`, and aggregated. The oracle
-  * computes the same aggregate straight from the parquet table, so any
-  * loss, duplication, or field corruption in the envelope path (send →
-  * credit window → sequence buffer → batch scan → envelope decode →
-  * converter columns) breaks the hash match.
+/** Puts the AMQP source and sink themselves under the DuckDB oracle
+  * gate. Every `amqp_*` query is a [[Gate]]: a name, the oracle SQL that
+  * DuckDB runs straight over the parquet tables, and a body that drives
+  * a deterministic slice through the broker and Spark. Any loss,
+  * duplication or field corruption on the envelope path (send → credit
+  * window → sequence buffer → scan → envelope decode → converter
+  * columns) breaks the hash match.
   *
-  * By default the gate runs over a REAL socket: an in-JVM
-  * [[Amqp10Server]] serving AMQP 1.0 framing, with both the pump and
-  * the Spark read crossing `amqp10://127.0.0.1:<port>` — so the
-  * oracle-gated path exercises the wire codec, framing, credit
-  * refusal, and drain-mode fetch, not just in-process buffers. Set
-  * `-Dgraft.gate.transport=mem` to pin the in-process broker instead.
+  * Each body runs on a fresh [[StreamGate]], the one fixture that owns
+  * the choreography:
+  *  - runs are serialized by one lock, under session confs sized to the
+  *    gate (streaming shuffle partitions; the RocksDB provider with
+  *    changelog checkpointing for gates that ask for it), restored after;
+  *  - the transport: by default a REAL socket, an in-JVM [[Amqp10Server]]
+  *    serving AMQP 1.0 framing on `amqp10://127.0.0.1:<port>`, so the
+  *    wire codec, framing, credit refusal and drain-mode fetch are on
+  *    the hash path. `-Dgraft.gate.transport=amqps` runs the same server
+  *    behind TLS, `=mem` pins the in-process broker;
+  *  - a per-run address `gate-<run>` (plus suffixed side addresses);
+  *    everything a run addressed is settled when the next run starts,
+  *    bounding broker memory to one run across warm re-runs;
+  *  - the producer: an events slice collected on the driver, as the
+  *    reference's test senders do (AMQPTestUtils.scala:99-125), mapped
+  *    to standard messages and pumped under the 1000-credit window;
+  *  - the drain: AvailableNow, one timeout, a hang message naming the
+  *    gate, the query stopped in `finally`; with a complete-mode memory
+  *    table or a foreachBatch collect as the read-back;
+  *  - scratch (checkpoints, sink output, the TLS key material) under the
+  *    per-JVM [[graft.Scratch]] root, deleted when the JVM exits.
   *
-  * The pump respects the credit window (1000): refused sends drain the
-  * pending slice via fetch — the same consume-to-replenish contract the
-  * streaming reader exercises (BASELINE.md credit constants).
+  * Loading this object starts nothing: the gate servers, the key
+  * material and the scratch root are all created on first use.
   */
 object IngestQueries {
 
-  /** Serializes the pump against concurrent invocations in one JVM —
-    * the mem path resets the fixed `mem://gate-ingest` endpoint at
-    * entry and would clobber an overlapping pump. The harness runs gate
-    * queries sequentially; the lock makes the pump phase safe anyway.
-    * The returned DataFrame reads lazily: on the mem path a concurrent
-    * invocation between return and read still swaps broker state (the
-    * sequential-harness assumption); the wire path is immune — each run
-    * pumps a fresh per-run address, and a run's messages survive until
-    * the run after it settles them away. */
-  private val gateLock = new Object
-  private val gateRun = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** One oracle gate: DuckDB runs `oracle`; the engine side runs the
+    * gate's body on a fresh [[StreamGate]]. */
+  final class Gate private[IngestQueries] (val name: String, val oracle: String,
+      wire: Boolean, rocksDb: Boolean, body: StreamGate => DataFrame)
+      extends ((SparkSession, String) => DataFrame) {
+    def apply(s: SparkSession, d: String): DataFrame = gateLock.synchronized {
+      withConfs(s, gateConfs(s, d, rocksDb))(body(open(name, s, d, wire)))
+    }
+  }
 
-  /** Gate wrapper: [[gateLock]] serialization PLUS streaming state/shuffle
-    * partitions sized to the gate slice (optimization guide §2.2/§2.4 —
-    * fewer, larger partitions; AQE cannot do this for streams because
-    * adaptive execution is disabled in stateful workloads). A gate drains
-    * a few hundred to a few thousand rows over a handful of keys, so the
-    * session's core-count shuffle default (32 locally) buys no parallelism
-    * and costs one state-store instance per partition per stateful
-    * operator PER MICRO-BATCH — a stream-stream outer join pays
-    * 4 stores x partitions x (data + watermark-eviction) batches in
-    * commit/changelog overhead alone. Measured at sf0.1 (32 -> 4):
-    * amqp_stream_join2_full 11.6s -> 3.8s, join2_outer 10.3s -> 2.8s,
-    * amqp_stream_dedup_ttl 14.3s -> 9.3s, same hashes. Production
-    * deployments size state partitions to state volume/throughput, not
-    * host cores — override with SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS.
-    * Results are partitioning-independent (keyed state); the oracle gate
-    * re-proves every query after this change. The conf is restored on
-    * exit; the streaming query's session CLONE (captured at start())
-    * keeps the gate value for the query's whole life. */
-  private def gatedStream[T](s: SparkSession, d: String)(body: => T): T =
-    gateLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      // State-partition count DERIVED from the gate's data volume
-      // (VERDICT r9 #5 — the round-1 constant 4 under-parallelizes an
-      // unset deployment at real scale): every gate's slice is carved
-      // from the events/orders/documents tables, so the source
-      // directory's bytes bound the pumped backlog and with it the
-      // keyed-state volume. One state partition per 32 MB of source
-      // (a few hundred thousand keyed registers), floored at 4 (the
-      // round-1 measured local optimum — at gate SF the formula stays
-      // below the floor, so local behavior and the driver's bench are
-      // unchanged), capped at session parallelism. Env override stays
-      // the deployment knob.
-      val srcBytes =
-        try {
-          Option(new java.io.File(d).listFiles()).toSeq.flatten
-            .filter(_.getName.endsWith(".parquet"))
-            .map(f => Tables.fileBytes(f.getPath)).sum
-        } catch { case _: Throwable => 0L }
-      val derived = math.min(s.sparkContext.defaultParallelism.toLong,
-        math.max(4L, srcBytes / (32L << 20))).toString
-      val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", derived)
-      val prior = s.conf.getOption(key)
-      s.conf.set(key, parts)
-      try body
-      finally prior match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+  /** `wire` pins the amqp10:// server whatever the gate transport (the
+    * share-group gates); `rocksDb` runs the gate on the RocksDB state
+    * store with changelog checkpointing, which makes recovery from
+    * changelog replay load-bearing wherever a gate restarts mid-stream. */
+  private def gate(name: String, oracle: String, wire: Boolean = false, rocksDb: Boolean = false)(
+      body: StreamGate => DataFrame): Gate = new Gate(name, oracle, wire, rocksDb, body)
+
+  /** One run of one gate. The returned DataFrame may read lazily: the run's
+    * addresses and scratch stay readable until the next run starts. */
+  final class StreamGate private[IngestQueries] (val name: String, val s: SparkSession,
+      val d: String, val ep: String, val run: Long) {
+    private val used = mutable.LinkedHashSet.empty[String]
+    lazy val client: AmqpEndpoint = AmqpEndpointRegistry.endpoint(ep)
+    /** The run's own address. */
+    lazy val address: String = { used += s"gate-$run"; s"gate-$run" }
+    /** A side address of this run, reclaimed with [[address]]. */
+    def addr(suffix: String): String = { val a = s"$address-$suffix"; used += a; a }
+    /** The run's scratch directory, created on first use. */
+    lazy val dir: String = Scratch.dir(name).toString
+    def ckpt: String = s"$dir/ckpt"
+    def out: String = s"$dir/out"
+
+    /** `events` rows matching `pred`, collected on the driver as
+      * (event_id, subject, body, ts, more*): the columns [[msg]] reads.
+      * `ordered` sorts by (ts, event_id), the monotone enqueue order. */
+    def slice(pred: Column, subject: Column = col("event_type"), body: Column = col("value"),
+        ts: Column = col("event_id"), ordered: Boolean = false, more: Seq[Column] = Nil): Seq[Row] = {
+      val df = Tables.events(s, d).filter(pred).select(Seq(col("event_id"),
+        subject.as("subject"), body.as("body"), ts.as("ts")) ++ more: _*)
+      (if (ordered) df.orderBy(col("ts"), col("event_id")) else df).collect().toSeq
     }
 
-  /** One wire server per JVM backing the gate's default amqp10:// path
-    * (port 0 = ephemeral; lives for the JVM, like the registry's
-    * cached clients). */
+    def pump(msgs: Seq[(AmqpMessage, Long)], to: String = address): Unit =
+      pumpAll(client, to, msgs)
+
+    /** Source options: this endpoint, [[address]] unless `opts` name addresses. */
+    private def amqp(opts: Seq[(String, String)]): Map[String, String] =
+      Map("endpoint" -> ep) ++
+        (if (opts.exists(_._1.startsWith("address"))) Nil else Seq("address" -> address)) ++ opts
+
+    def read(opts: (String, String)*): DataFrame =
+      s.read.format("amqp").options(amqp(opts)).load()
+    def stream(opts: (String, String)*): DataFrame =
+      s.readStream.format("amqp").options(amqp(opts)).load()
+    /** Publishes `df` through the exactly-once AMQP sink (batch append). */
+    def publish(df: DataFrame, opts: (String, String)*): Unit =
+      df.write.format("amqp").options(amqp(opts)).mode("append").save()
+
+    /** Runs `w` to completion; a query still running after the timeout
+      * fails the gate. The query is stopped in any case. */
+    def drain(w: DataStreamWriter[_], trigger: Trigger = Trigger.AvailableNow()): Unit = {
+      val q = w.trigger(trigger).start()
+      try require(q.awaitTermination(DrainTimeoutMs), s"$name gate query hung")
+      finally q.stop()
+    }
+
+    /** Drains `df` into a complete-mode memory table and returns the table. */
+    def complete(df: DataFrame): DataFrame = {
+      val table = s"${name}_$run"
+      drain(df.writeStream.format("memory").queryName(table).outputMode("complete")
+        .option("checkpointLocation", ckpt))
+      s.table(table)
+    }
+
+    /** Drains `ds` on `checkpoint`, returning every micro-batch's rows with their
+      * batch id. */
+    def collect[T](ds: Dataset[T], checkpoint: String = ckpt, mode: String = "append",
+        trigger: Trigger = Trigger.AvailableNow()): Seq[(Long, T)] = {
+      val got = mutable.ArrayBuffer.empty[(Long, T)]
+      drain(ds.writeStream.outputMode(mode).option("checkpointLocation", checkpoint)
+        .foreachBatch { (b: Dataset[T], id: Long) =>
+          val rows = b.collect().map(id -> _)
+          got.synchronized { got ++= rows }
+          ()
+        }, trigger)
+      got.toSeq
+    }
+
+    /** Drains `df` through the exactly-once parquet file sink into `path`;
+      * returns `path`. */
+    def toParquet(df: DataFrame, path: String = out, checkpoint: String = ckpt): String = {
+      drain(df.writeStream.format("parquet").option("path", path)
+        .option("checkpointLocation", checkpoint))
+      path
+    }
+
+    /** Settles everything this run addressed (the next run's entry). */
+    private[IngestQueries] def reclaim(): Unit = used.foreach { a =>
+      try client.settle(a, client.latestSeq(a))
+      catch { case _: Exception => () } // endpoint gone: nothing to reclaim
+    }
+  }
+
+  private val DrainTimeoutMs = 120000L
+  private val gateLock = new Object
+  private var runs = 0L
+  private var lastRun: Option[StreamGate] = None
+
+  /** Starts run `runs + 1` of gate `name` (under [[gateLock]]): reclaims
+    * the previous run's addresses through their own endpoint (the
+    * transport may switch between runs), then resolves the transport. */
+  private def open(name: String, s: SparkSession, d: String, wire: Boolean): StreamGate = {
+    lastRun.foreach(_.reclaim())
+    runs += 1
+    val ep = sys.props.getOrElse("graft.gate.transport", "amqp10") match {
+      case _ if wire => wireGateEndpoint
+      case "mem" =>
+        // fixed endpoint + reset: a fresh endpoint per run would leak a
+        // full copy of the pumped slice into the registry per warm run
+        AmqpEndpointRegistry.reset(MemGateEndpoint)
+        MemGateEndpoint
+      case "amqps" => wireTlsGateEndpoint
+      case _ => wireGateEndpoint
+    }
+    val g = new StreamGate(name, s, d, ep, runs)
+    lastRun = Some(g)
+    g
+  }
+
+  private val MemGateEndpoint = "mem://gate-ingest"
+
+  /** One wire server per JVM (port 0 = ephemeral; lives for the JVM,
+    * like the registry's cached clients). */
   private lazy val wireGateEndpoint: String = {
     val server = new Amqp10Server(new InMemoryAmqpBroker)
     s"amqp10://127.0.0.1:${server.port}"
   }
 
-  /** TLS flavor of the gate server (`-Dgraft.gate.transport=amqps`):
-    * key material generated once per JVM with the JDK's keytool, trust
-    * wired through the same system properties executors would use. The
-    * gated path then runs pump AND Spark read through the encrypted
-    * tunnel. */
+  /** The TLS flavor of the gate server: key material generated once per
+    * JVM with the JDK's keytool into a scratch directory, trust wired
+    * through the same system properties executors would use. */
   private lazy val wireTlsGateEndpoint: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gate-tls")
+    val dir = Scratch.dir("gate-tls")
     val ks = s"$dir/server.p12"; val ts = s"$dir/trust.p12"
     val cert = s"$dir/server.cer"; val pw = "gate-tls-pw"
     def keytool(args: String*): Unit = {
@@ -130,45 +210,60 @@ object IngestQueries {
     s"amqps://127.0.0.1:${server.port}"
   }
 
-  private val sharedGateRun = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val RocksDbConfs = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
-  /** Resolve (endpoint, address) for one gate run. */
-  private def gateTarget(): (String, String) =
-    sys.props.getOrElse("graft.gate.transport", "amqp10") match {
-      case "mem" =>
-        // Fixed endpoint + reset: Bench/Verify invoke this repeatedly in
-        // one JVM; a fresh UUID endpoint each time would leak a full copy
-        // of the pumped slice into the registry per warm run.
-        val ep = "mem://gate-ingest"
-        AmqpEndpointRegistry.reset(ep)
-        (ep, "gate")
-      case _ =>
-        // Per-run address keeps runs independent without restarting the
-        // server; settling the PREVIOUS run's address frees its messages
-        // and prunes the server's delivery ledger, bounding broker
-        // message memory to one slice regardless of warm-run count
-        // (per-run link/address metadata remains — O(runs), tiny).
-        val ep =
-          if (sys.props.get("graft.gate.transport").contains("amqps"))
-            wireTlsGateEndpoint
-          else wireGateEndpoint
-        val run = gateRun.incrementAndGet()
-        if (run > 1) {
-          val client = AmqpEndpointRegistry.endpoint(ep)
-          val prev = s"gate-${run - 1}"
-          client.settle(prev, client.latestSeq(prev))
-        }
-        (ep, s"gate-$run")
+  /** The gate's session confs. Streaming state/shuffle partitions are
+    * sized to the gate slice (optimization guide §2.2/§2.4: fewer, larger
+    * partitions; AQE cannot do this for streams because adaptive
+    * execution is disabled in stateful workloads). The session's
+    * core-count default buys a gate no parallelism and costs one
+    * state-store instance per partition per stateful operator PER
+    * MICRO-BATCH. Measured at sf0.1 (32 -> 4): amqp_stream_join2_full
+    * 11.6s -> 3.8s, join2_outer 10.3s -> 2.8s, amqp_stream_dedup_ttl
+    * 14.3s -> 9.3s, same hashes. The count is DERIVED from the data
+    * volume (VERDICT r9 #5): every slice is carved from the source
+    * tables, so the source directory's parquet bytes bound the keyed
+    * state. One partition per 32 MB, floored at 4 (the measured local
+    * optimum; at gate SF the formula stays below it), capped at session
+    * parallelism; SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS overrides. A
+    * streaming query's session clone (captured at start()) keeps the
+    * gate value for the query's whole life. */
+  private def gateConfs(s: SparkSession, d: String, rocksDb: Boolean): Seq[(String, String)] = {
+    val srcBytes =
+      try {
+        Option(new java.io.File(d).listFiles()).toSeq.flatten
+          .filter(_.getName.endsWith(".parquet"))
+          .map(f => Tables.fileBytes(f.getPath)).sum
+      } catch { case _: Throwable => 0L }
+    val derived = math.min(s.sparkContext.defaultParallelism.toLong,
+      math.max(4L, srcBytes / (32L << 20))).toString
+    ("spark.sql.shuffle.partitions" ->
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", derived)) +:
+      (if (rocksDb) RocksDbConfs else Nil)
+  }
+
+  /** Sets `confs` for the duration of `body`, then restores each prior value. */
+  private def withConfs[T](s: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
+  }
 
-  /** Drain-aware pump shared by every wire gate: send in ~500-message
+  /** Drain-aware pump shared by every gate: send in ~500-message
     * pipelined batches under the 1000-credit window; a refusal must be
     * a strict SUFFIX (credit contract — resuming at the first refusal
     * re-sends everything after it, so an accepted message there would
     * enqueue twice: fail loudly instead of corrupting the gate), and
     * consuming replenishes credit, so a refusal drains the delivered
     * prefix via fetch and resumes. */
-  private def pumpAll(client: graft.streaming.AmqpEndpoint, address: String,
+  private def pumpAll(client: AmqpEndpoint, address: String,
       msgs: Seq[(AmqpMessage, Long)]): Unit = {
     var i = 0
     var fetchedUpTo = 0L
@@ -188,58 +283,60 @@ object IngestQueries {
     }
   }
 
-  /** Run `f` with the RocksDB state-store provider AND CHANGELOG
-    * CHECKPOINTING enabled, restoring prior session conf after. Changelog
-    * checkpointing is the long-running-pipeline mechanism SURVEY §2.3
-    * cites (per-batch uploads ship the delta instead of snapshotting the
-    * whole store), so every RocksDB gate runs WITH it — making recovery
-    * from changelog replay load-bearing on the hash path wherever a gate
-    * restarts mid-stream (amqp_stream_tws_timer, amqp_stream_dedup_ttl). */
-  private def withRocksDb[T](s: SparkSession)(f: => T): T = {
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val prior = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try f
-    finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+  /** The standard gate message of a [[StreamGate.slice]] row: message id,
+    * subject (none when null), the body's string form, enqueue timestamp. */
+  private def msg(r: Row): (AmqpMessage, Long) =
+    message(r.get(0).toString, Option(r.get(1)).map(_.toString).orNull, r.get(2).toString, r.getLong(3))
 
-  def amqpIngestRoundtrip(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 10 === 0)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect() // the producer role: driver-side by design, as in the reference's suites
-    // Pipelined batches (one disposition round-trip per ~500 messages on
-    // socket transports, see AmqpEndpoint.sendMany) sized under the
-    // 1000-credit window so at most one drain per batch is ever needed.
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-      })
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
-      .select(col("subject").as("event_type"),
-        col("body").cast(DoubleType).as("value"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-  }
+  private def message(id: String, subject: String, body: String, ts: Long): (AmqpMessage, Long) =
+    (AmqpMessage(messageId = Some(id), subject = Option(subject), body = AmqpValueBody(body)), ts)
 
-  val amqpIngestRoundtripSql: String =
+  /** The standard messages of the slice rows whose event_id passes `keep`. */
+  private def msgs(rows: Seq[Row], keep: Long => Boolean = _ => true): Seq[(AmqpMessage, Long)] =
+    rows.filter(r => keep(r.getLong(0))).map(msg)
+
+  /** Event time in microseconds (the parquet `ts_ns` column). */
+  private def tsUs: Column = expr("ts_ns div 1000")
+
+  /** The shared event aggregate: per `keys`, `n_events` and the
+    * DECIMAL(18,2) `sum_value` of `value` with one terminal double cast
+    * (double sums are order-dependent across engines). */
+  private def eventAgg(df: DataFrame, value: Column, keys: Column*): DataFrame =
+    df.groupBy(keys: _*).agg(count(lit(1)).as("n_events"),
+      sum(value.cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
+
+  /** [[eventAgg]] of read-back messages: per `keys` and subject as
+    * `event_type`, over the body's double value. */
+  private def messageAgg(df: DataFrame, keys: Column*): DataFrame =
+    eventAgg(df, col("body").cast(DoubleType), keys :+ col("subject").as("event_type"): _*)
+
+  /** A decimal string column as integer cents. */
+  private def cents(c: Column, t: DataType = IntegerType): Column =
+    (c.cast(DecimalType(18, 2)) * 100).cast(t)
+
+  /** Per group: n_msgs, sum_cents of the body, min/max numeric message id. */
+  private def centsAgg(grouped: RelationalGroupedDataset): DataFrame =
+    grouped.agg(count(lit(1)).as("n_msgs"),
+      sum(cents(col("body"), LongType)).as("sum_cents") +: idRange: _*)
+
+  private def idRange: Seq[Column] = Seq(
+    min(col("message_id").cast(LongType)).as("min_id"),
+    max(col("message_id").cast(LongType)).as("max_id"))
+
+  /** The last emission per key of a changelog collected by [[StreamGate.collect]]. */
+  private def lastPerKey[T](emitted: Seq[(Long, T)])(key: T => String): Seq[T] =
+    emitted.groupBy(e => key(e._2)).values.map(_.maxBy(_._1)._2).toSeq
+
+  // ------------------------------------------------ amqp_ingest_roundtrip
+  /** The base round trip: pump, batch read, aggregate. */
+  val amqpIngestRoundtrip: Gate = gate("amqp_ingest_roundtrip",
     """SELECT event_type, count(*) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_id % 10 = 0
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin) { g =>
+    g.pump(g.slice(col("event_id") % 10 === 0).map(msg))
+    messageAgg(g.read())
+  }
 
   // -------------------------------------------------- amqp_pattern_multi
   /** PATTERN SUBSCRIPTION under the oracle gate (Kafka
@@ -256,37 +353,16 @@ object IngestQueries {
     * file listing); each discovered address is its own link partition,
     * so a fleet of queues parallelizes exactly like the static
     * `addresses` list. */
-  def amqpPatternMulti(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 13 === 0)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    def msgs(pred: Long => Boolean) =
-      rows.toSeq.filter(r => pred(r.getLong(0))).map { r =>
-        (AmqpMessage(messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-      }
-    (0 until 3).foreach(k =>
-      pumpAll(client, s"$address-shard$k", msgs(_ % 3 == k)))
-    pumpAll(client, s"$address-decoy", msgs(_ => true))
-    s.read.format("amqp")
-      .option("endpoint", ep)
-      .option("addressPattern", s"$address-shard*").load()
-      .select(col("subject").as("event_type"),
-        col("body").cast(DoubleType).as("value"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-  }
-
-  val amqpPatternMultiSql: String =
+  val amqpPatternMulti: Gate = gate("amqp_pattern_multi",
     """SELECT event_type, count(*) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_id % 13 = 0
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin) { g =>
+    val rows = g.slice(col("event_id") % 13 === 0)
+    (0 until 3).foreach(k => g.pump(msgs(rows, _ % 3 == k), g.addr(s"shard$k")))
+    g.pump(msgs(rows), g.addr("decoy"))
+    messageAgg(g.read("addressPattern" -> s"${g.address}-shard*"))
+  }
 
   // -------------------------------------------------- amqp_stream_relay
   /** Queue-to-queue streaming ETL — the source+sink COMPOSITION no
@@ -295,128 +371,67 @@ object IngestQueries {
     * (`readStream.format("amqp")` → filter/enrich →
     * `writeStream.format("amqp")`), relaying a slice from address A to
     * address B with `click` events dropped and the survivors re-tagged.
-    * The slice is pumped in two halves with an AvailableNow drain after
-    * each on ONE checkpoint, plus an empty third drain: a relay that
-    * re-delivered the first half on restart, or lost the sink's
-    * transactional epoch dedup on retry, doubles B's counts; a leak of
-    * the dropped class surfaces as an extra group — either breaks the
-    * hash. The final read aggregates B back through the source.
+    * The slice is pumped in two halves with a drain after each on ONE
+    * checkpoint, plus an empty third drain: a relay that re-delivered
+    * the first half on restart, or lost the sink's transactional epoch
+    * dedup on retry, doubles B's counts; a leak of the dropped class
+    * surfaces as an extra group — either breaks the hash. The final
+    * read aggregates B back through the source.
     *
     * Scale shape: the relay is the routing/fan-out shape of a message
     * fabric (per-tenant splitting, PII scrubbing between queues) — per
     * trigger it costs the admitted slice through one filter map; the
     * sink's staged transactional publish batches per partition. */
-  def amqpStreamRelay(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val dst = s"$address-relay"
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 13 === 7)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-relay-gate").toString
-    def pump(rs: Array[org.apache.spark.sql.Row]): Unit =
-      pumpAll(client, address, rs.toSeq.map { r =>
-        (AmqpMessage(messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-      })
-    def drain(): Unit = {
-      val q = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address).load()
-        .filter(col("subject") =!= "click")
-        .select(col("message_id"),
-          concat(lit("relayed-"), col("subject")).as("subject"),
-          col("body"))
-        .writeStream.format("amqp")
-        .option("endpoint", ep).option("address", dst)
-        .option("checkpointLocation", s"$ckpt/c")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000), "relay gate query hung")
-      finally q.stop()
-    }
-    val (a, b) = rows.splitAt(rows.length / 2)
-    pump(a); drain()
-    pump(b); drain() // same checkpoint: only the second half relays
-    drain()          // nothing new: exactly-once means B gains nothing
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", dst).load()
-      .select(col("subject").as("event_type"),
-        col("body").cast(DoubleType).as("value"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-  }
-
-  val amqpStreamRelaySql: String =
+  val amqpStreamRelay: Gate = gate("amqp_stream_relay",
     """SELECT 'relayed-' || event_type AS event_type,
       |  CAST(count(*) AS BIGINT) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_id % 13 = 7 AND event_type <> 'click'
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin) { g =>
+    val dst = g.addr("relay")
+    val rows = g.slice(col("event_id") % 13 === 7)
+    def drain(): Unit = g.drain(g.stream()
+      .filter(col("subject") =!= "click")
+      .select(col("message_id"), concat(lit("relayed-"), col("subject")).as("subject"), col("body"))
+      .writeStream.format("amqp").option("endpoint", g.ep).option("address", dst)
+      .option("checkpointLocation", g.ckpt))
+    val (a, b) = rows.splitAt(rows.length / 2)
+    g.pump(a.map(msg)); drain()
+    g.pump(b.map(msg)); drain() // same checkpoint: only the second half relays
+    drain()                     // nothing new: exactly-once means B gains nothing
+    messageAgg(g.read("address" -> dst))
+  }
 
   // ------------------------------------------------ amqp_stream_pattern
   /** STREAMING pattern subscription under the oracle gate — the dynamic
     * half of `amqp_pattern_multi`: two sharded queues exist when the
-    * first AvailableNow drain runs; a THIRD matching queue is created
-    * between drains and the second drain — same checkpoint — must
-    * DISCOVER it and consume it from its start, while a decoy queue
-    * carrying the whole slice again never matches the glob. A missed
-    * discovery loses a third of the rows; re-reading the first drain's
-    * shards doubles them; decoy leakage doubles everything — all break
-    * the hash against DuckDB replaying the slice.
+    * first drain runs; a THIRD matching queue is created between drains
+    * and the second drain — same checkpoint — must DISCOVER it and
+    * consume it from its start, while a decoy queue carrying the whole
+    * slice again never matches the glob. A missed discovery loses a
+    * third of the rows; re-reading the first drain's shards doubles
+    * them; decoy leakage doubles everything — all break the hash
+    * against DuckDB replaying the slice.
     *
     * Scale shape: one discovery probe per trigger on the driver; each
     * discovered queue is its own link partition. This is the
     * fleet-of-queues catch-up shape (per-tenant/per-sensor addresses)
     * where naming links statically cannot work. */
-  def amqpStreamPattern(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 13 === 5)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    val scratch = java.nio.file.Files.createTempDirectory("graft-pattern-gate")
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-    def msgs(pred: Long => Boolean) =
-      rows.toSeq.filter(r => pred(r.getLong(0))).map { r =>
-        (AmqpMessage(messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-      }
-    def drain(): Unit = {
-      val q = s.readStream.format("amqp")
-        .option("endpoint", ep).option("addressPattern", s"$address-q*").load()
-        .select(col("message_id"), col("subject"), col("body"))
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000), "stream-pattern gate query hung")
-      finally q.stop()
-    }
-    pumpAll(client, s"$address-q0", msgs(_ % 3 == 0))
-    pumpAll(client, s"$address-q1", msgs(_ % 3 == 1))
-    pumpAll(client, s"$address-decoy", msgs(_ => true))
-    drain()
-    pumpAll(client, s"$address-q2", msgs(_ % 3 == 2))
-    drain() // same checkpoint: must discover q2, not re-read q0/q1
-    s.read.parquet(outDir)
-      .select(col("subject").as("event_type"),
-        col("body").cast(DoubleType).as("value"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-  }
-
-  val amqpStreamPatternSql: String =
+  val amqpStreamPattern: Gate = gate("amqp_stream_pattern",
     """SELECT event_type, count(*) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_id % 13 = 5
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin) { g =>
+    val rows = g.slice(col("event_id") % 13 === 5)
+    def drain(): String = g.toParquet(g.stream("addressPattern" -> s"${g.address}-q*")
+      .select(col("message_id"), col("subject"), col("body")))
+    g.pump(msgs(rows, _ % 3 == 0), g.addr("q0"))
+    g.pump(msgs(rows, _ % 3 == 1), g.addr("q1"))
+    g.pump(msgs(rows), g.addr("decoy"))
+    drain()
+    g.pump(msgs(rows, _ % 3 == 2), g.addr("q2"))
+    messageAgg(g.s.read.parquet(drain())) // same checkpoint: must discover q2, not re-read q0/q1
+  }
 
   // ---------------------------------------------------- amqp_sql_table
   /** The SQL-DDL face of the source: `CREATE TABLE ... USING amqp` in
@@ -433,33 +448,44 @@ object IngestQueries {
     *
     * Scale shape: identical to amqp_ingest_roundtrip — the catalog
     * entry is metadata; the scan partitions per link as always. */
-  def amqpSqlTable(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 11 === 0)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    pumpAll(client, address, rows.toSeq.map { r =>
-      (AmqpMessage(
-        messageId = Some(r.getLong(0).toString),
-        subject = Some(r.getString(1)),
-        body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-    })
-    s.sql("DROP TABLE IF EXISTS amqp_sql_gate")
-    s.sql(s"CREATE TABLE amqp_sql_gate USING amqp " +
-      s"OPTIONS (endpoint '$ep', address '$address')")
-    s.sql("""SELECT subject AS event_type, count(*) AS n_events,
+  val amqpSqlTable: Gate = gate("amqp_sql_table",
+    """SELECT event_type, count(*) AS n_events,
+      |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events WHERE event_id % 11 = 0
+      |GROUP BY event_type""".stripMargin) { g =>
+    g.pump(g.slice(col("event_id") % 11 === 0).map(msg))
+    g.s.sql("DROP TABLE IF EXISTS amqp_sql_gate")
+    g.s.sql(s"CREATE TABLE amqp_sql_gate USING amqp " +
+      s"OPTIONS (endpoint '${g.ep}', address '${g.address}')")
+    g.s.sql("""SELECT subject AS event_type, count(*) AS n_events,
         CAST(sum(CAST(CAST(body AS DOUBLE) AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       FROM amqp_sql_gate
       GROUP BY subject""")
   }
 
-  val amqpSqlTableSql: String =
-    """SELECT event_type, count(*) AS n_events,
-      |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      |FROM events WHERE event_id % 11 = 0
-      |GROUP BY event_type""".stripMargin
+  /** The pinned expiry instant shared by the TTL gates — the class
+    * arithmetic of [[ttlClassed]] and the gates' oracle SQL depend on it. */
+  private val TtlGateNowMicros = 500000000000L
+
+  /** Options of a TTL-aware read (`respectTtl` or `expiredOnly`) pinned
+    * to [[TtlGateNowMicros]]. */
+  private def ttlPinned(mode: String): Seq[(String, String)] =
+    Seq(mode -> "true", "ttlNowMicros" -> TtlGateNowMicros.toString)
+
+  /** The TTL gates' message: id-classed header ttls — id%3==0 long dead
+    * at [[TtlGateNowMicros]] (+1ms from an epoch-micros enqueue), ==1
+    * alive (~11.6 days), ==2 no ttl (never expires). Every TTL oracle
+    * encodes exactly this mapping (`event_id % 3 = 0` ⇔ expired); keep
+    * them in lockstep. */
+  private def ttlClassed(r: Row): (AmqpMessage, Long) = {
+    val (m, ts) = msg(r)
+    val ttl = r.getLong(0) % 3 match {
+      case 0 => Some(1L)
+      case 1 => Some(1000000000L)
+      case _ => None
+    }
+    (m.copy(ttlMillis = ttl), ts)
+  }
 
   // --------------------------------------------------- amqp_ttl_expiry
   /** HEADER-SECTION TTL under the oracle gate: the AMQP 1.0 header's
@@ -467,11 +493,10 @@ object IngestQueries {
     * end-to-end — encoded as the leading header section by the
     * producer, decoded back off the frame by the broker — and a
     * `respectTtl` read DROPS expired messages exactly: three message
-    * classes (ttl long lapsed / ttl alive / no ttl) are pumped with
-    * producer-controlled enqueue timestamps, the scan is pinned to a
-    * fixed expiry instant (`ttlNowMicros`), and only the two surviving
-    * classes may reach the aggregate — one leaked expired message or
-    * one over-dropped live one breaks the hash.
+    * classes ([[ttlClassed]]) are pumped with producer-controlled
+    * enqueue timestamps, the scan is pinned to a fixed expiry instant,
+    * and only the two surviving classes may reach the aggregate — one
+    * leaked expired message or one over-dropped live one breaks the hash.
     *
     * Expiry is enforced in the READER, like a pushed predicate: the
     * broker ledger keeps its dense sequence numbering (settlement and
@@ -483,63 +508,16 @@ object IngestQueries {
     *
     * Scale shape: expiry costs one long comparison per fetched row,
     * before envelope materialization; nothing driver-side grows. */
-  /** The pinned expiry instant shared by both TTL gates — the class
-    * arithmetic below and the gates' oracle SQL both depend on it. */
-  private val TtlGateNowMicros = 500000000000L
-
-  /** Shared producer for the TTL gates: the slice rides the wire with
-    * id-classed header ttls — id%3==0 long dead at [[TtlGateNowMicros]]
-    * (+1ms from an epoch-micros enqueue), ==1 alive (~11.6 days), ==2
-    * no ttl (never expires). Both gates' oracles encode exactly this
-    * mapping (`event_id % 3 = 0` ⇔ expired); keep them in lockstep. */
-  private def pumpTtlClassed(client: graft.streaming.AmqpEndpoint,
-      address: String, slice: DataFrame): Int = {
-    val rows = slice
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    pumpAll(client, address, rows.toSeq.map { r =>
-      val id = r.getLong(0)
-      val ttl = (id % 3) match {
-        case 0 => Some(1L)
-        case 1 => Some(1000000000L)
-        case _ => None
-      }
-      (AmqpMessage(messageId = Some(id.toString), subject = Some(r.getString(1)),
-        body = AmqpValueBody(r.getDouble(2).toString), ttlMillis = ttl), id)
-    })
-    rows.length
-  }
-
-  def amqpTtlExpiry(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    pumpTtlClassed(client, address,
-      Tables.events(s, d).filter(col("event_id") % 10 === 6))
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", address)
-      .option("respectTtl", "true")
-      .option("ttlNowMicros", TtlGateNowMicros.toString)
-      .load()
-      .select(col("subject").as("event_type"),
-        col("body").cast(DoubleType).as("value"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-  }
-
-  val amqpTtlExpirySql: String =
+  val amqpTtlExpiry: Gate = gate("amqp_ttl_expiry",
     """SELECT event_type, count(*) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_id % 10 = 6 AND event_id % 3 <> 0
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin) { g =>
+    g.pump(g.slice(col("event_id") % 10 === 6).map(ttlClassed))
+    messageAgg(g.read(ttlPinned("respectTtl"): _*))
+  }
 
   // --------------------------------------------------- amqp_dead_letter
-  /** Previous run's DLQ address, settled at the next gate entry —
-    * gateTarget() only reclaims its own per-run addresses, so the
-    * side address this gate invents must reclaim itself (bounds broker
-    * memory across Bench's warm re-runs exactly like the main ledger). */
-  private var lastDlqAddress: Option[(String, String)] = None
-
   /** DEAD-LETTERING under the oracle gate — the expiry ROUTING that
     * completes amqp_ttl_expiry's drop semantics (RabbitMQ TTL + DLX /
     * ActiveMQ expiry-address parity): expired messages are not lost,
@@ -567,54 +545,25 @@ object IngestQueries {
     * row and emits only the dead; the republish is the sink's
     * executor-side transactional publish, sized by the expired volume,
     * never the backlog. */
-  def amqpDeadLetter(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val dlq = s"$address-dlq"
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    lastDlqAddress.foreach { case (pep, pdlq) =>
-      // reclaim through the OWNING endpoint — the gate transport can
-      // switch between runs (the specs flip amqps/mem), and skipping
-      // the settle would leak the old broker's DLQ slice forever
-      try {
-        val pc = AmqpEndpointRegistry.endpoint(pep)
-        pc.settle(pdlq, pc.latestSeq(pdlq))
-      } catch { case _: Exception => () } // old endpoint gone: nothing to reclaim
-    }
-    lastDlqAddress = Some((ep, dlq))
-    pumpTtlClassed(client, address,
-      Tables.events(s, d).filter(col("event_id") % 10 === 7))
+  val amqpDeadLetter: Gate = gate("amqp_dead_letter",
+    """SELECT event_type, count(*) AS n_events,
+      |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+      |  CASE WHEN event_id % 3 = 0 THEN 'dlq' ELSE 'live' END AS queue
+      |FROM events WHERE event_id % 10 = 7
+      |GROUP BY event_type, CASE WHEN event_id % 3 = 0 THEN 'dlq' ELSE 'live' END""".stripMargin) { g =>
+    val dlq = g.addr("dlq")
+    g.pump(g.slice(col("event_id") % 10 === 7).map(ttlClassed))
     // the sweep: expired-only scan -> annotate -> exactly-once republish
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", address)
-      .option("expiredOnly", "true").option("ttlNowMicros", TtlGateNowMicros.toString)
-      .load()
+    g.publish(g.read(ttlPinned("expiredOnly"): _*)
       .select(col("message_id"), col("subject"), col("body"),
         map(lit("x-opt-dlq-reason"), lit("expired"),
-            lit("x-opt-dlq-source"), lit(address)).as("message_annotations"))
-      .write.format("amqp").option("endpoint", ep).option("address", dlq)
-      .mode("append").save()
-    def agg(df: DataFrame, q: String): DataFrame =
-      df.select(col("subject").as("event_type"),
-          col("body").cast(DoubleType).as("value"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-        .withColumn("queue", lit(q))
-    val live = s.read.format("amqp")
-      .option("endpoint", ep).option("address", address)
-      .option("respectTtl", "true").option("ttlNowMicros", TtlGateNowMicros.toString)
-      .load()
-    val dead = s.read.format("amqp")
-      .option("endpoint", ep).option("address", dlq).load()
-    agg(live, "live").unionByName(agg(dead, "dlq"))
+          lit("x-opt-dlq-source"), lit(g.address)).as("message_annotations")),
+      "address" -> dlq)
+    messageAgg(g.read(ttlPinned("respectTtl"): _*)).withColumn("queue", lit("live"))
+      .unionByName(messageAgg(g.read("address" -> dlq)).withColumn("queue", lit("dlq")))
   }
 
   // ------------------------------------------------- amqp_request_reply
-  /** Previous run's reply/overflow addresses, reclaimed at next entry
-    * (same discipline as lastDlqAddress — these side addresses are this
-    * gate's own inventions, so it settles them itself). */
-  private var lastReplyAddresses: Seq[(String, String)] = Nil
-
   /** REQUEST–REPLY over the envelope's addressing fields — the RPC
     * shape of AMQP messaging (§3.2.4 properties: to / reply-to /
     * correlation-id), driven end to end by PER-ROW SINK ROUTING (the
@@ -642,68 +591,38 @@ object IngestQueries {
     * shuffle (the commit walks each staged message to its own queue
     * under sorted per-queue locks). A reply-queue fleet scales like
     * the pattern-subscription fleet: one address = one link. */
-  def amqpRequestReply(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    lastReplyAddresses.foreach { case (pep, paddr) =>
-      try {
-        val pc = AmqpEndpointRegistry.endpoint(pep)
-        pc.settle(paddr, pc.latestSeq(paddr))
-      } catch { case _: Exception => () }
-    }
-    val replies = Seq(s"$address-reply0", s"$address-reply1")
-    val overflow = s"$address-reply-overflow"
-    lastReplyAddresses = (replies :+ overflow).map((ep, _))
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 11 === 3)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    pumpAll(client, address, rows.toSeq.map { r =>
-      val id = r.getLong(0)
-      (AmqpMessage(
-        messageId = Some(id.toString),
-        subject = Some(r.getString(1)),
-        replyTo = Some(replies((id % 2).toInt)),
-        correlationId = Some(s"corr-$id"),
-        body = AmqpValueBody(r.getDouble(2).toString)), id)
-    })
-    // the responder: batch read -> response projection -> routed publish
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
-      .select(
-        col("reply_to").as("to"), // route each response to its caller
-        col("correlation_id"),
-        col("subject"),
-        col("body"))
-      .write.format("amqp")
-      .option("endpoint", ep).option("address", overflow)
-      .option("routeByTo", "true")
-      .mode("append").save()
-    def readReply(a: String, tag: String): DataFrame =
-      s.read.format("amqp")
-        .option("endpoint", ep).option("address", a).load()
-        .select(col("subject").as("event_type"),
-          col("body").cast(DoubleType).as("value"), col("correlation_id"))
-        .withColumn("reply_queue", lit(tag))
-    readReply(replies(0), "reply0").unionByName(readReply(replies(1), "reply1"))
-      .groupBy(col("reply_queue"), col("event_type"))
-      .agg(count(lit(1)).as("n_replies"),
-        countDistinct(col("correlation_id")).as("n_corr"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-  }
-
-  val amqpRequestReplySql: String =
+  val amqpRequestReply: Gate = gate("amqp_request_reply",
     """SELECT concat('reply', CAST(event_id % 2 AS VARCHAR)) AS reply_queue,
       |  event_type,
       |  CAST(count(*) AS BIGINT) AS n_replies,
       |  CAST(count(DISTINCT event_id) AS BIGINT) AS n_corr,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_id % 11 = 3
-      |GROUP BY concat('reply', CAST(event_id % 2 AS VARCHAR)), event_type""".stripMargin
+      |GROUP BY concat('reply', CAST(event_id % 2 AS VARCHAR)), event_type""".stripMargin) { g =>
+    val replies = Seq(g.addr("reply0"), g.addr("reply1"))
+    val overflow = g.addr("reply-overflow")
+    g.pump(g.slice(col("event_id") % 11 === 3).map { r =>
+      val id = r.getLong(0)
+      val (m, ts) = msg(r)
+      (m.copy(replyTo = Some(replies((id % 2).toInt)), correlationId = Some(s"corr-$id")), ts)
+    })
+    // the responder: batch read -> response projection -> routed publish
+    g.publish(g.read().select(
+        col("reply_to").as("to"), // route each response to its caller
+        col("correlation_id"), col("subject"), col("body")),
+      "address" -> overflow, "routeByTo" -> "true")
+    def readReply(k: Int): DataFrame = g.read("address" -> replies(k))
+      .select(col("subject").as("event_type"),
+        col("body").cast(DoubleType).as("value"), col("correlation_id"))
+      .withColumn("reply_queue", lit(s"reply$k"))
+    readReply(0).unionByName(readReply(1))
+      .groupBy(col("reply_queue"), col("event_type"))
+      .agg(count(lit(1)).as("n_replies"),
+        countDistinct(col("correlation_id")).as("n_corr"),
+        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
+  }
 
   // --------------------------------------------------- amqp_lag_report
-  private var lastLagAddresses: Seq[(String, String)] = Nil
-
   /** CONSUMER LAG under the oracle gate (Kafka consumer-group lag
     * parity) — the monitoring surface every production queue pipeline
     * dashboards: per address, head (ledger's latest sequence) vs
@@ -725,55 +644,7 @@ object IngestQueries {
     * metadata probe per address, driver-side like a file listing —
     * |addresses| rows regardless of backlog depth; nothing fetched or
     * decoded. */
-  def amqpLagReport(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    lastLagAddresses.foreach { case (pep, paddr) =>
-      try {
-        val pc = AmqpEndpointRegistry.endpoint(pep)
-        pc.settle(paddr, pc.latestSeq(paddr))
-      } catch { case _: Exception => () }
-    }
-    val shards = Seq(s"$address-lag0", s"$address-lag1")
-    lastLagAddresses = shards.map((ep, _))
-    def slice(m: Long) = Tables.events(s, d)
-      .filter(col("event_id") % 9 === m)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect() // producer role: driver-side by design (reference test senders)
-      .toSeq
-    def pumpSharded(rows: Seq[org.apache.spark.sql.Row]): Seq[Long] =
-      (0 to 1).map { k =>
-        val part = rows.filter(_.getLong(0) % 2 == k)
-        pumpAll(client, shards(k), part.map { r =>
-          (AmqpMessage(messageId = Some(r.getLong(0).toString),
-            subject = Some(r.getString(1)),
-            body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-        })
-        part.length.toLong
-      }
-    pumpSharded(slice(2L))
-    // the consumer: a checkpointed streaming drain of slice A
-    val qname = s"gate_lag_${gateRun.get}"
-    val ckpt = java.nio.file.Files.createTempDirectory("gate-lag-ckpt").toString
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep)
-      .option("addresses", shards.mkString(",")).load()
-      .groupBy().count()
-      .writeStream.format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "lag gate drain hung")
-    finally q.stop()
-    pumpSharded(slice(6L)) // the backlog the report must surface as lag
-    graft.streaming.AmqpStreamOps.lagReport(s, ep, ckpt)
-      .withColumn("queue",
-        when(col("address") === shards(0), lit("shard0")).otherwise(lit("shard1")))
-      .select(col("queue"), col("head_seq"), col("committed_seq"), col("lag"))
-  }
-
-  val amqpLagReportSql: String =
+  val amqpLagReport: Gate = gate("amqp_lag_report",
     """WITH shards(sh) AS (VALUES (0), (1)),
       |a AS (
       |  SELECT event_id % 2 AS sh, CAST(count(*) AS BIGINT) AS c
@@ -785,7 +656,20 @@ object IngestQueries {
       |  CAST(coalesce(a.c, 0) + coalesce(b.c, 0) AS BIGINT) AS head_seq,
       |  CAST(coalesce(a.c, 0) AS BIGINT) AS committed_seq,
       |  CAST(coalesce(b.c, 0) AS BIGINT) AS lag
-      |FROM shards LEFT JOIN a USING (sh) LEFT JOIN b USING (sh)""".stripMargin
+      |FROM shards LEFT JOIN a USING (sh) LEFT JOIN b USING (sh)""".stripMargin) { g =>
+    val shards = Seq(g.addr("lag0"), g.addr("lag1"))
+    def pumpSharded(m: Long): Unit = {
+      val rows = g.slice(col("event_id") % 9 === m)
+      (0 to 1).foreach(k => g.pump(msgs(rows, _ % 2 == k), shards(k)))
+    }
+    pumpSharded(2L)
+    g.complete(g.stream("addresses" -> shards.mkString(",")).groupBy().count()) // drains slice A
+    pumpSharded(6L) // the backlog the report must surface as lag
+    AmqpStreamOps.lagReport(g.s, g.ep, g.ckpt)
+      .withColumn("queue",
+        when(col("address") === shards(0), lit("shard0")).otherwise(lit("shard1")))
+      .select(col("queue"), col("head_seq"), col("committed_seq"), col("lag"))
+  }
 
   // ---------------------------------------------------- amqp_stream_ttl
   /** TTL enforcement in the MICRO-BATCH path: the same classed slice
@@ -803,48 +687,22 @@ object IngestQueries {
     * batch's planning (a long stream must not freeze expiry at query
     * start) — spec-pinned in AmqpSourceSpec; the gate pins the instant
     * for cross-engine determinism. */
-  def amqpStreamTtl(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val n = pumpTtlClassed(client, address,
-      Tables.events(s, d).filter(col("event_id") % 10 === 2))
-    val qname = s"gate_stream_ttl_${gateRun.get}"
+  val amqpStreamTtl: Gate = gate("amqp_stream_ttl",
+    """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+      |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events WHERE event_id % 10 = 2 AND event_id % 3 <> 0
+      |GROUP BY event_type""".stripMargin) { g =>
+    val rows = g.slice(col("event_id") % 10 === 2)
+    g.pump(rows.map(ttlClassed))
     // Force a multi-batch drain at EVERY scale factor: the cap tracks
     // the slice (~4 batches) instead of a fixed row count — a fixed 500
     // meant 200 micro-batches at sf0.1 (26 s of trigger overhead for a
     // 2 s query; per-batch cost is scheduling, not data).
-    val perTrigger = math.max(500, (n + 3) / 4)
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep).option("address", address)
-      .option("respectTtl", "true")
-      .option("ttlNowMicros", TtlGateNowMicros.toString)
-      .option("maxMessagesPerTrigger", perTrigger.toString)
-      .load()
-      .groupBy(col("subject"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "stream-ttl gate query hung")
-    finally q.stop()
-    s.table(qname).select(col("subject").as("event_type"),
-      col("n_events"), col("sum_value"))
+    val perTrigger = math.max(500, (rows.length + 3) / 4)
+    g.complete(eventAgg(
+      g.stream(ttlPinned("respectTtl") :+ ("maxMessagesPerTrigger" -> perTrigger.toString): _*),
+      col("body"), col("subject").as("event_type")))
   }
-
-  val amqpStreamTtlSql: String =
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-      |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      |FROM events WHERE event_id % 10 = 2 AND event_id % 3 <> 0
-      |GROUP BY event_type""".stripMargin
-
-  val amqpDeadLetterSql: String =
-    """SELECT event_type, count(*) AS n_events,
-      |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-      |  CASE WHEN event_id % 3 = 0 THEN 'dlq' ELSE 'live' END AS queue
-      |FROM events WHERE event_id % 10 = 7
-      |GROUP BY event_type, CASE WHEN event_id % 3 = 0 THEN 'dlq' ELSE 'live' END""".stripMargin
 
   // ------------------------------------------------ amqp_stream_parquet
   /** The FILE-SINK leg under the oracle gate: wire stream → Structured
@@ -867,54 +725,19 @@ object IngestQueries {
     * at 100 TB the knobs are trigger interval and
     * `spark.sql.shuffle.partitions` (file count), plus the compaction
     * pass `corpus_refresh`/`mm_shard_layout` model downstream. */
-  def amqpStreamParquet(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 7 === 3) // own address => overlap with %10 slices is fine
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    val scratch = java.nio.file.Files.createTempDirectory("graft-parquet-gate")
-    val outDir = s"$scratch/out"
-    val ckpt = s"$scratch/ckpt"
-
-    def pump(rs: Array[org.apache.spark.sql.Row]): Unit = {
-      pumpAll(client, address, rs.toSeq.map { r =>
-          (AmqpMessage(
-            messageId = Some(r.getLong(0).toString),
-            subject = Some(r.getString(1)),
-            body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-        })
-    }
-    def drain(): Unit = {
-      val q = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address).load()
-        .select(col("message_id"), col("subject"), col("body"))
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000), "stream-parquet gate query hung")
-      finally q.stop()
-    }
-
-    val (a, b) = rows.splitAt(rows.length / 2)
-    pump(a); drain()
-    pump(b); drain() // same checkpoint: must process ONLY the second half
-    drain()          // no new data: the manifest must not grow
-    s.read.parquet(outDir)
-      .select(col("subject").as("event_type"),
-        col("body").cast(DoubleType).as("value"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-  }
-
-  val amqpStreamParquetSql: String =
+  val amqpStreamParquet: Gate = gate("amqp_stream_parquet",
     """SELECT event_type, count(*) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_id % 7 = 3
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin) { g =>
+    val rows = g.slice(col("event_id") % 7 === 3) // own address: overlap with %10 slices is fine
+    val (a, b) = rows.splitAt(rows.length / 2)
+    def drain(): String =
+      g.toParquet(g.stream().select(col("message_id"), col("subject"), col("body")))
+    g.pump(a.map(msg)); drain()
+    g.pump(b.map(msg)); drain() // same checkpoint: must process ONLY the second half
+    messageAgg(g.s.read.parquet(drain())) // no new data: the manifest must not grow
+  }
 
   // ------------------------------------------------- amqp_stream_window
   /** The reference's FLAGSHIP semantics under the oracle gate: a real
@@ -929,48 +752,21 @@ object IngestQueries {
     * reader replays it, and `window(ingest_timestamp, "1 hour")`
     * buckets must land every message in exactly the right window.
     *
-    * Determinism: Trigger.AvailableNow drains the whole backlog and
-    * self-terminates; complete-mode windows close when the query does;
+    * Determinism: complete-mode windows close when the query does;
     * epoch-aligned tumbling windows make `window.start` (cast to epoch
-    * seconds) equal DuckDB's integer hour bucket × 3600; the value sum
-    * rides DECIMAL with one terminal double cast. */
-  def amqpStreamWindow(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 10 === 1) // disjoint from the ingest gate's slice
-      .select(col("event_id"), col("event_type"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(3))
-      })
-    val qname = s"gate_stream_window_${gateRun.get}"
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
-      .groupBy(window(col("ingest_timestamp"), "1 hour").as("w"), col("subject"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "stream-window gate query hung")
-    finally q.stop()
-    s.table(qname)
-      .select(col("w.start").cast(LongType).as("wstart_s"),
-        col("subject").as("event_type"), col("n_events"), col("sum_value"))
-  }
-
-  val amqpStreamWindowSql: String =
+    * seconds) equal DuckDB's integer hour bucket × 3600. */
+  val amqpStreamWindow: Gate = gate("amqp_stream_window",
     """SELECT (epoch_us(ts) // 3600000000) * 3600 AS wstart_s, event_type,
       |  CAST(count(*) AS BIGINT) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_id % 10 = 1
-      |GROUP BY 1, 2""".stripMargin
+      |GROUP BY 1, 2""".stripMargin) { g =>
+    g.pump(g.slice(col("event_id") % 10 === 1, ts = tsUs).map(msg))
+    g.complete(eventAgg(g.stream(), col("body"),
+        window(col("ingest_timestamp"), "1 hour").as("w"), col("subject")))
+      .select(col("w.start").cast(LongType).as("wstart_s"),
+        col("subject").as("event_type"), col("n_events"), col("sum_value"))
+  }
 
   // -------------------------------------------------- amqp_stream_dedup
   /** STATEFUL streaming dedup under the oracle gate: a disjoint events
@@ -981,48 +777,17 @@ object IngestQueries {
     * slice ONCE from parquet: any under- or over-deduplication breaks
     * the hash. This gates Structured Streaming's keyed dedup state — the
     * semantics the reference's WAL-reliable receiver mode exists for.
-    *
-    * Determinism: Trigger.AvailableNow + unwatermarked dedup state (all
-    * ids retained for the run) + complete-mode aggregate. */
-  def amqpStreamDedup(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 10 === 2) // disjoint from the other gates' slices
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect()
-    var pass = 0
-    while (pass < 2) { // duplicate delivery: each message pumped twice
-      pumpAll(client, address, rows.toSeq.map { r =>
-          (AmqpMessage(
-            messageId = Some(r.getLong(0).toString),
-            subject = Some(r.getString(1)),
-            body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-        })
-      pass += 1
-    }
-    val qname = s"gate_stream_dedup_${gateRun.get}"
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
-      .dropDuplicates("message_id")
-      .groupBy(col("subject"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "stream-dedup gate query hung")
-    finally q.stop()
-    s.table(qname).select(col("subject").as("event_type"),
-      col("n_events"), col("sum_value"))
-  }
-
-  val amqpStreamDedupSql: String =
+    * Unwatermarked: all ids are retained for the run. */
+  val amqpStreamDedup: Gate = gate("amqp_stream_dedup",
     """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_id % 10 = 2
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin) { g =>
+    val once = g.slice(col("event_id") % 10 === 2).map(msg)
+    g.pump(once); g.pump(once) // duplicate delivery: each message pumped twice
+    g.complete(eventAgg(g.stream().dropDuplicates("message_id"),
+      col("body"), col("subject").as("event_type")))
+  }
 
   // --------------------------------------------------- amqp_stream_join
   /** Stream-STATIC broadcast join under the oracle gate: streamed
@@ -1040,45 +805,22 @@ object IngestQueries {
     * the complete-mode aggregate only — the join itself is stateless.
     * This is the pattern the reference's users hand-roll with foreachRDD
     * + driver-side lookups; here it is one declarative join. */
-  def amqpStreamJoin(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 10 === 3) // disjoint from the other gates' slices
-      .select(col("event_id"), col("event_type"), col("value"), col("user_id"))
-      .collect()
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          applicationProperties = Seq("user_id" -> r.getLong(3).toString),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-      })
-    val dim = broadcast(Tables.nation(s, d).select(col("n_nationkey"), col("n_name")))
-    val qname = s"gate_stream_join_${gateRun.get}"
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
-      .select(col("body"),
-        (col("application_properties")("user_id").cast(LongType) % 25).as("nkey"))
-      .join(dim, col("nkey") === col("n_nationkey"))
-      .groupBy(col("n_name"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "stream-join gate query hung")
-    finally q.stop()
-    s.table(qname).select(col("n_name"), col("n_events"), col("sum_value"))
-  }
-
-  val amqpStreamJoinSql: String =
+  val amqpStreamJoin: Gate = gate("amqp_stream_join",
     """SELECT n_name, CAST(count(*) AS BIGINT) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events JOIN nation ON n_nationkey = user_id % 25
       |WHERE event_id % 10 = 3
-      |GROUP BY n_name""".stripMargin
+      |GROUP BY n_name""".stripMargin) { g =>
+    g.pump(g.slice(col("event_id") % 10 === 3, more = Seq(col("user_id"))).map { r =>
+      val (m, ts) = msg(r)
+      (m.copy(applicationProperties = Seq("user_id" -> r.getLong(4).toString)), ts)
+    })
+    val dim = broadcast(Tables.nation(g.s, g.d).select(col("n_nationkey"), col("n_name")))
+    g.complete(eventAgg(g.stream()
+      .select(col("body"),
+        (col("application_properties")("user_id").cast(LongType) % 25).as("nkey"))
+      .join(dim, col("nkey") === col("n_nationkey")), col("body"), col("n_name")))
+  }
 
   // ------------------------------------------------ amqp_stream_session
   /** SESSION windows over the stream, under the gate: per-user sessions
@@ -1096,40 +838,7 @@ object IngestQueries {
     *
     * Scale shape: session state is per-user and bounded by the gap;
     * the complete-mode output is session-count-sized. */
-  def amqpStreamSession(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 10 === 4) // disjoint from the other gates' slices
-      .select(col("event_id"), col("user_id"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .collect()
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getLong(1).toString),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(3))
-      })
-    val qname = s"gate_stream_session_${gateRun.get}"
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
-      .groupBy(session_window(col("ingest_timestamp"), "30 minutes").as("sw"),
-        col("subject"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "stream-session gate query hung")
-    finally q.stop()
-    s.table(qname)
-      .select(col("subject").as("user_key"),
-        col("sw.start").cast(LongType).as("start_s"),
-        col("n_events"), col("sum_value"))
-  }
-
-  val amqpStreamSessionSql: String =
+  val amqpStreamSession: Gate = gate("amqp_stream_session",
     """WITH f AS (
       |  SELECT CAST(user_id AS VARCHAR) AS user_key, value,
       |    epoch_us(ts) AS ts_us, event_id
@@ -1148,7 +857,13 @@ object IngestQueries {
       |SELECT user_key, CAST(min(ts_us) // 1000000 AS BIGINT) AS start_s,
       |  CAST(count(*) AS BIGINT) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      |FROM sessed GROUP BY user_key, sess_id""".stripMargin
+      |FROM sessed GROUP BY user_key, sess_id""".stripMargin) { g =>
+    g.pump(g.slice(col("event_id") % 10 === 4, subject = col("user_id"), ts = tsUs).map(msg))
+    g.complete(eventAgg(g.stream(), col("body"),
+        session_window(col("ingest_timestamp"), "30 minutes").as("sw"), col("subject")))
+      .select(col("subject").as("user_key"), col("sw.start").cast(LongType).as("start_s"),
+        col("n_events"), col("sum_value"))
+  }
 
   // --------------------------------------------------- amqp_stream_late
   /** LATE-DATA semantics under the oracle gate: watermarked append-mode
@@ -1170,87 +885,13 @@ object IngestQueries {
     * boundary probes, the drop filter `window_end > HA` applied ONLY to
     * phase-2 rows, and the final emit filter `window_end <= HB`.
     *
-    * Determinism: each phase is one data micro-batch (AvailableNow,
-    * no rate limit) + the no-data flush batch; watermarks derive from
-    * anchor timestamps by exact integer arithmetic (anchors are ms- and
-    * hour-aligned, so the engine's ms truncation is a no-op); append
-    * rows are collected via foreachBatch across both runs. Restart
-    * recovery (offset replay + watermark restoration from the commit
-    * log) is part of the gated path. */
-  def amqpStreamLate(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-late-gate").toString
-    val HourUs = 3600000000L
-
-    def pump(msgs: Seq[(AmqpMessage, Long)]): Unit = pumpAll(client, address, msgs)
-    def msg(id: String, subject: String, body: String, tsUs: Long): (AmqpMessage, Long) =
-      (AmqpMessage(messageId = Some(id), subject = Some(subject),
-        body = AmqpValueBody(body)), tsUs)
-
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Double)]
-    def drain(): Unit = {
-      val q = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address).load()
-        .withWatermark("ingest_timestamp", "2 hours")
-        .groupBy(window(col("ingest_timestamp"), "1 hour").as("w"), col("subject"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-        .select(col("w.start").cast(LongType).as("wstart_s"), col("subject"),
-          col("n_events"), col("sum_value"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val got = b.collect()
-            .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-          buf.synchronized { buf ++= got }
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000), "stream-late gate query hung")
-      finally q.stop()
-    }
-
-    // ---- phase 1: slice A at its real event times + hour-aligning anchor
-    val a = Tables.events(s, d)
-      .filter(col("event_id") % 10 === 5)
-      .select(col("event_id"), col("event_type"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .collect()
-    val maxA = a.map(_.getLong(3)).max
-    val ha = ((maxA + HourUs - 1) / HourUs) * HourUs + HourUs // hour-aligned, > every A row
-    pump(a.toSeq.map(r => msg(r.getLong(0).toString, r.getString(1),
-        r.getDouble(2).toString, r.getLong(3)))
-      :+ msg("anchor-a", "anchor_a", "0.5", ha + 2 * HourUs)) // watermark → exactly HA
-    drain()
-
-    // ---- phase 2: late + fresh slice B, boundary probes, final anchor
-    val b = Tables.events(s, d)
-      .filter(col("event_id") % 10 === 6)
-      .select(col("event_id"), col("event_type"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .collect()
-    val bShift = b.toSeq.map { r =>
-      val ts = if (r.getLong(0) % 3 == 0) r.getLong(3) - 48 * HourUs // hopelessly late
-               else r.getLong(3) + 2 * HourUs                       // fresh
-      msg(r.getLong(0).toString, r.getString(1), r.getDouble(2).toString, ts)
-    }
-    val probes = Seq(
-      msg("probe-late-eq", "probe_late_eq", "1.0", ha - HourUs / 2), // window end == HA: dropped
-      msg("probe-kept", "probe_kept", "1.0", ha + HourUs / 2))       // end HA+1h > HA: kept
-    val maxP2 = math.max(maxA, (bShift ++ probes).map(_._2).max)
-    val hb = ((maxP2 + HourUs - 1) / HourUs) * HourUs + HourUs
-    pump(bShift ++ probes ++ Seq(
-      msg("anchor-b", "anchor_b", "0.5", hb + 2 * HourUs),           // final watermark → HB
-      msg("probe-emit-eq", "probe_emit_eq", "1.0", hb - HourUs / 2)))// end == HB: emitted
-    drain()
-
-    buf.toSeq.toDF("wstart_s", "event_type", "n_events", "sum_value")
-  }
-
-  val amqpStreamLateSql: String =
+    * Determinism: each phase is one data micro-batch (no rate limit) +
+    * the no-data flush batch; watermarks derive from anchor timestamps
+    * by exact integer arithmetic (anchors are ms- and hour-aligned, so
+    * the engine's ms truncation is a no-op). Restart recovery (offset
+    * replay + watermark restoration from the commit log) is part of the
+    * gated path. */
+  val amqpStreamLate: Gate = gate("amqp_stream_late",
     """WITH a AS (
       |  SELECT event_type, value, epoch_us(ts) AS ts_us
       |  FROM events WHERE event_id % 10 = 5),
@@ -1280,7 +921,39 @@ object IngestQueries {
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM kept, hb
       |WHERE (ts_us // 3600000000 + 1) * 3600000000 <= hb.h
-      |GROUP BY 1, 2""".stripMargin
+      |GROUP BY 1, 2""".stripMargin) { g =>
+    import g.s.implicits._
+    val HourUs = 3600000000L
+    def drain(): Seq[Row] = g.collect(eventAgg(
+        g.stream().withWatermark("ingest_timestamp", "2 hours"), col("body"),
+        window(col("ingest_timestamp"), "1 hour").as("w"), col("subject"))
+      .select(col("w.start").cast(LongType).as("wstart_s"), col("subject"),
+        col("n_events"), col("sum_value"))).map(_._2)
+
+    // ---- phase 1: slice A at its real event times + hour-aligning anchor
+    val a = g.slice(col("event_id") % 10 === 5, ts = tsUs)
+    val maxA = a.map(_.getLong(3)).max
+    val ha = ((maxA + HourUs - 1) / HourUs) * HourUs + HourUs // hour-aligned, > every A row
+    g.pump(a.map(msg) :+ message("anchor-a", "anchor_a", "0.5", ha + 2 * HourUs)) // watermark → exactly HA
+    val phase1 = drain()
+
+    // ---- phase 2: late + fresh slice B, boundary probes, final anchor
+    val bShift = g.slice(col("event_id") % 10 === 6, ts = tsUs).map { r =>
+      msg(r).copy(_2 =
+        if (r.getLong(0) % 3 == 0) r.getLong(3) - 48 * HourUs // hopelessly late
+        else r.getLong(3) + 2 * HourUs)                       // fresh
+    }
+    val probes = Seq(
+      message("probe-late-eq", "probe_late_eq", "1.0", ha - HourUs / 2), // window end == HA: dropped
+      message("probe-kept", "probe_kept", "1.0", ha + HourUs / 2))       // end HA+1h > HA: kept
+    val maxP2 = math.max(maxA, (bShift ++ probes).map(_._2).max)
+    val hb = ((maxP2 + HourUs - 1) / HourUs) * HourUs + HourUs
+    g.pump(bShift ++ probes ++ Seq(
+      message("anchor-b", "anchor_b", "0.5", hb + 2 * HourUs),           // final watermark → HB
+      message("probe-emit-eq", "probe_emit_eq", "1.0", hb - HourUs / 2)))// end == HB: emitted
+    (phase1 ++ drain()).map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      .toDF("wstart_s", "event_type", "n_events", "sum_value")
+  }
 
   // ---------------------------------------------- amqp_stream_dedup_wm
   /** TIME-BOUNDED streaming dedup under the oracle gate:
@@ -1305,69 +978,7 @@ object IngestQueries {
     *
     * Scale shape: state is one (key, expiry) register per id bounded
     * by the watermark horizon — the whole point of the operator. */
-  def amqpStreamDedupWm(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-dedupwm-gate").toString
-    val HourUs = 3600000000L
-
-    def pump(msgs: Seq[(AmqpMessage, Long)]): Unit = pumpAll(client, address, msgs)
-    def msg(id: String, subject: String, body: String, tsUs: Long): (AmqpMessage, Long) =
-      (AmqpMessage(messageId = Some(id), subject = Some(subject),
-        body = AmqpValueBody(body)), tsUs)
-
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def drain(): Unit = {
-      val q = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address).load()
-        .withWatermark("ingest_timestamp", "2 hours")
-        .dropDuplicatesWithinWatermark("message_id")
-        .select(col("subject"),
-          col("body").cast(DecimalType(18, 2)).cast(DoubleType).as("v"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val got = b.collect().map(r => (r.getString(0), r.getDouble(1)))
-          buf.synchronized { buf ++= got }
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000), "stream-dedup-wm gate query hung")
-      finally q.stop()
-    }
-
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 7 === 3)
-      .select(col("event_id"), col("event_type"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .collect()
-    val maxTs = rows.map(_.getLong(3)).max
-    // final phase-1 watermark: hour-ceiling + 3h — strictly past every
-    // row's (event time + 2h delay), so ALL phase-1 dedup state evicts
-    val wm = ((maxTs + HourUs - 1) / HourUs) * HourUs + 3 * HourUs
-    val once = rows.toSeq.map(r => msg(r.getLong(0).toString, r.getString(1),
-      r.getDouble(2).toString, r.getLong(3)))
-    pump(once.flatMap(m => Seq(m, m)) // duplicate delivery: adjacent copies
-      :+ msg("anchor-a", "anchor_a", "0.5", wm + 2 * HourUs))
-    drain()
-
-    // phase 2: a third copy of HALF the ids at fresh (never-late) times
-    val third = rows.toSeq.filter(_.getLong(0) % 2 == 0).map { r =>
-      msg(r.getLong(0).toString, r.getString(1), r.getDouble(2).toString,
-        wm + HourUs + (r.getLong(0) % 3600L) * 1000000L)
-    }
-    pump(third)
-    drain()
-
-    buf.toSeq.toDF("event_type", "v")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("v").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-  }
-
-  val amqpStreamDedupWmSql: String =
+  val amqpStreamDedupWm: Gate = gate("amqp_stream_dedup_wm",
     """WITH a AS (
       |  SELECT event_id, event_type, value
       |  FROM events WHERE event_id % 7 = 3),
@@ -1378,7 +989,27 @@ object IngestQueries {
       |  UNION ALL SELECT 'anchor_a', 0.5)
       |SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      |FROM kept GROUP BY event_type""".stripMargin
+      |FROM kept GROUP BY event_type""".stripMargin) { g =>
+    import g.s.implicits._
+    val HourUs = 3600000000L
+    def drain(): Seq[Row] = g.collect(g.stream()
+      .withWatermark("ingest_timestamp", "2 hours")
+      .dropDuplicatesWithinWatermark("message_id")
+      .select(col("subject"), col("body").cast(DecimalType(18, 2)).cast(DoubleType).as("v")))
+      .map(_._2)
+    val rows = g.slice(col("event_id") % 7 === 3, ts = tsUs)
+    // final phase-1 watermark: hour-ceiling + 3h — strictly past every
+    // row's (event time + 2h delay), so ALL phase-1 dedup state evicts
+    val wm = ((rows.map(_.getLong(3)).max + HourUs - 1) / HourUs) * HourUs + 3 * HourUs
+    g.pump(rows.map(msg).flatMap(m => Seq(m, m)) // duplicate delivery: adjacent copies
+      :+ message("anchor-a", "anchor_a", "0.5", wm + 2 * HourUs))
+    val phase1 = drain()
+    // phase 2: a third copy of HALF the ids at fresh (never-late) times
+    g.pump(rows.filter(_.getLong(0) % 2 == 0)
+      .map(r => msg(r).copy(_2 = wm + HourUs + (r.getLong(0) % 3600L) * 1000000L)))
+    eventAgg((phase1 ++ drain()).map(r => (r.getString(0), r.getDouble(1))).toDF("event_type", "v"),
+      col("v"), col("event_type"))
+  }
 
   // -------------------------------------------------- amqp_stream_state
   /** CUSTOM keyed state under the oracle gate: `mapGroupsWithState` —
@@ -1398,32 +1029,20 @@ object IngestQueries {
     *
     * Scale shape: state is one 24-byte register per key; each batch
     * shuffles only (key, row) pairs to the state partitions. */
-  def amqpStreamState(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-state-gate").toString
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 10 === 7) // disjoint from the other gates' slices
-      .select(col("event_id"), col("event_type"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .collect()
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(3))
-      })
-    val emitted =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long, Long)]
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
-      .select(col("subject"), col("body"),
-        unix_micros(col("ingest_timestamp")).as("ts_us"))
+  val amqpStreamState: Gate = gate("amqp_stream_state",
+    """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+      |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
+      |    AS sum_cents,
+      |  CAST(max(epoch_us(ts)) AS BIGINT) AS max_ts_us
+      |FROM events WHERE event_id % 10 = 7
+      |GROUP BY event_type""".stripMargin) { g =>
+    import g.s.implicits._
+    g.pump(g.slice(col("event_id") % 10 === 7, ts = tsUs).map(msg))
+    val registers = g.stream()
+      .select(col("subject"), col("body"), unix_micros(col("ingest_timestamp")).as("ts_us"))
       .as[(String, String, Long)]
       .groupByKey(_._1)
-      .mapGroupsWithState(
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
+      .mapGroupsWithState(org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
         (key: String, it: Iterator[(String, String, Long)],
          state: org.apache.spark.sql.streaming.GroupState[(Long, Long, Long)]) =>
           var (n, cents, mx) = state.getOption.getOrElse((0L, 0L, 0L))
@@ -1436,31 +1055,10 @@ object IngestQueries {
           state.update((n, cents, mx))
           (key, n, cents, mx)
       }
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[(String, Long, Long, Long)],
-                       id: Long) =>
-        val got = b.collect().map(r => (id, r._1, r._2, r._3, r._4))
-        emitted.synchronized { emitted ++= got }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "stream-state gate query hung")
-    finally q.stop()
     // last emission per key = the final state register
-    emitted.groupBy(_._2).values.map(_.maxBy(_._1))
-      .map { case (_, k, n, c, mx) => (k, n, c, mx) }
-      .toSeq.toDF("event_type", "n_events", "sum_cents", "max_ts_us")
+    lastPerKey(g.collect(registers, mode = "update"))(_._1)
+      .toDF("event_type", "n_events", "sum_cents", "max_ts_us")
   }
-
-  val amqpStreamStateSql: String =
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-      |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
-      |    AS sum_cents,
-      |  CAST(max(epoch_us(ts)) AS BIGINT) AS max_ts_us
-      |FROM events WHERE event_id % 10 = 7
-      |GROUP BY event_type""".stripMargin
 
   // -------------------------------------------------- amqp_sink_roundtrip
   /** The SINK side under the oracle gate: where every other gate's
@@ -1476,98 +1074,70 @@ object IngestQueries {
     * Scale shape: the write is one map-shaped pass (no shuffle; each
     * task publishes its partition and the commit is one coordinator
     * round); the read-back aggregate is the ingest gate's shape. */
-  def amqpSinkRoundtrip(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    Tables.events(s, d)
-      .filter(col("event_id") % 10 === 8) // disjoint from the other gates' slices
-      .select(col("event_id").cast(StringType).as("message_id"),
-        col("event_type").as("subject"),
-        col("value").cast(StringType).as("body"))
-      .write.format("amqp").option("endpoint", ep).option("address", address)
-      .mode("append").save()
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
-      .select(col("subject").as("event_type"),
-        col("body").cast(DoubleType).as("value"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-  }
-
-  val amqpSinkRoundtripSql: String =
+  val amqpSinkRoundtrip: Gate = gate("amqp_sink_roundtrip",
     """SELECT event_type, count(*) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events WHERE event_id % 10 = 8
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin) { g =>
+    g.publish(Tables.events(g.s, g.d)
+      .filter(col("event_id") % 10 === 8) // disjoint from the other gates' slices
+      .select(col("event_id").cast(StringType).as("message_id"),
+        col("event_type").as("subject"),
+        col("value").cast(StringType).as("body")))
+    messageAgg(g.read())
+  }
+
+  /** The join2 gates' two links: the slice split on (event_id div 10) % 2
+    * (a slice's own ids share event_id mod 10, so raw parity would
+    * empty one side) across addresses L and R, each optionally closed
+    * by a far-future anchor message 60 days past the slice's max
+    * timestamp. */
+  private def pumpSides(g: StreamGate, rows: Seq[Row], anchored: Boolean): Unit = {
+    lazy val anchorTs = rows.map(_.getLong(3)).max + 60L * 24 * 3600 * 1000000L
+    for ((side, parity) <- Seq(("l", 0L), ("r", 1L))) {
+      val anchor = if (anchored) Seq(message(s"anchor-$side", s"anchor-$side", "0.0", anchorTs)) else Nil
+      g.pump(msgs(rows, id => (id / 10) % 2 == parity) ++ anchor, g.addr(side.toUpperCase))
+    }
+  }
+
+  /** The join2 gates' stream-stream join of links L and R on user key
+    * with a 24-hour event-time band (right side in [left, left+24h]),
+    * both sides watermarked 1 hour when `watermarked`; yields (l_u, r_u,
+    * cents of l_v + r_v). */
+  private def bandJoin(g: StreamGate, how: String, watermarked: Boolean): DataFrame = {
+    def side(p: String): DataFrame = {
+      val df = g.stream("address" -> g.addr(p.toUpperCase))
+        .select(col("subject").as(s"${p}_u"),
+          col("body").cast(DecimalType(18, 2)).as(s"${p}_v"),
+          col("ingest_timestamp").as(s"${p}_ts"))
+      if (watermarked) df.withWatermark(s"${p}_ts", "1 hour") else df
+    }
+    side("l").join(side("r"),
+        col("l_u") === col("r_u") &&
+          col("r_ts") >= col("l_ts") &&
+          col("r_ts") <= col("l_ts") + expr("INTERVAL 24 HOURS"), how)
+      .select(col("l_u"), col("r_u"), ((col("l_v") + col("r_v")) * 100).cast(LongType).as("cents"))
+  }
+
+  private def optLong(r: Row, i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
 
   // ------------------------------------------------ amqp_stream_join2
   /** STREAM-STREAM join under the oracle gate — the last streaming API
     * surface the gates didn't cover (amqp_stream_join is
-    * stream-STATIC). One events slice is split by parity across TWO
-    * links of the same wire endpoint (split on (event_id div 10) % 2 —
-    * the slice's own ids are all ≡9 mod 10, so raw parity would empty
-    * one side); two readStreams join on user key with a 24-hour
-    * event-time band (right side in [left, left+24h]),
-    * exercising dual-source micro-batch planning and the symmetric
-    * state join buffering BOTH sides. Matched pairs are collected in
-    * append mode and aggregated per user; the oracle computes the same
-    * band self-join relationally. Inner stream-stream joins need no
-    * watermark, so the drain is complete and exact regardless of how
-    * the two backlogs interleave across batches.
+    * stream-STATIC). One events slice is split across TWO links of the
+    * same wire endpoint ([[pumpSides]]); two readStreams band-join on
+    * user key ([[bandJoin]]), exercising dual-source micro-batch
+    * planning and the symmetric state join buffering BOTH sides.
+    * Matched pairs are collected in append mode and aggregated per
+    * user; the oracle computes the same band self-join relationally.
+    * Inner stream-stream joins need no watermark, so the drain is
+    * complete and exact regardless of how the two backlogs interleave
+    * across batches.
     *
     * Scale shape: join state is keyed by user and bounded by the band
     * in any watermarked deployment; the gate's complete drain is the
     * deterministic test form. */
-  def amqpStreamJoin2(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val (aL, aR) = (s"$address-L", s"$address-R")
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 10 === 9) // the last unused slice
-      .select(col("event_id"), col("user_id"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .collect()
-    for ((addr, parity) <- Seq((aL, 0L), (aR, 1L))) {
-      val side = rows.filter(r => (r.getLong(0) / 10) % 2 == parity)
-      pumpAll(client, addr, side.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getLong(1).toString),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(3))
-      })
-    }
-    def side(addr: String, p: String): DataFrame =
-      s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", addr).load()
-        .select(col("subject").as(s"${p}_u"),
-          col("body").cast(DecimalType(18, 2)).as(s"${p}_v"),
-          col("ingest_timestamp").as(s"${p}_ts"))
-    val joined = side(aL, "l").join(side(aR, "r"),
-      col("l_u") === col("r_u") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr("INTERVAL 24 HOURS"))
-    val pairs = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-join2-gate").toString
-    val q = joined
-      .select(col("l_u"), ((col("l_v") + col("r_v")) * 100).cast(LongType).as("cents"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val got = b.collect().map(r => (r.getString(0), r.getLong(1)))
-        pairs.synchronized { pairs ++= got }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "stream-stream join gate hung")
-    finally q.stop()
-    pairs.toSeq.toDF("user_key", "cents")
-      .groupBy(col("user_key"))
-      .agg(count(lit(1)).as("n_pairs"), sum(col("cents")).as("sum_pair_cents"))
-  }
-
-  val amqpStreamJoin2Sql: String =
+  val amqpStreamJoin2: Gate = gate("amqp_stream_join2",
     """WITH e AS (
       |  SELECT event_id, CAST(user_id AS VARCHAR) AS u,
       |    CAST(value AS DECIMAL(18,2)) AS v, epoch_us(ts) AS ts_us
@@ -1578,7 +1148,16 @@ object IngestQueries {
       |  CAST(sum(CAST((l.v + r.v) * 100 AS BIGINT)) AS BIGINT) AS sum_pair_cents
       |FROM l JOIN r ON l.u = r.u
       |  AND r.ts_us >= l.ts_us AND r.ts_us <= l.ts_us + 86400000000
-      |GROUP BY l.u""".stripMargin
+      |GROUP BY l.u""".stripMargin) { g =>
+    import g.s.implicits._
+    pumpSides(g, g.slice(col("event_id") % 10 === 9, subject = col("user_id"), ts = tsUs),
+      anchored = false)
+    g.collect(bandJoin(g, "inner", watermarked = false))
+      .map { case (_, r) => (r.getString(0), r.getLong(2)) }
+      .toDF("user_key", "cents")
+      .groupBy(col("user_key"))
+      .agg(count(lit(1)).as("n_pairs"), sum(col("cents")).as("sum_pair_cents"))
+  }
 
   // ------------------------------------------------ amqp_stream_corpus
   /** The TRAINING-DATA FUNNEL inside Structured Streaming, under the
@@ -1601,46 +1180,7 @@ object IngestQueries {
     *
     * Scale shape: dedup state is one (h, h2) pair per distinct text;
     * the histogram is a ≤11-row complete-mode aggregate. */
-  def amqpStreamCorpus(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    graft.expressions.CharFoldHash.register(s)
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.documents(s, d)
-      .filter(col("doc_id") % 5 === 3)
-      .select(col("doc_id"), col("text"))
-      .collect()
-    var pass = 0
-    while (pass < 2) { // duplicate delivery: every document pumped twice
-      pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(s"${r.getLong(0)}-p$pass"),
-          body = AmqpValueBody(r.getString(1))), r.getLong(0))
-      })
-      pass += 1
-    }
-    val qname = s"gate_stream_corpus_${gateRun.get}"
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
-      .select(col("body"),
-        expr("char_fold_hash(body)").as("h"),
-        expr("char_fold_hash(reverse(body))").as("h2"))
-      .dropDuplicates("h", "h2")
-      .select(
-        floor(graft.functions.TextFunctions.qualityScore(col("body")) * 10)
-          .cast(LongType).as("qbucket"),
-        graft.functions.TextFunctions.tokenCount(col("body")).as("n_tokens"))
-      .groupBy(col("qbucket"))
-      .agg(count(lit(1)).as("n_texts"), sum(col("n_tokens")).as("sum_tokens"))
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "stream-corpus gate query hung")
-    finally q.stop()
-    s.table(qname).select(col("qbucket"), col("n_texts"), col("sum_tokens"))
-  }
-
-  lazy val amqpStreamCorpusSql: String = {
+  val amqpStreamCorpus: Gate = gate("amqp_stream_corpus", {
     val dt = "list_filter(string_split_regex(trim(text), ' +'), t -> t <> '')"
     val h1 = graft.functions.HashFunctions.charFoldHashSql("text")
     val h2 = graft.functions.HashFunctions.charFoldHashSql("reverse(text)")
@@ -1663,6 +1203,25 @@ object IngestQueries {
        |SELECT qbucket, CAST(count(*) AS BIGINT) AS n_texts,
        |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
        |FROM q GROUP BY qbucket""".stripMargin
+  }) { g =>
+    graft.expressions.CharFoldHash.register(g.s)
+    val docs = Tables.documents(g.s, g.d)
+      .filter(col("doc_id") % 5 === 3)
+      .select(col("doc_id"), col("text"))
+      .collect().toSeq
+    for (pass <- 0 until 2) // duplicate delivery: every document pumped twice
+      g.pump(docs.map(r => message(s"${r.getLong(0)}-p$pass", null, r.getString(1), r.getLong(0))))
+    g.complete(g.stream()
+      .select(col("body"),
+        expr("char_fold_hash(body)").as("h"),
+        expr("char_fold_hash(reverse(body))").as("h2"))
+      .dropDuplicates("h", "h2")
+      .select(
+        floor(graft.functions.TextFunctions.qualityScore(col("body")) * 10)
+          .cast(LongType).as("qbucket"),
+        graft.functions.TextFunctions.tokenCount(col("body")).as("n_tokens"))
+      .groupBy(col("qbucket"))
+      .agg(count(lit(1)).as("n_texts"), sum(col("n_tokens")).as("sum_tokens")))
   }
 
   // ------------------------------------------------ amqp_count_pushdown
@@ -1670,34 +1229,20 @@ object IngestQueries {
     * the AMQP batch read answers from the broker's sequence ledger
     * (high-water minus settled floor) via [[graft.streaming
     * .AmqpCountScan]] — the "scan" moves 8 bytes of metadata, no
-    * message body crosses the wire. The gate pumps a slice over the
-    * default amqp10:// transport and hash-matches the pushed count
-    * against DuckDB counting the same slice; AmqpSourceSpec separately
-    * pins the PLAN (AmqpCountScan present, no HashAggregate, grouped
-    * aggregates refuse the pushdown).
+    * message body crosses the wire. The gate hash-matches the pushed
+    * count against DuckDB counting the same slice; AmqpSourceSpec
+    * separately pins the PLAN (AmqpCountScan present, no
+    * HashAggregate, grouped aggregates refuse the pushdown).
     *
     * Scale shape: this is what turns a monitoring `df.count()` on a
     * 100 TB queue snapshot from a full drain into an O(1) metadata
     * probe — the same ledger AmqpBatchRead plans its fetch bounds
     * from, so the pushed answer is exactly the row scan's. */
-  def amqpCountPushdown(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 10 === 4)
-      .select(col("event_id"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(messageId = Some(r.getLong(0).toString),
-          body = AmqpValueBody(r.getLong(0).toString)), r.getLong(0))
-      })
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
-      .agg(count(lit(1)).as("n_msgs"))
+  val amqpCountPushdown: Gate = gate("amqp_count_pushdown",
+    """SELECT count(*) AS n_msgs FROM events WHERE event_id % 10 = 4""".stripMargin) { g =>
+    g.pump(g.slice(col("event_id") % 10 === 4, subject = lit(null), body = col("event_id")).map(msg))
+    g.read().agg(count(lit(1)).as("n_msgs"))
   }
-
-  val amqpCountPushdownSql: String =
-    """SELECT count(*) AS n_msgs FROM events WHERE event_id % 10 = 4""".stripMargin
 
   // ---------------------------------------------- amqp_stream_from_ts
   /** Timestamp-anchored stream start under the oracle gate — the
@@ -1716,44 +1261,16 @@ object IngestQueries {
     * skipped history is never fetched, never decoded, never crosses
     * the wire — attaching at "yesterday 00:00" on a 100 TB queue costs
     * the tail, not the backlog. */
-  def amqpStreamFromTs(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 7 === 2)
-      .select(col("event_id"), col("event_type"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .orderBy(col("ts_us"), col("event_id")) // monotone enqueue order
-      .collect() // producer role: driver-side by design (reference test senders)
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(3))
-      })
-    val qname = s"gate_from_ts_${gateRun.get}"
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep).option("address", address)
-      .option("startingTimestamp", "2024-01-15T00:00:00Z")
-      .load()
-      .groupBy(col("subject").as("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-      .writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "stream-from-ts gate query hung")
-    finally q.stop()
-    s.table(qname).select(col("event_type"), col("n_events"), col("sum_value"))
-  }
-
-  val amqpStreamFromTsSql: String =
+  val amqpStreamFromTs: Gate = gate("amqp_stream_from_ts",
     """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events
       |WHERE event_id % 7 = 2 AND ts >= TIMESTAMP '2024-01-15'
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin) { g =>
+    g.pump(g.slice(col("event_id") % 7 === 2, ts = tsUs, ordered = true).map(msg))
+    g.complete(eventAgg(g.stream("startingTimestamp" -> "2024-01-15T00:00:00Z"),
+      col("body"), col("subject").as("event_type")))
+  }
 
   // -------------------------------------------- amqp_stream_join2_outer
   /** Watermarked stream-stream LEFT OUTER join under the oracle gate —
@@ -1769,73 +1286,17 @@ object IngestQueries {
     * watermark is the MIN across sources, so both sides must advance).
     * That drives the final watermark beyond every real left row's band
     * end, forcing all 600+ unmatched-left nulls out of state before
-    * Trigger.AvailableNow terminates (the post-data no-data batch
-    * performs the eviction). The anchors use non-numeric user keys so
-    * they match nothing; the left anchor — whose own band the watermark
-    * never passes — is filtered from the collected output, and the
-    * right anchor is invisible to a left-outer join by construction.
-    * The oracle computes the same banded LEFT JOIN relationally: any
+    * the drain terminates (the post-data no-data batch performs the
+    * eviction). The anchors use non-numeric user keys so they match
+    * nothing; the left anchor — whose own band the watermark never
+    * passes — is filtered from the collected output, and the right
+    * anchor is invisible to a left-outer join by construction. The
+    * oracle computes the same banded LEFT JOIN relationally: any
     * missing, duplicated, or premature null row breaks the hash.
     *
     * Scale shape: identical to the inner gate — state keyed by user,
     * bounded by watermark + band; null emission adds no extra state. */
-  def amqpStreamJoin2Outer(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val (aL, aR) = (s"$address-L", s"$address-R")
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 7 === 5) // own per-run address: slice overlap is fine
-      .select(col("event_id"), col("user_id"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .collect()
-    val anchorTs = rows.map(_.getLong(3)).max + 60L * 24 * 3600 * 1000000L
-    for ((addr, parity, anchorKey) <- Seq((aL, 0L, "anchor-l"), (aR, 1L, "anchor-r"))) {
-      val side = rows.filter(r => (r.getLong(0) / 10) % 2 == parity)
-      pumpAll(client, addr, side.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getLong(1).toString),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(3))
-      } :+ (AmqpMessage(messageId = Some(anchorKey), subject = Some(anchorKey),
-        body = AmqpValueBody("0.0")), anchorTs))
-    }
-    def side(addr: String, p: String): DataFrame =
-      s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", addr).load()
-        .select(col("subject").as(s"${p}_u"),
-          col("body").cast(DecimalType(18, 2)).as(s"${p}_v"),
-          col("ingest_timestamp").as(s"${p}_ts"))
-        .withWatermark(s"${p}_ts", "1 hour")
-    val joined = side(aL, "l").join(side(aR, "r"),
-      col("l_u") === col("r_u") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr("INTERVAL 24 HOURS"),
-      "left_outer")
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Option[Long])]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-join2o-gate").toString
-    val q = joined
-      .select(col("l_u"), ((col("l_v") + col("r_v")) * 100).cast(LongType).as("cents"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val got = b.collect().map(r =>
-          (r.getString(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
-        out.synchronized { out ++= got }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "outer stream-stream join gate hung")
-    finally q.stop()
-    out.toSeq.filterNot(_._1 == "anchor-l").toDF("user_key", "cents")
-      .groupBy(col("user_key"))
-      .agg(count(lit(1)).as("n_rows"),
-        (count(lit(1)) - count(col("cents"))).as("n_unmatched"),
-        sum(col("cents")).as("sum_pair_cents"))
-  }
-
-  val amqpStreamJoin2OuterSql: String =
+  val amqpStreamJoin2Outer: Gate = gate("amqp_stream_join2_outer",
     """WITH e AS (
       |  SELECT event_id, CAST(user_id AS VARCHAR) AS u,
       |    CAST(value AS DECIMAL(18,2)) AS v, ts
@@ -1848,7 +1309,20 @@ object IngestQueries {
       |  CAST(sum(CAST((l.v + r.v) * 100 AS BIGINT)) AS BIGINT) AS sum_pair_cents
       |FROM l LEFT JOIN r ON l.u = r.u
       |  AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 24 HOURS
-      |GROUP BY l.u""".stripMargin
+      |GROUP BY l.u""".stripMargin) { g =>
+    import g.s.implicits._
+    // own per-run address: slice overlap is fine
+    pumpSides(g, g.slice(col("event_id") % 7 === 5, subject = col("user_id"), ts = tsUs),
+      anchored = true)
+    g.collect(bandJoin(g, "left_outer", watermarked = true))
+      .map { case (_, r) => (r.getString(0), optLong(r, 2)) }
+      .filterNot(_._1 == "anchor-l")
+      .toDF("user_key", "cents")
+      .groupBy(col("user_key"))
+      .agg(count(lit(1)).as("n_rows"),
+        (count(lit(1)) - count(col("cents"))).as("n_unmatched"),
+        sum(col("cents")).as("sum_pair_cents"))
+  }
 
   // --------------------------------------------- amqp_stream_join2_full
   /** Watermarked stream-stream FULL OUTER join under the oracle gate —
@@ -1872,69 +1346,7 @@ object IngestQueries {
     * Scale shape: same as the inner/left gates — state keyed by user,
     * bounded by watermark + band on both sides; full-outer adds no
     * state beyond left-outer, only the extra right-side emission. */
-  def amqpStreamJoin2Full(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val (aL, aR) = (s"$address-L", s"$address-R")
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 7 === 6) // own per-run address: slice overlap is fine
-      .select(col("event_id"), col("user_id"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .collect()
-    val anchorTs = rows.map(_.getLong(3)).max + 60L * 24 * 3600 * 1000000L
-    for ((addr, parity, anchorKey) <- Seq((aL, 0L, "anchor-l"), (aR, 1L, "anchor-r"))) {
-      val side = rows.filter(r => (r.getLong(0) / 10) % 2 == parity)
-      pumpAll(client, addr, side.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getLong(1).toString),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(3))
-      } :+ (AmqpMessage(messageId = Some(anchorKey), subject = Some(anchorKey),
-        body = AmqpValueBody("0.0")), anchorTs))
-    }
-    def side(addr: String, p: String): DataFrame =
-      s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", addr).load()
-        .select(col("subject").as(s"${p}_u"),
-          col("body").cast(DecimalType(18, 2)).as(s"${p}_v"),
-          col("ingest_timestamp").as(s"${p}_ts"))
-        .withWatermark(s"${p}_ts", "1 hour")
-    val joined = side(aL, "l").join(side(aR, "r"),
-      col("l_u") === col("r_u") &&
-        col("r_ts") >= col("l_ts") &&
-        col("r_ts") <= col("l_ts") + expr("INTERVAL 24 HOURS"),
-      "full_outer")
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Option[String], Option[String], Option[Long])]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-join2f-gate").toString
-    val q = joined
-      .select(col("l_u"), col("r_u"),
-        ((col("l_v") + col("r_v")) * 100).cast(LongType).as("cents"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val got = b.collect().map(r => (
-          if (r.isNullAt(0)) None else Some(r.getString(0)),
-          if (r.isNullAt(1)) None else Some(r.getString(1)),
-          if (r.isNullAt(2)) None else Some(r.getLong(2))))
-        out.synchronized { out ++= got }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "full-outer stream-stream join gate hung")
-    finally q.stop()
-    out.toSeq
-      .filterNot(t => t._1.exists(_.startsWith("anchor")) || t._2.exists(_.startsWith("anchor")))
-      .toDF("l_u", "r_u", "cents")
-      .groupBy(coalesce(col("l_u"), col("r_u")).as("user_key"))
-      .agg(count(lit(1)).as("n_rows"),
-        (count(lit(1)) - count(col("l_u"))).as("n_left_null"),
-        (count(lit(1)) - count(col("r_u"))).as("n_right_null"),
-        sum(col("cents")).as("sum_pair_cents"))
-  }
-
-  val amqpStreamJoin2FullSql: String =
+  val amqpStreamJoin2Full: Gate = gate("amqp_stream_join2_full",
     """WITH e AS (
       |  SELECT event_id, CAST(user_id AS VARCHAR) AS u,
       |    CAST(value AS DECIMAL(18,2)) AS v, ts
@@ -1948,7 +1360,21 @@ object IngestQueries {
       |  CAST(sum(CAST((l.v + r.v) * 100 AS BIGINT)) AS BIGINT) AS sum_pair_cents
       |FROM l FULL JOIN r ON l.u = r.u
       |  AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 24 HOURS
-      |GROUP BY coalesce(l.u, r.u)""".stripMargin
+      |GROUP BY coalesce(l.u, r.u)""".stripMargin) { g =>
+    import g.s.implicits._
+    // own per-run address: slice overlap is fine
+    pumpSides(g, g.slice(col("event_id") % 7 === 6, subject = col("user_id"), ts = tsUs),
+      anchored = true)
+    g.collect(bandJoin(g, "full_outer", watermarked = true))
+      .map { case (_, r) => (Option(r.getString(0)), Option(r.getString(1)), optLong(r, 2)) }
+      .filterNot(t => t._1.exists(_.startsWith("anchor")) || t._2.exists(_.startsWith("anchor")))
+      .toDF("l_u", "r_u", "cents")
+      .groupBy(coalesce(col("l_u"), col("r_u")).as("user_key"))
+      .agg(count(lit(1)).as("n_rows"),
+        (count(lit(1)) - count(col("l_u"))).as("n_left_null"),
+        (count(lit(1)) - count(col("r_u"))).as("n_right_null"),
+        sum(col("cents")).as("sum_pair_cents"))
+  }
 
   // ----------------------------------------------- amqp_filter_pushdown
   /** Predicate pushdown under the oracle gate: a timestamp-range +
@@ -1969,40 +1395,23 @@ object IngestQueries {
     * ("what landed between 08:00 and 09:00?") fetches the covering
     * span instead of draining the backlog — and messages outside the
     * span never even pay envelope decode on the executors. */
-  def amqpFilterPushdown(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 7 === 1) // own per-run address: %10 slice overlap is fine
-      .select(col("event_id"), col("event_type"), col("value"),
-        expr("ts_ns div 1000").as("ts_us"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(3))
-      })
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", address).load()
+  val amqpFilterPushdown: Gate = gate("amqp_filter_pushdown",
+    """SELECT CAST(count(*) AS BIGINT) AS n_msgs,
+      |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+      |  min(event_id) AS min_id, max(event_id) AS max_id
+      |FROM events
+      |WHERE event_id % 7 = 1 AND event_type = 'click'
+      |  AND ts >= TIMESTAMP '2024-01-08' AND ts < TIMESTAMP '2024-01-16'""".stripMargin) { g =>
+    g.pump(g.slice(col("event_id") % 7 === 1, ts = tsUs).map(msg))
+    g.read()
       // Instant literals: exact epoch-micros bounds, independent of the
       // session/JVM timezone (the parquet ts is epoch-micros too)
       .where(col("ingest_timestamp") >= lit(java.time.Instant.parse("2024-01-08T00:00:00Z"))
         && col("ingest_timestamp") < lit(java.time.Instant.parse("2024-01-16T00:00:00Z"))
         && col("subject") === "click")
       .agg(count(lit(1)).as("n_msgs"),
-        sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"),
-        min(col("message_id").cast(LongType)).as("min_id"),
-        max(col("message_id").cast(LongType)).as("max_id"))
+        sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value") +: idRange: _*)
   }
-
-  val amqpFilterPushdownSql: String =
-    """SELECT CAST(count(*) AS BIGINT) AS n_msgs,
-      |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-      |  min(event_id) AS min_id, max(event_id) AS max_id
-      |FROM events
-      |WHERE event_id % 7 = 1 AND event_type = 'click'
-      |  AND ts >= TIMESTAMP '2024-01-08' AND ts < TIMESTAMP '2024-01-16'""".stripMargin
 
   // -------------------------------------------- amqp_property_pushdown
   /** Lifted-application-property pushdown under the oracle gate — BOTH
@@ -2024,36 +1433,26 @@ object IngestQueries {
     * value" — now skips body decode for every non-matching message
     * and composes with the partial-limit fetch stop; on the map
     * column it would fetch, decode, and stringify everything. */
-  def amqpPropertyPushdown(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    Tables.events(s, d)
-      .filter(col("event_id") % 7 === 4)
-      .select(col("event_id").cast(StringType).as("message_id"),
-        col("event_type").as("kind"),
-        concat(lit("r"), (col("user_id") % 3).cast(StringType)).as("region"),
-        col("value").cast(StringType).as("body"))
-      .write.format("amqp").option("endpoint", ep).option("address", address)
-      .option("propertyColumns", "kind,region")
-      .mode("append").save()
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", address)
-      .option("propertyColumns", "kind,region")
-      .load()
-      .where(col("kind") === "click")
-      .groupBy(col("region"))
-      .agg(count(lit(1)).as("n_msgs"),
-        sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"),
-        min(col("message_id").cast(LongType)).as("min_id"),
-        max(col("message_id").cast(LongType)).as("max_id"))
-  }
-
-  val amqpPropertyPushdownSql: String =
+  val amqpPropertyPushdown: Gate = gate("amqp_property_pushdown",
     """SELECT 'r' || CAST(user_id % 3 AS VARCHAR) AS region,
       |  CAST(count(*) AS BIGINT) AS n_msgs,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
       |  min(event_id) AS min_id, max(event_id) AS max_id
       |FROM events WHERE event_id % 7 = 4 AND event_type = 'click'
-      |GROUP BY 1""".stripMargin
+      |GROUP BY 1""".stripMargin) { g =>
+    val lifted = "propertyColumns" -> "kind,region"
+    g.publish(Tables.events(g.s, g.d)
+      .filter(col("event_id") % 7 === 4)
+      .select(col("event_id").cast(StringType).as("message_id"),
+        col("event_type").as("kind"),
+        concat(lit("r"), (col("user_id") % 3).cast(StringType)).as("region"),
+        col("value").cast(StringType).as("body")), lifted)
+    g.read(lifted)
+      .where(col("kind") === "click")
+      .groupBy(col("region"))
+      .agg(count(lit(1)).as("n_msgs"),
+        sum(col("body").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value") +: idRange: _*)
+  }
 
   // ---------------------------------------------- amqp_typed_property
   /** TYPED property lift under the oracle gate — `propertyColumns =
@@ -2074,31 +1473,7 @@ object IngestQueries {
     * and Y") now prunes at the reader for the cost of two long
     * compares per message — on the map column it would fetch, decode,
     * and stringify everything. */
-  def amqpTypedProperty(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    Tables.events(s, d)
-      .filter(col("event_id") % 9 === 7)
-      .select(col("event_id").cast(StringType).as("message_id"),
-        col("event_type").as("kind"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast(LongType).as("price_cents"),
-        col("user_id").cast(StringType).as("body"))
-      .write.format("amqp").option("endpoint", ep).option("address", address)
-      .option("propertyColumns", "kind,price_cents:long")
-      .mode("append").save()
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", address)
-      .option("propertyColumns", "kind,price_cents:long")
-      .load()
-      .where(col("price_cents") >= 5000L && col("price_cents") < 20000L &&
-        col("kind") === "purchase")
-      .groupBy(col("kind"))
-      .agg(count(lit(1)).as("n_msgs"),
-        sum(col("price_cents")).as("sum_cents"),
-        min(col("message_id").cast(LongType)).as("min_id"),
-        max(col("message_id").cast(LongType)).as("max_id"))
-  }
-
-  val amqpTypedPropertySql: String =
+  val amqpTypedProperty: Gate = gate("amqp_typed_property",
     """SELECT event_type AS kind, CAST(count(*) AS BIGINT) AS n_msgs,
       |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
       |    AS sum_cents,
@@ -2107,7 +1482,20 @@ object IngestQueries {
       |WHERE event_id % 9 = 7 AND event_type = 'purchase'
       |  AND CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) >= 5000
       |  AND CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) < 20000
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin) { g =>
+    val lifted = "propertyColumns" -> "kind,price_cents:long"
+    g.publish(Tables.events(g.s, g.d)
+      .filter(col("event_id") % 9 === 7)
+      .select(col("event_id").cast(StringType).as("message_id"),
+        col("event_type").as("kind"),
+        cents(col("value"), LongType).as("price_cents"),
+        col("user_id").cast(StringType).as("body")), lifted)
+    g.read(lifted)
+      .where(col("price_cents") >= 5000L && col("price_cents") < 20000L &&
+        col("kind") === "purchase")
+      .groupBy(col("kind"))
+      .agg(count(lit(1)).as("n_msgs"), sum(col("price_cents")).as("sum_cents") +: idRange: _*)
+  }
 
   // ---------------------------------------------------- amqp_stream_tws
   /** `transformWithState` under the oracle gate — Spark 4's successor
@@ -2121,61 +1509,24 @@ object IngestQueries {
     * init, ValueState round-trips through RocksDB, and the
     * advance-only emission contract are all on the hash path.
     *
-    * Determinism: cents via the same DECIMAL(18,2)·100 convention as
-    * every other gate; MAX is order-free, and the changelog's final
-    * emission per key is the overall max regardless of batching.
+    * Determinism: MAX is order-free, and the changelog's final emission
+    * per key is the overall max regardless of batching.
     *
     * Scale shape: one int register per live key in RocksDB with
     * changelog checkpointing — the state API a forever-running 100 TB
     * pipeline should target. */
-  def amqpStreamTws(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 7 === 6)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect()
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-      })
-    withRocksDb(s) {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-tws-gate").toString
-      val env = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address).load()
-        .withColumn("cents",
-          (col("body").cast(DecimalType(18, 2)) * 100).cast(IntegerType))
-      val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Int)]
-      val q = graft.streaming.AmqpStreamOps.runningMaxChangelogTws(env, "subject", "cents")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[graft.streaming.AmqpStreamOps.MaxUpdate],
-           id: Long) =>
-            val got = b.collect().map(u => (id, u.key, u.max_value))
-            emitted.synchronized { emitted ++= got }
-            ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000), "transformWithState gate query hung")
-      finally q.stop()
-      // last emission per key = the final running max
-      emitted.groupBy(_._2).values.map(_.maxBy(_._1))
-        .map { case (_, k, mx) => (k, mx) }
-        .toSeq.toDF("event_type", "max_cents")
-    }
-  }
-
-  val amqpStreamTwsSql: String =
+  val amqpStreamTws: Gate = gate("amqp_stream_tws",
     """SELECT event_type,
       |  CAST(max(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS INTEGER)
       |    AS max_cents
       |FROM events WHERE event_id % 7 = 6
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin, rocksDb = true) { g =>
+    import g.s.implicits._
+    g.pump(g.slice(col("event_id") % 7 === 6).map(msg))
+    val env = g.stream().withColumn("cents", cents(col("body")))
+    lastPerKey(g.collect(AmqpStreamOps.runningMaxChangelogTws(env, "subject", "cents")))(_.key)
+      .map(u => (u.key, u.max_value)).toDF("event_type", "max_cents")
+  }
 
   // ---------------------------------------- amqp_stream_leaderboard
   /** `transformWithState` LIST state under the oracle gate: the
@@ -2192,52 +1543,7 @@ object IngestQueries {
     * Scale shape: k ints per live key in the state store regardless of
     * stream length; emissions are change-driven (a saturated board
     * goes quiet), so output volume tracks board churn, not traffic. */
-  def amqpStreamLeaderboard(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 11 === 7)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect()
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-      })
-    withRocksDb(s) {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-board-gate").toString
-      val perTrigger = math.max(100, (rows.length + 3) / 4) // several batches
-      val env = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address)
-        .option("maxMessagesPerTrigger", perTrigger.toString).load()
-        .withColumn("cents",
-          (col("body").cast(DecimalType(18, 2)) * 100).cast(IntegerType))
-      val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Seq[Int])]
-      val q = graft.streaming.AmqpStreamOps.topKLeaderboardTws(env, "subject", "cents", 3)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[graft.streaming.AmqpStreamOps.LeaderboardUpdate],
-           id: Long) =>
-            val got = b.collect().map(u => (id, u.key, u.top))
-            emitted.synchronized { emitted ++= got }
-            ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000), "leaderboard gate query hung")
-      finally q.stop()
-      emitted.groupBy(_._2).values.map(_.maxBy(_._1))
-        .flatMap { case (_, k, top) =>
-          top.zipWithIndex.map { case (c, i) => (k, (i + 1).toLong, c) }
-        }
-        .toSeq.toDF("event_type", "rank", "cents")
-    }
-  }
-
-  val amqpStreamLeaderboardSql: String =
+  val amqpStreamLeaderboard: Gate = gate("amqp_stream_leaderboard",
     """WITH c AS (
       |  SELECT event_type,
       |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents
@@ -2247,7 +1553,17 @@ object IngestQueries {
       |  FROM c GROUP BY event_type)
       |SELECT event_type, CAST(r AS BIGINT) AS rank, ls[r] AS cents
       |FROM l, (SELECT unnest(generate_series(1, 3)) AS r) t
-      |WHERE r <= len(ls)""".stripMargin
+      |WHERE r <= len(ls)""".stripMargin, rocksDb = true) { g =>
+    import g.s.implicits._
+    val rows = g.slice(col("event_id") % 11 === 7)
+    g.pump(rows.map(msg))
+    val perTrigger = math.max(100, (rows.length + 3) / 4) // several batches
+    val env = g.stream("maxMessagesPerTrigger" -> perTrigger.toString)
+      .withColumn("cents", cents(col("body")))
+    lastPerKey(g.collect(AmqpStreamOps.topKLeaderboardTws(env, "subject", "cents", 3)))(_.key)
+      .flatMap(u => u.top.zipWithIndex.map { case (c, i) => (u.key, (i + 1).toLong, c) })
+      .toDF("event_type", "rank", "cents")
+  }
 
   // ------------------------------------------- amqp_stream_distinct
   /** `transformWithState` MAP state under the oracle gate: the
@@ -2266,52 +1582,19 @@ object IngestQueries {
     * Scale shape: one map entry per live (key, user) pair — exact
     * distinct's register cost; the 100 TB form swaps in a mergeable
     * sketch and keeps this exact operator as its audit. */
-  def amqpStreamDistinct(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 13 === 9)
-      .select(col("event_id"), col("event_type"), col("user_id"))
-      .collect()
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getLong(2).toString)), r.getLong(0))
-      })
-    withRocksDb(s) {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-distinct-gate").toString
-      val perTrigger = math.max(100, (rows.length + 3) / 4) // several batches
-      val env = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address)
-        .option("maxMessagesPerTrigger", perTrigger.toString).load()
-      val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-      val q = graft.streaming.AmqpStreamOps.distinctCountTws(env, "subject", "body")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[graft.streaming.AmqpStreamOps.DistinctUpdate],
-           id: Long) =>
-            val got = b.collect().map(u => (id, u.key, u.distinct_count))
-            emitted.synchronized { emitted ++= got }
-            ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000), "distinct gate query hung")
-      finally q.stop()
-      emitted.groupBy(_._2).values.map(_.maxBy(_._1))
-        .map { case (_, k, n) => (k, n) }
-        .toSeq.toDF("event_type", "distinct_users")
-    }
-  }
-
-  val amqpStreamDistinctSql: String =
+  val amqpStreamDistinct: Gate = gate("amqp_stream_distinct",
     """SELECT event_type,
       |  CAST(count(DISTINCT user_id) AS BIGINT) AS distinct_users
       |FROM events WHERE event_id % 13 = 9
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin, rocksDb = true) { g =>
+    import g.s.implicits._
+    val rows = g.slice(col("event_id") % 13 === 9, body = col("user_id"))
+    g.pump(rows.map(msg))
+    val perTrigger = math.max(100, (rows.length + 3) / 4) // several batches
+    val env = g.stream("maxMessagesPerTrigger" -> perTrigger.toString)
+    lastPerKey(g.collect(AmqpStreamOps.distinctCountTws(env, "subject", "body")))(_.key)
+      .map(u => (u.key, u.distinct_count)).toDF("event_type", "distinct_users")
+  }
 
   // ---------------------------------------------- amqp_stream_tws_timer
   /** EVENT-TIME TIMERS under the oracle gate — the second
@@ -2328,8 +1611,8 @@ object IngestQueries {
     * StatefulProcessor timer registration/extension, stale-timer
     * suppression, `handleExpiredTimer` firing from the watermark, and
     * timer+state recovery across a checkpointed RESTART (phase 2 is a
-    * second AvailableNow run on the same checkpoint whose far anchor
-    * fires every surviving timer).
+    * second drain on the same checkpoint whose far anchor fires every
+    * surviving timer).
     *
     * Determinism: event times are truncated to WHOLE SECONDS before
     * pumping (and the oracle islands on the same `epoch_us(ts) //
@@ -2343,65 +1626,7 @@ object IngestQueries {
     *
     * Scale shape: one (count, sum, timer) register per OPEN session key
     * in RocksDB; completed islands never hold state across batches. */
-  def amqpStreamTwsTimer(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 11 === 5)
-      .select(col("event_id"), col("event_type"), col("value"),
-        expr("(ts_ns div 1000000000) * 1000000").as("ts_us"))
-      .orderBy(col("ts_us"), col("event_id"))
-      .collect()
-    require(rows.nonEmpty, "tws-timer gate slice is empty")
-    val maxTsUs = rows.last.getLong(3)
-    val anchor1 = maxTsUs + 36000L * 1000000L          // +10 h
-    val anchor2 = anchor1 + 36000L * 1000000L          // +20 h
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(3))
-      } :+ (AmqpMessage(messageId = Some("a1"), subject = Some("zz_anchor1"),
-          body = AmqpValueBody("0")), anchor1))
-    withRocksDb(s) {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-tws-timer-gate").toString
-      val emitted = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
-      def drain(): Unit = {
-        val env = s.readStream.format("amqp")
-          .option("endpoint", ep).option("address", address).load()
-          .withColumn("cents",
-            (col("body").cast(DecimalType(18, 2)) * 100).cast(IntegerType))
-        val q = graft.streaming.AmqpStreamOps
-          .sessionFlushTws(env, "subject", "cents", gapMs = 1800000L)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[graft.streaming.AmqpStreamOps.SessionFlush],
-             _: Long) =>
-              val got = b.collect().map(f => (f.key, f.n_events, f.sum_value))
-              emitted.synchronized { emitted ++= got }
-              ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try require(q.awaitTermination(120000), "tws-timer gate query hung")
-        finally q.stop()
-      }
-      drain() // phase 1: data + anchor1 — most sessions flush here
-      // phase 2: restart from the checkpoint; anchor2's batch carries
-      // phase 1's watermark forward and fires every timer still armed
-      // (including any tail session phase 1's no-data batch missed)
-      pumpAll(client, address, Seq((AmqpMessage(messageId = Some("a2"),
-        subject = Some("zz_anchor2"), body = AmqpValueBody("0")), anchor2)))
-      drain()
-      emitted.toSeq
-        .filterNot(_._1.startsWith("zz_anchor"))
-        .toDF("event_type", "n_events", "sum_cents")
-    }
-  }
-
-  val amqpStreamTwsTimerSql: String =
+  val amqpStreamTwsTimer: Gate = gate("amqp_stream_tws_timer",
     """WITH f AS (
       |  SELECT event_type,
       |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents,
@@ -2420,7 +1645,26 @@ object IngestQueries {
       |  FROM flags)
       |SELECT event_type, CAST(count(*) AS INTEGER) AS n_events,
       |  CAST(sum(cents) AS INTEGER) AS sum_cents
-      |FROM sessed GROUP BY event_type, sess_id""".stripMargin
+      |FROM sessed GROUP BY event_type, sess_id""".stripMargin, rocksDb = true) { g =>
+    import g.s.implicits._
+    val rows = g.slice(col("event_id") % 11 === 5,
+      ts = expr("(ts_ns div 1000000000) * 1000000"), ordered = true)
+    require(rows.nonEmpty, "tws-timer gate slice is empty")
+    val anchor1 = rows.last.getLong(3) + 36000L * 1000000L // +10 h
+    val anchor2 = anchor1 + 36000L * 1000000L              // +20 h
+    g.pump(rows.map(msg) :+ message("a1", "zz_anchor1", "0", anchor1))
+    def drain(): Seq[AmqpStreamOps.SessionFlush] = g.collect(AmqpStreamOps.sessionFlushTws(
+      g.stream().withColumn("cents", cents(col("body"))), "subject", "cents", gapMs = 1800000L))
+      .map(_._2)
+    val phase1 = drain() // data + anchor1 — most sessions flush here
+    // phase 2: restart from the checkpoint; anchor2's batch carries
+    // phase 1's watermark forward and fires every timer still armed
+    // (including any tail session phase 1's no-data batch missed)
+    g.pump(Seq(message("a2", "zz_anchor2", "0", anchor2)))
+    (phase1 ++ drain()).filterNot(_.key.startsWith("zz_anchor"))
+      .map(f => (f.key, f.n_events, f.sum_value))
+      .toDF("event_type", "n_events", "sum_cents")
+  }
 
   // ---------------------------------------------- amqp_shared_consumers
   /** SHARED SUBSCRIPTION under the oracle gate: TWO CONCURRENT consuming
@@ -2445,9 +1689,11 @@ object IngestQueries {
     * the `minMessagesPerTrigger`/`maxTriggerDelay` admission floor
     * (Kafka ReadMinRows parity) — held tails must still land exactly
     * once. */
-  def amqpSharedConsumers(s: SparkSession, d: String): DataFrame =
-    sharedConsumersGate(s, d, col("event_id") % 11 === 9, "jobs", "workers",
-      minRowsFloor = true)
+  val amqpSharedConsumers: Gate = sharedConsumersGate("amqp_shared_consumers",
+    """SELECT CAST(event_id AS VARCHAR) AS message_id, event_type,
+      |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents
+      |FROM events WHERE event_id % 11 = 9""".stripMargin,
+    col("event_id") % 11 === 9, "jobs", "workers", minRowsFloor = true)
 
   /** Two consumers in share group `group` start BEFORE the pump of the
     * `slice` of events (to address `prefix-<run>`) and drain it
@@ -2457,48 +1703,31 @@ object IngestQueries {
     * minOffsetsPerTrigger/maxTriggerDelay parity): claims below 20
     * available rows hold until the ceiling, so an admission bug that
     * drops or re-claims the held tail breaks the oracle. */
-  private def sharedConsumersGate(s: SparkSession, d: String, slice: Column,
-      prefix: String, group: String, minRowsFloor: Boolean): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val ep = wireGateEndpoint
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val address = s"$prefix-${sharedGateRun.incrementAndGet()}"
-    val rows = Tables.events(s, d).filter(slice)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect()
+  private def sharedConsumersGate(name: String, oracle: String, slice: Column,
+      prefix: String, group: String, minRowsFloor: Boolean): Gate = gate(name, oracle, wire = true) { g =>
+    import g.s.implicits._
+    val address = s"$prefix-${g.run}"
+    val rows = g.slice(slice)
     require(rows.nonEmpty, s"$group gate slice is empty")
-    val scratch = java.nio.file.Files.createTempDirectory(s"graft-shared-$prefix")
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String, Int)]()
-    val perTrigger = math.max(20, rows.length / 6)
-    def consumer(idx: Int) = {
-      val reader = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address)
-        .option("sharedGroup", group)
-        .option("maxMessagesPerTrigger", perTrigger.toString)
-      (if (minRowsFloor)
-        reader.option("minMessagesPerTrigger", "20").option("maxTriggerDelay", "1s")
-      else reader)
-        .load()
-        .withColumn("cents",
-          (col("body").cast(DecimalType(18, 2)) * 100).cast(IntegerType))
+    val floor =
+      if (minRowsFloor) Seq("minMessagesPerTrigger" -> "20", "maxTriggerDelay" -> "1s") else Nil
+    def consumer(idx: Int) =
+      g.stream(Seq("address" -> address, "sharedGroup" -> group,
+          "maxMessagesPerTrigger" -> math.max(20, rows.length / 6).toString) ++ floor: _*)
+        .withColumn("cents", cents(col("body")))
         .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$scratch/ckpt$idx")
+        .option("checkpointLocation", s"${g.dir}/ckpt$idx")
         .foreachBatch { (b: DataFrame, _: Long) =>
           b.select(col("message_id"), col("subject"), col("cents")).collect()
             .foreach(r => emitted.add((idx, r.getString(0), r.getString(1), r.getInt(2))))
           ()
         }
         .start()
-    }
     val q1 = consumer(1)
     val q2 = consumer(2)
     try {
-      pumpAll(client, address, rows.toSeq.map { r =>
-          (AmqpMessage(
-            messageId = Some(r.getLong(0).toString),
-            subject = Some(r.getString(1)),
-            body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-        })
+      g.pump(rows.map(msg), address)
       // double pass: each consumer's first return can precede the
       // other's in-flight claims; after the second, nothing is
       // dispatchable and every claimed batch is sunk (see the stream's
@@ -2512,20 +1741,17 @@ object IngestQueries {
       val deadline = System.currentTimeMillis() + 60000
       while (emitted.size < rows.length && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
-    } finally { q1.stop(); q2.stop(); JavaUtils.deleteRecursively(scratch.toFile) }
+    } finally { q1.stop(); q2.stop() }
     import scala.jdk.CollectionConverters._
     val got = emitted.asScala.toSeq
-    require(got.map(_._1).toSet == Set(1, 2),
-      s"work-sharing degenerated to one consumer: split " +
-        s"${got.groupBy(_._1).view.mapValues(_.size).toMap}")
+    requireBothWorked(got.map(_._1))
     got.map { case (_, id, et, c) => (id, et, c) }
       .toDF("message_id", "event_type", "cents")
   }
 
-  val amqpSharedConsumersSql: String =
-    """SELECT CAST(event_id AS VARCHAR) AS message_id, event_type,
-      |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents
-      |FROM events WHERE event_id % 11 = 9""".stripMargin
+  private def requireBothWorked(consumers: Seq[Int]): Unit =
+    require(consumers.toSet == Set(1, 2), s"work-sharing degenerated to one consumer: split " +
+      s"${consumers.groupBy(identity).view.mapValues(_.size).toMap}")
 
   // --------------------------------------------------- amqp_shared_wire
   /** SHARED SUBSCRIPTION over the INTEROPERABLE WIRE: the same
@@ -2542,14 +1768,11 @@ object IngestQueries {
     * probe attach per trigger per consumer (O(1) ledger arithmetic
     * broker-side), reads are per-claim drain slices on pooled
     * per-reader connections; the wire adds framing, never coordination. */
-  def amqpSharedWire(s: SparkSession, d: String): DataFrame =
-    sharedConsumersGate(s, d, col("event_id") % 13 === 4, "wirejobs", "wire-workers",
-      minRowsFloor = false)
-
-  val amqpSharedWireSql: String =
+  val amqpSharedWire: Gate = sharedConsumersGate("amqp_shared_wire",
     """SELECT CAST(event_id AS VARCHAR) AS message_id, event_type,
       |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents
-      |FROM events WHERE event_id % 13 = 4""".stripMargin
+      |FROM events WHERE event_id % 13 = 4""".stripMargin,
+    col("event_id") % 13 === 4, "wirejobs", "wire-workers", minRowsFloor = false)
 
   // ------------------------------------------------- amqp_stream_minrows
   /** MIN-ROWS ADMISSION on the hash path (`minMessagesPerTrigger` +
@@ -2561,39 +1784,26 @@ object IngestQueries {
     * fires at the ceiling rather than hanging, so the full slice must
     * still land EXACTLY ONCE under the oracle hash: an admission bug
     * that drops, re-admits, or double-counts a held tail breaks it.
-    * Runs over the amqp10:// wire like its siblings.
     *
     * Scale shape: the floor only REMOVES triggers (batching trickle
     * streams); admission stays O(1) ledger arithmetic per trigger —
     * what changes is per-trigger overhead amortization, which is the
     * point. */
-  def amqpStreamMinrows(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 23 === 3)
-      .select(col("event_id"), col("value"))
-      .collect()
+  val amqpStreamMinrows: Gate = gate("amqp_stream_minrows",
+    """SELECT CAST(event_id AS VARCHAR) AS message_id,
+      |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents
+      |FROM events WHERE event_id % 23 = 3""".stripMargin) { g =>
+    import g.s.implicits._
+    val rows = g.slice(col("event_id") % 23 === 3, subject = lit(null))
     require(rows.nonEmpty, "minrows gate slice is empty")
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          body = AmqpValueBody(r.getDouble(1).toString)), r.getLong(0))
-      })
-    val scratch = java.nio.file.Files.createTempDirectory("graft-minrows-gate")
+    g.pump(rows.map(msg))
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
     val batchSizes = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep).option("address", address)
-      .option("minMessagesPerTrigger", "10")
-      .option("maxTriggerDelay", "1s")
-      .option("maxMessagesPerTrigger", math.max(15, rows.length / 4).toString)
-      .load()
-      .withColumn("cents",
-        (col("body").cast(DecimalType(18, 2)) * 100).cast(IntegerType))
+    val q = g.stream("minMessagesPerTrigger" -> "10", "maxTriggerDelay" -> "1s",
+        "maxMessagesPerTrigger" -> math.max(15, rows.length / 4).toString)
+      .withColumn("cents", cents(col("body")))
       .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$scratch/ckpt")
+      .option("checkpointLocation", g.ckpt)
       .foreachBatch { (b: DataFrame, _: Long) =>
         val got = b.select(col("message_id"), col("cents")).collect()
           .map(r => (r.getString(0), r.getInt(1)))
@@ -2617,11 +1827,6 @@ object IngestQueries {
     emitted.asScala.toSeq.toDF("message_id", "cents")
   }
 
-  val amqpStreamMinrowsSql: String =
-    """SELECT CAST(event_id AS VARCHAR) AS message_id,
-      |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents
-      |FROM events WHERE event_id % 23 = 3""".stripMargin
-
   // ------------------------------------------------- amqp_shared_pattern
   /** PATTERN SUBSCRIPTION x SHARED GROUP — the two fleet features
     * composed: `addressPattern` DISCOVERS a fleet of queues (never named
@@ -2640,40 +1845,25 @@ object IngestQueries {
     * consumer (a listing, like file-source discovery); each discovered
     * address claims independently, so queues x consumers parallelize
     * with zero coordination beyond the broker's lease ledger. */
-  def amqpSharedPattern(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val ep = wireGateEndpoint
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val base = s"fleet${sharedGateRun.incrementAndGet()}"
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 7 === 5)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect()
+  val amqpSharedPattern: Gate = gate("amqp_shared_pattern",
+    """SELECT CAST(event_id AS VARCHAR) AS message_id, event_type,
+      |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents
+      |FROM events WHERE event_id % 7 = 5""".stripMargin, wire = true) { g =>
+    import g.s.implicits._
+    val base = s"fleet${g.run}"
+    val rows = g.slice(col("event_id") % 7 === 5)
     require(rows.length >= 12, "shared-pattern gate slice too small")
-    def msgs(pred: Long => Boolean) =
-      rows.toSeq.filter(r => pred(r.getLong(0))).map { r =>
-        (AmqpMessage(messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-      }
     // shards 0 and 1 exist before the consumers; shard 2 is pumped
     // mid-stream into a BRAND-NEW queue the pattern must then discover
-    pumpAll(client, s"$base-shard0", msgs(_ % 3 == 0))
-    pumpAll(client, s"$base-shard1", msgs(_ % 3 == 1))
-    val scratch = java.nio.file.Files.createTempDirectory("graft-shared-pattern-gate")
+    g.pump(msgs(rows, _ % 3 == 0), s"$base-shard0")
+    g.pump(msgs(rows, _ % 3 == 1), s"$base-shard1")
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, String, Int)]()
-    val perTrigger = math.max(10, rows.length / 12)
     def consumer(idx: Int) =
-      s.readStream.format("amqp")
-        .option("endpoint", ep)
-        .option("addressPattern", s"$base-*")
-        .option("sharedGroup", "fleet-workers")
-        .option("maxMessagesPerTrigger", perTrigger.toString)
-        .load()
-        .withColumn("cents",
-          (col("body").cast(DecimalType(18, 2)) * 100).cast(IntegerType))
+      g.stream("addressPattern" -> s"$base-*", "sharedGroup" -> "fleet-workers",
+          "maxMessagesPerTrigger" -> math.max(10, rows.length / 12).toString)
+        .withColumn("cents", cents(col("body")))
         .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$scratch/ckpt$idx")
+        .option("checkpointLocation", s"${g.dir}/ckpt$idx")
         .foreachBatch { (b: DataFrame, _: Long) =>
           b.select(col("message_id"), col("subject"), col("cents")).collect()
             .foreach(r => emitted.add((idx, r.getString(0), r.getString(1), r.getInt(2))))
@@ -2686,26 +1876,19 @@ object IngestQueries {
       q1.processAllAvailable(); q2.processAllAvailable()
       // the mid-stream queue: created (first message) while both
       // consumers run; the next trigger's discovery probe picks it up
-      pumpAll(client, s"$base-shard2", msgs(_ % 3 == 2))
+      g.pump(msgs(rows, _ % 3 == 2), s"$base-shard2")
       q1.processAllAvailable(); q2.processAllAvailable()
       q1.processAllAvailable(); q2.processAllAvailable()
     } finally { q1.stop(); q2.stop() }
     import scala.jdk.CollectionConverters._
     val got = emitted.asScala.toSeq
-    require(got.map(_._1).toSet == Set(1, 2),
-      s"work-sharing degenerated to one consumer: split " +
-        s"${got.groupBy(_._1).view.mapValues(_.size).toMap}")
+    requireBothWorked(got.map(_._1))
     val shard2 = rows.map(_.getLong(0)).filter(_ % 3 == 2).map(_.toString).toSet
     require(shard2.subsetOf(got.map(_._2).toSet),
       "the mid-stream queue's shard must join the shared subscription")
     got.map { case (_, id, et, c) => (id, et, c) }
       .toDF("message_id", "event_type", "cents")
   }
-
-  val amqpSharedPatternSql: String =
-    """SELECT CAST(event_id AS VARCHAR) AS message_id, event_type,
-      |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents
-      |FROM events WHERE event_id % 7 = 5""".stripMargin
 
   // -------------------------------------------------- amqp_shared_poison
   /** POISON-MESSAGE ceiling + DLQ under the oracle gate (JMS
@@ -2730,25 +1913,20 @@ object IngestQueries {
     * routing moves exactly the poison slice's rows. A crashing consumer
     * fleet converges instead of looping — redelivery cost is bounded by
     * maxDeliveries, never wall-clock. */
-  def amqpSharedPoison(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val ep = wireGateEndpoint
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val address = s"poison-${sharedGateRun.incrementAndGet()}"
+  val amqpSharedPoison: Gate = gate("amqp_shared_poison",
+    """WITH s AS (SELECT event_id, value FROM events WHERE event_id % 331 = 7),
+      |p AS (SELECT min(event_id) AS pid FROM s)
+      |SELECT CAST(event_id AS VARCHAR) AS message_id,
+      |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents,
+      |  CASE WHEN event_id = (SELECT pid FROM p) THEN 'dlq' ELSE 'ok' END AS lane
+      |FROM s""".stripMargin, wire = true) { g =>
+    import g.s.implicits._
+    val address = s"poison-${g.run}"
     val dlqAddr = s"$address-dlq"
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 331 === 7)
-      .select(col("event_id"), col("value"))
-      .orderBy(col("event_id"))
-      .collect()
+    val rows = g.slice(col("event_id") % 331 === 7, subject = lit(null), ordered = true)
     require(rows.length >= 2, "poison gate needs a poison row plus survivors")
     val poisonId = rows.head.getLong(0).toString // min event_id: pumped FIRST
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          body = AmqpValueBody(r.getDouble(1).toString)), r.getLong(0))
-      })
-    val scratch = java.nio.file.Files.createTempDirectory("graft-poison-gate")
+    g.pump(rows.map(msg), address)
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
     // Lease sizing (optimization round): the gate's correctness needs only
     // (a) the lease to OUTLIVE claim->read->crash inside one incarnation —
@@ -2761,18 +1939,12 @@ object IngestQueries {
     // incarnations' fixed wall-clock drops from 3x1.4s to 3x0.8s.
     val leaseMs = 500L
     def consume(run: Int, perTrigger: Long): Unit = {
-      val q = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address)
-        .option("sharedGroup", "poison-workers")
-        .option("sharedLeaseMillis", leaseMs.toString)
-        .option("sharedMaxDeliveries", "3")
-        .option("sharedDeadLetterAddress", dlqAddr)
-        .option("maxMessagesPerTrigger", perTrigger.toString)
-        .load()
-        .withColumn("cents",
-          (col("body").cast(DecimalType(18, 2)) * 100).cast(IntegerType))
+      val q = g.stream("address" -> address, "sharedGroup" -> "poison-workers",
+          "sharedLeaseMillis" -> leaseMs.toString, "sharedMaxDeliveries" -> "3",
+          "sharedDeadLetterAddress" -> dlqAddr, "maxMessagesPerTrigger" -> perTrigger.toString)
+        .withColumn("cents", cents(col("body")))
         .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$scratch/ckpt$run") // fresh owner
+        .option("checkpointLocation", s"${g.dir}/ckpt$run") // fresh owner
         .foreachBatch { (b: DataFrame, _: Long) =>
           val got = b.select(col("message_id"), col("cents")).collect()
             .map(r => (r.getString(0), r.getInt(1)))
@@ -2788,8 +1960,8 @@ object IngestQueries {
         if (run <= 3) {
           // crashing incarnations: the first trigger claims exactly the
           // poison row and dies; awaitTermination surfaces the crash
-          val died = intercept2(q.awaitTermination(120000))
-          require(died, s"run $run should have crashed on the poison message")
+          require(threw(q.awaitTermination(DrainTimeoutMs)),
+            s"run $run should have crashed on the poison message")
         } else {
           q.processAllAvailable()
         }
@@ -2802,12 +1974,8 @@ object IngestQueries {
     (1 to 3).foreach(consume(_, perTrigger = 1))
     consume(4, perTrigger = math.max(20L, rows.length / 5L))
     // DLQ readback over the same wire: exactly the poison row, annotated
-    val dlq = s.read.format("amqp")
-      .option("endpoint", ep).option("address", dlqAddr)
-      .load()
-      .select(col("message_id"),
-        (col("body").cast(DecimalType(18, 2)) * 100).cast(IntegerType).as("cents"),
-        col("message_annotations"))
+    val dlq = g.read("address" -> dlqAddr)
+      .select(col("message_id"), cents(col("body")).as("cents"), col("message_annotations"))
       .collect()
     require(dlq.length == 1 && dlq.head.getString(0) == poisonId,
       s"exactly the poison row must dead-letter: ${dlq.map(_.getString(0)).toSeq}")
@@ -2823,16 +1991,8 @@ object IngestQueries {
 
   /** True iff `body` threw (the crashed-incarnation assertion helper —
     * scalatest's intercept is not available in main). */
-  private def intercept2(body: => Any): Boolean =
+  private def threw(body: => Any): Boolean =
     try { body; false } catch { case _: Throwable => true }
-
-  val amqpSharedPoisonSql: String =
-    """WITH s AS (SELECT event_id, value FROM events WHERE event_id % 331 = 7),
-      |p AS (SELECT min(event_id) AS pid FROM s)
-      |SELECT CAST(event_id AS VARCHAR) AS message_id,
-      |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS INTEGER) AS cents,
-      |  CASE WHEN event_id = (SELECT pid FROM p) THEN 'dlq' ELSE 'ok' END AS lane
-      |FROM s""".stripMargin
 
   // ----------------------------------------------- amqp_stream_from_seq
   /** SEQUENCE-anchored stream start under the oracle gate (Kafka
@@ -2851,48 +2011,7 @@ object IngestQueries {
     * — no probe, no fetch of the skipped prefix (unlike the timestamp
     * anchor there is nothing to look up); the replay/ops shape for
     * "resume from the position that run X logged". */
-  def amqpStreamFromSeq(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 7 === 0)
-      .select(col("event_id"), col("value"))
-      .orderBy(col("event_id"))
-      .collect()
-    require(rows.length >= 6, "from-seq gate slice too small")
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          body = AmqpValueBody(r.getDouble(1).toString)), r.getLong(0))
-      })
-    val anchor = rows.length / 3 // exclusive: skip the first third
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-from-seq-gate").toString
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val q = s.readStream.format("amqp")
-      .option("endpoint", ep).option("address", address)
-      .option("startingSequence", anchor.toString)
-      .load()
-      .select(col("message_id"), col("body"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val got = b.collect().map(r => (r.getString(0), r.getString(1)))
-        emitted.synchronized { emitted ++= got }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(120000), "from-seq gate query hung")
-    finally q.stop()
-    import s.implicits._
-    emitted.toSeq.toDF("message_id", "body")
-      .agg(count(lit(1)).as("n_msgs"),
-        sum((col("body").cast(DecimalType(18, 2)) * 100).cast(LongType)).as("sum_cents"),
-        min(col("message_id").cast(LongType)).as("min_id"),
-        max(col("message_id").cast(LongType)).as("max_id"))
-  }
-
-  val amqpStreamFromSeqSql: String =
+  val amqpStreamFromSeq: Gate = gate("amqp_stream_from_seq",
     """WITH s AS (
       |  SELECT event_id, value,
       |    row_number() OVER (ORDER BY event_id) AS rn,
@@ -2902,7 +2021,17 @@ object IngestQueries {
       |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
       |    AS sum_cents,
       |  min(event_id) AS min_id, max(event_id) AS max_id
-      |FROM s WHERE rn > total // 3""".stripMargin
+      |FROM s WHERE rn > total // 3""".stripMargin) { g =>
+    import g.s.implicits._
+    val rows = g.slice(col("event_id") % 7 === 0, subject = lit(null), ordered = true)
+    require(rows.length >= 6, "from-seq gate slice too small")
+    g.pump(rows.map(msg))
+    val anchor = rows.length / 3 // exclusive: skip the first third
+    centsAgg(g.collect(g.stream("startingSequence" -> anchor.toString)
+        .select(col("message_id"), col("body")))
+      .map { case (_, r) => (r.getString(0), r.getString(1)) }
+      .toDF("message_id", "body").groupBy())
+  }
 
   // ----------------------------------------------- amqp_window_read
   /** BOUNDED WINDOW batch read (Kafka batch `startingOffsets` +
@@ -2917,33 +2046,7 @@ object IngestQueries {
     * Scale shape: window cost is the window's rows, independent of
     * backlog depth on either side; the audit/backfill read a message
     * fabric runs against its retention span. */
-  def amqpWindowRead(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 9 === 1)
-      .select(col("event_id"), col("value"))
-      .orderBy(col("event_id"))
-      .collect()
-    require(rows.length >= 6, "window-read gate slice too small")
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          body = AmqpValueBody(r.getDouble(1).toString)), r.getLong(0))
-      })
-    val k = rows.length / 3
-    s.read.format("amqp")
-      .option("endpoint", ep).option("address", address)
-      .option("startingSequence", k.toString) // exclusive
-      .option("endingSequence", (2 * k).toString) // inclusive
-      .load()
-      .agg(count(lit(1)).as("n_msgs"),
-        sum((col("body").cast(DecimalType(18, 2)) * 100).cast(LongType)).as("sum_cents"),
-        min(col("message_id").cast(LongType)).as("min_id"),
-        max(col("message_id").cast(LongType)).as("max_id"))
-  }
-
-  val amqpWindowReadSql: String =
+  val amqpWindowRead: Gate = gate("amqp_window_read",
     """WITH s AS (
       |  SELECT event_id, value,
       |    row_number() OVER (ORDER BY event_id) AS rn,
@@ -2953,7 +2056,16 @@ object IngestQueries {
       |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
       |    AS sum_cents,
       |  min(event_id) AS min_id, max(event_id) AS max_id
-      |FROM s WHERE rn > total // 3 AND rn <= 2 * (total // 3)""".stripMargin
+      |FROM s WHERE rn > total // 3 AND rn <= 2 * (total // 3)""".stripMargin) { g =>
+    val rows = g.slice(col("event_id") % 9 === 1, subject = lit(null), ordered = true)
+    require(rows.length >= 6, "window-read gate slice too small")
+    g.pump(rows.map(msg))
+    val k = rows.length / 3
+    centsAgg(g.read(
+      "startingSequence" -> k.toString,        // exclusive
+      "endingSequence" -> (2 * k).toString)    // inclusive
+      .groupBy())
+  }
 
   // ------------------------------------------------ amqp_shared_relay
   /** THE FLEET PIPELINE end to end: two shared-subscription workers
@@ -2974,70 +2086,42 @@ object IngestQueries {
     * + a transactional stage/commit per epoch; adding workers divides
     * the input with no coordination beyond the broker's lease ledger;
     * the output queue sees \|survivors\| messages exactly once. */
-  def amqpSharedRelay(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val ep = wireGateEndpoint
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val run = sharedGateRun.incrementAndGet()
-    val in = s"relay-in-$run"
-    val out = s"relay-out-$run"
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 11 === 2)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect()
-    require(rows.nonEmpty, "shared-relay gate slice is empty")
-    val scratch = java.nio.file.Files.createTempDirectory("graft-shared-relay")
-    val perTrigger = math.max(20, rows.length / 6)
-    def worker(idx: Int) =
-      s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", in)
-        .option("sharedGroup", "relay-workers")
-        .option("maxMessagesPerTrigger", perTrigger.toString)
-        .load()
-        .where(col("subject") =!= "error") // the scrub between queues
-        .select(col("message_id"), col("subject"), col("body"),
-          lit(s"w$idx").as("worker"))
-        .writeStream.format("amqp")
-        .option("endpoint", ep).option("address", out)
-        .option("propertyColumns", "worker")
-        .option("checkpointLocation", s"$scratch/ckpt$idx")
-        .outputMode("append")
-        .start()
-    pumpAll(client, in, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-      })
-    val w1 = worker(1)
-    val w2 = worker(2)
-    try {
-      w1.processAllAvailable(); w2.processAllAvailable()
-      w1.processAllAvailable(); w2.processAllAvailable()
-    } finally { w1.stop(); w2.stop(); JavaUtils.deleteRecursively(scratch.toFile) }
-    val relayed = s.read.format("amqp")
-      .option("endpoint", ep).option("address", out)
-      .option("propertyColumns", "worker")
-      .load()
-    val fleet = relayed.select(col("worker")).distinct()
-      .collect().map(_.getString(0)).toSet
-    require(fleet == Set("w1", "w2"),
-      s"relay fleet degenerated to one worker: $fleet")
-    relayed
-      .groupBy(col("subject").as("event_type"))
-      .agg(count(lit(1)).as("n_msgs"),
-        sum((col("body").cast(DecimalType(18, 2)) * 100).cast(LongType)).as("sum_cents"),
-        min(col("message_id").cast(LongType)).as("min_id"),
-        max(col("message_id").cast(LongType)).as("max_id"))
-  }
-
-  val amqpSharedRelaySql: String =
+  val amqpSharedRelay: Gate = gate("amqp_shared_relay",
     """SELECT event_type, CAST(count(*) AS BIGINT) AS n_msgs,
       |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
       |    AS sum_cents,
       |  min(event_id) AS min_id, max(event_id) AS max_id
       |FROM events
       |WHERE event_id % 11 = 2 AND event_type <> 'error'
-      |GROUP BY event_type""".stripMargin
+      |GROUP BY event_type""".stripMargin, wire = true) { g =>
+    val in = s"relay-in-${g.run}"
+    val out = s"relay-out-${g.run}"
+    val rows = g.slice(col("event_id") % 11 === 2)
+    require(rows.nonEmpty, "shared-relay gate slice is empty")
+    def worker(idx: Int) =
+      g.stream("address" -> in, "sharedGroup" -> "relay-workers",
+          "maxMessagesPerTrigger" -> math.max(20, rows.length / 6).toString)
+        .where(col("subject") =!= "error") // the scrub between queues
+        .select(col("message_id"), col("subject"), col("body"), lit(s"w$idx").as("worker"))
+        .writeStream.format("amqp")
+        .option("endpoint", g.ep).option("address", out)
+        .option("propertyColumns", "worker")
+        .option("checkpointLocation", s"${g.dir}/ckpt$idx")
+        .outputMode("append")
+        .start()
+    g.pump(rows.map(msg), in)
+    val w1 = worker(1)
+    val w2 = worker(2)
+    try {
+      w1.processAllAvailable(); w2.processAllAvailable()
+      w1.processAllAvailable(); w2.processAllAvailable()
+    } finally { w1.stop(); w2.stop() }
+    val relayed = g.read("address" -> out, "propertyColumns" -> "worker")
+    val fleet = relayed.select(col("worker")).distinct()
+      .collect().map(_.getString(0)).toSet
+    require(fleet == Set("w1", "w2"), s"relay fleet degenerated to one worker: $fleet")
+    centsAgg(relayed.groupBy(col("subject").as("event_type")))
+  }
 
   // -------------------------------------------------- amqp_shared_lag
   /** SHARE-GROUP lag report under the oracle gate — the
@@ -3056,36 +2140,7 @@ object IngestQueries {
     *
     * Scale shape: one ledger-snapshot RPC per address, driver-side —
     * rows independent of backlog depth; nothing is fetched. */
-  def amqpSharedLag(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val ep = wireGateEndpoint
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val address = s"lag-${sharedGateRun.incrementAndGet()}"
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 13 === 2)
-      .select(col("event_id")).collect().map(_.getLong(0))
-    require(rows.length >= 8, "shared-lag gate slice too small")
-    pumpAll(client, address, rows.toSeq.map(id =>
-      (AmqpMessage(messageId = Some(id.toString),
-        body = AmqpValueBody(id.toString)), id)))
-    val quarter = rows.length / 4
-    // worker A: leased, processed, settled
-    val a = client.claim(address, "workers", "worker-a", quarter, 600000L)
-    // worker B: leased, still processing (stays live)
-    client.claim(address, "workers", "worker-b", quarter, 600000L)
-    // worker C: leased, then DIES — a 1 ms lease lapses before the probe
-    client.claim(address, "workers", "worker-c", quarter, 1L)
-    client.settleClaims(address, "workers", a.map(_.claimId))
-    Thread.sleep(50) // C's lease is unambiguously past
-    graft.streaming.AmqpStreamOps
-      .sharedLagReport(s, ep, Seq(address), "workers")
-      // the per-run address is run-local; every hashed figure derives
-      // from the slice size ("group" is a reserved word — use col)
-      .select(col("group").as("grp"), col("head_seq"), col("dispatched_up_to"),
-        col("undispatched"), col("outstanding_claims"), col("outstanding_rows"),
-        col("redeliverable_rows"), col("remaining"))
-  }
-
-  val amqpSharedLagSql: String =
+  val amqpSharedLag: Gate = gate("amqp_shared_lag",
     """WITH n AS (
       |  SELECT count(*) AS c, count(*) // 4 AS q
       |  FROM events WHERE event_id % 13 = 2)
@@ -3097,7 +2152,27 @@ object IngestQueries {
       |  CAST(q AS BIGINT) AS outstanding_rows,
       |  CAST(q AS BIGINT) AS redeliverable_rows,
       |  CAST(c - q AS BIGINT) AS remaining
-      |FROM n""".stripMargin
+      |FROM n""".stripMargin, wire = true) { g =>
+    val address = s"lag-${g.run}"
+    val rows = g.slice(col("event_id") % 13 === 2, subject = lit(null), body = col("event_id"))
+    require(rows.length >= 8, "shared-lag gate slice too small")
+    g.pump(rows.map(msg), address)
+    val quarter = rows.length / 4
+    // worker A: leased, processed, settled
+    val a = g.client.claim(address, "workers", "worker-a", quarter, 600000L)
+    // worker B: leased, still processing (stays live)
+    g.client.claim(address, "workers", "worker-b", quarter, 600000L)
+    // worker C: leased, then DIES — a 1 ms lease lapses before the probe
+    g.client.claim(address, "workers", "worker-c", quarter, 1L)
+    g.client.settleClaims(address, "workers", a.map(_.claimId))
+    Thread.sleep(50) // C's lease is unambiguously past
+    AmqpStreamOps.sharedLagReport(g.s, g.ep, Seq(address), "workers")
+      // the per-run address is run-local; every hashed figure derives
+      // from the slice size ("group" is a reserved word — use col)
+      .select(col("group").as("grp"), col("head_seq"), col("dispatched_up_to"),
+        col("undispatched"), col("outstanding_claims"), col("outstanding_rows"),
+        col("redeliverable_rows"), col("remaining"))
+  }
 
   // ---------------------------------------------- amqp_stream_dedup_ttl
   /** STATE TTL under the oracle gate — the one `transformWithState`
@@ -3132,62 +2207,30 @@ object IngestQueries {
     * Scale shape: one boolean register per id seen within the TTL
     * window — the eviction-bounded state a forever-running dedup needs
     * (the watermark-bounded sibling is amqp_stream_dedup_wm). */
-  def amqpStreamDedupTtl(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    import s.implicits._
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val ids = Tables.events(s, d)
-      .filter(col("event_id") % 13 === 11)
-      .select(col("event_id")).collect().map(_.getLong(0))
-    require(ids.nonEmpty, "ttl-dedup gate slice is empty")
-    def msgsOf(round: Int): Seq[(AmqpMessage, Long)] = ids.toSeq.map { id =>
-      (AmqpMessage(messageId = Some(id.toString),
-        body = AmqpValueBody(s"r$round-$id")), id)
-    }
-    withRocksDb(s) {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-ttl-dedup-gate").toString
-      val emitted = scala.collection.mutable.ArrayBuffer.empty[String]
-      def drain(): Unit = {
-        val env = s.readStream.format("amqp")
-          .option("endpoint", ep).option("address", address).load()
-        val q = graft.streaming.AmqpStreamOps
-          .dedupByIdTtlTws(env, java.time.Duration.ofMillis(500))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[graft.streaming.AmqpStreamOps.TtlDedupEmit],
-             _: Long) =>
-              val got = b.collect().map(_.message_id)
-              emitted.synchronized { emitted ++= got }
-              ()
-          }
-          // Trigger.Once, NOT AvailableNow: ProcessingTime time mode
-          // keeps shouldRunAnotherBatch true (timers/TTL must be able
-          // to advance), so AvailableNow would re-trigger forever; Once
-          // runs exactly one batch per drain — each phase's backlog
-          // fits it (< default maxMessagesPerTrigger), and one
-          // handleInputRows call per id is the suppression determinism
-          // the gate doc promises.
-          .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-          .start()
-        try require(q.awaitTermination(120000), "ttl-dedup gate query hung")
-        finally q.stop()
-      }
-      pumpAll(client, address, msgsOf(1) ++ msgsOf(2)) // every id twice
-      drain() // phase 1: duplicate suppressed by the live register
-      Thread.sleep(1250) // phase 2: 2.5x the TTL — registers expire
-      pumpAll(client, address, msgsOf(3))
-      drain() // phase 3: restart; evicted registers re-admit every id
-      emitted.groupBy(identity)
-        .map { case (id, es) => (id, es.size.toLong) }
-        .toSeq.toDF("message_id", "emissions")
-    }
-  }
-
-  val amqpStreamDedupTtlSql: String =
+  val amqpStreamDedupTtl: Gate = gate("amqp_stream_dedup_ttl",
     """SELECT CAST(event_id AS VARCHAR) AS message_id,
       |  CAST(2 AS BIGINT) AS emissions
-      |FROM events WHERE event_id % 13 = 11""".stripMargin
+      |FROM events WHERE event_id % 13 = 11""".stripMargin, rocksDb = true) { g =>
+    import g.s.implicits._
+    val ids = g.slice(col("event_id") % 13 === 11).map(_.getLong(0))
+    require(ids.nonEmpty, "ttl-dedup gate slice is empty")
+    def round(k: Int) = ids.map(id => message(id.toString, null, s"r$k-$id", id))
+    // Trigger.Once, NOT AvailableNow: ProcessingTime time mode keeps
+    // shouldRunAnotherBatch true (timers/TTL must be able to advance),
+    // so AvailableNow would re-trigger forever; Once runs exactly one
+    // batch per drain — each phase's backlog fits it (< default
+    // maxMessagesPerTrigger), and one handleInputRows call per id is the
+    // suppression determinism the gate doc promises.
+    def drain(): Seq[String] = g.collect(AmqpStreamOps.dedupByIdTtlTws(g.stream(),
+      java.time.Duration.ofMillis(500)), trigger = Trigger.Once()).map(_._2.message_id)
+    g.pump(round(1) ++ round(2)) // every id twice
+    val phase1 = drain() // duplicate suppressed by the live register
+    Thread.sleep(1250) // phase 2: 2.5x the TTL — registers expire
+    g.pump(round(3))
+    (phase1 ++ drain()) // phase 3: restart; evicted registers re-admit every id
+      .groupBy(identity).map { case (id, es) => (id, es.size.toLong) }
+      .toSeq.toDF("message_id", "emissions")
+  }
 
   // ---------------------------------------------------------- amqp_browse
   /** BROWSE mode under the oracle gate: two independent streaming
@@ -3202,51 +2245,21 @@ object IngestQueries {
     * Scale shape: identical to the consuming path (browse only skips
     * the commit-time settle RPC); N browsers on one address cost the
     * broker one ledger, not N copies. */
-  def amqpBrowse(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    val rows = Tables.events(s, d)
-      .filter(col("event_id") % 9 === 4)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .collect() // producer role: driver-side by design (reference test senders)
-    pumpAll(client, address, rows.toSeq.map { r =>
-        (AmqpMessage(
-          messageId = Some(r.getLong(0).toString),
-          subject = Some(r.getString(1)),
-          body = AmqpValueBody(r.getDouble(2).toString)), r.getLong(0))
-      })
-    val scratch = java.nio.file.Files.createTempDirectory("graft-browse-gate")
-    def drainTo(run: Int): String = {
-      val outDir = s"$scratch/out$run"
-      val q = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address)
-        .option("browse", "true").load()
-        .select(col("subject"), col("body"))
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", s"$scratch/ckpt$run")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000), s"browse gate query $run hung")
-      finally q.stop()
-      outDir
-    }
-    val out1 = drainTo(1)
-    val out2 = drainTo(2) // fresh checkpoint: the backlog must still be there
-    s.read.parquet(out1).withColumn("run", lit(1))
-      .unionByName(s.read.parquet(out2).withColumn("run", lit(2)))
-      .select(col("run"), col("subject").as("event_type"),
-        col("body").cast(DoubleType).as("value"))
-      .groupBy(col("run"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-  }
-
-  val amqpBrowseSql: String =
+  val amqpBrowse: Gate = gate("amqp_browse",
     """SELECT r.run, event_type, count(*) AS n_events,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events CROSS JOIN (VALUES (1), (2)) AS r(run)
       |WHERE event_id % 9 = 4
-      |GROUP BY r.run, event_type""".stripMargin
+      |GROUP BY r.run, event_type""".stripMargin) { g =>
+    g.pump(g.slice(col("event_id") % 9 === 4).map(msg))
+    def drainTo(run: Int): DataFrame = g.s.read.parquet(g.toParquet(
+        g.stream("browse" -> "true").select(col("subject"), col("body")),
+        s"${g.dir}/out$run", s"${g.dir}/ckpt$run"))
+      .withColumn("run", lit(run))
+    val out1 = drainTo(1)
+    val out2 = drainTo(2) // fresh checkpoint: the backlog must still be there
+    messageAgg(out1.unionByName(out2), col("run"))
+  }
 
   // ------------------------------------------------- amqp_stream_cdc_merge
   /** STREAMING CDC INTO THE LAKEHOUSE: change events (U/D/I) arrive
@@ -3263,34 +2276,35 @@ object IngestQueries {
     * version resolution, update arithmetic, and delete/insert
     * membership all sit under the hash. Batch-boundary-invariant by
     * construction: each merge reads the RESOLVED current state of its
-    * touched years, so however AvailableNow splits a changeset the
-    * chain converges to the same table.
+    * touched years, so however a drain splits a changeset the chain
+    * converges to the same table.
     *
     * Scale shape: per micro-batch cost is the changeset size plus a
     * partition-pruned read+rewrite of the touched partitions — never
     * the table; version resolution is directory/manifest arithmetic on
     * the driver, bounded by |partitions|. This is the Delta/Iceberg
     * streaming-MERGE loop with directory-granularity manifests. */
-  def amqpStreamCdcMerge(s: SparkSession, d: String): DataFrame = gatedStream(s, d) {
-    val (ep, address) = gateTarget()
-    val client = AmqpEndpointRegistry.endpoint(ep)
-    // deterministic scratch (like FormatQueries.scratch): warm Bench /
-    // Verify runs and the spec's repeat runs reuse one dir instead of
-    // leaking a table-sized version chain per invocation
-    val scratch = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_cdc_merge_${d.replaceAll("[^A-Za-z0-9]", "_")}").toString
-    def rmTree(f: java.io.File): Unit = if (f.exists()) {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
-      require(f.delete(), s"could not clear prior cdc scratch $f")
-    }
-    rmTree(new java.io.File(scratch)) // prior chain + checkpoint must not bleed in
-
+  val amqpStreamCdcMerge: Gate = gate("amqp_stream_cdc_merge",
+    """WITH base AS (
+      |  SELECT o_orderkey, CAST(year(o_orderdate) AS INTEGER) AS yr,
+      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+      |  FROM orders),
+      |merged AS (
+      |  SELECT o_orderkey, yr,
+      |    CASE WHEN o_orderkey % 50 = 0 THEN cents + cents // 10 ELSE cents END AS cents
+      |  FROM base WHERE o_orderkey % 50 <> 1
+      |  UNION ALL
+      |  SELECT -o_orderkey, yr, cents FROM base WHERE o_orderkey % 50 = 2)
+      |SELECT yr, CAST(count(*) AS BIGINT) AS n_orders,
+      |  CAST(sum(cents) AS BIGINT) AS sum_cents
+      |FROM merged GROUP BY yr""".stripMargin) { g =>
+    val s = g.s
+    val scratch = g.dir
     // snapshot v1: orders keyed to integer cents, partitioned by year
-    val base = Tables.orders(s, d).select(
+    val base = Tables.orders(s, g.d).select(
         col("o_orderkey"),
         year(col("o_orderdate")).cast(IntegerType).as("yr"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast(LongType).as("cents"))
+        cents(col("o_totalprice"), LongType).as("cents"))
     // hash-cluster by the partition key before the partitioned write
     // (guide §6): parallel per-year encode, one file per partition
     base.repartition(col("yr"))
@@ -3332,60 +2346,45 @@ object IngestQueries {
           .otherwise(col("cents")).as("cents"))
       .collect() // producer role: driver-side by design (reference test senders)
     def pump(evenYears: Boolean): Unit =
-      pumpAll(client, address, cdc.toSeq
-        .filter(r => (r.getInt(2) % 2 == 0) == evenYears)
-        .map { r =>
-          (AmqpMessage(
-            messageId = Some(s"${r.getString(0)}:${r.getLong(1)}"),
-            subject = Some(r.getString(0)),
-            body = AmqpValueBody(s"${r.getLong(1)},${r.getInt(2)},${r.getLong(3)}")),
-            r.getLong(1))
-        })
+      g.pump(cdc.toSeq.filter(r => (r.getInt(2) % 2 == 0) == evenYears).map { r =>
+        message(s"${r.getString(0)}:${r.getLong(1)}", r.getString(0),
+          s"${r.getLong(1)},${r.getInt(2)},${r.getLong(3)}", r.getLong(1))
+      })
 
-    val ckpt = s"$scratch/ckpt"
-    def drain(): Unit = {
-      val reader = s.readStream.format("amqp")
-        .option("endpoint", ep).option("address", address)
-      // test hook: shrink micro-batches so one changeset splits across
-      // several merges — the spec proves the chain converges anyway
-      val q = sys.props.get("graft.cdc.maxPerTrigger")
-        .fold(reader)(n => reader.option("maxMessagesPerTrigger", n))
-        .load()
-        .select(col("subject").as("op"), split(col("body"), ",").as("f"))
-        .select(col("op"), col("f").getItem(0).cast(LongType).as("o_orderkey"),
-          col("f").getItem(1).cast(IntegerType).as("yr"),
-          col("f").getItem(2).cast(LongType).as("cents"))
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val ops = b.persist()
-          try {
-            val touched = ops.select("yr").distinct()
-              .collect().map(_.getInt(0)).sorted
-            if (touched.nonEmpty) {
-              // anti-join ALL changed keys (I included): inserts land as
-              // upserts, so a foreachBatch RETRY that re-applies a batch
-              // whose overlay already committed stays idempotent instead
-              // of double-inserting the I rows
-              val dead = ops.select("o_orderkey", "yr")
-              val upserts = ops.filter(col("op").isin("U", "I"))
-                .select("o_orderkey", "yr", "cents")
-              val v = nextVersion.incrementAndGet()
-              resolvedRead()
-                .filter(col("yr").isin(touched.map(Integer.valueOf): _*))
-                .join(dead, Seq("o_orderkey", "yr"), "left_anti")
-                .unionByName(upserts)
-                .write.mode("overwrite").partitionBy("yr")
-                .parquet(s"$scratch/v$v")
-            }
-          } finally ops.unpersist()
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try require(q.awaitTermination(120000), "cdc-merge gate query hung")
-      finally q.stop()
-    }
+    def drain(): Unit = g.drain(g.stream(
+        // test hook: shrink micro-batches so one changeset splits across
+        // several merges — the spec proves the chain converges anyway
+        sys.props.get("graft.cdc.maxPerTrigger").map("maxMessagesPerTrigger" -> _).toSeq: _*)
+      .select(col("subject").as("op"), split(col("body"), ",").as("f"))
+      .select(col("op"), col("f").getItem(0).cast(LongType).as("o_orderkey"),
+        col("f").getItem(1).cast(IntegerType).as("yr"),
+        col("f").getItem(2).cast(LongType).as("cents"))
+      .writeStream
+      .foreachBatch { (b: Dataset[Row], _: Long) =>
+        val ops = b.persist()
+        try {
+          val touched = ops.select("yr").distinct()
+            .collect().map(_.getInt(0)).sorted
+          if (touched.nonEmpty) {
+            // anti-join ALL changed keys (I included): inserts land as
+            // upserts, so a foreachBatch RETRY that re-applies a batch
+            // whose overlay already committed stays idempotent instead
+            // of double-inserting the I rows
+            val dead = ops.select("o_orderkey", "yr")
+            val upserts = ops.filter(col("op").isin("U", "I"))
+              .select("o_orderkey", "yr", "cents")
+            val v = nextVersion.incrementAndGet()
+            resolvedRead()
+              .filter(col("yr").isin(touched.map(Integer.valueOf): _*))
+              .join(dead, Seq("o_orderkey", "yr"), "left_anti")
+              .unionByName(upserts)
+              .write.mode("overwrite").partitionBy("yr")
+              .parquet(s"$scratch/v$v")
+          }
+        } finally ops.unpersist()
+        ()
+      }
+      .option("checkpointLocation", g.ckpt))
 
     pump(evenYears = true); drain()
     pump(evenYears = false); drain()
@@ -3399,110 +2398,19 @@ object IngestQueries {
       .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
   }
 
-  val amqpStreamCdcMergeSql: String =
-    """WITH base AS (
-      |  SELECT o_orderkey, CAST(year(o_orderdate) AS INTEGER) AS yr,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      |  FROM orders),
-      |merged AS (
-      |  SELECT o_orderkey, yr,
-      |    CASE WHEN o_orderkey % 50 = 0 THEN cents + cents // 10 ELSE cents END AS cents
-      |  FROM base WHERE o_orderkey % 50 <> 1
-      |  UNION ALL
-      |  SELECT -o_orderkey, yr, cents FROM base WHERE o_orderkey % 50 = 2)
-      |SELECT yr, CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(cents) AS BIGINT) AS sum_cents
-      |FROM merged GROUP BY yr""".stripMargin
+  private val gates: Seq[Gate] = Seq(
+    amqpIngestRoundtrip, amqpPatternMulti, amqpStreamRelay, amqpStreamPattern, amqpSqlTable,
+    amqpTtlExpiry, amqpDeadLetter, amqpRequestReply, amqpLagReport, amqpStreamTtl,
+    amqpStreamParquet, amqpStreamWindow, amqpStreamDedup, amqpStreamJoin, amqpStreamSession,
+    amqpStreamLate, amqpStreamDedupWm, amqpStreamState, amqpSinkRoundtrip, amqpStreamJoin2,
+    amqpStreamCorpus, amqpCountPushdown, amqpStreamFromTs, amqpStreamJoin2Outer,
+    amqpStreamJoin2Full, amqpFilterPushdown, amqpPropertyPushdown, amqpTypedProperty,
+    amqpStreamTws, amqpStreamLeaderboard, amqpStreamDistinct, amqpStreamTwsTimer,
+    amqpSharedConsumers, amqpSharedWire, amqpStreamMinrows, amqpSharedPattern, amqpSharedPoison,
+    amqpStreamFromSeq, amqpWindowRead, amqpSharedRelay, amqpSharedLag, amqpStreamDedupTtl,
+    amqpBrowse, amqpStreamCdcMerge)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "amqp_browse"           -> (amqpBrowse _),
-    "amqp_stream_cdc_merge" -> (amqpStreamCdcMerge _),
-    "amqp_property_pushdown" -> (amqpPropertyPushdown _),
-    "amqp_stream_tws"       -> (amqpStreamTws _),
-    "amqp_count_pushdown"   -> (amqpCountPushdown _),
-    "amqp_filter_pushdown"  -> (amqpFilterPushdown _),
-    "amqp_stream_from_ts"   -> (amqpStreamFromTs _),
-    "amqp_stream_parquet"   -> (amqpStreamParquet _),
-    "amqp_stream_corpus"    -> (amqpStreamCorpus _),
-    "amqp_stream_join2"     -> (amqpStreamJoin2 _),
-    "amqp_stream_join2_outer" -> (amqpStreamJoin2Outer _),
-    "amqp_stream_join2_full"  -> (amqpStreamJoin2Full _),
-    "amqp_sink_roundtrip"   -> (amqpSinkRoundtrip _),
-    "amqp_stream_state"     -> (amqpStreamState _),
-    "amqp_ingest_roundtrip" -> (amqpIngestRoundtrip _),
-    "amqp_sql_table"        -> (amqpSqlTable _),
-    "amqp_pattern_multi"    -> (amqpPatternMulti _),
-    "amqp_stream_pattern"   -> (amqpStreamPattern _),
-    "amqp_stream_relay"     -> (amqpStreamRelay _),
-    "amqp_ttl_expiry" -> (amqpTtlExpiry _),
-    "amqp_dead_letter" -> (amqpDeadLetter _),
-    "amqp_request_reply" -> (amqpRequestReply _),
-    "amqp_lag_report" -> (amqpLagReport _),
-    "amqp_stream_leaderboard" -> (amqpStreamLeaderboard _),
-    "amqp_stream_distinct" -> (amqpStreamDistinct _),
-    "amqp_stream_ttl" -> (amqpStreamTtl _),
-    "amqp_stream_window"    -> (amqpStreamWindow _),
-    "amqp_stream_dedup"     -> (amqpStreamDedup _),
-    "amqp_stream_dedup_wm"  -> (amqpStreamDedupWm _),
-    "amqp_stream_join"      -> (amqpStreamJoin _),
-    "amqp_stream_session"   -> (amqpStreamSession _),
-    "amqp_stream_tws_timer" -> (amqpStreamTwsTimer _),
-    "amqp_stream_dedup_ttl" -> (amqpStreamDedupTtl _),
-    "amqp_shared_consumers" -> (amqpSharedConsumers _),
-    "amqp_shared_wire"      -> (amqpSharedWire _),
-    "amqp_shared_poison"    -> (amqpSharedPoison _),
-    "amqp_shared_pattern"   -> (amqpSharedPattern _),
-    "amqp_stream_minrows"   -> (amqpStreamMinrows _),
-    "amqp_typed_property"   -> (amqpTypedProperty _),
-    "amqp_shared_lag"       -> (amqpSharedLag _),
-    "amqp_stream_from_seq"  -> (amqpStreamFromSeq _),
-    "amqp_window_read"      -> (amqpWindowRead _),
-    "amqp_shared_relay"     -> (amqpSharedRelay _),
-    "amqp_stream_late"      -> (amqpStreamLate _))
+  val queries: Map[String, (SparkSession, String) => DataFrame] = gates.map(g => g.name -> g).toMap
 
-  val oracleSql: Map[String, String] = Map(
-    "amqp_browse"           -> amqpBrowseSql,
-    "amqp_stream_cdc_merge" -> amqpStreamCdcMergeSql,
-    "amqp_property_pushdown" -> amqpPropertyPushdownSql,
-    "amqp_stream_tws"       -> amqpStreamTwsSql,
-    "amqp_count_pushdown"   -> amqpCountPushdownSql,
-    "amqp_filter_pushdown"  -> amqpFilterPushdownSql,
-    "amqp_stream_from_ts"   -> amqpStreamFromTsSql,
-    "amqp_stream_parquet"   -> amqpStreamParquetSql,
-    "amqp_stream_corpus"    -> amqpStreamCorpusSql,
-    "amqp_stream_join2"     -> amqpStreamJoin2Sql,
-    "amqp_stream_join2_outer" -> amqpStreamJoin2OuterSql,
-    "amqp_stream_join2_full"  -> amqpStreamJoin2FullSql,
-    "amqp_sink_roundtrip"   -> amqpSinkRoundtripSql,
-    "amqp_stream_state"     -> amqpStreamStateSql,
-    "amqp_ingest_roundtrip" -> amqpIngestRoundtripSql,
-    "amqp_sql_table"        -> amqpSqlTableSql,
-    "amqp_pattern_multi"    -> amqpPatternMultiSql,
-    "amqp_stream_pattern"   -> amqpStreamPatternSql,
-    "amqp_stream_relay"     -> amqpStreamRelaySql,
-    "amqp_ttl_expiry" -> amqpTtlExpirySql,
-    "amqp_dead_letter" -> amqpDeadLetterSql,
-    "amqp_request_reply" -> amqpRequestReplySql,
-    "amqp_lag_report" -> amqpLagReportSql,
-    "amqp_stream_leaderboard" -> amqpStreamLeaderboardSql,
-    "amqp_stream_distinct" -> amqpStreamDistinctSql,
-    "amqp_stream_ttl" -> amqpStreamTtlSql,
-    "amqp_stream_window"    -> amqpStreamWindowSql,
-    "amqp_stream_dedup"     -> amqpStreamDedupSql,
-    "amqp_stream_dedup_wm"  -> amqpStreamDedupWmSql,
-    "amqp_stream_join"      -> amqpStreamJoinSql,
-    "amqp_stream_session"   -> amqpStreamSessionSql,
-    "amqp_stream_tws_timer" -> amqpStreamTwsTimerSql,
-    "amqp_stream_dedup_ttl" -> amqpStreamDedupTtlSql,
-    "amqp_shared_consumers" -> amqpSharedConsumersSql,
-    "amqp_shared_wire"      -> amqpSharedWireSql,
-    "amqp_shared_poison"    -> amqpSharedPoisonSql,
-    "amqp_shared_pattern"   -> amqpSharedPatternSql,
-    "amqp_stream_minrows"   -> amqpStreamMinrowsSql,
-    "amqp_typed_property"   -> amqpTypedPropertySql,
-    "amqp_shared_lag"       -> amqpSharedLagSql,
-    "amqp_stream_from_seq"  -> amqpStreamFromSeqSql,
-    "amqp_window_read"      -> amqpWindowReadSql,
-    "amqp_shared_relay"     -> amqpSharedRelaySql,
-    "amqp_stream_late"      -> amqpStreamLateSql)
+  val oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracle).toMap
 }

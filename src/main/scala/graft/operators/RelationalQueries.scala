@@ -959,8 +959,6 @@ object RelationalQueries {
     * Scale shape: this is AQE doing at runtime what q24's salt does at
     * plan time — no code change as skew drifts; split granularity
     * follows advisoryPartitionSizeInBytes. */
-  private val q78Run = new java.util.concurrent.atomic.AtomicLong(0L)
-
   def q78AqeSkewJoin(s: SparkSession, d: String): DataFrame = {
     val confs = Seq(
       "spark.sql.adaptive.enabled" -> "true",
@@ -993,11 +991,10 @@ object RelationalQueries {
       // OptimizeSkewedJoin only matches Sort(ShuffleQueryStage) on both
       // sides, so the fused form can never split. Fresh scans on both
       // sides shuffle directly under their sorts.
-      // per-invocation scratch (pid + counter): a dataset-keyed fixed path
-      // would let a concurrent run (parallel spec + gate, or two bench
-      // JVMs) overwrite the dim parquet while this run's join scans it
-      val dimPath = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_q78_dim_${ProcessHandle.current().pid()}_${q78Run.incrementAndGet()}").toString
+      // per-invocation scratch: a dataset-keyed fixed path would let a
+      // concurrent run (parallel spec + gate) overwrite the dim parquet
+      // while this run's join scans it
+      val dimPath = s"${graft.Scratch.dir("q78_dim")}/dim"
       li.groupBy(col("k")).agg(count(lit(1)).as("dim_n"))
         .write.mode("overwrite").parquet(dimPath)
       val dim = s.read.parquet(dimPath)

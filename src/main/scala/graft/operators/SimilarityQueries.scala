@@ -44,22 +44,19 @@ object SimilarityQueries {
   private val NumCells = 16   // IVF centroids: vec_id < 16
   private val NumProbes = 3
 
-  private val scratchRun = new java.util.concurrent.atomic.AtomicLong(0L)
   /** Last allocated scratch dir per tag — spec observability: the
     * per-invocation scheme removed the predictable path the index-layout
     * specs inspect, so the layout assertions read the path of the run
     * they just invoked from here (same-thread, same-suite reads). */
   private[operators] val lastScratchDir =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Per-INVOCATION scratch directory for persisted-index side effects.
-    * A path keyed only by the dataset dir lets two concurrent runs over
-    * the same dataset (a parallel spec + gate in one JVM, or two bench
-    * JVMs) overwrite the layout while the other's scan reads it — the
-    * pid keys across JVMs, the counter within one. Directories are
-    * test/bench scratch: tmpdir-lifecycle, a few MB each at gate SF. */
+  /** Per-INVOCATION path for persisted-index side effects, inside a fresh
+    * [[graft.Scratch]] directory (siblings such as `<path>_tombstones`
+    * land there too). A path keyed only by the dataset dir would let two
+    * concurrent runs over the same dataset (a parallel spec + gate in
+    * one JVM) overwrite the layout while the other's scan reads it. */
   private def scratchDir(tag: String): String = {
-    val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_${ProcessHandle.current().pid()}_${scratchRun.incrementAndGet()}").toString
+    val p = s"${graft.Scratch.dir(tag)}/$tag"
     lastScratchDir.put(tag, p)
     p
   }

@@ -255,12 +255,12 @@ object AmqpSourceConfig {
     val primary = o.getOrDefault("address", "my_address")
     val rawEndpoint = o.getOrDefault("endpoint",
       s"mem://${o.getOrDefault("host", "localhost")}:${o.getOrDefault("port", "5672")}")
+    AmqpEndpointRegistry.requireKnownScheme(rawEndpoint)
     // SASL-PLAIN parity: username/password options fold into the socket
     // URI so every executor-side connection authenticates (reference:
     // PLAIN when credentials present, ANONYMOUS otherwise).
     val user = Option(o.get("username"))
-    val socketScheme = Seq("amqp10://", "amqps://").find(rawEndpoint.startsWith)
-    val endpoint = socketScheme match {
+    val endpoint = AmqpEndpointRegistry.socketScheme(rawEndpoint) match {
       case Some(scheme) if user.isDefined && !rawEndpoint.contains("@") =>
         s"$scheme${user.get}:${Option(o.get("password")).getOrElse("")}@${rawEndpoint.stripPrefix(scheme)}"
       case _ => rawEndpoint

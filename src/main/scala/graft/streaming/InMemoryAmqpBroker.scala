@@ -763,12 +763,23 @@ object AmqpEndpointRegistry {
     if (isSocket(endpoint)) clients.computeIfAbsent(endpoint, _ => newClient(endpoint))
     else memBroker(endpoint)
 
-  private def isSocket(endpoint: String): Boolean =
-    endpoint.startsWith("amqp10://") || endpoint.startsWith("amqps://")
+  /** The socket scheme prefix (`amqp10://` or `amqps://`) `endpoint`
+    * starts with, if any. */
+  def socketScheme(endpoint: String): Option[String] = SocketSchemes.find(endpoint.startsWith)
+
+  private val SocketSchemes = Seq("amqp10://", "amqps://")
+
+  private def isSocket(endpoint: String): Boolean = socketScheme(endpoint).isDefined
+
+  /** Refuses (IllegalArgumentException) an endpoint whose scheme no
+    * transport serves; the source/sink config calls this at `load()` /
+    * `start()`, so a bad endpoint fails there, not in the stream thread. */
+  def requireKnownScheme(endpoint: String): Unit =
+    require(endpoint.startsWith("mem://") || isSocket(endpoint),
+      s"unsupported endpoint '$endpoint' — accepted schemes: mem://, amqp10://, amqps://")
 
   private def memBroker(endpoint: String): InMemoryAmqpBroker = {
-    require(endpoint.startsWith("mem://"),
-      s"unsupported endpoint '$endpoint' — accepted schemes: mem://, amqp10://, amqps://")
+    requireKnownScheme(endpoint)
     broker(endpoint)
   }
 

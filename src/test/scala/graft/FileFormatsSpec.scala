@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -21,7 +19,7 @@ class FileFormatsSpec extends SparkSpecBase {
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
     val want = checksum(src)
 
-    val dir = Files.createTempDirectory("graft-fmt").toString
+    val dir = Scratch.dir("graft-fmt").toString
     src.write.mode("overwrite").option("header", "true").csv(s"$dir/csv")
     src.write.mode("overwrite").json(s"$dir/json")
 

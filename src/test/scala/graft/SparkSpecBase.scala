@@ -20,7 +20,7 @@ object SparkSpecBase {
       .config("spark.sql.icu.caseMappings.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+        Scratch.dir("warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Storage-layout strategies for the 100 TB deployment, demonstrated at
@@ -51,7 +49,7 @@ class StorageLayoutSpec extends SparkSpecBase {
   }
 
   test("partitioned layout prunes the scan to the asked-for slice") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = Scratch.dir("graft-part").toString
     Tables.orders(spark, sfDir)
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year")

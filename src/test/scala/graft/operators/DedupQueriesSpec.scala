@@ -207,7 +207,7 @@ class DedupQueriesSpec extends SparkSpecBase {
       (20L, "intra batch twin payload a b c d e f g h i j k l m n o p")   // new_vs_new
     ).map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup").toString
+    val dir = graft.Scratch.dir("graft_incdedup").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = DedupQueries.dedupIncremental(spark, dir)
       .as[(String, Long)].collect().toMap
@@ -494,7 +494,7 @@ class DedupQueriesSpec extends SparkSpecBase {
       (3L, "unrelated words that never overlap with anything else at all")
     ).map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_containment").toString
+    val dir = graft.Scratch.dir("graft_containment").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = DedupQueries.dedupContainment(spark, dir)
       .as[(Long, Long, Long, Long, Double, Int)].collect()

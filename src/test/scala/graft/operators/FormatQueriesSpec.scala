@@ -265,7 +265,7 @@ class FormatQueriesSpec extends SparkSpecBase {
     val grid = FormatQueries.zorderGrid(s2, sfDir)
       .select(col("gx"), col("gy"),
         ZOrder.interleave(col("gx"), col("gy"), 10).as("z"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zskip").toString
+    val tmp = graft.Scratch.dir("graft_zskip").toString
     grid.repartitionByRange(16, col("z")).sortWithinPartitions(col("z"))
       .write.mode("overwrite").parquet(s"$tmp/byz")
     grid.repartitionByRange(16, col("gx")).sortWithinPartitions(col("gx"))
@@ -298,7 +298,7 @@ class FormatQueriesSpec extends SparkSpecBase {
     val grid = FormatQueries.zorderGrid(spark, sfDir)
       .select(col("gx"), col("gy"),
         ZOrder.interleave(col("gx"), col("gy"), 10).as("z"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val tmp = graft.Scratch.dir("graft_zorder").toString
     // 16 range partitions fix the top 4 z bits — two per dimension —
     // so every z file's box spans at most 256 grid cells per axis,
     // while each single-column layout leaves the other axis unclustered
@@ -538,7 +538,7 @@ class FormatQueriesSpec extends SparkSpecBase {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     // linear join graph orders–customer–nation, written big-table-first;
     // CBO's reorder should start from the cheap customer⋈nation pair
-    val scr = java.nio.file.Files.createTempDirectory("graft-cbo-reorder").toString
+    val scr = graft.Scratch.dir("graft-cbo-reorder").toString
     def mk(name: String, df: org.apache.spark.sql.DataFrame, statCols: String): String = {
       val tbl = s"graft_cbo_$name"
       spark.sql(s"DROP TABLE IF EXISTS $tbl")

@@ -60,6 +60,16 @@ class IngestQueriesSpec extends SparkSpecBase {
     assert(got.nonEmpty)
   }
 
+  test("a checkpointing gate adds nothing to the temp dir outside the scratch root") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def entries(): Set[String] = Option(tmp.list()).toSeq.flatten.toSet
+    spark.range(1).count() // session up before the first listing
+    val before = entries()
+    assert(IngestQueries.amqpStreamParquet(spark, sfDir).count() > 0)
+    val added = entries() -- before - s"graft-scratch-${ProcessHandle.current().pid()}"
+    assert(added.isEmpty, s"gate left entries in $tmp: $added")
+  }
+
   test("shared-relay gate: the output queue equals the scrubbed slice exactly once") {
     import spark.implicits._
     // two shared-subscription workers relay the slice over amqp10://

@@ -130,7 +130,7 @@ class TextQueriesSpec extends SparkSpecBase {
 
   test("txt_bpe_train: a corpus that runs out of adjacent pairs ends training early") {
     def train(texts: String*): Seq[(Long, String, String, Long)] = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+      val dir = graft.Scratch.dir("graft_bpe").toString
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "src0", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -313,7 +313,7 @@ class TextQueriesSpec extends SparkSpecBase {
       (78L, "another singleton document with its own unique run of words")
     ).map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_clsplit").toString
+    val dir = graft.Scratch.dir("graft_clsplit").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = TextQueries.splitClusterHash(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),

@@ -493,15 +493,22 @@ class Amqp10Spec extends SparkSpecBase {
         val e = intercept[IllegalArgumentException](lookup(ep))
         assert(e.getMessage.contains("mem://, amqp10://, amqps://"), e.getMessage)
       }
-      val e = intercept[Exception] {
-        val q = spark.readStream.format("amqp")
-          .option("endpoint", ep).option("address", "a").load()
-          .writeStream.format("memory").queryName("unknown_scheme").start()
-        try q.processAllAvailable() finally q.stop()
+      // the source and the sink refuse at load()/save()/start(), on the
+      // caller's thread, before any stream thread exists
+      val refusals = Seq[() => Any](
+        () => spark.readStream.format("amqp").option("endpoint", ep).option("address", "a").load(),
+        () => spark.read.format("amqp").option("endpoint", ep).option("address", "a").load(),
+        () => spark.range(1).selectExpr("CAST(id AS STRING) AS body")
+          .write.format("amqp").option("endpoint", ep).option("address", "a")
+          .mode("append").save(),
+        () => spark.readStream.format("rate").load().selectExpr("CAST(value AS STRING) AS body")
+          .writeStream.format("amqp").option("endpoint", ep).option("address", "a")
+          .option("checkpointLocation", graft.Scratch.dir("unknown-scheme").toString)
+          .start())
+      for (refused <- refusals) {
+        val e = intercept[IllegalArgumentException](refused())
+        assert(e.getMessage.contains(s"unsupported endpoint '$ep'"), e.getMessage)
       }
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => t.isInstanceOf[IllegalArgumentException] &&
-          t.getMessage.contains(s"unsupported endpoint '$ep'")), e.toString)
     }
   }
 

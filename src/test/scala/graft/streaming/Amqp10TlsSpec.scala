@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import scala.concurrent.duration._
 
@@ -36,7 +36,7 @@ class Amqp10TlsSpec extends SparkSpecBase {
   }
 
   override def beforeAll(): Unit = {
-    dir = Files.createTempDirectory("graft-tls")
+    dir = graft.Scratch.dir("graft-tls")
     keystore = s"$dir/server.p12"
     truststore = s"$dir/trust.p12"
     val cert = s"$dir/server.cer"

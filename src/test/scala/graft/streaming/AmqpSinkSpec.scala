@@ -183,7 +183,7 @@ class AmqpSinkSpec extends SparkSpecBase {
     val (epOut, brokerOut) = freshEndpoint("s-out")
     (1 to 5).foreach(i =>
       brokerIn.send("my_address", AmqpMessage(body = AmqpValueBody(s"m-$i"))))
-    val ckpt = java.nio.file.Files.createTempDirectory("amqp-sink-ckpt").toString
+    val ckpt = graft.Scratch.dir("amqp-sink-ckpt").toString
     val q = spark.readStream.format("amqp")
       .option("endpoint", epIn).option("address", "my_address").load()
       .writeStream.format("amqp")
@@ -228,7 +228,7 @@ class AmqpSinkSpec extends SparkSpecBase {
       brokerIn.send("my_address",
         AmqpMessage(body = AmqpValueBody(t.toString)),
         timestampMicros = base + at * 1000000L)
-    val ckpt = java.nio.file.Files.createTempDirectory("amqp-topo-ckpt").toString
+    val ckpt = graft.Scratch.dir("amqp-topo-ckpt").toString
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.IntegerType
     val q = spark.readStream.format("amqp")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import scala.concurrent.duration._
 
 import org.scalatest.concurrent.Eventually.{eventually, interval, timeout}
@@ -342,8 +340,8 @@ class AmqpSourceSpec extends SparkSpecBase {
 
   test("offsets checkpoint across restarts; no duplicates of the settled prefix") {
     val (ep, broker) = freshEndpoint("restart")
-    val ckpt = Files.createTempDirectory("amqp-ckpt").toString
-    val out = Files.createTempDirectory("amqp-out").toString
+    val ckpt = graft.Scratch.dir("amqp-ckpt").toString
+    val out = graft.Scratch.dir("amqp-out").toString
     def run(): Unit = {
       val q = stream(ep).select(AmqpConverters.amqpBody.as("b"))
         .writeStream.format("parquet")
@@ -366,8 +364,8 @@ class AmqpSourceSpec extends SparkSpecBase {
 
   test("failOnDataLoss: a restart below the settlement prefix fails loudly; =false skips the gap") {
     val (ep, broker) = freshEndpoint("dataloss")
-    val ckpt = Files.createTempDirectory("amqp-loss-ckpt").toString
-    val out = Files.createTempDirectory("amqp-loss-out").toString
+    val ckpt = graft.Scratch.dir("amqp-loss-ckpt").toString
+    val out = graft.Scratch.dir("amqp-loss-out").toString
     def run(extra: Map[String, String]): Unit = {
       var rdr = spark.readStream.format("amqp")
         .option("endpoint", ep).option("address", "my_address")
@@ -403,8 +401,8 @@ class AmqpSourceSpec extends SparkSpecBase {
     // address must NOT trip the check — Kafka parity: a new consumer
     // resolves its start to the actual log start (the replayable
     // prefix), never to positions that predate it
-    val ckpt2 = Files.createTempDirectory("amqp-loss-ckpt2").toString
-    val out2 = Files.createTempDirectory("amqp-loss-out2").toString
+    val ckpt2 = graft.Scratch.dir("amqp-loss-ckpt2").toString
+    val out2 = graft.Scratch.dir("amqp-loss-out2").toString
     val q2 = spark.readStream.format("amqp")
       .option("endpoint", ep).option("address", "my_address").load()
       .select(AmqpConverters.amqpBody.as("b"))
@@ -421,8 +419,8 @@ class AmqpSourceSpec extends SparkSpecBase {
     val (ep, broker) = freshEndpoint("from-seq")
     (1 to 10).foreach(i =>
       broker.send("my_address", AmqpMessage(body = AmqpValueBody(s"a$i"))))
-    val out = Files.createTempDirectory("from-seq-out").toString
-    val ckpt = Files.createTempDirectory("from-seq-ckpt").toString
+    val out = graft.Scratch.dir("from-seq-out").toString
+    val ckpt = graft.Scratch.dir("from-seq-ckpt").toString
     def run(extra: Map[String, String]): Unit = {
       var rdr = spark.readStream.format("amqp")
         .option("endpoint", ep).option("address", "my_address")
@@ -451,8 +449,8 @@ class AmqpSourceSpec extends SparkSpecBase {
     broker.settle("my_address", 8)
     val floor = broker.settledUpTo("my_address")
     assert(floor > 4 && floor <= 12, s"scenario needs floor above the anchor: $floor")
-    val ckpt2 = Files.createTempDirectory("from-seq-ckpt2").toString
-    val out2 = Files.createTempDirectory("from-seq-out2").toString
+    val ckpt2 = graft.Scratch.dir("from-seq-ckpt2").toString
+    val out2 = graft.Scratch.dir("from-seq-out2").toString
     def freshRun(fail: String): Unit = {
       val q = spark.readStream.format("amqp")
         .option("endpoint", ep).option("address", "my_address")
@@ -506,8 +504,8 @@ class AmqpSourceSpec extends SparkSpecBase {
     // prefix silently (the move-mode sibling test above asserts the
     // throw for the same shape).
     val (ep, broker) = freshEndpoint("browse-lag")
-    val ckpt = Files.createTempDirectory("amqp-browse-lag-ckpt").toString
-    val out = Files.createTempDirectory("amqp-browse-lag-out").toString
+    val ckpt = graft.Scratch.dir("amqp-browse-lag-ckpt").toString
+    val out = graft.Scratch.dir("amqp-browse-lag-out").toString
     def run(): Unit = {
       val q = spark.readStream.format("amqp")
         .option("endpoint", ep).option("address", "my_address")
@@ -543,8 +541,8 @@ class AmqpSourceSpec extends SparkSpecBase {
     // watermark-advancing nudge, and asserts the finalized window max
     // combines values from BOTH sides of the restart.
     val (ep, broker) = freshEndpoint("restart-state")
-    val ckpt = Files.createTempDirectory("amqp-state-ckpt").toString
-    val out = Files.createTempDirectory("amqp-state-out").toString
+    val ckpt = graft.Scratch.dir("amqp-state-ckpt").toString
+    val out = graft.Scratch.dir("amqp-state-out").toString
     val base = 1000L * 1000000L // t=1000s
     def send(temp: Int, atSec: Long): Unit =
       broker.send("my_address",
@@ -1400,8 +1398,8 @@ class AmqpSourceSpec extends SparkSpecBase {
     (1 to 12).foreach(i =>
       broker.send("my_address", AmqpMessage(messageId = Some(i.toString),
         body = AmqpValueBody(s"m$i"))))
-    val ckpt = Files.createTempDirectory("amqp-browse-ckpt").toString
-    val out = Files.createTempDirectory("amqp-browse-out").toString
+    val ckpt = graft.Scratch.dir("amqp-browse-ckpt").toString
+    val out = graft.Scratch.dir("amqp-browse-out").toString
     def drain(): Unit = {
       val q = spark.readStream.format("amqp")
         .option("endpoint", ep).option("address", "my_address")
@@ -1427,8 +1425,8 @@ class AmqpSourceSpec extends SparkSpecBase {
     // the SAME query (checkpoint) saw no duplicates
     assert(spark.read.parquet(out).count() == 13)
     // an INDEPENDENT query (fresh checkpoint) re-reads the full backlog
-    val out2 = Files.createTempDirectory("amqp-browse-out2").toString
-    val ckpt2 = Files.createTempDirectory("amqp-browse-ckpt2").toString
+    val out2 = graft.Scratch.dir("amqp-browse-out2").toString
+    val ckpt2 = graft.Scratch.dir("amqp-browse-ckpt2").toString
     val q2 = spark.readStream.format("amqp")
       .option("endpoint", ep).option("address", "my_address")
       .option("browse", "true").load()
@@ -1441,8 +1439,8 @@ class AmqpSourceSpec extends SparkSpecBase {
       == (1 to 13).toSeq,
       "a fresh browsing query must see the entire unsettled backlog")
     // control: the default "move" link settles the prefix on commit
-    val ckpt3 = Files.createTempDirectory("amqp-move-ckpt").toString
-    val out3 = Files.createTempDirectory("amqp-move-out").toString
+    val ckpt3 = graft.Scratch.dir("amqp-move-ckpt").toString
+    val out3 = graft.Scratch.dir("amqp-move-out").toString
     def consume(): Unit = {
       val q = stream(ep).select(col("message_id"))
         .writeStream.format("parquet")

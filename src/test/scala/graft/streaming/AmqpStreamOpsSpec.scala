@@ -27,7 +27,7 @@ class AmqpStreamOpsSpec extends SparkSpecBase {
 
   test("lagReport: lag tracks the backlog, returns to zero after catch-up, refuses a virgin checkpoint") {
     val (ep, broker) = freshEndpoint("lag")
-    val ckpt = java.nio.file.Files.createTempDirectory("ops-lag-ckpt").toString
+    val ckpt = graft.Scratch.dir("ops-lag-ckpt").toString
     // a checkpoint with no committed batch is a refusal, not a zero row
     intercept[IllegalArgumentException] {
       AmqpStreamOps.lagReport(spark, ep, ckpt)
@@ -154,7 +154,7 @@ class AmqpStreamOpsSpec extends SparkSpecBase {
     // Structured Streaming mapping is foreachBatch, with the batchId as
     // the idempotence key (overwrite-by-epoch = exactly-once on retry).
     val (ep, broker) = freshEndpoint("feb")
-    val out = java.nio.file.Files.createTempDirectory("graft-feb").toString
+    val out = graft.Scratch.dir("graft-feb").toString
     (1 to 8).foreach(i => broker.send("my_address",
       AmqpMessage(body = AmqpValueBody(s"m-$i")), timestampMicros = i * 1000000L))
     val q = stream(ep).selectExpr("CAST(body AS STRING) AS body")
@@ -163,7 +163,7 @@ class AmqpStreamOpsSpec extends SparkSpecBase {
         batch.write.mode("overwrite").parquet(s"$out/epoch=$id")
       }
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-feb-ck").toString)
+        graft.Scratch.dir("graft-feb-ck").toString)
       .start()
     try {
       q.processAllAvailable()

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpecBase
 
 /** Shared subscription (competing consumers): the claim-lease dispatch
@@ -185,7 +183,7 @@ class SharedSubscriptionSpec extends SparkSpecBase {
 
   test("two concurrent consuming streams work-share one address exactly once") {
     val (ep, broker) = freshBroker("shared-e2e")
-    val dir = Files.createTempDirectory("shared-e2e")
+    val dir = graft.Scratch.dir("shared-e2e")
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
     def consumer(idx: Int) = {
       spark.readStream.format("amqp")
@@ -244,7 +242,7 @@ class SharedSubscriptionSpec extends SparkSpecBase {
 
   test("a consumer's death hands its backlog to the group; the survivor finishes the queue") {
     val (ep, broker) = freshBroker("shared-death")
-    val dir = Files.createTempDirectory("shared-death")
+    val dir = graft.Scratch.dir("shared-death")
     pump(broker, "jobs", 60)
     // consumer A claims a slice directly (standing in for a query that
     // died between claiming and processing — deterministic, where
@@ -349,7 +347,7 @@ class SharedSubscriptionSpec extends SparkSpecBase {
   test("sharedGroup refuses Trigger.AvailableNow with a targeted error") {
     val (ep, broker) = freshBroker("shared-avnow")
     pump(broker, "jobs", 10)
-    val dir = Files.createTempDirectory("shared-avnow")
+    val dir = graft.Scratch.dir("shared-avnow")
     val q = spark.readStream.format("amqp")
       .option("endpoint", ep).option("address", "jobs")
       .option("sharedGroup", "workers")
@@ -389,7 +387,7 @@ class SharedSubscriptionSpec extends SparkSpecBase {
 
   test("addressPattern composes with sharedGroup: discovery feeds the work-sharing claims") {
     val (ep, broker) = freshBroker("shared-pattern")
-    val dir = Files.createTempDirectory("shared-pattern")
+    val dir = graft.Scratch.dir("shared-pattern")
     // two queues exist up front; a third is created MID-STREAM
     (1 to 20).foreach(i => assert(broker.send("fleet-a",
       AmqpMessage(messageId = Some(s"a$i"), body = AmqpValueBody(s"$i"))) > 0))

@@ -71,7 +71,7 @@ class TtlStateSpec extends SparkSpecBase {
 
   test("TTL'd register suppresses across micro-batches within the window, evicts and re-admits after it") {
     val (ep, broker) = freshEndpoint("ttl-dedup")
-    val ckpt = Files.createTempDirectory("ttl-dedup-ckpt").toString
+    val ckpt = graft.Scratch.dir("ttl-dedup-ckpt").toString
     val emitted = scala.collection.mutable.ArrayBuffer.empty[String]
     withRocksDbChangelog {
       // batch 1: ids a,b admitted
@@ -91,7 +91,7 @@ class TtlStateSpec extends SparkSpecBase {
     }
     // eviction: a SHORT-TTL register lapses, the id re-admits
     val (ep2, broker2) = freshEndpoint("ttl-dedup-evict")
-    val ckpt2 = Files.createTempDirectory("ttl-dedup-evict-ckpt").toString
+    val ckpt2 = graft.Scratch.dir("ttl-dedup-evict-ckpt").toString
     val emitted2 = scala.collection.mutable.ArrayBuffer.empty[String]
     withRocksDbChangelog {
       broker2.send("my_address", AmqpMessage(messageId = Some("x"), body = AmqpValueBody("1")))
@@ -107,7 +107,7 @@ class TtlStateSpec extends SparkSpecBase {
 
   test("changelog checkpointing writes .changelog files into the checkpoint state dir") {
     val (ep, broker) = freshEndpoint("ttl-changelog")
-    val ckpt = Files.createTempDirectory("ttl-changelog-ckpt").toString
+    val ckpt = graft.Scratch.dir("ttl-changelog-ckpt").toString
     val emitted = scala.collection.mutable.ArrayBuffer.empty[String]
     withRocksDbChangelog {
       (1 to 5).foreach(i => broker.send("my_address",
