@@ -68,8 +68,7 @@ object AmqpTemperature {
       .orderBy("window")
       .writeStream.format("console")
       .outputMode("complete")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("amqp-temp-ck").toString)
+      .option("checkpointLocation", graft.Scratch.dir("amqp-temp-ck").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination(60000)

@@ -377,16 +377,18 @@ class InMemoryAmqpBroker extends AmqpEndpoint {
 
   /** Settle (accept + forget) all deliveries with seq <= upTo; frees the
     * unsettled window for senders. Kept messages with seq > upTo remain
-    * replayable — the redelivery contract that replaces the WAL. */
+    * replayable — the redelivery contract that replaces the WAL. The
+    * buffer is seq-ascending (every append takes `nextSeq` under the
+    * address lock), so the settled deliveries are a prefix, dropped in
+    * place. */
   def settle(address: String, upTo: Long): Unit = {
     val q = addr(address)
     q.lock.lock()
     try {
       if (upTo > q.settledUpTo) {
         q.settledUpTo = upTo
-        val keep = q.messages.filter { case (s, _, _) => s > upTo }
-        q.messages.clear()
-        q.messages ++= keep
+        val kept = q.messages.indexWhere(_._1 > upTo)
+        q.messages.remove(0, if (kept < 0) q.messages.length else kept)
       }
     } finally q.lock.unlock()
   }
