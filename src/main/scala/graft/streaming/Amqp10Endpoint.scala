@@ -29,6 +29,9 @@ class Amqp10Endpoint(host: String, port: Int,
     tls: Option[javax.net.ssl.SSLContext] = None)
     extends AmqpEndpoint with AutoCloseable {
 
+  /** Most transfers a [[pipelined]] chunk puts in flight. */
+  private val PipelineDepth = 500
+
   private var sock: Socket = _
   private var in: DataInputStream = _
   private var out: BufferedOutputStream = _
@@ -232,11 +235,10 @@ class Amqp10Endpoint(host: String, port: Int,
   }
 
   /** Write one transfer's frames (chunked to the negotiated frame size)
-    * WITHOUT waiting for its disposition; returns the delivery-id.
-    * Single-transfer callers flush via transfer(); the pipelined batch
-    * paths flush once per batch before draining. */
+    * WITHOUT waiting for its disposition: [[pipelined]] flushes once per
+    * chunk before draining. */
   private def transferFrames(handle: Long, txnId: Option[String])(
-      payload: Writer => Unit): Long = {
+      payload: Writer => Unit): Unit = {
     val did = nextDeliveryId
     nextDeliveryId += 1
     val state = txnId
@@ -247,17 +249,52 @@ class Amqp10Endpoint(host: String, port: Int,
       described(Desc.Transfer, UInt(handle), UInt(did), tag, UInt(0L),
         java.lang.Boolean.FALSE, java.lang.Boolean.valueOf(more), null, state))(payload)
     if (frames.size >= WriteChunk) frames.drainTo(out)
-    did
+  }
+
+  /** Pipelined transfers (§2.6.7: many unsettled deliveries in flight):
+    * each payload of `chunk` becomes one transfer on `handle`, the chunk
+    * goes out in as few packets as the buffer allows, and then its
+    * dispositions are drained. Returns each transfer's disposition
+    * state, in order — one round-trip per chunk, not per message.
+    *
+    * A chunk holds at most [[PipelineDepth]] transfers: the server writes
+    * dispositions while we are still writing transfers, and an unbounded
+    * chunk could fill both socket buffers with neither side reading —
+    * the classic pipelining deadlock.
+    *
+    * Inside one [[call]] the chunk's delivery-ids are consecutive, so a
+    * disposition range is clipped to the chunk and matched by index.
+    * §2.6.12 lets a broker coalesce ranges or restate earlier
+    * deliveries: foreign ids are ignored, and a hostile range like
+    * [0, 2^32] costs no per-id loop beyond the chunk. */
+  private def pipelined(handle: Long, txnId: Option[String],
+      chunk: Seq[Writer => Unit]): IndexedSeq[Described] = {
+    require(chunk.length <= PipelineDepth, s"chunk of ${chunk.length} > $PipelineDepth")
+    val base = nextDeliveryId
+    chunk.foreach(transferFrames(handle, txnId))
+    flushFrames()
+    val states = new Array[Described](chunk.length)
+    var missing = chunk.length
+    while (missing > 0) {
+      val disp = await(Desc.Disposition).performative
+      val first = asLong(field(disp, 1))
+      val last = field(disp, 2) match { case null => first; case v => asLong(v) }
+      val state = field(disp, 4).asInstanceOf[Described]
+      var i = math.min(math.max(first - base, 0L), chunk.length.toLong).toInt
+      val end = math.min(last - base, chunk.length - 1L)
+      while (i <= end) {
+        if (states(i) == null) missing -= 1
+        states(i) = state
+        i += 1
+      }
+    }
+    states.toIndexedSeq
   }
 
   /** Transfer one message and return the broker's disposition state. */
   private def transfer(handle: Long, txnId: Option[String] = None)(
-      payload: Writer => Unit): Described = {
-    transferFrames(handle, txnId)(payload)
-    flushFrames()
-    val disp = await(Desc.Disposition)
-    field(disp.performative, 4).asInstanceOf[Described]
-  }
+      payload: Writer => Unit): Described =
+    pipelined(handle, txnId, Seq(payload)).head
 
   // ------------------------------------------------------------ operations
   /** At-least-once under reconnect: [[call]] re-dials and retries the
@@ -269,78 +306,44 @@ class Amqp10Endpoint(host: String, port: Int,
     * makes replays no-ops. */
   override def send(address: String, msg: AmqpMessage, timestampMicros: Long): Long =
     call {
-      val state = transfer(senderLink(address)) { w =>
+      sendOutcome(transfer(senderLink(address)) { w =>
         writeTransferPayload(w, Seq(TsAnnotation -> timestampMicros), msg)
-      }
-      descriptorCode2(state) match {
-        case Right(EnqueuedOutcome) => asLong(field(state, 0))
-        case Left(Desc.Rejected) => -1L
-        case other => throw new IllegalStateException(s"unexpected send outcome: $state")
-      }
+      })
     }
 
-  /** Pipelined bulk produce: transfers go out back-to-back (many
-    * unsettled deliveries in flight — the sender shape link credit and
-    * delivery-ids exist for, §2.6.7), then the dispositions are drained
-    * and matched by delivery-id. Throughput is bandwidth-bound instead
-    * of round-trip-bound: one RTT per BATCH, not per message.
-    *
-    * The ≤500 in-flight bound is enforced HERE, not by caller
-    * convention: the server writes dispositions while we are still
-    * writing transfers, and an unbounded batch could fill both socket
-    * buffers with neither side reading — the classic pipelining
-    * deadlock. Larger inputs are chunked internally; once a chunk sees
-    * a credit refusal the remaining messages are refused without
-    * touching the wire (credit replenishes only via fetch, never
-    * mid-send, so they could not be accepted anyway — the refused
-    * SUFFIX contract holds across chunks).
+  /** Pipelined bulk produce ([[pipelined]]): throughput is
+    * bandwidth-bound instead of round-trip-bound. Each chunk is its own
+    * [[call]]; once a chunk sees a credit refusal the remaining messages
+    * are refused without touching the wire (credit replenishes only via
+    * fetch, never mid-send, so they could not be accepted anyway — the
+    * refused SUFFIX contract holds across chunks).
     *
     * Same at-least-once reconnect contract as [[send]], amplified:
     * an IOException mid-chunk replays that whole chunk. */
-  override def sendMany(address: String, msgs: Seq[(AmqpMessage, Long)]): Seq[Long] =
-    if (msgs.isEmpty) Vector.empty
-    else {
-      val results = Vector.newBuilder[Long]
-      var refused = false
-      msgs.grouped(500).foreach { chunk =>
-        if (refused) results ++= Vector.fill(chunk.length)(-1L)
-        else {
-          val rs = sendChunk(address, chunk)
-          results ++= rs
-          refused = rs.lastOption.contains(-1L)
+  override def sendMany(address: String, msgs: Seq[(AmqpMessage, Long)]): Seq[Long] = {
+    val results = Vector.newBuilder[Long]
+    var refused = false
+    msgs.grouped(PipelineDepth).foreach { chunk =>
+      if (refused) results ++= Vector.fill(chunk.length)(-1L)
+      else {
+        val rs = call {
+          pipelined(senderLink(address), None, chunk.map { case (m, ts) =>
+            (w: Writer) => writeTransferPayload(w, Seq(TsAnnotation -> ts), m)
+          }).map(sendOutcome)
         }
+        results ++= rs
+        refused = rs.lastOption.contains(-1L)
       }
-      results.result()
     }
+    results.result()
+  }
 
-  private def sendChunk(address: String, msgs: Seq[(AmqpMessage, Long)]): Seq[Long] =
-    call {
-      val handle = senderLink(address)
-      val dids = msgs.map { case (m, ts) =>
-        transferFrames(handle, None)(writeTransferPayload(_, Seq(TsAnnotation -> ts), m))
-      }
-      flushFrames() // the whole chunk in as few packets as the buffer allows
-      val outcomes = mutable.Map[Long, Described]()
-      while (outcomes.size < dids.size) {
-        val disp = await(Desc.Disposition).performative
-        val first = asLong(field(disp, 1))
-        val last = field(disp, 2) match { case null => first; case v => asLong(v) }
-        val state = field(disp, 4).asInstanceOf[Described]
-        // record ONLY this chunk's delivery-ids: §2.6.12 lets a broker
-        // coalesce ranges or restate earlier deliveries, and counting
-        // foreign ids would end the drain early (and a hostile range
-        // like [0, 2^32] must not drive a per-id loop)
-        dids.foreach(d => if (d >= first && d <= last) outcomes(d) = state)
-      }
-      dids.map { d =>
-        val state = outcomes(d)
-        descriptorCode2(state) match {
-          case Right(EnqueuedOutcome) => asLong(field(state, 0))
-          case Left(Desc.Rejected) => -1L
-          case other => throw new IllegalStateException(s"unexpected send outcome: $state")
-        }
-      }
-    }
+  /** A produce disposition's answer: the assigned seq, or -1 refused. */
+  private def sendOutcome(state: Described): Long = descriptorCode2(state) match {
+    case Right(EnqueuedOutcome) => asLong(field(state, 0))
+    case Left(Desc.Rejected) => -1L
+    case _ => throw new IllegalStateException(s"unexpected send outcome: $state")
+  }
 
   /** Descriptor as numeric code (Left) or symbol name (Right). */
   private def descriptorCode2(d: Described): Either[Long, String] = d.descriptor match {
@@ -604,51 +607,28 @@ class Amqp10Endpoint(host: String, port: Int,
       declaredTxns += txn
     }
 
+  /** Pipelined staging ([[pipelined]]): one round-trip per chunk
+    * instead of per message. The FIRST transfer carries the
+    * partition-reset annotation, so it opens a new attempt and a replayed
+    * stage REPLACES the earlier one broker-side (task-retry idempotence).
+    * An empty stage is that reset alone, marked as carrying no message.
+    * The whole stage is one [[call]]: a re-dial replays it from the
+    * reset, on the new connection that then owns the attempt. */
   override def stage(txn: String, partitionId: Int, msgs: Seq[AmqpMessage]): Unit = call {
     declare(txn)
     val handle = stagingLink()
-    if (msgs.isEmpty) {
-      // an empty stage still REPLACES earlier attempts (task-retry
-      // idempotence): a reset-only marker, never staged itself
-      val marker = AmqpMessage(messageAnnotations = Seq(
+    val transfers =
+      if (msgs.isEmpty) Iterator.single(AmqpMessage(messageAnnotations = Seq(
         PartitionAnnotation -> partitionId, PartitionResetAnnotation -> true,
-        EmptyStageAnnotation -> true))
-      transfer(handle, Some(txn))(writeMessage(_, marker))
-      ()
-    } else {
-      // PIPELINED staging, same discipline as sendMany: the whole batch
-      // of transactional transfers goes out back-to-back, dispositions
-      // drained after — one round-trip per ~500-message batch instead
-      // of per message (a sink task staging 10k rows was RTT-bound at
-      // one disposition await each). The ≤500 bound keeps the socket
-      // buffers from deadlocking while both sides write. Task-retry
-      // idempotence is unchanged: the FIRST transfer overall carries
-      // the partition-reset annotation, so a replayed stage REPLACES
-      // the earlier attempt broker-side.
-      var overall = 0
-      msgs.grouped(500).foreach { group =>
-        val dids = group.map { m =>
-          val anns = m.messageAnnotations ++
-            Seq(PartitionAnnotation -> partitionId) ++
-            (if (overall == 0) Seq(PartitionResetAnnotation -> true) else Nil)
-          overall += 1
-          transferFrames(handle, Some(txn))(writeMessage(_, m.copy(messageAnnotations = anns)))
-        }
-        flushFrames() // the whole batch in as few packets as the buffer allows
-        val outcomes = mutable.Map[Long, Described]()
-        while (outcomes.size < dids.size) {
-          val disp = await(Desc.Disposition).performative
-          val first = asLong(field(disp, 1))
-          val last = field(disp, 2) match { case null => first; case v => asLong(v) }
-          val state = field(disp, 4).asInstanceOf[Described]
-          // record only this batch's ids (§2.6.12 range coalescing)
-          dids.foreach(d => if (d >= first && d <= last) outcomes(d) = state)
-        }
-        dids.foreach { d =>
-          require(descriptorCode2(outcomes(d)) == Left(Desc.Accepted),
-            s"stage refused: ${outcomes(d)}")
-        }
+        EmptyStageAnnotation -> true)))
+      else msgs.iterator.zipWithIndex.map { case (m, i) =>
+        m.copy(messageAnnotations = m.messageAnnotations ++
+          Seq(PartitionAnnotation -> partitionId) ++
+          (if (i == 0) Seq(PartitionResetAnnotation -> true) else Nil))
       }
+    transfers.grouped(PipelineDepth).foreach { chunk =>
+      pipelined(handle, Some(txn), chunk.map(m => (w: Writer) => writeMessage(w, m)))
+        .foreach(s => require(descriptorCode2(s) == Left(Desc.Accepted), s"stage refused: $s"))
     }
   }
 
@@ -666,7 +646,7 @@ class Amqp10Endpoint(host: String, port: Int,
     // RouteAnnotation always rides with its REAL boolean value (an
     // explicit false, not absence): the server checks the value, so
     // every non-routed wire commit exercises that check, and the
-    // annotation's semantics match the in-memory/TCP transports' boolean
+    // annotation's semantics match the in-memory transport's boolean
     val state = discharge(txn, fail = false, Seq(
       QueryAnnotation -> queryId, EpochAnnotation -> epochId,
       AddressAnnotation -> address, TsAnnotation -> timestampMicros,

@@ -446,10 +446,10 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
       // multi-frame transfer reassembly (keyed by (channel, handle) —
       // §2.6.14 lets a peer interleave multi-frame deliveries across
       // links; continuation frames carry the handle but may omit the
-      // delivery-id) and staged-transaction buffers. Single-frame
-      // transfers never touch the buffer (the produce hot path).
+      // delivery-id). Single-frame transfers never touch the buffer (the
+      // produce hot path). Staged messages are not kept here: each
+      // staging transfer goes straight to the broker, which owns them.
       val pending = mutable.Map[(Int, Long), (Described, Writer)]()
-      val txnStage = mutable.Map[(String, Int), mutable.ArrayBuffer[AmqpMessage]]()
 
       // §2.7.1: the peer's open announces ITS max-frame-size; frames we
       // send must fit it (spec floor is 512). Until open arrives, assume
@@ -711,16 +711,12 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
                     .collectFirst { case (PartitionAnnotation, v) => asLong(v).toInt }
                     .getOrElse(0)
                   val reset = msg.messageAnnotations.exists(_._1 == PartitionResetAnnotation)
-                  val isMarker = msg.messageAnnotations.exists(_._1 == EmptyStageAnnotation)
-                  val key = (txn, pid)
-                  if (reset || !txnStage.contains(key))
-                    txnStage(key) = mutable.ArrayBuffer[AmqpMessage]()
-                  if (!isMarker) {
-                    val clean = msg.copy(messageAnnotations = msg.messageAnnotations
-                      .filterNot(e => e._1 == PartitionAnnotation || e._1 == PartitionResetAnnotation))
-                    txnStage(key) += clean
-                  }
-                  backing.stage(txn, pid, txnStage(key).toSeq)
+                  // the empty-stage marker is a reset that carries no message
+                  val staged =
+                    if (msg.messageAnnotations.exists(_._1 == EmptyStageAnnotation)) None
+                    else Some(msg.copy(messageAnnotations = msg.messageAnnotations
+                      .filterNot(e => e._1 == PartitionAnnotation || e._1 == PartitionResetAnnotation)))
+                  backing.stageTransfer(txn, pid, sock, reset, staged)
                   amqp(described(Desc.Disposition, java.lang.Boolean.TRUE,
                     UInt(did), UInt(did), java.lang.Boolean.TRUE,
                     described(Desc.Accepted)))
@@ -748,7 +744,6 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
                       val state =
                         if (fail) {
                           backing.abortStaged(txn)
-                          txnStage.filterInPlace { case ((t, _), _) => t != txn }
                           described(Desc.Accepted)
                         } else {
                           val n = backing.commitStaged(txn,
@@ -757,11 +752,10 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
                             String.valueOf(anns(AddressAnnotation)),
                             asLong(anns(TsAnnotation)),
                             // the annotation carries a real boolean (like
-                            // the in-memory and TCP transports): an
+                            // the in-memory transport's argument): an
                             // explicit `false` must not route per-message,
                             // so test the VALUE, not mere presence
                             anns.get(RouteAnnotation).exists(asBool(_)))
-                          txnStage.filterInPlace { case ((t, _), _) => t != txn }
                           Described(Sym(CommittedOutcome), Vector(n))
                         }
                       amqp(described(Desc.Disposition, java.lang.Boolean.TRUE,

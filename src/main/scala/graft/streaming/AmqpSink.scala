@@ -25,8 +25,10 @@ import org.apache.spark.sql.types._
   *
   * Scale: data flows executor→endpoint during the stage step (parallel,
   * partition-local); the driver commit is a control message, not a data
-  * path. A socket transport would stage into a server-side transaction
-  * (AMQP `declare`/`discharge`) with identical structure.
+  * path. Over `amqp10://`/`amqps://` the stage step is a server-side
+  * transaction (AMQP `declare`, staged transfers, `discharge`), and the
+  * broker alone holds the staged messages, so the driver's discharge
+  * publishes what executors staged on their own connections.
   *
   * Input schema: any subset of the envelope columns (AmqpEnvelope.schema)
   * — `body` (string), `body_binary` (binary), `body_type` (provenance:
@@ -250,8 +252,8 @@ class AmqpBatchWrite(cfg: AmqpSourceConfig, schema: StructType, queryId: String)
 }
 
 /** Buffers one partition's rows, stages them under the epoch transaction
-  * on task commit. In local mode the registry lookup is in-process; a
-  * cluster transport would hold a connection and stream the staging. */
+  * on task commit: one `stage` call per task attempt, so a retried
+  * attempt replaces the earlier one whole. */
 class AmqpDataWriter(cfg: AmqpSourceConfig, schema: StructType, txn: String,
     partitionId: Int) extends DataWriter[InternalRow] {
 

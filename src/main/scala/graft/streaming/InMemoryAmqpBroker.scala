@@ -244,8 +244,8 @@ object AmqpAddressGlob {
   * This replaces the reference's test fixtures (embedded ActiveMQ broker
   * + Vert.x ProtonServer, AMQPTestUtils.scala:66-91,213-266) in the
   * zero-egress environment: the wire protocol is stubbed, the
-  * delivery/settlement/flow-control semantics are real. A TCP transport
-  * would implement the same operations against a socket.
+  * delivery/settlement/flow-control semantics are real. [[Amqp10Server]]
+  * serves the same operations over AMQP 1.0 framing.
   */
 class InMemoryAmqpBroker extends AmqpEndpoint {
 
@@ -291,19 +291,50 @@ class InMemoryAmqpBroker extends AmqpEndpoint {
   private def addr(a: String): Address =
     addresses.computeIfAbsent(a, _ => new Address)
 
+  /** Append one delivery under the next sequence number. Caller holds
+    * `q.lock`, so the buffer stays seq-ascending. */
+  private def enqueue(q: Address, msg: AmqpMessage, timestampMicros: Long): Long = {
+    val seq = q.nextSeq
+    q.nextSeq += 1
+    q.messages += ((seq, msg, timestampMicros))
+    seq
+  }
+
+  /** Index of the first buffered delivery with seq > `seq`: a binary
+    * search over the seq-ascending buffer. Caller holds `q.lock`. */
+  private def indexAfter(q: Address, seq: Long): Int = {
+    var lo = 0
+    var hi = q.messages.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (q.messages(mid)._1 <= seq) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** Remove the deliveries in (fromExclusive, toInclusive] in place and
+    * return them. The address-level settlement floor is the invariant
+    * everything else reads (counts, fresh-query starts), so it advances
+    * over everything below the first surviving delivery. Caller holds
+    * `q.lock`. */
+  private def dropRange(q: Address, fromExclusive: Long,
+      toInclusive: Long): Iterable[(Long, AmqpMessage, Long)] = {
+    val from = indexAfter(q, fromExclusive)
+    val until = indexAfter(q, toInclusive)
+    val gone = q.messages.slice(from, until)
+    q.messages.remove(from, until - from)
+    val head = if (q.messages.isEmpty) q.nextSeq - 1 else q.messages.head._1 - 1
+    if (head > q.settledUpTo) q.settledUpTo = head
+    gone
+  }
+
   /** Send one message. Returns the assigned sequence number, or -1 when
     * the in-flight window (link credit) is exhausted. */
   def send(address: String, msg: AmqpMessage, timestampMicros: Long): Long = {
     val q = addr(address)
     q.lock.lock()
     try {
-      if (!q.flow.trySend()) -1L
-      else {
-        val seq = q.nextSeq
-        q.nextSeq += 1
-        q.messages += ((seq, msg, timestampMicros))
-        seq
-      }
+      if (!q.flow.trySend()) -1L else enqueue(q, msg, timestampMicros)
     } finally q.lock.unlock()
   }
 
@@ -369,26 +400,24 @@ class InMemoryAmqpBroker extends AmqpEndpoint {
         q.flow.consumed(toInclusive - q.deliveredUpTo)
         q.deliveredUpTo = toInclusive
       }
-      // toIndexedSeq, NOT toSeq: 2.13's Buffer.toSeq builds a List, and
-      // any indexed consumer of the slice would go quadratic.
-      q.messages.filter { case (s, _, _) => s > fromExclusive && s <= toInclusive }.toIndexedSeq
+      // toVector, NOT toSeq: 2.13's Buffer.toSeq builds a List, and any
+      // indexed consumer of the slice would go quadratic.
+      q.messages.view.slice(indexAfter(q, fromExclusive), indexAfter(q, toInclusive)).toVector
     } finally q.lock.unlock()
   }
 
   /** Settle (accept + forget) all deliveries with seq <= upTo; frees the
     * unsettled window for senders. Kept messages with seq > upTo remain
     * replayable — the redelivery contract that replaces the WAL. The
-    * buffer is seq-ascending (every append takes `nextSeq` under the
-    * address lock), so the settled deliveries are a prefix, dropped in
-    * place. */
+    * buffer is seq-ascending, so the settled deliveries are a prefix,
+    * dropped in place. */
   def settle(address: String, upTo: Long): Unit = {
     val q = addr(address)
     q.lock.lock()
     try {
       if (upTo > q.settledUpTo) {
         q.settledUpTo = upTo
-        val kept = q.messages.indexWhere(_._1 > upTo)
-        q.messages.remove(0, if (kept < 0) q.messages.length else kept)
+        q.messages.remove(0, indexAfter(q, upTo))
       }
     } finally q.lock.unlock()
   }
@@ -447,62 +476,52 @@ class InMemoryAmqpBroker extends AmqpEndpoint {
     // nest inside q's (commitStaged's sorted-lock discipline; here the
     // two-phase split avoids nesting entirely)
     val poisoned = Vector.newBuilder[(String, AmqpMessage, Long, Int)]
-    val claims =
+    val claims = {
+      q.lock.lock()
       try {
-        q.lock.lock()
-        try {
-          // a group born on a partially-settled address starts at the
-          // replayable floor — rows below it are gone for everyone
-          val g = q.shareGroups.getOrElseUpdate(group, new ShareGroup(q.settledUpTo))
-          val now = clockMillis()
-          expireSweep(g, now)
-          var budget = math.max(0L, maxRows)
-          val out = Vector.newBuilder[AmqpClaim]
-          def lease(f: Long, t: Long, deliveries: Int): Unit = {
-            val id = g.nextClaimId
-            g.nextClaimId += 1
-            g.outstanding(id) = new Outstanding(f, t, owner, now + leaseMillis, deliveries)
-            out += AmqpClaim(id, f, t)
-            budget -= t - f
+        // a group born on a partially-settled address starts at the
+        // replayable floor — rows below it are gone for everyone
+        val g = q.shareGroups.getOrElseUpdate(group, new ShareGroup(q.settledUpTo))
+        val now = clockMillis()
+        expireSweep(g, now)
+        var budget = math.max(0L, maxRows)
+        val out = Vector.newBuilder[AmqpClaim]
+        def lease(f: Long, t: Long, deliveries: Int): Unit = {
+          val id = g.nextClaimId
+          g.nextClaimId += 1
+          g.outstanding(id) = new Outstanding(f, t, owner, now + leaseMillis, deliveries)
+          out += AmqpClaim(id, f, t)
+          budget -= t - f
+        }
+        // redeliveries first (a dead consumer's backlog must not starve
+        // behind fresh traffic), splitting a slice at the budget — the
+        // remainder stays at the FRONT of the queue, preserving age
+        // order. A slice at the delivery ceiling is POISON: its
+        // messages leave the backlog for the DLQ (published after the
+        // lock drops) and the loop continues — poison never consumes
+        // claim budget, and the rest of the backlog keeps draining.
+        while (budget > 0 && g.redeliverable.nonEmpty) {
+          val (f, t, n) = g.redeliverable.dequeue()
+          if (g.maxDeliveries > 0 && n >= g.maxDeliveries) {
+            val dlq = g.deadLetterAddress.get
+            dropRange(q, f, t).foreach { case (_, m, ts) => poisoned += ((dlq, m, ts, n)) }
+          } else {
+            val take = math.min(budget, t - f)
+            lease(f, f + take, n + 1)
+            if (f + take < t) (f + take, t, n) +=: g.redeliverable
           }
-          // redeliveries first (a dead consumer's backlog must not starve
-          // behind fresh traffic), splitting a slice at the budget — the
-          // remainder stays at the FRONT of the queue, preserving age
-          // order. A slice at the delivery ceiling is POISON: its
-          // messages leave the backlog for the DLQ (published after the
-          // lock drops) and the loop continues — poison never consumes
-          // claim budget, and the rest of the backlog keeps draining.
-          while (budget > 0 && g.redeliverable.nonEmpty) {
-            val (f, t, n) = g.redeliverable.dequeue()
-            if (g.maxDeliveries > 0 && n >= g.maxDeliveries) {
-              val dlq = g.deadLetterAddress.get
-              q.messages.filter { case (s, _, _) => s > f && s <= t }
-                .foreach { case (_, m, ts) => poisoned += ((dlq, m, ts, n)) }
-              val keep = q.messages.filter { case (s, _, _) => s <= f || s > t }
-              q.messages.clear()
-              q.messages ++= keep
-              // advance the settlement floor over the removed prefix,
-              // exactly like settleClaims — the slice is resolved
-              val head =
-                if (q.messages.isEmpty) q.nextSeq - 1 else q.messages.head._1 - 1
-              if (head > q.settledUpTo) q.settledUpTo = head
-            } else {
-              val take = math.min(budget, t - f)
-              lease(f, f + take, n + 1)
-              if (f + take < t) (f + take, t, n) +=: g.redeliverable
-            }
-          }
-          // then fresh backlog from the dispatch frontier
-          val latest = q.nextSeq - 1
-          if (budget > 0 && g.dispatchedUpTo < latest) {
-            val f = g.dispatchedUpTo
-            val t = math.min(latest, if (f > latest - budget) latest else f + budget)
-            lease(f, t, deliveries = 1)
-            g.dispatchedUpTo = t
-          }
-          out.result()
-        } finally q.lock.unlock()
-      }
+        }
+        // then fresh backlog from the dispatch frontier
+        val latest = q.nextSeq - 1
+        if (budget > 0 && g.dispatchedUpTo < latest) {
+          val f = g.dispatchedUpTo
+          val t = math.min(latest, if (f > latest - budget) latest else f + budget)
+          lease(f, t, deliveries = 1)
+          g.dispatchedUpTo = t
+        }
+        out.result()
+      } finally q.lock.unlock()
+    }
     // DLQ publish outside q's lock: annotated with reason/source/count
     // (the x-opt-dlq-* vocabulary amqp_dead_letter established), credit-
     // exempt like any broker-internal move (sendUnconditionally)
@@ -511,12 +530,10 @@ class InMemoryAmqpBroker extends AmqpEndpoint {
       dq.lock.lock()
       try {
         dq.flow.sendUnconditionally()
-        val seq = dq.nextSeq
-        dq.nextSeq += 1
-        dq.messages += ((seq, m.copy(messageAnnotations = m.messageAnnotations ++ Seq(
+        enqueue(dq, m.copy(messageAnnotations = m.messageAnnotations ++ Seq(
           "x-opt-dlq-reason" -> "max-deliveries",
           "x-opt-dlq-source" -> address,
-          "x-opt-dlq-deliveries" -> n)), ts))
+          "x-opt-dlq-deliveries" -> n)), ts)
       } finally dq.lock.unlock()
     }
     claims
@@ -562,22 +579,10 @@ class InMemoryAmqpBroker extends AmqpEndpoint {
     q.lock.lock()
     try {
       val g = q.shareGroups.getOrElseUpdate(group, new ShareGroup(q.settledUpTo))
+      // unknown/already-settled ids are no-ops (idempotent commit replay)
       claimIds.foreach { id =>
-        g.outstanding.remove(id).foreach { o =>
-          // delete the slice's messages; unknown/already-settled ids are
-          // no-ops (idempotent commit replay)
-          val keep = q.messages.filter { case (s, _, _) =>
-            s <= o.fromExclusive || s > o.toInclusive }
-          q.messages.clear()
-          q.messages ++= keep
-        }
+        g.outstanding.remove(id).foreach(o => dropRange(q, o.fromExclusive, o.toInclusive))
       }
-      // the address-level settlement floor is the invariant everything
-      // else reads (counts, fresh-query starts): everything below the
-      // first surviving message is forgotten
-      val head =
-        if (q.messages.isEmpty) q.nextSeq - 1 else q.messages.head._1 - 1
-      if (head > q.settledUpTo) q.settledUpTo = head
     } finally q.lock.unlock()
   }
 
@@ -624,22 +629,44 @@ class InMemoryAmqpBroker extends AmqpEndpoint {
   // AMQP 1.0 transactional-messaging semantics (txn-capability), used by
   // the Spark sink: executors STAGE messages under a transaction key,
   // the driver's epoch commit atomically publishes the whole transaction.
-  // Staging is keyed by (txn, partitionId) and REPLACES any previous
-  // staging for that partition, so task retries / speculative duplicates
-  // are idempotent; epoch commits are tracked per (query, address), so a
-  // replayed epoch after restart publishes nothing twice: exactly-once.
+  // The broker is the only holder of staged messages, whichever
+  // connection staged them and whichever commits. Staging is keyed by
+  // (txn, partitionId), and a new attempt REPLACES the previous one, so
+  // task retries / speculative duplicates are idempotent: a partition's
+  // staged set is always exactly ONE attempt's messages, in order. Epoch
+  // commits are tracked per (query, address), so a replayed epoch after
+  // restart publishes nothing twice: exactly-once.
 
-  /** txn → partitionId → staged messages (in partition-task row order). */
-  private val staged =
-    new ConcurrentHashMap[String, ConcurrentHashMap[Int, Seq[AmqpMessage]]]()
+  /** One staging attempt of a (txn, partition): its messages in
+    * partition-task row order, and the wire connection that opened it
+    * (null for an attempt staged whole by [[stage]]). */
+  private final class Attempt(val owner: AnyRef, val msgs: Seq[AmqpMessage])
+
+  /** txn → partitionId → the current attempt. */
+  private val staged = new ConcurrentHashMap[String, ConcurrentHashMap[Int, Attempt]]()
   /** "queryId/address" → highest committed epoch. */
   private val committedEpochs = new ConcurrentHashMap[String, Long]()
+
+  private def stagedPartitions(txn: String): ConcurrentHashMap[Int, Attempt] =
+    staged.computeIfAbsent(txn, _ => new ConcurrentHashMap[Int, Attempt]())
 
   /** Stage one writer task's messages; replaces earlier attempts of the
     * same (txn, partition). */
   def stage(txn: String, partitionId: Int, msgs: Seq[AmqpMessage]): Unit =
-    staged.computeIfAbsent(txn, _ => new ConcurrentHashMap[Int, Seq[AmqpMessage]]())
-      .put(partitionId, msgs)
+    stagedPartitions(txn).put(partitionId, new Attempt(null, msgs))
+
+  /** One staging transfer from the wire connection `conn`, the server's
+    * entry point. With `reset` it opens a new attempt owned by `conn`,
+    * replacing whatever was staged. Without it, `msg` is appended when
+    * `conn` owns the current attempt, opens one when none exists, and is
+    * dropped when another connection's reset has superseded `conn`'s
+    * attempt. `msg` None stages nothing (an empty partition's reset). */
+  private[streaming] def stageTransfer(txn: String, partitionId: Int, conn: AnyRef,
+      reset: Boolean, msg: Option[AmqpMessage]): Unit =
+    stagedPartitions(txn).compute(partitionId, (_, cur) => {
+      val a = if (reset || cur == null) new Attempt(conn, Vector.empty) else cur
+      if (a.owner ne conn) a else msg.fold(a)(m => new Attempt(conn, a.msgs :+ m))
+    })
 
   /** Atomically publish a staged transaction to `address`. Returns the
     * number of messages published, or -1 if this (query, epoch) was
@@ -661,7 +688,7 @@ class InMemoryAmqpBroker extends AmqpEndpoint {
     // overlapping target sets can never deadlock), so the multi-queue
     // publish is atomic and the epoch check-and-set races nothing.
     val routed: Seq[(String, AmqpMessage)] = pids.toSeq.flatMap { pid =>
-      parts.get(pid).map { m =>
+      parts.get(pid).msgs.map { m =>
         (if (routeByTo) m.to.getOrElse(address) else address) -> m
       }
     }
@@ -675,9 +702,7 @@ class InMemoryAmqpBroker extends AmqpEndpoint {
       routed.foreach { case (a, msg) =>
         val q = addr(a)
         q.flow.sendUnconditionally()
-        val seq = q.nextSeq
-        q.nextSeq += 1
-        q.messages += ((seq, msg, timestampMicros))
+        enqueue(q, msg, timestampMicros)
         n += 1
       }
       n

@@ -755,6 +755,132 @@ class Amqp10Spec extends SparkSpecBase {
     }
   }
 
+  /** A raw peer holding the transaction coordinator on handle 0 and the
+    * staging node on handle 1 — one executor's (or the driver's)
+    * connection as a third-party transactional publisher drives it. */
+  private final class TxnPeer(port: Int, name: String) extends AutoCloseable {
+    private val peer = new RawPeer(port)
+    private var did = 0L
+    writeAll(peer.out, HeaderAmqp)
+    readHeader(peer.in)
+    peer.send(described(Desc.Open, name)); peer.expect(Desc.Open)
+    peer.send(described(Desc.Begin, null, UInt(0L), UInt(100L), UInt(100L)))
+    peer.expect(Desc.Begin)
+    peer.send(described(Desc.Attach, "coord", UInt(0L),
+      java.lang.Boolean.FALSE, null, null, null, described(Desc.Coordinator)))
+    peer.expect(Desc.Attach)
+    peer.send(described(Desc.Attach, "stage", UInt(1L),
+      java.lang.Boolean.FALSE, null, null, null,
+      described(Desc.Target, StagingTarget)))
+    peer.expect(Desc.Attach)
+
+    private def transfer(handle: Long, msg: AmqpMessage, txn: Option[String]): Described = {
+      val state = txn.map(t =>
+        described(Desc.TransactionalState, t.getBytes(UTF_8))).orNull
+      peer.send(described(Desc.Transfer, UInt(handle), UInt(did),
+        s"t$did".getBytes(UTF_8), UInt(0L), java.lang.Boolean.FALSE,
+        java.lang.Boolean.FALSE, null, state), encodeMessage(msg))
+      did += 1
+      field(peer.expect(Desc.Disposition).performative, 4).asInstanceOf[Described]
+    }
+
+    def declare(txn: String): Unit =
+      assert(descriptorCode(transfer(0L, AmqpMessage(
+        body = AmqpValueBody(described(Desc.Declare, txn))), None)) == Desc.Declared)
+
+    /** One staging transfer of partition 0; `reset` opens a new attempt. */
+    def stage(txn: String, body: String, reset: Boolean = false): Unit =
+      assert(descriptorCode(transfer(1L, AmqpMessage(
+        messageAnnotations = Seq(PartitionAnnotation -> 0) ++
+          (if (reset) Seq(PartitionResetAnnotation -> true) else Nil),
+        body = AmqpValueBody(body)), Some(txn))) == Desc.Accepted)
+
+    /** Commit `txn` as epoch 1 of query "wq" to `address`; the count. */
+    def discharge(txn: String, address: String): Long = {
+      val st = transfer(0L, AmqpMessage(
+        messageAnnotations = Seq(QueryAnnotation -> "wq", EpochAnnotation -> 1L,
+          AddressAnnotation -> address, TsAnnotation -> 11L),
+        body = AmqpValueBody(described(Desc.Discharge,
+          txn.getBytes(UTF_8), java.lang.Boolean.FALSE))), None)
+      assert(st.descriptor == Sym(CommittedOutcome))
+      asLong(field(st, 0))
+    }
+
+    override def close(): Unit = peer.close()
+  }
+
+  private def bodies(backing: InMemoryAmqpBroker, address: String): Seq[String] =
+    backing.fetch(address, 0, backing.latestSeq(address)).map(_._2.body).collect {
+      case AmqpValueBody(s: String) => s
+    }
+
+  test("wire level: interleaved attempts of one partition publish one attempt whole, never a mix") {
+    withServer { (backing, ep) =>
+      val port = ep.stripPrefix("amqp10://127.0.0.1:").toInt
+      val (a, b) = (new TxnPeer(port, "attempt-a"), new TxnPeer(port, "attempt-b"))
+      try {
+        a.declare("mix"); b.declare("mix")
+        a.stage("mix", "a1", reset = true)
+        b.stage("mix", "b1", reset = true)
+        a.stage("mix", "a2")
+        b.stage("mix", "b2")
+        a.stage("mix", "a3")
+        val n = a.discharge("mix", "mix-out")
+        val published = bodies(backing, "mix-out")
+        assert(n == published.length)
+        assert(published == Seq("a1", "a2", "a3") || published == Seq("b1", "b2"),
+          s"one attempt's full list, in order: $published")
+      } finally { a.close(); b.close() }
+    }
+  }
+
+  test("wire level: a txn staged on one connection is published by another's discharge") {
+    // the cluster shape: executors stage on their own connections, the
+    // driver discharges on its connection
+    withServer { (backing, ep) =>
+      val port = ep.stripPrefix("amqp10://127.0.0.1:").toInt
+      val (executor, driver) = (new TxnPeer(port, "executor"), new TxnPeer(port, "driver"))
+      try {
+        executor.declare("x-conn")
+        executor.stage("x-conn", "e1", reset = true)
+        executor.stage("x-conn", "e2")
+        driver.declare("x-conn")
+        assert(driver.discharge("x-conn", "x-out") == 2L)
+        assert(bodies(backing, "x-out") == Seq("e1", "e2"))
+      } finally { executor.close(); driver.close() }
+    }
+  }
+
+  test("wire staging hands the broker each staged message once: linear in the partition") {
+    val handed = new java.util.concurrent.atomic.AtomicLong
+    // counts every message given to either staging entry point
+    val backing = new InMemoryAmqpBroker {
+      override def stage(txn: String, partitionId: Int, msgs: Seq[AmqpMessage]): Unit = {
+        handed.addAndGet(msgs.length.toLong)
+        super.stage(txn, partitionId, msgs)
+      }
+      override private[streaming] def stageTransfer(txn: String, partitionId: Int,
+          conn: AnyRef, reset: Boolean, msg: Option[AmqpMessage]): Unit = {
+        handed.addAndGet(msg.size.toLong)
+        super.stageTransfer(txn, partitionId, conn, reset, msg)
+      }
+    }
+    val server = new Amqp10Server(backing)
+    val client = new Amqp10Endpoint("127.0.0.1", server.port)
+    try {
+      val n = 8000
+      val msgs = (1 to n).map(i =>
+        AmqpMessage(messageId = Some(s"m-$i"), body = AmqpValueBody(s"row-$i")))
+      client.stage("linear", 0, msgs)
+      // a whole-buffer re-stage per transfer would hand n(n+1)/2
+      assert(handed.get == n.toLong, s"handed ${handed.get} messages for $n staged")
+      assert(client.commitStaged("linear", "lq", 1L, "linear-out", 5L) == n)
+      val published = backing.fetch("linear-out", 0, n).map(_._2)
+      assert(published.map(_.messageId) == msgs.map(_.messageId))
+      assert(published.map(_.body) == msgs.map(_.body))
+    } finally { client.close(); server.close() }
+  }
+
   test("wire level: symbolic descriptors (§1.2's other legal form) are accepted") {
     withServer { (backing, ep) =>
       val port = ep.stripPrefix("amqp10://127.0.0.1:").toInt
