@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -32,6 +33,18 @@ object Bench {
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg"))).split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
+
+  /** The `queries` object of a results line as name -> seconds. A line
+    * that does not parse, or whose `queries` is not an object of
+    * numbers, throws rather than yielding a partial map. */
+  private[graft] def queriesObject(json: String): Map[String, Double] = {
+    val q = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json).get("queries")
+    require(q != null && q.isObject, "no queries object")
+    q.properties().asScala.map { e =>
+      require(e.getValue.isNumber, s"${e.getKey}: not a number")
+      e.getKey -> e.getValue.asDouble
+    }.toMap
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -77,6 +90,10 @@ object Bench {
           f""""$label":{"messages":$n,"sec":$sec,"msgs_per_sec":${n / sec}%.0f}"""
       }.mkString(""","stream_ingest":{""", ",", "}")
       val total = results.valuesIterator.filter(_ >= 0).sum
+      // coverage beside the total: queries timed, and queries the time
+      // budget skipped (the rest of the -1 entries failed)
+      val timed = results.valuesIterator.count(_ >= 0)
+      val skipped = errors.valuesIterator.count(_.startsWith("skipped:"))
       val loadEnd = load1()
       // the JSON judgment matches the stderr warning: loadPre (the
       // post-wait value) is the load the timed pass actually ran under —
@@ -88,7 +105,7 @@ object Bench {
       val loadPart =
         f""","load1":{"ambient_start":$loadStart%.2f,"pre_run":$loadPre%.2f,"end":$loadEnd%.2f,"warn_threshold":$warnLoad%.2f}$loadNote"""
       val line =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs$stream$loadPart,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","timed":$timed,"skipped":$skipped,"queries":$qs,"errors":$errs$stream$loadPart,"sf":"$sfDir"}"""
       // scalastyle:off println
       println(line)
       // scalastyle:on println
@@ -257,19 +274,9 @@ object Bench {
     // timing methodology and the JSON contract are unchanged.
     val priorSeconds: Map[String, Double] = {
       val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER_FILE", "bench_results.json")
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)))
-        val start = txt.indexOf("\"queries\":{")
-        if (start < 0) Map.empty[String, Double]
-        else {
-          val body = txt.substring(start + 11, txt.indexOf('}', start))
-          val re = """"([A-Za-z0-9_]+)":(-?[0-9][-+.eE0-9]*)""".r
-          re.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filter(_._2 > 0.0).toMap
-        }
-      } catch { case _: Throwable => Map.empty[String, Double] }
+      try queriesObject(new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(path)))).filter(_._2 > 0.0)
+      catch { case _: Throwable => Map.empty[String, Double] }
     }
     if (priorSeconds.nonEmpty)
       System.err.println(s"[bench] first pass ordered cheapest-first by " +

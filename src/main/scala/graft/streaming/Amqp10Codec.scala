@@ -259,6 +259,19 @@ object Amqp10Codec {
     def skip(n: Int): Unit = take(n)
     def raw(n: Int): Array[Byte] = { val p = take(n); Arrays.copyOfRange(buf, p, p + n) }
     def utf8(n: Int): String = { val p = take(n); new String(buf, p, n, UTF_8) }
+
+    /** If the next value is a symbol or string (8-bit size form) whose
+      * bytes equal `key`, consume it and answer true; otherwise consume
+      * nothing. A map key is matched without building its string. */
+    def takeKey(key: Array[Byte]): Boolean = {
+      val n = key.length
+      if (end - pos < n + 2 || (buf(pos) != 0xa3.toByte && buf(pos) != 0xa1.toByte) ||
+          (buf(pos + 1) & 0xff) != n) return false
+      var i = 0
+      while (i < n) { if (buf(pos + 2 + i) != key(i)) return false; i += 1 }
+      pos += n + 2
+      true
+    }
   }
 
   def decode(bs: Array[Byte]): Any = readValue(new Reader(bs))
@@ -306,6 +319,27 @@ object Amqp10Codec {
       AmqpWireMap(Vector.fill(n / 2)((readValue(r), readValue(r))))
     case other =>
       throw new IllegalArgumentException(f"unsupported AMQP constructor 0x$other%02x")
+  }
+
+  /** An integral value as a long, without boxing the common widths. */
+  def readLong(r: Reader): Long = r.u8() match {
+    case 0x55 | 0x54 | 0x51 => r.u8().toByte.toLong
+    case 0x81 => r.u64()
+    case 0x71 => r.u32().toInt.toLong
+    case 0x43 | 0x44 => 0L
+    case 0x52 | 0x53 | 0x50 => r.u8().toLong
+    case 0x70 => r.u32()
+    case 0x80 => r.u64()
+    case c => asLong(readValueWith(r, c))
+  }
+
+  /** Entry pairs of the map whose constructor comes next; its entries
+    * are left to read. */
+  def readMapPairs(r: Reader): Int = {
+    val c = r.u8()
+    if (c != 0xc1 && c != 0xd1)
+      throw new IllegalArgumentException(f"expected a map section, got 0x$c%02x")
+    readCount(r, c) / 2
   }
 
   /** Element count of the list (0x45/0xc0/0xd0) or map (0xc1/0xd1)
@@ -382,6 +416,69 @@ object Amqp10Codec {
     r.skip(doff * 4 - 8) // extended header, unused
     val perf = readValue(r).asInstanceOf[Described]
     new Frame(ftype, channel, perf, bs, r.position, bs.length)
+  }
+
+  /** The fields of a transfer frame a receiver needs per delivery, as
+    * [[readTransferHead]] reads them from the frame array. */
+  final class TransferHead {
+    var handle = 0L
+    /** -1 when absent: a continuation frame may omit it. */
+    var deliveryId = -1L
+    var more = false
+    /** Where the payload starts in the frame array. */
+    var payloadStart = 0
+  }
+
+  /** Fill `into` from a frame's bytes (size prefix included) without
+    * decoding its performative, when the frame is a transfer in the form
+    * this codec writes (§2.7.5): numeric descriptor, list8 or list32, and
+    * handle, delivery-id, delivery-tag, message-format, settled and more
+    * in their plain encodings. Answers false for any other frame or
+    * encoding, which then decodes the general way ([[decodeFrame]]). */
+  def readTransferHead(bs: Array[Byte], into: TransferHead): Boolean = {
+    val body = (bs(4) & 0xff) * 4
+    if (bs(5) != FrameTypeAmqp || bs.length < body + 5 || bs(body) != 0 ||
+        bs(body + 1) != 0x53 || bs(body + 2) != Desc.Transfer.toByte) return false
+    val r = new Reader(bs, body + 3, bs.length)
+    var count = 0L
+    var payloadStart = 0L
+    r.u8() match {
+      case 0xc0 => payloadStart = r.u8() + r.position; count = r.u8()
+      case 0xd0 => payloadStart = r.u32() + r.position; count = r.u32()
+      case _ => return false
+    }
+    if (count < 1 || payloadStart > bs.length) return false
+    // uint fields: -1 null, -2 an encoding left to the general decode
+    def uint(): Long = r.u8() match {
+      case 0x43 => 0L
+      case 0x52 => r.u8().toLong
+      case 0x70 => r.u32()
+      case 0x40 => -1L
+      case _ => -2L
+    }
+    def bool(): Int = r.u8() match {
+      case 0x41 => 1
+      case 0x42 | 0x40 => 0
+      case _ => -1
+    }
+    val handle = uint()
+    val did = if (count > 1) uint() else -1L
+    if (handle < 0 || did == -2L) return false
+    if (count > 2) r.u8() match {
+      case 0x40 => ()
+      case 0xa0 => r.skip(r.u8())
+      case 0xb0 => r.skip(r.bounded(r.u32()))
+      case _ => return false
+    }
+    if (count > 3 && uint() == -2L) return false
+    if (count > 4 && bool() < 0) return false
+    val more = if (count > 5) bool() else 0
+    if (more < 0 || r.position > payloadStart) return false
+    into.handle = handle
+    into.deliveryId = did
+    into.more = more == 1
+    into.payloadStart = payloadStart.toInt
+    true
   }
 
   /** §2.7 / §3.2 / §4.5 / §5.3 descriptor codes. */
@@ -603,12 +700,20 @@ object Amqp10Codec {
     * in place) field by field into one [[AmqpMessage]]. A malformed
     * section throws; no partly filled message is returned. */
   def decodeTransferPayload(r: Reader): (AmqpMessage, Vector[(String, Any)]) = {
+    var deliveryAnns = Vector.empty[(String, Any)]
+    val m = decodeSections(r, r => deliveryAnns = readEntries(r))
+    (m, deliveryAnns)
+  }
+
+  /** Decode the sections left in `r` into one message, handing the
+    * delivery-annotations section, when there is one, to `deliveryAnns`
+    * (which must consume it whole). */
+  def decodeSections(r: Reader, deliveryAnns: Reader => Unit): AmqpMessage = {
     var messageId, to, subject, replyTo, correlationId: Option[String] = None
     var applicationProperties: Seq[(String, Any)] = Nil
     var messageAnnotations: Seq[(String, Any)] = Nil
     var body: AmqpBody = AmqpOtherBody
     var ttlMillis: Option[Long] = None
-    var deliveryAnns = Vector.empty[(String, Any)]
     while (r.hasRemaining) {
       val c = r.u8()
       if (c != 0x00)
@@ -635,7 +740,7 @@ object Amqp10Codec {
           }
         case Desc.ApplicationProperties => applicationProperties = readEntries(r)
         case Desc.MessageAnnotations => messageAnnotations = readEntries(r)
-        case Desc.DeliveryAnnotations => deliveryAnns = readEntries(r)
+        case Desc.DeliveryAnnotations => deliveryAnns(r)
         case Desc.AmqpValue => body = AmqpValueBody(wireToAny(readValue(r)))
         case Desc.Data => body = AmqpDataBody(readValue(r).asInstanceOf[Array[Byte]])
         case Desc.AmqpSequence => readValue(r); body = AmqpOtherBody
@@ -657,8 +762,8 @@ object Amqp10Codec {
       }
       messageAnnotations = messageAnnotations.filterNot(_._1 == JsonBodyAnnotation)
     }
-    (AmqpMessage(messageId, to, subject, replyTo, correlationId, applicationProperties,
-      messageAnnotations, body, ttlMillis), deliveryAnns)
+    AmqpMessage(messageId, to, subject, replyTo, correlationId, applicationProperties,
+      messageAnnotations, body, ttlMillis)
   }
 
   /** A section's descriptor. Tolerant: an unknown (e.g. custom
@@ -684,10 +789,7 @@ object Amqp10Codec {
 
   /** A map section's entries: keys as strings, values as model values. */
   private def readEntries(r: Reader): Vector[(String, Any)] = {
-    val c = r.u8()
-    if (c != 0xc1 && c != 0xd1)
-      throw new IllegalArgumentException(f"expected a map section, got 0x$c%02x")
-    val pairs = readCount(r, c) / 2
+    val pairs = readMapPairs(r)
     val b = Vector.newBuilder[(String, Any)]
     var i = 0
     while (i < pairs) {

@@ -32,6 +32,8 @@ class Amqp10Endpoint(host: String, port: Int,
   /** Most transfers a [[pipelined]] chunk puts in flight. */
   private val PipelineDepth = 500
 
+  private val SessionBegin = described(Desc.Begin, null, UInt(0L), UInt(65535L), UInt(65535L))
+
   private var sock: Socket = _
   private var in: DataInputStream = _
   private var out: BufferedOutputStream = _
@@ -42,9 +44,14 @@ class Amqp10Endpoint(host: String, port: Int,
   private var stagingHandle = -1L
   private var coordinatorHandle = -1L
   private val declaredTxns = mutable.Set[String]()
-  /** Per address: (delivery-id, seq) of transfers received on THIS
-    * connection, both strictly increasing — the settlement ledger. */
-  private val received = mutable.Map[String, mutable.ArrayBuffer[(Long, Long)]]()
+  /** Deliveries received on THIS session and not yet settled: the
+    * settlement ledger. Per address, seqs are recorded strictly rising. */
+  private val received = new DeliveryLedger
+  /** The drain in progress, if any: while one is open every other
+    * operation on this connection is refused. */
+  private var openDrain: Drain = _
+  /** [[recycleSession]] sent end + begin; their echoes are still unread. */
+  private var sessionEchoesDue = false
 
   // ------------------------------------------------------------ transport
   /** Every AMQP-layer frame is written here first. The pipelined produce
@@ -71,12 +78,11 @@ class Amqp10Endpoint(host: String, port: Int,
       case None => new Socket(host, port)
     }
     sock.setTcpNoDelay(true)
-    in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+    // a drain reads the server's 64 KiB pushes: one read call each
+    in = new DataInputStream(new BufferedInputStream(sock.getInputStream, WriteChunk))
     out = new BufferedOutputStream(sock.getOutputStream)
     frames.truncate(0) // frames a dead connection never sent
-    nextHandle = 0L; nextDeliveryId = 0L
-    senderLinks.clear(); received.clear(); declaredTxns.clear()
-    stagingHandle = -1L; coordinatorHandle = -1L
+    forgetSession()
     if (username.isDefined) {
       writeAll(out, HeaderSasl)
       val serverHeader = readHeader(in)
@@ -178,9 +184,50 @@ class Amqp10Endpoint(host: String, port: Int,
     val serverOpen = await(Desc.Open)
     // §2.7.1: our outgoing frames must fit the SERVER's max-frame-size
     serverPayloadChunk = negotiatedPayloadChunk(field(serverOpen.performative, 2))
-    sendFrame(described(Desc.Begin, null, UInt(0L), UInt(65535L), UInt(65535L)))
+    sendFrame(SessionBegin)
     await(Desc.Begin)
   }
+
+  /** Client state scoped to the session: handles, delivery-ids, links. */
+  private def forgetSession(): Unit = {
+    sessionEchoesDue = false
+    nextHandle = 0L; nextDeliveryId = 0L
+    senderLinks.clear(); received.clear(); declaredTxns.clear()
+    stagingHandle = -1L; coordinatorHandle = -1L
+  }
+
+  /** Close the socket without a handshake; the next operation re-dials. */
+  private def dropSocket(): Unit = {
+    if (sock != null) try sock.close() catch { case _: Throwable => () }
+    sock = null
+  }
+
+  /** End the session and begin a fresh one on the same connection. §2.5
+    * session end drops the session's unsettled deliveries on both peers,
+    * so a pooled reader connection (readers never settle) carries no
+    * delivery state from one borrower to the next. Both frames go out in
+    * one write and their echoes are read by the next operation, so the
+    * release costs no round trip. An IO failure drops the socket
+    * instead, which the next operation re-dials. */
+  private[streaming] def recycleSession(): Unit = synchronized {
+    requireNoDrain()
+    if (sock != null) {
+      try {
+        awaitSessionEchoes()
+        endFrame(frames, beginFrame(frames, FrameTypeAmqp, 0, described(Desc.End)))
+        sendFrame(SessionBegin)
+        forgetSession()
+        sessionEchoesDue = true
+      } catch { case scala.util.control.NonFatal(_) => dropSocket() }
+    }
+  }
+
+  private def awaitSessionEchoes(): Unit =
+    if (sessionEchoesDue) {
+      await(Desc.End)
+      await(Desc.Begin)
+      sessionEchoesDue = false
+    }
 
   /** Read frames until one with the wanted performative arrives; credit
     * flow frames may interleave and are skipped (their grants are
@@ -197,16 +244,21 @@ class Amqp10Endpoint(host: String, port: Int,
   }
 
   private def call[T](op: => T): T = synchronized {
+    requireNoDrain()
     if (sock == null) connect()
-    try op
+    try { awaitSessionEchoes(); op }
     catch {
       case e: SecurityException => throw e
-      case _: java.io.IOException | _: java.io.EOFException =>
-        try sock.close() catch { case _: Throwable => () }
+      case _: java.io.IOException =>
+        dropSocket()
         connect()
         op
     }
   }
+
+  private def requireNoDrain(): Unit =
+    if (openDrain != null) throw new IllegalStateException(
+      "a drain is open on this connection: read it to its end or close it first")
 
   // ---------------------------------------------------------------- links
   private def attachSender(target: Any): Long = {
@@ -501,98 +553,185 @@ class Amqp10Endpoint(host: String, port: Int,
     }
   }
 
+  /** The slice, read whole: [[drain]] run to its end. */
   override def fetch(address: String, fromExclusive: Long,
-      toInclusive: Long): Seq[(Long, AmqpMessage, Long)] = call {
-    if (toInclusive <= fromExclusive) Vector.empty
-    else {
-      // receiver link resuming at the requested seq (source filter),
-      // then one drain-mode flow for exactly the slice's credit
-      val handle = nextHandle
+      toInclusive: Long): Seq[(Long, AmqpMessage, Long)] =
+    drain(address, fromExclusive, toInclusive).toVector
+
+  /** Open a pull-based drain of the slice (fromExclusive, toInclusive].
+    * Nothing is read until the caller asks: each `hasNext` reads the
+    * frames of one delivery and decodes it, so the caller's work
+    * overlaps the server's push and the heap holds the socket buffer,
+    * not a decoded slice. The drain is a receiver link resuming at the
+    * requested seq (source filter) and one drain-mode flow for exactly
+    * the slice's credit; the server's flow echo ends it.
+    *
+    * Until the drain ends — read to its end or closed — every other
+    * operation on this connection throws IllegalStateException. Closing
+    * a drain before its end reads the rest of the slice off the wire
+    * without decoding it, up to the flow echo, so the connection stays
+    * usable.
+    *
+    * One-retry contract of [[call]]: on an IO failure the drain re-dials
+    * once and resumes after the last seq it handed out, so the caller
+    * sees each message of the slice once. */
+  private[streaming] def drain(address: String, fromExclusive: Long,
+      toInclusive: Long): Drain = synchronized {
+    requireNoDrain()
+    val d = new Drain(address, fromExclusive, toInclusive)
+    if (toInclusive > fromExclusive) openDrain = d
+    d
+  }
+
+  final class Drain private[Amqp10Endpoint] (address: String, fromExclusive: Long,
+      toInclusive: Long) extends Iterator[(Long, AmqpMessage, Long)] with AutoCloseable {
+    /** The last seq handed out: where a re-dialed drain resumes. */
+    private var last = fromExclusive
+    private var handle = -1L
+    private var redialed = false
+    private var done = toInclusive <= fromExclusive
+    private var ready: (Long, AmqpMessage, Long) = _
+    private val head = new TransferHead
+    private val anns = new TransportAnnotations
+    // a delivery split over several frames (§2.6.14), collected here
+    private var partial: Writer = _
+    private var partialId = -1L
+    // deliveries are recorded for settlement only when their seq rises
+    private var recordedUpTo = Long.MinValue
+    // closed early: the rest of the slice is read, not decoded
+    private var skipping = false
+
+    def hasNext: Boolean = ready != null || (!done && advance())
+
+    def next(): (Long, AmqpMessage, Long) = {
+      if (!hasNext) throw new NoSuchElementException("drain exhausted")
+      val r = ready
+      ready = null
+      r
+    }
+
+    /** End the drain: what is left of the slice is read up to the flow
+      * echo and dropped. A failure on the way drops the socket. */
+    def close(): Unit = Amqp10Endpoint.this.synchronized {
+      ready = null
+      if (handle < 0) end()
+      else if (!done) {
+        skipping = true
+        try { while (pull()) () }
+        catch { case scala.util.control.NonFatal(_) => abandon() }
+      }
+    }
+
+    private def end(): Unit = {
+      done = true
+      if (openDrain eq this) openDrain = null
+    }
+
+    /** End the drain by dropping the socket (the next operation re-dials). */
+    private[Amqp10Endpoint] def abandon(): Unit = {
+      end()
+      ready = null
+      dropSocket()
+    }
+
+    private def advance(): Boolean = Amqp10Endpoint.this.synchronized {
+      try pull()
+      catch {
+        case _: java.io.IOException if !redialed =>
+          redialed = true
+          dropSocket()
+          handle = -1L
+          partial = null
+          try pull() catch { case e: Throwable => abandon(); throw e }
+        case e: Throwable => abandon(); throw e
+      }
+    }
+
+    private def attach(): Unit = {
+      if (sock == null) connect()
+      awaitSessionEchoes()
+      recordedUpTo = received.lastSeq(address)
+      handle = nextHandle
       nextHandle += 1
       sendFrame(described(Desc.Attach, s"graft-rcv-$handle", UInt(handle),
         java.lang.Boolean.TRUE, null, null,
         Described(ULong(Desc.Source), Vector(address, null, null, null,
           java.lang.Boolean.FALSE, null, null,
-          amqpWireMap(Sym(FromSeqFilter) -> fromExclusive)))))
+          amqpWireMap(Sym(FromSeqFilter) -> last)))))
       await(Desc.Attach)
       sendFrame(described(Desc.Flow, UInt(0L), UInt(65535L), UInt(0L),
         UInt(65535L), UInt(handle), UInt(0L),
-        UInt(toInclusive - fromExclusive), UInt(0L), java.lang.Boolean.TRUE))
-      val results = Vector.newBuilder[(Long, AmqpMessage, Long)]
-      val ledger = received.getOrElseUpdate(address, mutable.ArrayBuffer())
-      // reassembly keyed by sending link handle (§2.6.14: multi-frame
-      // deliveries may interleave across links; continuations carry the
-      // handle but may omit the delivery-id). Single-frame transfers —
-      // the overwhelmingly common case — bypass the buffer entirely:
-      // this loop decodes the whole drain slice, so a per-message
-      // byte-boxing buffer is measurable at 100k messages.
-      val chunks = mutable.Map[Long, (Long, Writer)]()
-      def complete(did: Long, payload: Reader): Unit = {
-        val (msg, danns) = decodeTransferPayload(payload)
-        val seq = danns.collectFirst { case (SeqAnnotation, v) => asLong(v) }
-          .getOrElse(throw new IllegalStateException("transfer without seq annotation"))
-        val ts = danns.collectFirst { case (TsAnnotation, v) => asLong(v) }.getOrElse(0L)
-        results += ((seq, msg, ts))
-        if (ledger.isEmpty || ledger.last._2 < seq) ledger += ((did, seq))
-      }
-      var draining = true
-      while (draining) {
-        val f = readFrame(in)
-        descriptorCode(f.performative) match {
-          case Desc.Transfer =>
-            val sndHandle = asLong(field(f.performative, 0))
-            val more = asBool(field(f.performative, 5))
-            chunks.get(sndHandle) match {
-              case Some((did, b)) =>
-                f.appendPayload(b)
-                if (!more) { chunks.remove(sndHandle); complete(did, b.reader) }
-              case None =>
-                val did = asLong(field(f.performative, 1))
-                if (!more) complete(did, f.payloadReader) // fast path: decoded in place
-                else {
-                  val b = new Writer(f.payloadLength * 2)
-                  f.appendPayload(b)
-                  chunks(sndHandle) = (did, b)
-                }
-            }
-          case Desc.Flow => draining = false // drain confirmed: slice done
-          case other =>
-            throw new IllegalStateException(f"unexpected 0x$other%02x during drain")
+        UInt(toInclusive - last), UInt(0L), java.lang.Boolean.TRUE))
+    }
+
+    /** Read up to the next whole delivery and decode it into `ready`;
+      * false at the flow echo that ends the slice. */
+    private def pull(): Boolean = {
+      if (handle < 0) attach()
+      while (true) {
+        val bs = readFrameBytes(in)
+        val th = head
+        val payloadEnd = bs.length
+        val isTransfer = readTransferHead(bs, th) || {
+          val f = decodeFrame(bs)
+          descriptorCode(f.performative) match {
+            case Desc.Transfer =>
+              th.handle = asLong(field(f.performative, 0))
+              th.deliveryId = field(f.performative, 1) match { case null => -1L; case v => asLong(v) }
+              th.more = asBool(field(f.performative, 5))
+              th.payloadStart = payloadEnd - f.payloadLength
+              true
+            case Desc.Flow =>
+              sendFrame(described(Desc.Detach, UInt(handle), java.lang.Boolean.TRUE))
+              await(Desc.Detach)
+              end()
+              return false
+            case other =>
+              throw new IllegalStateException(f"unexpected 0x$other%02x during drain")
+          }
+        }
+        if (isTransfer && !skipping) {
+          if (th.handle != handle)
+            throw new IllegalStateException(s"transfer on handle ${th.handle} during a drain on $handle")
+          if (partial == null && !th.more) {
+            deliver(th.deliveryId, new Reader(bs, th.payloadStart, payloadEnd))
+            return true
+          }
+          if (partial == null) {
+            partial = new Writer((payloadEnd - th.payloadStart) * 2)
+            partialId = th.deliveryId
+          }
+          partial.raw(bs, th.payloadStart, payloadEnd - th.payloadStart)
+          if (!th.more) {
+            val whole = partial
+            partial = null
+            deliver(partialId, whole.reader)
+            return true
+          }
         }
       }
-      sendFrame(described(Desc.Detach, UInt(handle), java.lang.Boolean.TRUE))
-      await(Desc.Detach)
-      results.result()
+      false
+    }
+
+    private def deliver(did: Long, payload: Reader): Unit = {
+      val msg = anns.decode(payload)
+      if (!anns.hasSeq) throw new IllegalStateException("transfer without seq annotation")
+      val seq = anns.seq
+      if (seq > recordedUpTo) { received.add(address, did, seq); recordedUpTo = seq }
+      last = seq
+      ready = (seq, msg, if (anns.hasTs) anns.ts else 0L)
     }
   }
-
-  /** Drop the per-connection disposition ledger — called when a pooled
-    * partition-reader connection is returned (readers fetch, never
-    * settle; without this the ledger grows across every pooled reuse). */
-  private[streaming] def forgetDeliveries(): Unit = synchronized { received.clear() }
 
   override def settle(address: String, upTo: Long): Unit = call {
     // dispositions for the delivery-ids this connection received (the
     // wire-native path); contiguous did runs become one frame each
-    val ledger = received.getOrElseUpdate(address, mutable.ArrayBuffer())
-    val prefix = ledger.takeWhile(_._2 <= upTo)
-    if (prefix.nonEmpty) {
-      var runStart = prefix.head._1
-      var runEnd = runStart
-      def flush(): Unit =
-        sendFrame(described(Desc.Disposition, java.lang.Boolean.TRUE,
-          UInt(runStart), UInt(runEnd), java.lang.Boolean.TRUE,
-          described(Desc.Accepted)))
-      prefix.drop(1).foreach { case (did, _) =>
-        if (did == runEnd + 1) runEnd = did
-        else { flush(); runStart = did; runEnd = did }
-      }
-      flush()
-      ledger.remove(0, prefix.length)
-    }
+    val highest = received.settle(address, upTo, (first, last) =>
+      sendFrame(described(Desc.Disposition, java.lang.Boolean.TRUE,
+        UInt(first), UInt(last), java.lang.Boolean.TRUE, described(Desc.Accepted))))
     // restart fallback: seqs delivered on a previous connection have no
     // delivery-id here — an attach-property settle covers the remainder
-    if (prefix.isEmpty || prefix.last._2 < upTo)
+    if (highest < upTo)
       probe(address, amqpWireMap(Sym(SettleUpToProp) -> upTo))
     ()
   }
@@ -664,11 +803,14 @@ class Amqp10Endpoint(host: String, port: Int,
     ()
   }
 
+  /** Close the connection; an open drain ends with it (no close
+    * handshake then: the rest of its slice is still on the wire). */
   override def close(): Unit = synchronized {
-    if (sock != null) {
-      try { sendFrame(described(Desc.Close)); await(Desc.Close) }
+    if (openDrain != null) openDrain.abandon()
+    else if (sock != null) {
+      try { awaitSessionEchoes(); sendFrame(described(Desc.Close)); await(Desc.Close) }
       catch { case _: Throwable => () }
-      try sock.close() catch { case _: Throwable => () }
+      dropSocket()
     }
   }
 }

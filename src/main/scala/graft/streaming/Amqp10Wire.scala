@@ -137,7 +137,10 @@ private[streaming] object Amqp10Wire {
   /** Read one frame (4-byte size prefix + body). Empty frames — a bare
     * 8-byte header with no body, the §2.4.5 keepalive real brokers emit
     * under an idle-timeout — carry no performative and are skipped. */
-  def readFrame(in: DataInputStream): Frame = {
+  def readFrame(in: DataInputStream): Frame = decodeFrame(readFrameBytes(in))
+
+  /** One non-empty frame's bytes, size prefix included, undecoded. */
+  def readFrameBytes(in: DataInputStream): Array[Byte] = {
     while (true) {
       val size = in.readInt()
       require(size >= 8 && size <= MaxFrameSize * 2, s"bad frame size $size")
@@ -146,9 +149,127 @@ private[streaming] object Amqp10Wire {
       all(2) = (size >>> 8).toByte; all(3) = size.toByte
       in.readFully(all, 4, size - 4)
       val doff = all(4) & 0xff
-      if (size > doff * 4) return decodeFrame(all) // non-empty body: a real performative
+      if (size > doff * 4) return all // non-empty body: a real performative
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  private val SeqKey = SeqAnnotation.getBytes(UTF_8)
+  private val TsKey = TsAnnotation.getBytes(UTF_8)
+
+  /** The two delivery annotations the transport reads per message,
+    * [[SeqAnnotation]] and [[TsAnnotation]], taken from the section by
+    * comparing key bytes: no entry vector and no key string is built.
+    * Other entries are read and dropped. One instance serves a whole
+    * stream of deliveries; [[decode]] resets it per message. */
+  final class TransportAnnotations extends (Reader => Unit) {
+    var seq = 0L
+    var hasSeq = false
+    var ts = 0L
+    var hasTs = false
+
+    /** The payload's message; its transport annotations land here. */
+    def decode(payload: Reader): AmqpMessage = {
+      hasSeq = false
+      hasTs = false
+      decodeSections(payload, this)
+    }
+
+    def apply(r: Reader): Unit = {
+      var pairs = readMapPairs(r)
+      while (pairs > 0) {
+        if (r.takeKey(SeqKey)) { seq = readLong(r); hasSeq = true }
+        else if (r.takeKey(TsKey)) { ts = readLong(r); hasTs = true }
+        else { readValue(r); readValue(r) }
+        pairs -= 1
+      }
+    }
+  }
+
+  /** Unsettled deliveries of one session in delivery-id order, as runs:
+    * each run holds an address, its first delivery-id and the seqs sent
+    * under the ids that follow. Eight bytes a delivery, nothing boxed.
+    * Within a run ids are consecutive and seqs rise; [[add]] opens a new
+    * run when either would break. */
+  final class DeliveryLedger {
+    private final class Run(val address: String, var firstId: Long) {
+      var seqs = new Array[Long](64)
+      var from = 0 // seqs before this index are settled and dropped
+      var n = 0
+      def nextId: Long = firstId + n - from
+    }
+    private val runs = mutable.ArrayBuffer[Run]()
+    private var count = 0L
+
+    /** Deliveries held. */
+    def size: Long = count
+
+    def add(address: String, id: Long, seq: Long): Unit = {
+      var r = if (runs.isEmpty) null else runs.last
+      if (r == null || r.address != address || r.nextId != id || r.seqs(r.n - 1) >= seq) {
+        r = new Run(address, id)
+        runs += r
+      }
+      if (r.n == r.seqs.length) r.seqs = java.util.Arrays.copyOf(r.seqs, r.n * 2)
+      r.seqs(r.n) = seq
+      r.n += 1
+      count += 1
+    }
+
+    /** Highest seq of `address` recorded, or Long.MinValue. */
+    def lastSeq(address: String): Long = {
+      var i = runs.length - 1
+      while (i >= 0) {
+        val r = runs(i)
+        if (r.address == address) return r.seqs(r.n - 1)
+        i -= 1
+      }
+      Long.MinValue
+    }
+
+    /** Per address, the highest seq delivered under an id in
+      * [first, last]. */
+    def highestIn(first: Long, last: Long): Map[String, Long] = {
+      var out = Map.empty[String, Long]
+      runs.foreach { r =>
+        val lo = math.max(first, r.firstId)
+        val hi = math.min(last, r.nextId - 1)
+        if (lo <= hi) {
+          val s = r.seqs(r.from + (hi - r.firstId).toInt)
+          if (out.get(r.address).forall(_ < s)) out += r.address -> s
+        }
+      }
+      out
+    }
+
+    /** Drop the deliveries of `address` with seq <= `upTo`. Their ids go
+      * to `ids` as ranges of consecutive ids (first, last), in order.
+      * Answers the highest seq dropped, or Long.MinValue. */
+    def settle(address: String, upTo: Long,
+        ids: (Long, Long) => Unit = (_, _) => ()): Long = {
+      var highest = Long.MinValue
+      var first, last = -2L
+      runs.foreach { r =>
+        if (r.address == address && r.seqs(r.from) <= upTo) {
+          var k = r.from
+          while (k < r.n && r.seqs(k) <= upTo) k += 1
+          highest = math.max(highest, r.seqs(k - 1))
+          if (r.firstId != last + 1) {
+            if (first >= 0) ids(first, last)
+            first = r.firstId
+          }
+          last = r.firstId + (k - r.from) - 1
+          count -= k - r.from
+          r.firstId = last + 1
+          r.from = k
+        }
+      }
+      if (first >= 0) ids(first, last)
+      runs.filterInPlace(r => r.from < r.n)
+      highest
+    }
+
+    def clear(): Unit = { runs.clear(); count = 0L }
   }
 
   def readHeader(in: DataInputStream): Array[Byte] = {
@@ -284,6 +405,17 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
     * the port frees for a restart without lingering half-open peers). */
   private val conns = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
 
+  /** Every live session's ledger of pushed, unsettled deliveries. */
+  private val ledgers = java.util.concurrent.ConcurrentHashMap.newKeySet[DeliveryLedger]()
+
+  /** Deliveries pushed and not yet settled, over every live session:
+    * all the per-delivery state this server holds (test hook). */
+  private[streaming] def unsettledDeliveries: Long = {
+    var n = 0L
+    ledgers.forEach(l => n += l.size)
+    n
+  }
+
   private val acceptor = new Thread(() => {
     while (running.get()) {
       try {
@@ -324,6 +456,9 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
     // hoisted so the close(error) path can flush replies still sitting
     // in the lazy-flushed buffer before announcing the close
     val out = new BufferedOutputStream(sock.getOutputStream)
+    // per session (channel): the deliveries pushed and not yet settled.
+    // Ids are session-scoped (§2.5), so a session's end drops its ledger.
+    val pushed = mutable.Map[Int, DeliveryLedger]()
     try {
       sock.setTcpNoDelay(true)
       val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
@@ -440,8 +575,11 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
       // links this server refused (attach answered by detach(error)):
       // the peer's answering detach closes them without another echo
       val refused = mutable.Set[(Int, Long)]()
-      // (channel, delivery-id) -> (address, seq) for transfers we pushed
-      val outgoing = mutable.Map[(Int, Long), (String, Long)]()
+      def ledger(ch: Int): DeliveryLedger = pushed.getOrElseUpdate(ch, {
+        val l = new DeliveryLedger
+        ledgers.add(l)
+        l
+      })
       val nextOutgoingIds = mutable.Map[Int, Long]().withDefaultValue(0L)
       // multi-frame transfer reassembly (keyed by (channel, handle) —
       // §2.6.14 lets a peer interleave multi-frame deliveries across
@@ -459,17 +597,20 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
       // Drop ledger entries for pushes the broker has now settled — a
       // re-fetch of an already-ledgered seq gets a NEW delivery-id the
       // receiver never settles by id, so settlement by address is the
-      // only bound that keeps `outgoing` from growing with re-reads.
+      // only bound that keeps the ledgers from growing with re-reads.
       def pruneSettled(a: String): Unit = {
         val upTo = backing.settledUpTo(a)
-        outgoing.filterInPlace { case (_, (a2, s2)) => a2 != a || s2 > upTo }
+        pushed.values.foreach(_.settle(a, upTo))
       }
+      val transportAnns = new TransportAnnotations
 
       def pushTransfers(ch: Int, handle: Long, address: String, from: Long, to: Long): Unit = {
+        val unsettled = ledger(ch)
+        var nextId = nextOutgoingIds(ch)
         backing.fetch(address, from, to).foreach { case (seq, msg, ts) =>
-          val did = nextOutgoingIds(ch)
-          nextOutgoingIds(ch) = did + 1
-          outgoing((ch, did)) = (address, seq)
+          val did = nextId
+          nextId += 1
+          unsettled.add(address, did, seq)
           val tag = seq.toString.getBytes(UTF_8)
           writeDelivery(frames, ch, peerPayloadChunk, more =>
             described(Desc.Transfer, UInt(handle), UInt(did), tag, UInt(0L),
@@ -482,6 +623,7 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
           // writes, the flush below seals the slice
           if (frames.size >= WriteChunk) frames.drainTo(out)
         }
+        nextOutgoingIds(ch) = nextId
         frames.drainTo(out)
         out.flush()
       }
@@ -687,9 +829,9 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
             }
             if (!more) {
               val did = asLong(field(first, 1))
-              val (msg, danns) = decodeTransferPayload(payload)
-              val tsUs = danns.collectFirst { case (TsAnnotation, v) => asLong(v) }
-                .getOrElse(System.currentTimeMillis() * 1000L)
+              val msg = transportAnns.decode(payload)
+              val tsUs =
+                if (transportAnns.hasTs) transportAnns.ts else System.currentTimeMillis() * 1000L
               val txnState = field(first, 7) match {
                 case d: Described if descriptorCode(d) == Desc.TransactionalState =>
                   Some(new String(field(d, 0).asInstanceOf[Array[Byte]], UTF_8))
@@ -773,17 +915,11 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
             if (asBool(field(perf, 0)) && asBool(field(perf, 3))) {
               val first = asLong(field(perf, 1))
               val last = field(perf, 2) match { case null => first; case v => asLong(v) }
-              val covered = outgoing.filter { case ((c, did), _) =>
-                c == ch && did >= first && did <= last }
-              val settledUpTo = covered.values.groupBy(_._1).map { case (a, seqs) =>
-                backing.settle(a, seqs.map(_._2).max)
-                a -> backing.settledUpTo(a)
-              }
-              // one ledger pass for all touched addresses; also clears
-              // stale ids that re-fetches assigned to old seqs
-              if (settledUpTo.nonEmpty)
-                outgoing.filterInPlace { case (_, (a2, s2)) =>
-                  settledUpTo.get(a2).forall(s2 > _) }
+              pushed.get(ch).foreach(_.highestIn(first, last).foreach { case (a, seq) =>
+                backing.settle(a, seq)
+                // also clears stale ids that re-fetches assigned to old seqs
+                pruneSettled(a)
+              })
             }
           case Desc.Detach =>
             val handle = asLong(field(perf, 0))
@@ -798,7 +934,7 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
             links.filterInPlace { case ((c, _), _) => c != ch }
             refused.filterInPlace { case (c, _) => c != ch }
             pending.filterInPlace { case ((c, _), _) => c != ch }
-            outgoing.filterInPlace { case ((c, _), _) => c != ch }
+            pushed.remove(ch).foreach(ledgers.remove)
             nextOutgoingIds.remove(ch)
             amqp(described(Desc.End))
           case Desc.Close =>
@@ -848,6 +984,9 @@ class Amqp10Server(backing: InMemoryAmqpBroker, bindPort: Int = 0,
         } catch { case _: Throwable => () }
       case _: Throwable => () // pre-AMQP-layer failure: just close
     }
-    finally sock.close()
+    finally {
+      pushed.values.foreach(ledgers.remove)
+      sock.close()
+    }
   }
 }

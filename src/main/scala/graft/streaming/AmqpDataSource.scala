@@ -490,9 +490,24 @@ object AmqpPushedFilters {
     // application property — stringified exactly like the map column
     // (String.valueOf), so a predicate moved from the map lookup to the
     // lifted column compares the same text
-    case prop => msg.applicationProperties.collectFirst {
-      case (k, v) if k == prop => String.valueOf(v)
+    case prop => property(msg, prop) match {
+      case Absent => None
+      case v => Some(String.valueOf(v))
     }
+  }
+
+  /** Marks a property the message does not carry. */
+  private object Absent
+
+  /** The first value of application property `name`, or [[Absent]]:
+    * a plain loop, since readers run it per row and lifted column. */
+  private def property(msg: AmqpMessage, name: String): Any = {
+    val it = msg.applicationProperties.iterator
+    while (it.hasNext) {
+      val e = it.next()
+      if (e._1 == name) return e._2
+    }
+    Absent
   }
 
   /** Typed (long) lift of an application property: the property's
@@ -503,9 +518,7 @@ object AmqpPushedFilters {
     * coercing text would make the pushed range and the map column
     * disagree. */
   def longField(msg: AmqpMessage, name: String): Option[Long] =
-    msg.applicationProperties.collectFirst {
-      case (k, v) if k == name => v
-    }.flatMap {
+    property(msg, name) match {
       case l: Long => Some(l)
       case i: Int => Some(i.toLong)
       case s: Short => Some(s.toLong)
@@ -1396,11 +1409,12 @@ class AmqpReaderFactory(fields: Array[String] = AmqpEnvelope.schema.fieldNames,
 /** Pull-based reader for one (start, end] slice of a link's sequence.
   * The bounded handoff the reference needed between the Vert.x event
   * loop and Receiver.store (AMQPFlowController.scala:159-161) is
-  * structural here: the endpoint buffers unsettled deliveries, the
-  * reader pulls the planned slice in `chunkRows` chunks — the heap
-  * holds one chunk, never the slice (the memory bound that lets a
-  * batch sub-partition stay large without the reader materializing it
-  * whole).
+  * structural here: the reader pulls the planned slice in `chunkRows`
+  * chunks, each one credit grant. On a socket endpoint a chunk is an
+  * [[Amqp10Endpoint.drain]] that decodes one delivery per `next()`, so
+  * the heap holds the socket buffer, not a decoded chunk; on `mem://`
+  * it is one fetch (the memory bound that lets a batch sub-partition
+  * stay large without the reader materializing it whole).
   *
   * `survivorLimit` is the partial-LIMIT-push contract: with pushed
   * predicates the planner cannot pre-cut windows, so the reader stops
@@ -1417,10 +1431,12 @@ class AmqpPartitionReader(p: AmqpInputPartition, fields: Array[String],
   // A connection of this reader's own (pooled; mem:// = the shared
   // broker): N link-partitions drain N sockets in parallel instead of
   // serializing on the JVM's one cached client — the per-executor-link
-  // topology a cluster runs. Returned to the pool in close() — or
-  // CLOSED there instead if a fetch failed (the connection is then
-  // known-dead even after the client's one re-dial retry; pooling it
-  // would hand the next borrower a corpse).
+  // topology a cluster runs. Returned to the pool in close() once its
+  // last drain is read to the end (a reader that stopped early, under a
+  // pushed LIMIT, reads the rest off the wire undecoded) — CLOSED there
+  // instead if a fetch failed (the connection is then known-dead even
+  // after the client's one re-dial retry; pooling it would hand the
+  // next borrower a corpse).
   private val endpointConn = AmqpEndpointRegistry.readerEndpoint(p.endpoint)
   private var fetchFailed = false
 
@@ -1446,7 +1462,7 @@ class AmqpPartitionReader(p: AmqpInputPartition, fields: Array[String],
   override def next(): Boolean = {
     if (survivors >= maxSurvivors) return false
     while (true) {
-      while (chunk.hasNext) {
+      while (hasNextInChunk) {
         val c = chunk.next()
         if (unfiltered || pushed.matches(c._2, c._3)) {
           cur = c; survivors += 1; return true
@@ -1457,12 +1473,18 @@ class AmqpPartitionReader(p: AmqpInputPartition, fields: Array[String],
       val to = if (nextFrom > p.toInclusive - chunkRows) p.toInclusive
                else nextFrom + chunkRows
       chunk =
-        try endpointConn.fetch(p.address, nextFrom, to).iterator
-        catch { case e: Throwable => fetchFailed = true; throw e }
+        try endpointConn match {
+          case c: Amqp10Endpoint => c.drain(p.address, nextFrom, to)
+          case ep => ep.fetch(p.address, nextFrom, to).iterator
+        } catch { case e: Throwable => fetchFailed = true; throw e }
       nextFrom = to
     }
     false
   }
+
+  // a drain reads the wire inside hasNext
+  private def hasNextInChunk: Boolean =
+    try chunk.hasNext catch { case e: Throwable => fetchFailed = true; throw e }
 
   // Column-name → accessor tag resolved ONCE per reader (by NAME, so
   // the mapping cannot drift if the schema order changes); the row loop
@@ -1492,12 +1514,21 @@ class AmqpPartitionReader(p: AmqpInputPartition, fields: Array[String],
   }
   private val propsTyped: Array[(String, DataType)] = propertyCols.toArray
 
-  private def utf(o: Option[String]) = o.map(UTF8String.fromString).orNull
+  // per row and column: no closure, no intermediate collection
+  private def utf(o: Option[String]) = if (o.isEmpty) null else UTF8String.fromString(o.get)
   private def smap(entries: Seq[(String, Any)]) =
     if (entries.isEmpty) null
-    else new ArrayBasedMapData(
-      new GenericArrayData(entries.map(e => UTF8String.fromString(e._1)).toArray[Any]),
-      new GenericArrayData(entries.map(e => UTF8String.fromString(String.valueOf(e._2))).toArray[Any]))
+    else {
+      val keys = new Array[Any](entries.length)
+      val values = new Array[Any](entries.length)
+      var i = 0
+      entries.foreach { e =>
+        keys(i) = UTF8String.fromString(e._1)
+        values(i) = UTF8String.fromString(String.valueOf(e._2))
+        i += 1
+      }
+      new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(values))
+    }
 
   override def get(): InternalRow = {
     val (_, msg, tsMicros) = cur
@@ -1537,9 +1568,14 @@ class AmqpPartitionReader(p: AmqpInputPartition, fields: Array[String],
     new GenericInternalRow(arr)
   }
 
-  override def close(): Unit =
+  override def close(): Unit = {
+    chunk match {
+      case d: Amqp10Endpoint#Drain => d.close()
+      case _ => ()
+    }
     if (fetchFailed)
       AmqpEndpointRegistry.discardReaderEndpoint(p.endpoint, endpointConn)
     else
       AmqpEndpointRegistry.releaseReaderEndpoint(p.endpoint, endpointConn)
+  }
 }

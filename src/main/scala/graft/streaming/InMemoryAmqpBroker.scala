@@ -844,11 +844,11 @@ object AmqpEndpointRegistry {
 
   def releaseReaderEndpoint(endpoint: String, ep: AmqpEndpoint): Unit = ep match {
     case c: Amqp10Endpoint if isSocket(endpoint) =>
-      // readers never settle, so the connection's disposition ledger
-      // would grow forever across pooled reuses — drop it (the driver's
-      // settle path uses its own connection's attach-property fallback,
-      // never this ledger)
-      c.forgetDeliveries()
+      // readers never settle, so both peers' delivery ledgers would grow
+      // forever across pooled reuses — a fresh session drops them (the
+      // driver's settle path uses its own connection's attach-property
+      // fallback, never a reader's ledger)
+      c.recycleSession()
       if (!readerPool(endpoint).offer(c)) c.close()
     case _ => ()
   }

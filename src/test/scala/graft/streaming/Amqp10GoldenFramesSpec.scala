@@ -563,6 +563,58 @@ class Amqp10GoldenFramesSpec extends AnyFunSuite {
     } finally { sock.close(); server.close() }
   }
 
+  test("golden: a server-pushed drain transfer past 255 takes the uint and long forms") {
+    val backing = new InMemoryAmqpBroker
+    (1 to 300).foreach(_ => backing.send("lg", AmqpMessage(body = AmqpValueBody("v")), 5L))
+    // transfer(handle 0, delivery-id 299 as uint 0x70, tag "300", format
+    // 0, settled false, more false): list8 of 15 bytes, 6 fields; then
+    // delivery annotations with x-graft-seq 300 as long 0x81 and
+    // x-graft-ts-us 5 as smalllong, and the amqp-value body "v"
+    val want = hex("""00 00 00 4f 02 00 00 00
+                      00 53 14 c0 0f 06 43 70 00 00 01 2b a0 03 33 30 30 43 42 42
+                      00 53 71 c1 28 04
+                        a3 0b 78 2d 67 72 61 66 74 2d 73 65 71  81 00 00 00 00 00 00 01 2c
+                        a3 0d 78 2d 67 72 61 66 74 2d 74 73 2d 75 73  55 05
+                      00 53 77 a1 01 76""")
+    val server = new Amqp10Server(backing)
+    val sock = new Socket("127.0.0.1", server.port)
+    try {
+      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+      val out = new BufferedOutputStream(sock.getOutputStream)
+      def send(perf: Described): Unit =
+        writeAll(out, encodeFrame(Frame(FrameTypeAmqp, 0, perf, Array.emptyByteArray)))
+      writeAll(out, HeaderAmqp)
+      in.readFully(new Array[Byte](8))
+      send(described(Desc.Open, "golden")); Amqp10Wire.readFrame(in)
+      send(described(Desc.Begin, null, UInt(0L), UInt(100L), UInt(100L))); Amqp10Wire.readFrame(in)
+      send(described(Desc.Attach, "rcv", UInt(0L), java.lang.Boolean.TRUE, null, null,
+        Described(ULong(Desc.Source), Vector("lg", null, null, null,
+          java.lang.Boolean.FALSE, null, null,
+          Amqp10Wire.amqpWireMap(Sym(Amqp10Wire.FromSeqFilter) -> 0L)))))
+      Amqp10Wire.readFrame(in)
+      send(described(Desc.Flow, UInt(0L), UInt(65535L), UInt(0L), UInt(65535L),
+        UInt(0L), UInt(0L), UInt(300L), UInt(0L), java.lang.Boolean.TRUE))
+      val got = Iterator.continually(Amqp10Wire.readFrameBytes(in))
+        .takeWhile(f => descriptorCode(decodeFrame(f).performative) != Desc.Flow).toVector
+      assert(got.length == 300)
+      assertBytes(got.last, want, "delivery 299")
+    } finally { sock.close(); server.close() }
+    // the receiver's lean read of the same bytes
+    val head = new TransferHead
+    assert(readTransferHead(want, head))
+    assert(head.handle == 0L && head.deliveryId == 299L && !head.more && head.payloadStart == 28)
+    val anns = new Amqp10Wire.TransportAnnotations
+    val msg = anns.decode(new Reader(want, head.payloadStart, want.length))
+    assert(anns.hasSeq && anns.seq == 300L && anns.hasTs && anns.ts == 5L)
+    assert(msg == AmqpMessage(body = AmqpValueBody("v")))
+    // the same transfer with its descriptor as a ulong (0x80) is left to
+    // the general decode, which reads the same fields
+    val ulongForm = want.take(8) ++ hex("00 80 00 00 00 00 00 00 00 14") ++ want.drop(11)
+    java.nio.ByteBuffer.wrap(ulongForm).putInt(ulongForm.length)
+    assert(!readTransferHead(ulongForm, head))
+    assert(field(decodeFrame(ulongForm).performative, 1) == UInt(299L))
+  }
+
   // ------------------------------------------- malformed input, in place
   test("malformed: a size field past the end of the frame throws, never reads on") {
     val bad = Seq(
