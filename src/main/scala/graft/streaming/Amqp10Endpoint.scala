@@ -553,10 +553,14 @@ class Amqp10Endpoint(host: String, port: Int,
     }
   }
 
-  /** The slice, read whole: [[drain]] run to its end. */
+  /** The slice, read whole: [[drain]] run to its end under the
+    * connection's monitor, so other threads calling this connection
+    * (the JVM's one cached client serializes all its callers) wait for
+    * the fetch instead of meeting its open drain. */
   override def fetch(address: String, fromExclusive: Long,
-      toInclusive: Long): Seq[(Long, AmqpMessage, Long)] =
+      toInclusive: Long): Seq[(Long, AmqpMessage, Long)] = synchronized {
     drain(address, fromExclusive, toInclusive).toVector
+  }
 
   /** Open a pull-based drain of the slice (fromExclusive, toInclusive].
     * Nothing is read until the caller asks: each `hasNext` reads the

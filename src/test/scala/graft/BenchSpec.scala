@@ -13,11 +13,16 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.queriesObject("""{"queries":{}}""") == Map.empty)
   }
 
-  test("queriesObject reads the committed results file whole") {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("bench_results.json")))
-    val q = Bench.queriesObject(txt)
-    assert(q.size == 273 && q.values.count(_ > 0) == 259)
+  test("queriesObject reads a results line of several hundred entries whole") {
+    // the shape Bench writes: every 20th query skipped (-1), and nested
+    // objects with braces after the queries object
+    val entries = (0 until 300).map(i => s"q_$i" -> (if (i % 20 == 0) -1.0 else i * 0.01 + 0.5))
+    val line = entries.map { case (k, v) => s""""$k":$v""" }
+      .mkString("""{"metric":"total","value":42.0,"timed":285,"skipped":15,"queries":{""",
+        ",", """},"errors":{"q_0":"skipped: {budget}"},"load1":{"start":1.0,"end":0.5}}""")
+    val q = Bench.queriesObject(line)
+    assert(q == entries.toMap)
+    assert(q.size == 300 && q.values.count(_ > 0) == 285)
   }
 
   test("queriesObject refuses a truncated or missing object instead of reading part of it") {

@@ -121,6 +121,27 @@ class Amqp10DrainSpec extends AnyFunSuite {
     }
   }
 
+  test("fetch on the shared client holds it: another thread's calls wait, none fails") {
+    withServer { (backing, _, ep) =>
+      preload(backing, "shared", 20000, _ => AmqpMessage(body = AmqpValueBody("x" * 200)))
+      val client = AmqpEndpointRegistry.endpoint(ep)
+      @volatile var fetching = true
+      var seen = 0
+      var failure: Throwable = null
+      val other = new Thread(() =>
+        try while (fetching) {
+          assert(client.latestSeq("shared") == 20000L)
+          seen += 1
+        } catch { case e: Throwable => failure = e })
+      other.start()
+      try (1 to 5).foreach { i =>
+        assert(client.fetch("shared", 0L, 20000L).map(_._1) == (1L to 20000L), s"fetch $i")
+      } finally { fetching = false; other.join() }
+      assert(failure == null, s"the other thread's call failed: $failure")
+      assert(seen > 0)
+    }
+  }
+
   test("while a drain is open, every other operation on its connection throws") {
     withServer { (backing, _, ep) =>
       preload(backing, "own", 200)
