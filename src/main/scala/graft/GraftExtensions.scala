@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.expressions.{CharFoldHash, HyperplaneSig, SimhashPack, SimhashSig, VectorDot, WinnowFingerprints, WordShingleSet}
+import graft.expressions.Functions
 
 /** Session-extensions entry point: makes the engine's native expressions
   * first-class SQL functions in any session, via
@@ -15,9 +14,10 @@ import graft.expressions.{CharFoldHash, HyperplaneSig, SimhashPack, SimhashSig, 
   * }}}
   *
   * (or `.withExtensions(new GraftExtensions)` on a builder). This is the
-  * idiomatic library integration path — the per-session
-  * `register(spark)` helpers on the expression companions remain for
-  * programmatic use and are what the query objects call internally.
+  * idiomatic library integration path: every function of
+  * [[graft.expressions.Functions]] is injected once. The per-session
+  * `register(spark)` helpers on the expression companions add a function
+  * only to a session that lacks it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -28,53 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // declarative window top-k -> bounded TopKAgg aggregate (see
     // graft.plans.TopKRewrite for the exact guard conditions)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite())
-    ext.injectFunction((FunctionIdentifier("char_fold_hash"),
-      info("char_fold_hash", "char_fold_hash(str) - portable fold hash mod 2^31-1"),
-      (exprs: Seq[Expression]) => CharFoldHash(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(a, b) - strict left-to-right f64 dot product"),
-      (exprs: Seq[Expression]) => VectorDot(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("hyperplane_sig"),
-      info("hyperplane_sig", "hyperplane_sig(v, nBits) - random-hyperplane LSH signature"),
-      (exprs: Seq[Expression]) => HyperplaneSig(exprs.head, exprs(1) match {
-        case Literal(bits: Int, IntegerType) => bits
-        case other => throw new IllegalArgumentException(
-          s"hyperplane_sig(v, nBits) needs a literal bit count, got $other")
-      })))
-    ext.injectFunction((FunctionIdentifier("simhash_pack"),
-      info("simhash_pack", "simhash_pack(h) - 62 packed SimHash indicator lanes"),
-      (exprs: Seq[Expression]) => SimhashPack(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("simhash_sig"),
-      info("simhash_sig", "simhash_sig(lanes, n) - majority-vote SimHash signature"),
-      (exprs: Seq[Expression]) => SimhashSig(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("word_shingle_set"),
-      info("word_shingle_set", "word_shingle_set(text, n) - distinct word n-gram set"),
-      (exprs: Seq[Expression]) => WordShingleSet(exprs.head, exprs(1) match {
-        case Literal(n: Int, IntegerType) => n
-        case other => throw new IllegalArgumentException(
-          s"word_shingle_set(text, n) needs a literal n, got $other")
-      })))
-    ext.injectFunction((FunctionIdentifier("hilbert_d"),
-      info("hilbert_d", "hilbert_d(x, y) - Hilbert-curve index on the 1024x1024 grid"),
-      (exprs: Seq[Expression]) =>
-        graft.expressions.HilbertIndex(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("topk_agg"),
-      info("topk_agg", "topk_agg(score, id, k) - bounded per-group top-k buffer"),
-      (exprs: Seq[Expression]) =>
-        graft.expressions.TopKAgg(exprs.head, exprs(1), exprs(2) match {
-          case Literal(kk: Int, IntegerType) => kk
-          case other => throw new IllegalArgumentException(
-            s"topk_agg(score, id, k) needs a literal k, got $other")
-        })))
-    ext.injectFunction((FunctionIdentifier("winnow_fps"),
-      info("winnow_fps", "winnow_fps(text, k, w) - winnowing (fp, pos) fingerprint selection"),
-      (exprs: Seq[Expression]) => {
-        def litInt(e: Expression): Int = e match {
-          case Literal(n: Int, IntegerType) => n
-          case other => throw new IllegalArgumentException(
-            s"winnow_fps(text, k, w) needs literal ints, got $other")
-        }
-        WinnowFingerprints(exprs.head, litInt(exprs(1)), litInt(exprs(2)))
-      }))
+    Functions.All.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), info(f.name, f.usage), f.build)))
   }
 }

@@ -39,27 +39,47 @@ object Measure {
 
     // Decomposition aid (guide §1.5/§7.1, the UI is disabled here):
     // SPARK_GRAFT_JOBLOG=1 prints every Spark job's relative start, wall
-    // duration and description to stderr, so a gate's wall-clock can be
-    // split into jobs vs gaps (sleeps, driver-side work, streaming
-    // choreography) without instrumenting each operator.
+    // duration, task count, summed executor run and CPU time, and
+    // description to stderr, so a gate's wall-clock can be split into
+    // jobs vs gaps (sleeps, work between jobs, streaming choreography),
+    // and a job's wall into task time, without instrumenting each operator.
     if (sys.env.get("SPARK_GRAFT_JOBLOG").contains("1")) {
       val epoch = System.nanoTime()
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         private val starts =
           new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+        private val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+        // per job: tasks, executor run ms, executor CPU ns
+        private val taskSums = new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
         override def onJobStart(
             js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
           val desc = Option(js.properties)
             .flatMap(p => Option(p.getProperty("spark.job.description")))
             .getOrElse("")
+          js.stageIds.foreach(jobOfStage.put(_, js.jobId))
+          taskSums.put(js.jobId, new Array[Long](3))
           starts.put(js.jobId, (System.nanoTime(), desc))
         }
+        override def onTaskEnd(
+            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          for {
+            job <- Option(jobOfStage.get(te.stageId))
+            sums <- Option(taskSums.get(job))
+            m <- Option(te.taskMetrics)
+          } {
+            sums(0) += 1
+            sums(1) += m.executorRunTime
+            sums(2) += m.executorCpuTime
+          }
         override def onJobEnd(
             je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
           Option(starts.remove(je.jobId)).foreach { case (s0, desc) =>
+            val t = Option(taskSums.remove(je.jobId)).getOrElse(new Array[Long](3))
+            jobOfStage.values.removeIf(_ == je.jobId)
             System.err.println(f"[joblog] job=${je.jobId}%4d " +
               f"rel=${(s0 - epoch) / 1e9}%8.2fs " +
-              f"dur=${(System.nanoTime() - s0) / 1e9}%7.3fs $desc")
+              f"dur=${(System.nanoTime() - s0) / 1e9}%7.3fs " +
+              f"tasks=${t(0)}%4d run=${t(1)}%7dms cpu=${t(2) / 1000000}%7dms $desc")
           }
         }
         override def onStageCompleted(

@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -57,17 +57,8 @@ object CdcExpressions {
     new GenericArrayData(out.toArray)
   }
 
-  /** Register `cdc_chunks(text, w, m)` (idempotent) for expr()/SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunks", exprs => CdcChunks(exprs.head, litInt(exprs(1)), litInt(exprs(2))),
-      "built-in")
-
-  private[expressions] def litInt(e: Expression): Int = e match {
-    case Literal(n: Int, IntegerType) => n
-    case other => throw new IllegalArgumentException(
-      s"cdc_chunks(text, w, m) needs literal ints, got $other")
-  }
+  /** Register `cdc_chunks(text, w, m)` (once per session) for expr()/SQL. */
+  def register(spark: SparkSession): Unit = Functions.register(spark, "cdc_chunks")
 }
 
 case class CdcChunks(child: Expression, w: Int, m: Int) extends UnaryExpression {

@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted, megamorphic Expression.eval), which profiled 10-50x
   * slower on the dedup hot path once the JIT profile degrades in a
   * long-lived session. This expression participates in whole-stage
-  * codegen via doGenCode.
+  * codegen via doGenCode, and reads the code points straight from the
+  * UTF-8 bytes (no `String` per row).
   */
 case class CharFoldHash(child: Expression) extends UnaryExpression {
 
@@ -29,11 +30,10 @@ case class CharFoldHash(child: Expression) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
 
   override protected def nullSafeEval(input: Any): Any =
-    CharFoldHash.hash(input.asInstanceOf[UTF8String].toString)
+    CharFoldHash.hash(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.CharFoldHash.hash($c.toString());")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.expressions.CharFoldHash.hash($c);")
 
   override protected def withNewChildInternal(newChild: Expression): CharFoldHash =
     copy(child = newChild)
@@ -42,24 +42,46 @@ case class CharFoldHash(child: Expression) extends UnaryExpression {
 object CharFoldHash {
   final val P = 2147483647L
 
-  /** Shared by interpreted eval and generated code. */
-  def hash(s: String): Long = {
+  /** `x mod (2^31-1)` for 0 <= x < 2^61 by shift-and-add: 2^31 ≡ 1, so
+    * the high bits fold onto the low 31 bits and one conditional
+    * subtraction finishes. The fold step's x stays below
+    * P·131 + 0x10FFFF < 2^39. */
+  def mod(x: Long): Long = {
+    val r = (x & P) + (x >>> 31)
+    if (r >= P) r - P else r
+  }
+
+  /** Shared by interpreted eval and generated code. Text that is not
+    * valid UTF-8 is folded as Spark's `String` path sees it (each
+    * malformed sequence read as U+FFFD). */
+  def hash(text: UTF8String): Long = {
+    val s = WordTokens.valid(text)
+    val n = s.numBytes
     var h = 0L
     var i = 0
-    val n = s.length
     while (i < n) {
-      val cp = s.codePointAt(i)
-      h = (h * 131L + cp) % P
-      i += Character.charCount(cp)
+      val b = s.getByte(i) & 0xff
+      var cp = 0
+      if (b < 0x80) { cp = b; i += 1 }
+      else if (b < 0xe0) { cp = (b & 0x1f) << 6 | s.getByte(i + 1) & 0x3f; i += 2 }
+      else if (b < 0xf0) {
+        cp = (b & 0x0f) << 12 | (s.getByte(i + 1) & 0x3f) << 6 | s.getByte(i + 2) & 0x3f
+        i += 3
+      } else {
+        cp = (b & 0x07) << 18 | (s.getByte(i + 1) & 0x3f) << 12 |
+          (s.getByte(i + 2) & 0x3f) << 6 | s.getByte(i + 3) & 0x3f
+        i += 4
+      }
+      h = mod(h * 131L + cp)
     }
     h
   }
 
+  def hash(s: String): Long = hash(UTF8String.fromString(s))
+
   /** Register `char_fold_hash` in the session's function registry
-    * (idempotent) so it is usable from expr()/SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_fold_hash", exprs => CharFoldHash(exprs.head), "built-in")
+    * (once per session) so it is usable from expr()/SQL. */
+  def register(spark: SparkSession): Unit = Functions.register(spark, "char_fold_hash")
 
   /** Column over a named input column (register first). */
   def charFoldHashNative(spark: SparkSession, colName: String): Column = {

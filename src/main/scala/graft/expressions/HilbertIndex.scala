@@ -103,8 +103,6 @@ object HilbertIndex {
     ((start +: steps).mkString(",\n"), s"h${scales.length}")
   }
 
-  /** Register `hilbert_d` (idempotent) for expr()/SQL use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_d", exprs => HilbertIndex(exprs.head, exprs(1)), "built-in")
+  /** Register `hilbert_d` (once per session) for expr()/SQL use. */
+  def register(spark: SparkSession): Unit = Functions.register(spark, "hilbert_d")
 }

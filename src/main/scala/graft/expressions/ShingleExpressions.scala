@@ -22,60 +22,58 @@ import org.apache.spark.unsafe.types.UTF8String
   * before the shingle self-join — the join itself becomes the first
   * exchange, which is the shape that scales.
   *
-  * Tokenization is exactly `filter(split(trim(text), ' +'), _ != "")`
-  * (TextFunctions.tokens) and the DuckDB oracle's
-  * `list_filter(string_split_regex(trim(text), ' +'), ...)`: trim strips
-  * ' ' only (Spark's trim semantics, NOT Java's control-char trim), runs
-  * of spaces delimit, empty tokens drop. Set order is first-occurrence,
-  * which is irrelevant post-explode. */
+  * Tokens are [[WordTokens]]' (`filter(split(trim(text), ' +'), _ != "")`
+  * and the DuckDB oracle's `list_filter(string_split_regex(trim(text),
+  * ' +'), ...)`), read as byte spans of the UTF-8 text; each shingle is
+  * its tokens' bytes joined by single spaces. Set order is
+  * first-occurrence, which is irrelevant post-explode. */
 object ShingleExpressions {
 
-  /** Distinct n-gram shingles of `text`, first-occurrence order. */
+  /** Distinct n-gram shingles of `text`, first-occurrence order. A
+    * shingle whose tokens are one space apart in the text is a view of
+    * the document's bytes; any other is joined into a new array. */
   def shingleSet(text: UTF8String, n: Int): GenericArrayData = {
-    val s = text.toString
-    // trim ' ' only (Spark trim parity)
-    var lo = 0
-    var hi = s.length
-    while (lo < hi && s.charAt(lo) == ' ') lo += 1
-    while (hi > lo && s.charAt(hi - 1) == ' ') hi -= 1
-    val toks = new scala.collection.mutable.ArrayBuffer[String]()
-    var i = lo
-    var start = lo
-    while (i <= hi) {
-      if (i == hi || s.charAt(i) == ' ') {
-        if (i > start) toks += s.substring(start, i)
-        start = i + 1
-      }
-      i += 1
+    val b = WordTokens.bytes(text)
+    val sp = WordTokens.spans(b)
+    val m = sp.length / 2 - n + 1
+    if (m <= 0) return new GenericArrayData(Array.empty[Any])
+    val seen = new java.util.HashSet[UTF8String](m * 2)
+    val out = new Array[Any](m)
+    var x = 0
+    var j = 0
+    while (j < m) {
+      var k = 1
+      while (k < n && sp(2 * (j + k)) == sp(2 * (j + k) - 1) + 1) k += 1
+      val sh =
+        if (k == n) UTF8String.fromBytes(b, sp(2 * j), sp(2 * (j + n - 1) + 1) - sp(2 * j))
+        else joined(b, sp, j, n)
+      if (seen.add(sh)) { out(x) = sh; x += 1 }
+      j += 1
     }
-    val m = toks.length - n + 1
-    if (m <= 0) new GenericArrayData(Array.empty[Any])
-    else {
-      val seen = new java.util.LinkedHashSet[String]()
-      var j = 0
-      while (j < m) {
-        val sb = new java.lang.StringBuilder(toks(j))
-        var k = 1
-        while (k < n) { sb.append(' ').append(toks(j + k)); k += 1 }
-        seen.add(sb.toString)
-        j += 1
-      }
-      val out = new Array[Any](seen.size())
-      val it = seen.iterator()
-      var x = 0
-      while (it.hasNext) { out(x) = UTF8String.fromString(it.next()); x += 1 }
-      new GenericArrayData(out)
-    }
+    new GenericArrayData(if (x == m) out else out.take(x))
   }
 
-  /** Register `word_shingle_set` (idempotent), usable from expr()/SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingle_set", exprs => WordShingleSet(exprs.head, exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(n: Int, IntegerType) => n
-        case other => throw new IllegalArgumentException(
-          s"word_shingle_set(text, n) needs a literal n, got $other")
-      }), "built-in")
+  /** Tokens j until j+n of `b` joined by single spaces. */
+  private def joined(b: Array[Byte], sp: Array[Int], j: Int, n: Int): UTF8String = {
+    var len = n - 1
+    var k = 0
+    while (k < n) { len += sp(2 * (j + k) + 1) - sp(2 * (j + k)); k += 1 }
+    val buf = new Array[Byte](len)
+    var p = 0
+    k = 0
+    while (k < n) {
+      if (k > 0) { buf(p) = ' '; p += 1 }
+      val t = sp(2 * (j + k))
+      val l = sp(2 * (j + k) + 1) - t
+      System.arraycopy(b, t, buf, p, l)
+      p += l
+      k += 1
+    }
+    UTF8String.fromBytes(buf)
+  }
+
+  /** Register `word_shingle_set` (once per session), usable from expr()/SQL. */
+  def register(spark: SparkSession): Unit = Functions.register(spark, "word_shingle_set")
 }
 
 case class WordShingleSet(child: Expression, n: Int) extends UnaryExpression {

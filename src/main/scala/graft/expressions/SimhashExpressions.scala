@@ -64,13 +64,9 @@ object SimhashExpressions {
   }
 
   /** Register `simhash_pack` / `simhash_sig` in the session registry
-    * (idempotent), usable from expr()/SQL. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_pack", exprs => SimhashPack(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_sig", exprs => SimhashSig(exprs.head, exprs(1)), "built-in")
-  }
+    * (once per session), usable from expr()/SQL. */
+  def register(spark: SparkSession): Unit =
+    Functions.register(spark, "simhash_pack", "simhash_sig")
 }
 
 case class SimhashPack(child: Expression) extends UnaryExpression {

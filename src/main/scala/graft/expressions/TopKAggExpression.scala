@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -147,14 +147,8 @@ object TopKAgg {
     nullable = false)))
 
   /** Register `topk_agg(score, id, k)` (k a literal int) in the session
-    * registry (idempotent), usable from expr()/SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_agg", exprs => TopKAgg(exprs.head, exprs(1), exprs(2) match {
-        case Literal(kk: Int, IntegerType) => kk
-        case other => throw new IllegalArgumentException(
-          s"topk_agg(score, id, k) needs a literal k, got $other")
-      }), "built-in")
+    * registry (once per session), usable from expr()/SQL. */
+  def register(spark: SparkSession): Unit = Functions.register(spark, "topk_agg")
 
   /** Native bounded top-k over named columns/expressions: score double
     * desc, id bigint asc tiebreak, ≤ k survivors per group. */

@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.expr
@@ -70,17 +70,9 @@ object VectorExpressions {
     else TypeCheckResult.TypeCheckFailure(s"$fn needs array<double>, got $dt")
 
   /** Register `vec_dot` / `hyperplane_sig` in the session registry
-    * (idempotent), usable from expr()/SQL. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VectorDot(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_sig", exprs => HyperplaneSig(exprs.head, exprs(1) match {
-        case Literal(bits: Int, IntegerType) => bits
-        case other => throw new IllegalArgumentException(
-          s"hyperplane_sig(v, nBits) needs a literal bit count, got $other")
-      }), "built-in")
-  }
+    * (once per session), usable from expr()/SQL. */
+  def register(spark: SparkSession): Unit =
+    Functions.register(spark, "vec_dot", "hyperplane_sig")
 
   /** Codegen'd dot product over named columns/expressions. */
   def vecDotNative(spark: SparkSession, a: String, b: String): Column = {

@@ -83,17 +83,8 @@ object WinnowExpressions {
     new GenericArrayData(out.toArray)
   }
 
-  /** Register `winnow_fps(text, k, w)` (idempotent), usable from expr()/SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps", exprs => WinnowFingerprints(exprs.head, litInt(exprs(1)), litInt(exprs(2))),
-      "built-in")
-
-  private def litInt(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(n: Int, IntegerType) => n
-    case other => throw new IllegalArgumentException(
-      s"winnow_fps(text, k, w) needs literal ints, got $other")
-  }
+  /** Register `winnow_fps(text, k, w)` (once per session), usable from expr()/SQL. */
+  def register(spark: SparkSession): Unit = Functions.register(spark, "winnow_fps")
 }
 
 case class WinnowFingerprints(child: Expression, k: Int, w: Int) extends UnaryExpression {

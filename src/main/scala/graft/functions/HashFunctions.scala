@@ -12,7 +12,10 @@ import org.apache.spark.sql.types._
   * any engine. (Spark's own hash()/xxhash64 are fast but engine-specific;
   * a cross-engine dedup pipeline needs hashes that are part of the spec,
   * not the implementation.) All functions are narrow projections built
-  * from codegen-friendly higher-order functions — no UDFs, no state.
+  * from higher-order functions — no UDFs, no state. Those lambdas are
+  * interpreted (`CodegenFallback`); the queries use the compiled
+  * `char_fold_hash` and `word_shingle_set`, and `charFoldHash` and
+  * `shingles` stay as the references those are tested against.
   */
 object HashFunctions {
 
@@ -29,7 +32,9 @@ object HashFunctions {
       (h, c) => (h * 131L + ascii(c).cast(LongType)) % P)
 
   /** Word n-gram shingles of a document ("a b c" for n=3), preserving
-    * order and multiplicity; fewer than n tokens → empty array.
+    * order and multiplicity; fewer than n tokens → empty array. Built on
+    * the regex tokens, this is the reference the native
+    * `word_shingle_set` is tested against.
     *
     * Built as a zip_with chain over shifted slices instead of
     * element_at-in-a-lambda: zip_with evaluates its array children ONCE,
@@ -38,7 +43,7 @@ object HashFunctions {
     * per row. zip_with's null padding marks the partial tail n-grams,
     * which the final filter drops. */
   def shingles(text: Column, n: Int): Column = {
-    val toks = TextFunctions.tokens(text)
+    val toks = TextFunctions.regexTokens(text)
     val cnt = size(toks)
     val chained = (2 to n).foldLeft(toks) { (acc, k) =>
       zip_with(acc, slice(toks, lit(k), greatest(cnt - (k - 1), lit(0))),

@@ -4,18 +4,28 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.expressions.WordTokens
+
 /** Text-analysis column functions for large-scale corpus pipelines.
   *
-  * All of these are built from codegen-friendly `org.apache.spark.sql.
-  * functions` (no Scala UDFs), so they stay inside whole-stage codegen /
-  * the optimizer and scale embarrassingly-parallel: every function is a
-  * narrow per-row projection — no shuffle, no state — and was written to
-  * be expressible 1:1 in ANSI SQL for the DuckDB oracle gate.
+  * All of these are built from `org.apache.spark.sql.functions` and the
+  * engine's native expressions (no Scala UDFs) and were written to be
+  * expressible 1:1 in ANSI SQL for the DuckDB oracle gate. Every function
+  * is a narrow per-row projection — no shuffle, no state. They do not all
+  * compile: `tokens` is the native [[graft.expressions.WordTokens]], but
+  * the `filter`/`transform`/`aggregate` lambdas below (`stopwordCount`,
+  * `meanTokenLength`, `langScore`, `fingerprint`) are `CodegenFallback`,
+  * interpreted row by row, and keep their Project out of whole-stage
+  * codegen.
   */
 object TextFunctions {
 
   /** Whitespace tokens of a document. Empty/blank text → empty array. */
-  def tokens(text: Column): Column =
+  def tokens(text: Column): Column = WordTokens.column(text)
+
+  /** [[tokens]] as a regex split and a `filter` lambda: the formulation
+    * the native tokenizer replaced, kept as its test reference. */
+  def regexTokens(text: Column): Column =
     filter(split(trim(text), " +"), t => t =!= "")
 
   /** Whitespace token count. */

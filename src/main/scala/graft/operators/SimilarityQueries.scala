@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.expressions.VectorExpressions
+import graft.expressions.{Sq8Decode, VectorExpressions}
 
 import graft.functions.VectorFunctions._
 
@@ -1892,7 +1892,9 @@ object SimilarityQueries {
     * Determinism: code = clamp(floor((x-mn)/step), 0, 255) and
     * decode = mn + code·step are each single IEEE double ops with
     * identical operands on both engines; constant dimensions (mx = mn)
-    * decode to mn exactly. Scale shape: the stats aggregate is
+    * decode to mn exactly. The decode is the compiled
+    * [[graft.expressions.Sq8Decode]], which runs the same IEEE operations
+    * as the oracle's CASE expression. Scale shape: the stats aggregate is
     * map-side-partial over (dim) — the shuffle carries 64 rows per
     * task; encode/decode/score are pure maps over the broadcast
     * 64-entry stats array (the corpus never shuffles; the stored index
@@ -1905,14 +1907,7 @@ object SimilarityQueries {
       .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
       .agg(array_sort(collect_list(struct(col("dim"), col("mn"), col("mx")))).as("st"))
     val decoded = e.crossJoin(broadcast(stats))
-      .withColumn("demb", expr(
-        """transform(emb, (x, i) ->
-          |  CASE WHEN element_at(st, i + 1).mx > element_at(st, i + 1).mn THEN
-          |    element_at(st, i + 1).mn
-          |      + least(greatest(floor((x - element_at(st, i + 1).mn)
-          |          / ((element_at(st, i + 1).mx - element_at(st, i + 1).mn) / 255D)), 0D), 255D)
-          |        * ((element_at(st, i + 1).mx - element_at(st, i + 1).mn) / 255D)
-          |  ELSE element_at(st, i + 1).mn END)""".stripMargin))
+      .withColumn("demb", Sq8Decode.column(col("emb"), col("st")))
       .withColumn("dnrm", expr("sqrt(vec_dot(demb, demb))"))
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"), col("nrm").as("qnrm"))

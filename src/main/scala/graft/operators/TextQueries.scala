@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.expressions.VowelRunCounts
 import graft.functions.TextFunctions._
 
 /** Text-analysis query surface over the `documents` table: token
@@ -1634,8 +1635,9 @@ object TextQueries {
     * does not have). Monosyllabic density is the signal: technical /
     * fragmentary text scores low, simple prose high.
     *
-    * Portability: "syllables" are maximal `[aeiouy]+` runs — the same
-    * regex on both engines; the grade is scaled-integer division
+    * Portability: "syllables" are maximal `[aeiouy]+` runs — the
+    * oracle's regex, counted here by the compiled
+    * [[graft.expressions.VowelRunCounts]]; the grade is scaled-integer division
     * (`(15000·mono) div words`), exact and engine-independent.
     *
     * Scale shape: one scan, per-row map, vocabulary-free — zero
@@ -1643,12 +1645,11 @@ object TextQueries {
   def txtReadability(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        expr("transform(toks, t -> size(regexp_extract_all(t, '[aeiouy]+', 0)))").as("sylls"))
+      .select(col("doc_id"), VowelRunCounts.column(col("toks")).as("sylls"))
       .select(col("doc_id"),
         size(col("sylls")).cast("long").as("n_tokens"),
         expr("aggregate(sylls, 0L, (a, x) -> a + x)").as("n_sylls"),
-        expr("size(filter(sylls, x -> x = 1))").cast("long").as("n_mono"))
+        (size(col("sylls")) - size(array_remove(col("sylls"), 1))).cast("long").as("n_mono"))
       .withColumn("forcast_fp",
         expr("20000L - (15000L * n_mono) div greatest(n_tokens, 1L)"))
 

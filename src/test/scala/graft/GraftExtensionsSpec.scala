@@ -44,4 +44,26 @@ class GraftExtensionsSpec extends AnyFunSuite {
       SparkSession.setDefaultSession(base)
     }
   }
+
+  test("spark.sql.extensions path exposes the text and SQ8 kernels") {
+    val base = SparkSpecBase.session
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s = SparkSession.builder()
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+      val r = s.sql(
+        "SELECT word_tokens('  say  ayeee toy ') AS t, " +
+          "vowel_run_counts(word_tokens('say ayeee xyz')) AS v, " +
+          "sq8_decode(array(0.5d, 2.0d), array(named_struct('dim', 0, 'mn', 0.0d, 'mx', 1.0d), " +
+          "named_struct('dim', 1, 'mn', 3.0d, 'mx', 3.0d))) AS q").head()
+      assert(r.getSeq[String](0) == Seq("say", "ayeee", "toy"))
+      assert(r.getSeq[Int](1) == Seq(1, 1, 1))
+      assert(r.getSeq[Double](2) == Seq(127 * (1.0 / 255), 3.0))
+    } finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
 }
