@@ -139,17 +139,8 @@ object Bench {
       def preload(ep: String, addresses: Seq[String], perLink: Long): Unit = {
         val broker = { AmqpEndpointRegistry.reset(ep); AmqpEndpointRegistry.broker(ep) }
         addresses.foreach { a =>
-          var sent = 0L
-          var fetchedUpTo = 0L
-          while (sent < perLink) {
-            if (broker.send(a, AmqpMessage(body = AmqpValueBody(s"m-$sent")),
-                timestampMicros = sent * 1000L) >= 0) sent += 1
-            else { // credit window full: consume the pending slice
-              val to = broker.latestSeq(a)
-              broker.fetch(a, fetchedUpTo, to)
-              fetchedUpTo = to
-            }
-          }
+          broker.sendAll(a, (0L until perLink).map(i =>
+            (AmqpMessage(body = AmqpValueBody(s"m-$i")), i * 1000L)))
         }
       }
       def measure(label: String, ep: String, addresses: Seq[String], n: Long,
@@ -212,22 +203,9 @@ object Bench {
           val client = AmqpEndpointRegistry.endpoint(wireEp)
           val batch = (0 until 500).map(i =>
             (AmqpMessage(body = AmqpValueBody(s"m-$i")), i.toLong))
-          // one drain-on-refusal produce loop shared by both topologies
-          // (the same contract as IngestQueries.pumpAll: credit
-          // refusals are a suffix, consuming replenishes)
-          def producePreload(addr: String, n: Long): Unit = {
-            var sent = 0L
-            var fetchedUpTo = 0L
-            while (sent < n) {
-              val accepted = client.sendMany(addr, batch).count(_ >= 0)
-              sent += accepted
-              if (accepted < batch.length) {
-                val to = client.latestSeq(addr)
-                client.fetch(addr, fetchedUpTo, to)
-                fetchedUpTo = to
-              }
-            }
-          }
+          // the 500 messages of `batch`, repeated
+          def producePreload(addr: String, n: Long): Unit =
+            client.sendAll(addr, (0L until n).map(i => batch((i % batch.length).toInt)))
           val p0 = System.nanoTime()
           producePreload("l0", 100000L)
           val pSec = (System.nanoTime() - p0) / 1e9

@@ -24,6 +24,11 @@ object Scratch {
   /** A fresh, empty directory under the root, its name prefixed by `tag`. */
   def dir(tag: String): Path = Files.createTempDirectory(Files.createDirectories(root), tag)
 
+  /** The path `name` under the root, which is created; the path itself
+    * is not. The same name gives the same path for the life of the JVM,
+    * so a writer that overwrites it keeps one copy. */
+  def fixed(name: String): Path = Files.createDirectories(root).resolve(name)
+
   /** Deletes `tree` and everything under it: the shutdown hook's body. */
   private[graft] def delete(tree: Path): Unit = JavaUtils.deleteRecursively(tree.toFile)
 }

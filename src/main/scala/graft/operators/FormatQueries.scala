@@ -38,12 +38,10 @@ object FormatQueries {
       .map(f => f.getPath -> f.length()).toMap
   }
 
-  private def scratch(d: String, fmt: String): String = {
-    val dir = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_fmt_${fmt}_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-    Files.createDirectories(dir.getParent)
-    dir.toString
-  }
+  /** The overwrite directory of format `fmt` on dataset `d`, under the
+    * per-JVM [[graft.Scratch]] root. */
+  private[operators] def scratch(d: String, fmt: String): String =
+    graft.Scratch.fixed(s"graft_fmt_${fmt}_${d.replaceAll("[^A-Za-z0-9]", "_")}").toString
 
   private val sliceSchema = StructType(Seq(
     StructField("l_orderkey", LongType),

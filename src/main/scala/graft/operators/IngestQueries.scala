@@ -88,7 +88,7 @@ object IngestQueries {
     }
 
     def pump(msgs: Seq[(AmqpMessage, Long)], to: String = address): Unit =
-      pumpAll(client, to, msgs)
+      client.sendAll(to, msgs)
 
     /** Source options: this endpoint, [[address]] unless `opts` name addresses. */
     private def amqp(opts: Seq[(String, String)]): Map[String, String] =
@@ -253,33 +253,6 @@ object IngestQueries {
     finally prior.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
-    }
-  }
-
-  /** Drain-aware pump shared by every gate: send in ~500-message
-    * pipelined batches under the 1000-credit window; a refusal must be
-    * a strict SUFFIX (credit contract — resuming at the first refusal
-    * re-sends everything after it, so an accepted message there would
-    * enqueue twice: fail loudly instead of corrupting the gate), and
-    * consuming replenishes credit, so a refusal drains the delivered
-    * prefix via fetch and resumes. */
-  private def pumpAll(client: AmqpEndpoint, address: String,
-      msgs: Seq[(AmqpMessage, Long)]): Unit = {
-    var i = 0
-    var fetchedUpTo = 0L
-    while (i < msgs.length) {
-      val slice = msgs.slice(i, math.min(i + 500, msgs.length))
-      val seqs = client.sendMany(address, slice)
-      val refusedAt = seqs.indexWhere(_ < 0)
-      if (refusedAt < 0) i += slice.length
-      else {
-        require(seqs.drop(refusedAt).forall(_ < 0),
-          s"non-suffix credit refusal at $refusedAt: $seqs")
-        i += refusedAt
-        val to = client.latestSeq(address)
-        client.fetch(address, fetchedUpTo, to)
-        fetchedUpTo = to
-      }
     }
   }
 

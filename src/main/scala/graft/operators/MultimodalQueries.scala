@@ -899,8 +899,7 @@ object MultimodalQueries {
     * — output is |files| rows, one shuffle nowhere. */
   def mmBinaryFiles(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_mm_bin_${d.replaceAll("[^A-Za-z0-9]", "_")}")
+    val dir = graft.Scratch.fixed(s"graft_mm_bin_${d.replaceAll("[^A-Za-z0-9]", "_")}")
     java.nio.file.Files.createDirectories(dir)
     // overwrite semantics, like every format gate: stale .bmp files
     // from a previous corpus generation (or a crashed run) would leak

@@ -579,7 +579,7 @@ class Amqp10Endpoint(host: String, port: Int,
     * One-retry contract of [[call]]: on an IO failure the drain re-dials
     * once and resumes after the last seq it handed out, so the caller
     * sees each message of the slice once. */
-  private[streaming] def drain(address: String, fromExclusive: Long,
+  override def drain(address: String, fromExclusive: Long,
       toInclusive: Long): Drain = synchronized {
     requireNoDrain()
     val d = new Drain(address, fromExclusive, toInclusive)

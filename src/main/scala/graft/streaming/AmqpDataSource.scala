@@ -47,7 +47,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Options: endpoint (mem://name), address, maxMessagesPerTrigger,
   * maxMessagesPerSecond (0 = unlimited — rate-controller parity, see
-  * [[AmqpMicroBatchStream.rateBudget]]); host/port/username/password are
+  * [[AmqpRateBudget]]); host/port/username/password are
   * accepted for API parity with AMQPUtils.createStream and used by
   * socket transports.
   */
@@ -126,8 +126,7 @@ case class AmqpSourceConfig(endpoint: String, address: String, addresses: Seq[St
       * divergence from Kafka's batch contract (which fails on
       * out-of-range offsets): a bounded audit read here asks "whatever
       * of that span still exists", and the planner's floor IS that
-      * answer — see the startFloor note in
-      * [[AmqpBatchRead.planInputPartitions]]. */
+      * answer — see [[AmqpScanPlanner.startAnchor]]. */
     startingSequences: Map[String, Long] = Map.empty,
     /** Kafka `endingOffsets` parity, BATCH reads only: cap each named
       * link's scan at this sequence (inclusive) — with a start anchor
@@ -396,6 +395,155 @@ object AmqpSourceConfig {
         Option(o.get("sharedDeadLetterAddress")).map(_.trim).filter(_.nonEmpty),
       addressExplicit = o.get("address") != null)
   }
+}
+
+/** The decisions every AMQP scan shares, made in one place for the
+  * exclusive stream ([[AmqpMicroBatchStream]]), the share-group stream
+  * ([[AmqpSharedMicroBatchStream]]) and the batch read
+  * ([[AmqpBatchRead]]):
+  *
+  *  - admission ([[admit]]): the default read limit, the trigger cap,
+  *    the min-rows hold, the rate budget and the equal per-link share;
+  *  - the start anchor of a link ([[startAnchor]]);
+  *  - the probe-less timestamp degrade filter ([[readerFilters]]);
+  *  - the `maxRowsPerPartition` cut of a span ([[slices]]);
+  *  - the replayable row count ([[replayable]]).
+  *
+  * One planner serves one stream or one batch read: the min-rows delay
+  * and the rate budget keep their state across its triggers, and the
+  * degrade probe runs once for it. On `amqp10://` every endpoint probe
+  * is a synchronous round trip, so each decision probes only what it
+  * needs: availability only under a min-rows limit, the rate budget only
+  * once the trigger is admitted. */
+private[streaming] final class AmqpScanPlanner(cfg: AmqpSourceConfig) {
+
+  /** With a min-rows floor configured, the default limit composes it
+    * with the trigger cap (exactly the Kafka source's shape): Spark
+    * hands the composite back to each trigger's [[admit]]. */
+  def defaultReadLimit: ReadLimit =
+    if (cfg.minPerTrigger > 0)
+      ReadLimit.compositeLimit(Array(
+        ReadLimit.minRows(cfg.minPerTrigger, cfg.maxTriggerDelayMillis),
+        ReadLimit.maxRows(cfg.maxPerTrigger)))
+    else ReadLimit.maxRows(cfg.maxPerTrigger)
+
+  private[streaming] val rate = new AmqpRateBudget(cfg.maxPerSecond)
+  /** Injectable wall clock for the maxTriggerDelay ceiling. */
+  private[streaming] var wallClock: () => Long = () => System.currentTimeMillis()
+  /** Last ADMITTED batch (or first admission decision) — the anchor the
+    * min-rows delay ceiling measures from, like Kafka's lastTriggerMillis. */
+  private var lastTriggerMillis = 0L
+
+  /** One trigger's admission over `links` links: the row budget of each
+    * link, or None to admit nothing this trigger.
+    *
+    * ReadMinRows (minMessagesPerTrigger + maxTriggerDelay): below the
+    * floor and inside the delay window, hold — and spend no rate budget.
+    * `available` (rows the trigger could admit) is counted only then.
+    * A stream that must not wait passes `holdable = false`: a
+    * run-to-completion trigger drains and stops, and waiting for rows
+    * that never come would hang it (Kafka ignores minOffsetsPerTrigger
+    * there for the same reason).
+    *
+    * The admitted budget — the trigger cap, bounded by the rate budget —
+    * is shared equally across links (at least 1 each), so a hot link
+    * cannot starve the others: the multi-link generalization of the
+    * reference's per-link credit. */
+  def admit(limit: ReadLimit, links: Int, holdable: Boolean = true)(
+      available: => Long): Option[Long] = {
+    val limits: Seq[ReadLimit] = limit match {
+      case c: streaming.CompositeReadLimit => c.getReadLimits.toSeq
+      case l => Seq(l)
+    }
+    val held = limits.collectFirst { case m: streaming.ReadMinRows if holdable => m }.exists { m =>
+      val n = available
+      val now = wallClock()
+      if (lastTriggerMillis == 0L) lastTriggerMillis = now
+      val hold = n < m.minRows && now - lastTriggerMillis < m.maxTriggerDelayMs
+      if (!hold) lastTriggerMillis = now
+      hold
+    }
+    if (held) None
+    else {
+      val triggerCap = limits.collectFirst {
+        case m: streaming.ReadMaxRows => m.maxRows()
+      }.getOrElse(Long.MaxValue)
+      Some(math.max(1L, math.min(triggerCap, rate.budget()) / links))
+    }
+  }
+
+  /** Where a read of link `a` begins, above its replayable `floor`: the
+    * `startingSequences` position, else the first sequence whose enqueue
+    * timestamp reaches `startingTimestamp`, else the floor.
+    *
+    * The timestamp probe's no-match answer is the ledger-head-anchored
+    * empty window, so the start derives from ONE broker snapshot — a
+    * message enqueued concurrently is either inside the window or after
+    * the returned head, never lost between two probes. A position cut,
+    * not a row filter. Non-monotone producer timestamps degrade
+    * conservatively (the covering window may start earlier, never
+    * later). A transport without the probe anchors at the floor, and
+    * [[readerFilters]] drops the pre-start rows instead.
+    *
+    * A stream takes a position VERBATIM: below the settlement prefix it
+    * is exactly a lost-data checkpoint and rides failOnDataLoss; above
+    * the head it admits nothing until the link reaches it. A batch read
+    * (`clampPosition`) clamps it to the floor: a batch read is a browse,
+    * rows below the floor are gone for everyone, and there is no
+    * checkpoint whose loss failOnDataLoss could report. */
+  def startAnchor(b: AmqpEndpoint, a: String, floor: Long, clampPosition: Boolean): Long =
+    cfg.startingSequences.get(a) match {
+      case Some(n) => if (clampPosition) math.max(floor, n) else n
+      case None => cfg.startingTimestampMicros
+        .flatMap(t => b.timestampWindow(a, t, Long.MaxValue))
+        .fold(floor) { case (fromExclusive, _) => math.max(floor, fromExclusive) }
+    }
+
+  /** startingTimestamp on a transport WITHOUT the timestamp probe (any
+    * third-party broker lacking the x-graft attach extension): the start
+    * cannot be positioned, so the contract must not silently degrade to
+    * the full backlog — every reader applies `ingest_timestamp >= T`
+    * exactly, and no pre-start message is ever returned (it is still
+    * fetched: without a ledger probe nothing can prune the wire).
+    * Exact-filter semantics, vs the probed path's position cut:
+    * identical under monotone enqueue timestamps, divergent on
+    * stragglers. Derived from config, not from an initial offset, so a
+    * stream restarted mid-backlog keeps filtering. One full-range probe
+    * per planner, on first use. */
+  lazy val degradeTsLo: Option[Long] = cfg.startingTimestampMicros.filter { _ =>
+    AmqpEndpointRegistry.endpoint(cfg.endpoint)
+      .timestampWindow(cfg.addresses.head, Long.MinValue, Long.MaxValue).isEmpty
+  }
+
+  /** The filters readers apply: `pushed` with the [[degradeTsLo]] bound
+    * folded in. */
+  def readerFilters(pushed: AmqpPushedFilters): AmqpPushedFilters = degradeTsLo match {
+    case Some(t) => pushed.copy(tsLoMicros = math.max(pushed.tsLoMicros, t))
+    case None => pushed
+  }
+
+  def readerFactory(fields: Array[String], filters: AmqpPushedFilters,
+      survivorLimit: Option[Int] = None): PartitionReaderFactory =
+    new AmqpReaderFactory(fields, filters, cfg.propertyColumns, cfg.fetchChunkRows, survivorLimit)
+
+  /** Link `a`'s span (from, to] as input partitions of at most
+    * `maxRowsPerPartition` rows each: a deep span becomes many parallel
+    * tasks instead of one task holding it whole (a reader's heap and
+    * wall clock track a slice, never the backlog). Neither a batch read
+    * nor a micro-batch promises row order (stateful operators shuffle by
+    * key; watermarks aggregate min/max), so the split is
+    * semantics-free. */
+  def slices(a: String, from: Long, to: Long,
+      ttlNowOverrideMicros: Option[Long] = None): Iterator[InputPartition] =
+    Iterator.range(0L, to - from, cfg.maxRowsPerPartition).map { o =>
+      AmqpInputPartition(cfg.endpoint, a, from + o,
+        math.min(from + o + cfg.maxRowsPerPartition, to), ttlNowOverrideMicros)
+    }
+
+  /** Rows replayable now across the subscription: each link's high-water
+    * mark minus its settled floor. */
+  def replayable(b: AmqpEndpoint): Long =
+    cfg.subscription(b).map(a => math.max(0L, b.latestSeq(a) - b.settledUpTo(a))).sum
 }
 
 /** The scan's pushed-predicate residue, carried from the builder to the
@@ -772,9 +920,7 @@ class AmqpCountScan(cfg: AmqpSourceConfig) extends Scan {
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
       val b = AmqpEndpointRegistry.endpoint(cfg.endpoint)
-      val n = cfg.subscription(b)
-        .map(a => math.max(0L, b.latestSeq(a) - b.settledUpTo(a))).sum
-      Array(AmqpCountPartition(n))
+      Array(AmqpCountPartition(new AmqpScanPlanner(cfg).replayable(b)))
     }
     override def createReaderFactory(): PartitionReaderFactory = AmqpCountReaderFactory
   }
@@ -841,8 +987,7 @@ class AmqpScan(cfg: AmqpSourceConfig, required: StructType = AmqpEnvelope.schema
         // broadcast-join benefit these stats exist for is forfeited.
         // Pushed predicates only shrink the count further — the
         // uncut number stays a valid upper bound for planning.
-        val replayable = cfg.subscription(client)
-          .map(a => math.max(0L, client.latestSeq(a) - client.settledUpTo(a))).sum
+        val replayable = new AmqpScanPlanner(cfg).replayable(client)
         math.max(0L,
           math.min(replayable, limit.map(_.toLong).getOrElse(Long.MaxValue)) - offset)
       } catch { case _: Exception => -1L } // unreachable broker: unknown
@@ -901,9 +1046,10 @@ object AmqpOffset {
   * interval). Budget = rate x seconds since the last admission
   * decision; the first trigger gets one second's worth. Unused budget
   * does NOT accumulate beyond one interval (the reference's
-  * RateLimiter likewise smooths bursts). Shared by the default and
-  * shared-subscription streams so `maxMessagesPerSecond` is honored —
-  * never silently ignored — on every consuming mode. */
+  * RateLimiter likewise smooths bursts). Held by the
+  * [[AmqpScanPlanner]] both streams admit through, so
+  * `maxMessagesPerSecond` is honored — never silently ignored — on
+  * every consuming mode. */
 private[streaming] final class AmqpRateBudget(maxPerSecond: Long) {
   /** Injectable clock (nanos) so rate-limit admission is unit-testable. */
   private[streaming] var nanoClock: () => Long = () => System.nanoTime()
@@ -926,11 +1072,38 @@ private[streaming] final class AmqpRateBudget(maxPerSecond: Long) {
     }
 }
 
+/** What both streams take from their [[AmqpScanPlanner]]: the default
+  * read limit, the reader factory, and the clocks admission runs on
+  * (injectable, so admission is unit-testable). Offsets, the replay
+  * gate and settlement stay in each stream. */
+abstract class AmqpPlannedStream(cfg: AmqpSourceConfig, fields: Array[String],
+    pushed: AmqpPushedFilters)
+    extends MicroBatchStream with SupportsAdmissionControl
+    with SupportsTriggerAvailableNow with ReportsSourceMetrics {
+  private[streaming] val planner = new AmqpScanPlanner(cfg)
+  protected def broker: AmqpEndpoint = AmqpEndpointRegistry.endpoint(cfg.endpoint)
+
+  override def getDefaultReadLimit: ReadLimit = planner.defaultReadLimit
+
+  // Offsets stay seq-based and unfiltered (settlement must advance over
+  // skipped messages too); the reader drops non-matching rows.
+  override def createReaderFactory(): PartitionReaderFactory =
+    planner.readerFactory(fields, planner.readerFilters(pushed))
+
+  override def stop(): Unit = ()
+
+  /** Injectable clock (nanos) so rate-limit admission is unit-testable. */
+  private[streaming] def nanoClock: () => Long = planner.rate.nanoClock
+  private[streaming] def nanoClock_=(f: () => Long): Unit = planner.rate.nanoClock = f
+  /** Injectable wall clock for the maxTriggerDelay ceiling. */
+  private[streaming] def wallClock: () => Long = planner.wallClock
+  private[streaming] def wallClock_=(f: () => Long): Unit = planner.wallClock = f
+}
+
 class AmqpMicroBatchStream(cfg: AmqpSourceConfig,
     fields: Array[String] = AmqpEnvelope.schema.fieldNames,
     pushed: AmqpPushedFilters = AmqpPushedFilters())
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow with ReportsSourceMetrics {
+    extends AmqpPlannedStream(cfg, fields, pushed) {
 
   /** Per-trigger source metrics in StreamingQueryProgress (the
     * observability face the Kafka source sets the pattern for):
@@ -957,8 +1130,6 @@ class AmqpMicroBatchStream(cfg: AmqpSourceConfig,
       "unsettledMessages", unsettled.toString,
       "links", links.length.toString)
   }
-
-  private def broker = AmqpEndpointRegistry.endpoint(cfg.endpoint)
 
   /** Settlement-prefix probe memoized PER TRIGGER: on socket transports
     * each settledUpTo is a synchronous round trip, and the driver's hot
@@ -998,59 +1169,22 @@ class AmqpMicroBatchStream(cfg: AmqpSourceConfig,
   }
 
   /** Where a NEW query begins (a checkpointed restart never calls
-    * this — exactly Kafka's startingOffsets contract). With
-    * `startingTimestamp[Micros]` set, each link starts at the first
-    * sequence whose enqueue timestamp reaches the bound (via the
-    * endpoint's timestampWindow probe — the same surface the batch
-    * scan's predicate pushdown plans from): a consumer attaching to a
-    * deep queue at "yesterday 00:00" skips the history instead of
-    * draining it. The probe's no-match answer is the ledger-head-
-    * anchored empty window, so the start derives from ONE broker
-    * snapshot — a message enqueued concurrently with query start is
-    * either inside the window or after the returned head, never lost
-    * between two probes. Non-monotone producer timestamps degrade
-    * conservatively (the covering window may start earlier, never
-    * later). A transport without the probe starts from 0 but every
-    * reader applies an exact `ingest_timestamp >= T` degrade filter
-    * (see [[createReaderFactory]]) — the backlog is fetched (nothing
-    * can prune it without a ledger probe) yet no pre-start message is
-    * ever RETURNED. Semantics note: the probed path is a POSITION cut
-    * (Kafka parity — a pre-T straggler enqueued after the start
-    * position is still delivered), the degrade path an EXACT filter
-    * (pre-T rows never appear); identical under monotone enqueue
-    * timestamps, intentionally divergent on stragglers — the degrade
-    * cannot know a position without a ledger probe, and delivering the
-    * whole backlog would be worse than either.
+    * this — exactly Kafka's startingOffsets contract): each link's
+    * [[AmqpScanPlanner.startAnchor]] above its REPLAYABLE prefix
+    * (settledUpTo), not sequence 0 — Kafka parity: earliest resolves to
+    * the actual log start. Messages below the prefix were consumed by
+    * their owner before this query existed; starting below it would
+    * trip the failOnDataLoss check on data this query was never
+    * positioned at. With `startingTimestamp[Micros]` a consumer
+    * attaching to a deep queue at "yesterday 00:00" skips the history
+    * instead of draining it.
     *
     * Settlement caveat (prefix settlement is the broker contract):
     * the first offset commit settles — deletes — the skipped backlog
     * below the start; see the option note in [[AmqpSourceConfig]]. */
   override def initialOffset(): Offset =
     AmqpOffset(subscribed.map { a =>
-      // A fresh query starts at the REPLAYABLE prefix (settledUpTo), not
-      // sequence 0 — Kafka parity: earliest resolves to the actual log
-      // start. Messages below the prefix were consumed by their owner
-      // before this query existed; starting below it would trip the
-      // failOnDataLoss check on data this query was never positioned at.
-      val floor = broker.settledUpTo(a)
-      val start = cfg.startingSequences.get(a) match {
-        // positional start (startingSequence[s]): taken VERBATIM — a
-        // position below the settlement prefix is exactly a lost-data
-        // checkpoint and rides the same failOnDataLoss contract (fail
-        // loudly / skip to the prefix); a future position admits
-        // nothing until the link reaches it. Same settlement caveat as
-        // the timestamp anchor: the first commit settles the skipped
-        // backlog (prefix settlement — see the option note).
-        case Some(n) => n
-        case None => cfg.startingTimestampMicros match {
-          case Some(t) => broker.timestampWindow(a, t, Long.MaxValue) match {
-            case Some((fromExclusive, _)) => math.max(floor, fromExclusive)
-            case None => floor // no probe: replayable span + reader degrade filter
-          }
-          case None => floor
-        }
-      }
-      a -> start
+      a -> planner.startAnchor(broker, a, broker.settledUpTo(a), clampPosition = false)
     }.toMap)
 
   override def latestOffset(): Offset =
@@ -1058,28 +1192,6 @@ class AmqpMicroBatchStream(cfg: AmqpSourceConfig,
 
   override def reportLatestOffset(): Offset =
     AmqpOffset(subscribed.map(a => a -> broker.latestSeq(a)).toMap)
-
-  /** With a min-rows floor configured, the default limit composes it
-    * with the trigger cap (exactly the Kafka source's shape): Spark
-    * hands the composite back to [[latestOffset(start*]], which holds
-    * batches below the floor until the delay ceiling. */
-  override def getDefaultReadLimit: ReadLimit =
-    if (cfg.minPerTrigger > 0)
-      ReadLimit.compositeLimit(Array(
-        ReadLimit.minRows(cfg.minPerTrigger, cfg.maxTriggerDelayMillis),
-        ReadLimit.maxRows(cfg.maxPerTrigger)))
-    else ReadLimit.maxRows(cfg.maxPerTrigger)
-
-  private val rate = new AmqpRateBudget(cfg.maxPerSecond)
-  /** Injectable clock (nanos) so rate-limit admission is unit-testable. */
-  private[streaming] def nanoClock: () => Long = rate.nanoClock
-  private[streaming] def nanoClock_=(f: () => Long): Unit = rate.nanoClock = f
-
-  /** Injectable wall clock for the maxTriggerDelay ceiling. */
-  private[streaming] var wallClock: () => Long = () => System.currentTimeMillis()
-  /** Last ADMITTED batch (or first admission decision) — the anchor the
-    * min-rows delay ceiling measures from, like Kafka's lastTriggerMillis. */
-  private var lastTriggerMillis = 0L
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     settledCache.clear() // one fresh settlement probe per address per trigger
@@ -1090,13 +1202,6 @@ class AmqpMicroBatchStream(cfg: AmqpSourceConfig,
     // later probe misses is never dropped mid-stream.
     val active = (startOff.seqs.keySet ++ subscribed).toSeq.sorted
     if (active.isEmpty) return AmqpOffset(Map.empty)
-    val limits: Seq[ReadLimit] = limit match {
-      case c: streaming.CompositeReadLimit => c.getReadLimits.toSeq
-      case l => Seq(l)
-    }
-    val triggerCap = limits.collectFirst {
-      case rl: streaming.ReadMaxRows => rl.maxRows()
-    }.getOrElse(Long.MaxValue)
     // start positions resolve once, shared by the min-rows availability
     // probe and the admission arithmetic below
     val startSeqs = active.map { a =>
@@ -1106,28 +1211,13 @@ class AmqpMicroBatchStream(cfg: AmqpSourceConfig,
       // plan the settled span below it (one probe, first trigger only)
       a -> startOff.seqs.getOrElse(a, cachedSettledUpTo(a))
     }.toMap
-    // ReadMinRows admission (minMessagesPerTrigger + maxTriggerDelay):
-    // below the floor and inside the delay window, admit NOTHING — the
-    // same offset back means no batch, and the rate budget is NOT spent.
-    // Ignored under AvailableNow (a run-to-completion trigger drains and
-    // stops; waiting for rows that never come would hang it — Kafka
-    // ignores minOffsetsPerTrigger there for the same reason).
-    limits.collectFirst { case rl: streaming.ReadMinRows => rl } match {
-      case Some(m) if availableNowCap.isEmpty =>
-        val available = active.map(a =>
-          math.max(0L, latestFor(a) - startSeqs(a))).sum
-        val now = wallClock()
-        if (lastTriggerMillis == 0L) lastTriggerMillis = now
-        if (available < m.minRows && now - lastTriggerMillis < m.maxTriggerDelayMs)
-          return startOff
-        lastTriggerMillis = now
-      case _ => ()
+    // AvailableNow never holds: it drains and stops
+    val perLink = planner.admit(limit, active.length, holdable = availableNowCap.isEmpty) {
+      active.map(a => math.max(0L, latestFor(a) - startSeqs(a))).sum
+    } match {
+      case Some(n) => n
+      case None => return startOff // held: the same offset back means no batch
     }
-    // The trigger's row budget is shared across links: each link gets an
-    // equal share (at least 1), so a hot link cannot starve the others —
-    // the multi-link generalization of the reference's per-link credit.
-    val totalCap = math.min(triggerCap, rate.budget())
-    val perLink = math.max(1L, totalCap / active.length)
     AmqpOffset(active.map { a =>
       val startSeq = startSeqs(a)
       // saturating add: an uncapped limit (ReadAllAvailable under
@@ -1145,14 +1235,12 @@ class AmqpMicroBatchStream(cfg: AmqpSourceConfig,
   }
 
   /** One partition per link per micro-batch — except that a span wider
-    * than maxRowsPerPartition splits into bounded sub-partitions, the
-    * same cut as the batch planner. Normal triggers never hit this
+    * than maxRowsPerPartition splits into bounded sub-partitions
+    * ([[AmqpScanPlanner.slices]]). Normal triggers never hit this
     * (maxMessagesPerTrigger bounds the span first), but
     * ReadAllAvailable (Trigger.Once) admits the WHOLE backlog in one
     * batch — without the split, one task would fetch and hold a deep
-    * link's entire history. Intra-batch row order is not part of the
-    * streaming contract (stateful operators shuffle by key; watermarks
-    * aggregate min/max), so the split is semantics-free here too. */
+    * link's entire history. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (s, e) = (start.asInstanceOf[AmqpOffset], end.asInstanceOf[AmqpOffset])
     // A wall-clock TTL read must not freeze expiry at query START — a
@@ -1191,33 +1279,9 @@ class AmqpMicroBatchStream(cfg: AmqpSourceConfig,
               "were settled away by another consumer or retention. Set " +
               "failOnDataLoss=false to skip the gap and continue.")
           else floor
-        Iterator.range(0L, to - from, cfg.maxRowsPerPartition).map { o =>
-          AmqpInputPartition(cfg.endpoint, a, from + o,
-            math.min(from + o + cfg.maxRowsPerPartition, to),
-            ttlNowOverrideMicros = ttlNow): InputPartition
-        }
+        planner.slices(a, from, to, ttlNow)
       }
       .toArray
-  }
-
-  /** startingTimestamp degrade on a probe-less transport (see
-    * [[initialOffset]]): fold `ingest_timestamp >= T` into the reader
-    * filters so the backlog the offsets could not skip is dropped
-    * exactly, batch after batch — including across checkpointed
-    * restarts, where initialOffset never runs but a restart mid-backlog
-    * must keep filtering. One probe decides, lazily, per query run. */
-  private lazy val degradeTsLo: Option[Long] = cfg.startingTimestampMicros.filter { _ =>
-    broker.timestampWindow(cfg.addresses.head, Long.MinValue, Long.MaxValue).isEmpty
-  }
-
-  // Offsets stay seq-based and unfiltered (settlement must advance over
-  // skipped messages too); the reader drops non-matching rows.
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val eff = degradeTsLo match {
-      case Some(t) => pushed.copy(tsLoMicros = math.max(pushed.tsLoMicros, t))
-      case None => pushed
-    }
-    new AmqpReaderFactory(fields, eff, cfg.propertyColumns, cfg.fetchChunkRows)
   }
 
   /** Settle-after-durable-commit: the epoch is checkpointed, release
@@ -1234,22 +1298,12 @@ class AmqpMicroBatchStream(cfg: AmqpSourceConfig,
 
   override def deserializeOffset(json: String): Offset =
     AmqpOffset.fromJson(json, cfg.addresses.head)
-
-  override def stop(): Unit = ()
 }
 
 /** Batch read of everything currently replayable (unsettled + new):
   * the envelope as a static DataFrame for tests/oracle comparisons.
-  *
-  * Partitioning: each link's planned span splits into sub-partitions of
-  * at most `maxRowsPerPartition` rows — a deep single-link backlog
-  * becomes many parallel tasks instead of one task holding the whole
-  * span (the 100 TB bound: a reader's heap and wall-clock track a
-  * slice, never the backlog). Batch reads carry no ordering contract
-  * (a DataFrame is unordered until sorted), so splitting one link's
-  * ordered sequence across tasks is semantics-free; the streaming path
-  * keeps one partition per link per micro-batch, bounded there by
-  * maxMessagesPerTrigger. */
+  * Each link's planned span splits into sub-partitions of at most
+  * `maxRowsPerPartition` rows ([[AmqpScanPlanner.slices]]). */
 class AmqpBatchRead(cfg: AmqpSourceConfig,
     fields: Array[String],
     limit: Option[Int] = None, offset: Int = 0,
@@ -1260,25 +1314,9 @@ class AmqpBatchRead(cfg: AmqpSourceConfig,
   require(pushed.isEmpty || offset == 0,
     "pushed predicates cannot combine with a pushed offset")
 
-  /** startingTimestamp[Micros] on a transport WITHOUT the timestamp
-    * probe (any third-party broker lacking the x-graft attach
-    * extension): the contract must not silently degrade to the full
-    * backlog — instead the spans stay full and every reader applies an
-    * exact `ingest_timestamp >= T` degrade filter, so no pre-start
-    * message is ever returned (it is still fetched: without a ledger
-    * probe nothing can prune the wire). Exact-filter semantics, vs the
-    * probed path's position cut — see [[AmqpMicroBatchStream
-    * .initialOffset]] for the straggler divergence under non-monotone
-    * timestamps. Decided once per scan with a single full-range
-    * probe. */
-  private lazy val degradeTsLo: Option[Long] = cfg.startingTimestampMicros.filter { _ =>
-    AmqpEndpointRegistry.endpoint(cfg.endpoint)
-      .timestampWindow(cfg.addresses.head, Long.MinValue, Long.MaxValue).isEmpty
-  }
-  private lazy val effFilters: AmqpPushedFilters = degradeTsLo match {
-    case Some(t) => pushed.copy(tsLoMicros = math.max(pushed.tsLoMicros, t))
-    case None => pushed
-  }
+  private val planner = new AmqpScanPlanner(cfg)
+  // the probe-less startingTimestamp degrade, decided once per scan
+  private lazy val effFilters: AmqpPushedFilters = planner.readerFilters(pushed)
 
   override def planInputPartitions(): Array[InputPartition] = {
     val b = AmqpEndpointRegistry.endpoint(cfg.endpoint)
@@ -1308,7 +1346,7 @@ class AmqpBatchRead(cfg: AmqpSourceConfig,
     // would count fetched rows, not survivors — so spans stay full and
     // the readers stop at `limit` surviving rows (partial limit push).
     val exactWindows = effFilters.isEmpty
-    if (degradeTsLo.isDefined && (limit.isDefined || offset != 0))
+    if (planner.degradeTsLo.isDefined && (limit.isDefined || offset != 0))
       // the builder accepted the limit/offset as an EXACT push (it
       // cannot see the degrade, which is decided at planning time) —
       // Spark may therefore have dropped its own limit, and survivor
@@ -1330,28 +1368,11 @@ class AmqpBatchRead(cfg: AmqpSourceConfig,
       // is fetched
       val latest = math.min(b.latestSeq(a),
         cfg.endingSequences.getOrElse(a, Long.MaxValue))
-      // startingTimestamp[Micros] positions batch reads too (Kafka's
-      // startingOffsetsByTimestamp applies to batch queries, so must
-      // this): the span begins at the first in-bound sequence — the
-      // probe's no-match answer is the ledger-head-anchored empty
-      // window, so `fromExclusive` is the start in every case, from
-      // one atomic broker snapshot. A position cut, not a row filter —
-      // every planned row is fetched, so the limit/offset arithmetic
-      // below stays exact.
-      val startFloor = cfg.startingSequences.get(a) match {
-        // positional start on a batch read: the position cut clamped to
-        // the replayable floor (a batch read is a browse — rows below
-        // the floor are gone for everyone; there is no checkpoint whose
-        // loss failOnDataLoss could report)
-        case Some(n) => math.max(floor, n)
-        case None => cfg.startingTimestampMicros match {
-          case Some(t) => b.timestampWindow(a, t, Long.MaxValue) match {
-            case Some((fromExclusive, _)) => math.max(floor, fromExclusive)
-            case None => floor // no probe: full span + reader degrade filter
-          }
-          case None => floor
-        }
-      }
+      // startingSequence[s]/startingTimestamp position batch reads too
+      // (Kafka's startingOffsetsByTimestamp applies to batch queries). A
+      // position cut, not a row filter — every planned row is fetched,
+      // so the limit/offset arithmetic below stays exact.
+      val startFloor = planner.startAnchor(b, a, floor, clampPosition = true)
       // Intersect the replayable span (startFloor, latest] with the
       // pushed timestamp window, when the endpoint can answer the probe.
       val (from0, to0) = tsWin(a) match {
@@ -1364,19 +1385,11 @@ class AmqpBatchRead(cfg: AmqpSourceConfig,
       val skip = math.min(take, toSkip)
       toSkip -= skip
       if (take - skip <= 0) None
-      else {
-        // bounded sub-partitions over the final (from, to] span
-        val from = from0 + skip
-        val to = from0 + take
-        Iterator.range(0L, to - from, cfg.maxRowsPerPartition).map { o =>
-          AmqpInputPartition(cfg.endpoint, a, from + o,
-            math.min(from + o + cfg.maxRowsPerPartition, to)): InputPartition
-        }
-      }
+      else planner.slices(a, from0 + skip, from0 + take)
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new AmqpReaderFactory(fields, effFilters, cfg.propertyColumns, cfg.fetchChunkRows,
+    planner.readerFactory(fields, effFilters,
       // partial limit push: each reader stops at `limit` survivors
       // (Spark's retained limit performs the global cut)
       survivorLimit = if (effFilters.isEmpty) None else limit)
@@ -1410,11 +1423,11 @@ class AmqpReaderFactory(fields: Array[String] = AmqpEnvelope.schema.fieldNames,
   * The bounded handoff the reference needed between the Vert.x event
   * loop and Receiver.store (AMQPFlowController.scala:159-161) is
   * structural here: the reader pulls the planned slice in `chunkRows`
-  * chunks, each one credit grant. On a socket endpoint a chunk is an
-  * [[Amqp10Endpoint.drain]] that decodes one delivery per `next()`, so
-  * the heap holds the socket buffer, not a decoded chunk; on `mem://`
-  * it is one fetch (the memory bound that lets a batch sub-partition
-  * stay large without the reader materializing it whole).
+  * chunks, each one credit grant and one [[AmqpEndpoint.drain]]. On a
+  * socket endpoint the drain decodes one delivery per `next()`, so the
+  * heap holds the socket buffer, not a decoded chunk; on `mem://` it is
+  * one fetch (the memory bound that lets a batch sub-partition stay
+  * large without the reader materializing it whole).
   *
   * `survivorLimit` is the partial-LIMIT-push contract: with pushed
   * predicates the planner cannot pre-cut windows, so the reader stops
@@ -1448,7 +1461,7 @@ class AmqpPartitionReader(p: AmqpInputPartition, fields: Array[String],
   // where indexed access turns the scan O(n²). Measured: 40k messages
   // took 5.4s via messages(idx), 14ms via iterator.
   private var nextFrom = p.fromExclusive
-  private var chunk: Iterator[(Long, AmqpMessage, Long)] = Iterator.empty
+  private var chunk: Iterator[(Long, AmqpMessage, Long)] with AutoCloseable = _
   private var cur: (Long, AmqpMessage, Long) = _
   private val unfiltered = pushed.isEmpty
   private var survivors = 0L
@@ -1473,18 +1486,17 @@ class AmqpPartitionReader(p: AmqpInputPartition, fields: Array[String],
       val to = if (nextFrom > p.toInclusive - chunkRows) p.toInclusive
                else nextFrom + chunkRows
       chunk =
-        try endpointConn match {
-          case c: Amqp10Endpoint => c.drain(p.address, nextFrom, to)
-          case ep => ep.fetch(p.address, nextFrom, to).iterator
-        } catch { case e: Throwable => fetchFailed = true; throw e }
+        try endpointConn.drain(p.address, nextFrom, to)
+        catch { case e: Throwable => fetchFailed = true; throw e }
       nextFrom = to
     }
     false
   }
 
-  // a drain reads the wire inside hasNext
+  // a drain may read the wire inside hasNext
   private def hasNextInChunk: Boolean =
-    try chunk.hasNext catch { case e: Throwable => fetchFailed = true; throw e }
+    try chunk != null && chunk.hasNext
+    catch { case e: Throwable => fetchFailed = true; throw e }
 
   // Column-name → accessor tag resolved ONCE per reader (by NAME, so
   // the mapping cannot drift if the schema order changes); the row loop
@@ -1569,10 +1581,7 @@ class AmqpPartitionReader(p: AmqpInputPartition, fields: Array[String],
   }
 
   override def close(): Unit = {
-    chunk match {
-      case d: Amqp10Endpoint#Drain => d.close()
-      case _ => ()
-    }
+    if (chunk != null) chunk.close()
     if (fetchFailed)
       AmqpEndpointRegistry.discardReaderEndpoint(p.endpoint, endpointConn)
     else

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
 /** SHARED SUBSCRIPTION (competing consumers) — the work-sharing dispatch
   * mode the single-consumer source cannot express: N consuming streams
@@ -44,6 +44,10 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
   * Owner identity = the query's checkpoint location: stable across
   * restarts, unique per query, requiring no broker-side registration.
   *
+  * Admission (read limits, min-rows hold, rate budget, per-link share),
+  * the partition cut and the reader factory come from the same
+  * [[AmqpScanPlanner]] as the default stream's.
+  *
   * Scale shape: claims are O(1) ledger arithmetic per trigger on the
   * driver (one RPC per address), slices split into bounded partitions
   * exactly like the default stream, and the broker holds per-group
@@ -56,16 +60,10 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 class AmqpSharedMicroBatchStream(cfg: AmqpSourceConfig, checkpointLocation: String,
     fields: Array[String] = AmqpEnvelope.schema.fieldNames,
     pushed: AmqpPushedFilters = AmqpPushedFilters())
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow with ReportsSourceMetrics {
+    extends AmqpPlannedStream(cfg, fields, pushed) {
 
   private val group = cfg.sharedGroup.get
   private val owner = checkpointLocation
-  private val rate = new AmqpRateBudget(cfg.maxPerSecond)
-  /** Injectable clock (nanos) so rate-limit admission is unit-testable. */
-  private[streaming] def nanoClock: () => Long = rate.nanoClock
-  private[streaming] def nanoClock_=(f: () => Long): Unit = rate.nanoClock = f
-  private def broker = AmqpEndpointRegistry.endpoint(cfg.endpoint)
 
   /** Targeted refusal, not support: "the data available now" is not a
     * well-defined per-consumer set under work-sharing — the group's
@@ -123,20 +121,6 @@ class AmqpSharedMicroBatchStream(cfg: AmqpSourceConfig, checkpointLocation: Stri
 
   override def deserializeOffset(json: String): Offset = AmqpSharedOffset.fromJson(json)
 
-  /** Same composite as the default stream: a min-rows floor (when
-    * configured) rides with the trigger cap, so trickle fleets batch up
-    * instead of claiming one row per trigger. */
-  override def getDefaultReadLimit: ReadLimit =
-    if (cfg.minPerTrigger > 0)
-      ReadLimit.compositeLimit(Array(
-        ReadLimit.minRows(cfg.minPerTrigger, cfg.maxTriggerDelayMillis),
-        ReadLimit.maxRows(cfg.maxPerTrigger)))
-    else ReadLimit.maxRows(cfg.maxPerTrigger)
-
-  /** Injectable wall clock for the maxTriggerDelay ceiling. */
-  private[streaming] var wallClock: () => Long = () => System.currentTimeMillis()
-  private var lastTriggerMillis = 0L
-
   override def latestOffset(): Offset = throw new IllegalStateException(
     "shared subscription plans through the admission-control path")
 
@@ -160,39 +144,21 @@ class AmqpSharedMicroBatchStream(cfg: AmqpSourceConfig, checkpointLocation: Stri
     val addrs = subscribed
     if (addrs.isEmpty) return s // pattern matches nothing yet: no batch
     assertPolicy(addrs)
-    val limits: Seq[ReadLimit] = limit match {
-      case c: org.apache.spark.sql.connector.read.streaming.CompositeReadLimit =>
-        c.getReadLimits.toSeq
-      case l => Seq(l)
-    }
-    val triggerCap = limits.collectFirst {
-      case rl: org.apache.spark.sql.connector.read.streaming.ReadMaxRows => rl.maxRows()
-    }.getOrElse(Long.MaxValue)
-    // min-rows floor (minMessagesPerTrigger + maxTriggerDelay): below
-    // the floor and inside the delay window, CLAIM NOTHING — what this
-    // consumer leaves unclaimed stays dispatchable to the rest of the
-    // group, so holding back is free fleet-wide. "Available" here is the
-    // group's dispatchable volume (undispatched backlog + redeliveries),
-    // one ledger-snapshot RPC per address.
-    limits.collectFirst {
-      case rl: org.apache.spark.sql.connector.read.streaming.ReadMinRows => rl
-    }.foreach { m =>
-      val available = addrs.map { a =>
+    // A held trigger CLAIMS NOTHING — what this consumer leaves unclaimed
+    // stays dispatchable to the rest of the group, so holding back is
+    // free fleet-wide; likewise a rate-limited consumer claims at most
+    // its budget. "Available" here is the group's dispatchable volume
+    // (undispatched backlog + redeliveries), one ledger-snapshot RPC per
+    // address.
+    val perLink = planner.admit(limit, addrs.length) {
+      addrs.map { a =>
         val st = broker.groupStats(a, group)
         math.max(0L, st.headSeq - st.dispatchedUpTo) + st.redeliverableRows
       }.sum
-      val now = wallClock()
-      if (lastTriggerMillis == 0L) lastTriggerMillis = now
-      if (available < m.minRows && now - lastTriggerMillis < m.maxTriggerDelayMs)
-        return s
-      lastTriggerMillis = now
+    } match {
+      case Some(n) => n
+      case None => return s
     }
-    // maxMessagesPerSecond caps the CLAIM, same budget arithmetic as the
-    // default stream — a rate-limited shared consumer claims at most its
-    // budget, so unclaimed backlog stays dispatchable to the group
-    val cap = math.min(triggerCap, rate.budget())
-    // equal share per link, like the default stream's budget split
-    val perLink = math.max(1L, cap / addrs.length)
     val claims = addrs.flatMap { a =>
       broker.claim(a, group, owner, perLink, cfg.sharedLeaseMillis).map(a -> _)
     }
@@ -220,17 +186,8 @@ class AmqpSharedMicroBatchStream(cfg: AmqpSourceConfig, checkpointLocation: Stri
           "sharedLeaseMillis above the restart gap and restart from a fresh " +
           "checkpoint.")
     }
-    e.claims.flatMap { case (a, c) =>
-      // bounded sub-partitions, same cut as the default stream
-      Iterator.range(0L, c.rows, cfg.maxRowsPerPartition).map { o =>
-        AmqpInputPartition(cfg.endpoint, a, c.fromExclusive + o,
-          math.min(c.fromExclusive + o + cfg.maxRowsPerPartition, c.toInclusive)): InputPartition
-      }
-    }.toArray
+    e.claims.flatMap { case (a, c) => planner.slices(a, c.fromExclusive, c.toInclusive) }.toArray
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AmqpReaderFactory(fields, pushed, cfg.propertyColumns, cfg.fetchChunkRows)
 
   /** Settle-after-durable-commit, per claim: batch N's offset carries
     * exactly batch N's claims, so nothing is missed or double-counted
@@ -242,8 +199,6 @@ class AmqpSharedMicroBatchStream(cfg: AmqpSourceConfig, checkpointLocation: Stri
     }
     settledClaimsTotal.addAndGet(e.claims.size.toLong)
   }
-
-  override def stop(): Unit = ()
 }
 
 /** Offset of one shared-subscription micro-batch: the claims the batch

@@ -61,13 +61,6 @@ object AmqpFlowController {
   val CreditsThreshold: Long = CreditsDefault * 50 / 100
 }
 
-/** The endpoint surface the Spark source/sink drive — the operations an
-  * AMQP peer provides once the wire protocol is stripped away: ordered
-  * sequence-numbered delivery, credit-gated sends, prefix settlement,
-  * and transactional staged publish. Implemented in-process by
-  * [[InMemoryAmqpBroker]] and over an AMQP 1.0 socket by
-  * [[graft.streaming.Amqp10Endpoint]] (same semantics, remote broker).
-  */
 /** A work-sharing lease (shared subscription): a contiguous slice
   * (fromExclusive, toInclusive] of one address's backlog dispatched to
   * one consumer of a share group, alive until settled or lease-expired. */
@@ -87,6 +80,13 @@ case class AmqpGroupStats(headSeq: Long, dispatchedUpTo: Long,
     outstandingClaims: Long, outstandingRows: Long,
     redeliverableRows: Long) extends Serializable
 
+/** The endpoint surface the Spark source/sink drive — the operations an
+  * AMQP peer provides once the wire protocol is stripped away: ordered
+  * sequence-numbered delivery, credit-gated sends, prefix settlement,
+  * and transactional staged publish. Implemented in-process by
+  * [[InMemoryAmqpBroker]] and over an AMQP 1.0 socket by
+  * [[graft.streaming.Amqp10Endpoint]] (same semantics, remote broker).
+  */
 trait AmqpEndpoint {
   def send(address: String, msg: AmqpMessage,
       timestampMicros: Long = System.currentTimeMillis() * 1000L): Long
@@ -101,6 +101,32 @@ trait AmqpEndpoint {
     * callers resume from the first refusal after draining. */
   def sendMany(address: String, msgs: Seq[(AmqpMessage, Long)]): Seq[Long] =
     msgs.map { case (m, ts) => send(address, m, ts) }
+
+  /** Produce every message of `msgs`, in order, to an address this
+    * caller also consumes: [[sendMany]] in batches of 500 under the
+    * 1000-credit window. Consuming replenishes credit, so on a refusal
+    * the delivered prefix is fetched and sending resumes at the first
+    * refused message. A refusal must be a strict SUFFIX of its batch
+    * (the credit contract): resuming would re-send an accepted message
+    * after it, so that fails loudly instead of enqueueing it twice. */
+  def sendAll(address: String, msgs: Seq[(AmqpMessage, Long)]): Unit = {
+    var i = 0
+    var fetchedUpTo = 0L
+    while (i < msgs.length) {
+      val slice = msgs.slice(i, math.min(i + 500, msgs.length))
+      val seqs = sendMany(address, slice)
+      val refusedAt = seqs.indexWhere(_ < 0)
+      if (refusedAt < 0) i += slice.length
+      else {
+        require(seqs.drop(refusedAt).forall(_ < 0),
+          s"non-suffix credit refusal at $refusedAt: $seqs")
+        i += refusedAt
+        val to = latestSeq(address)
+        fetch(address, fetchedUpTo, to)
+        fetchedUpTo = to
+      }
+    }
+  }
   def latestSeq(address: String): Long
 
   /** Planning-time probe behind the scan's timestamp-predicate pushdown:
@@ -127,6 +153,21 @@ trait AmqpEndpoint {
     * queues would read an empty table forever). */
   def listAddresses(pattern: String): Option[Seq[String]] = None
   def fetch(address: String, fromExclusive: Long, toInclusive: Long): Seq[(Long, AmqpMessage, Long)]
+
+  /** The slice (fromExclusive, toInclusive] as an iterator the caller
+    * closes when done, read to its end or not: the partition readers'
+    * one read surface. The default reads the slice whole with [[fetch]];
+    * a socket transport overrides it to decode one delivery per
+    * `next()` (see [[Amqp10Endpoint.drain]]). */
+  def drain(address: String, fromExclusive: Long,
+      toInclusive: Long): Iterator[(Long, AmqpMessage, Long)] with AutoCloseable =
+    new Iterator[(Long, AmqpMessage, Long)] with AutoCloseable {
+      private val it = fetch(address, fromExclusive, toInclusive).iterator
+      def hasNext: Boolean = it.hasNext
+      def next(): (Long, AmqpMessage, Long) = it.next()
+      def close(): Unit = ()
+    }
+
   def settle(address: String, upTo: Long): Unit
   def settledUpTo(address: String): Long
 

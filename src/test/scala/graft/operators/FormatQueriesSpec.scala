@@ -45,15 +45,12 @@ class FormatQueriesSpec extends SparkSpecBase {
       .as[(String, Long, Long, Double, Long)].collect().toSet
     assert(got == direct, "zstd round-trip corrupted values")
     def dirSize(tag: String): Long = {
-      val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_fmt_${tag}_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
+      val dir = java.nio.file.Paths.get(FormatQueries.scratch(sfDir, tag))
       java.nio.file.Files.walk(dir).filter(p =>
         p.toString.endsWith(".parquet")).mapToLong(p =>
         java.nio.file.Files.size(p)).sum()
     }
-    val snappy = spark.read.parquet(java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_fmt_snappy_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}").toString)
+    val snappy = spark.read.parquet(FormatQueries.scratch(sfDir, "snappy"))
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     val viaSnappy = snappy.groupBy(col("l_returnflag"))
@@ -72,8 +69,7 @@ class FormatQueriesSpec extends SparkSpecBase {
       .as[(String, Long, Long, Double, Long)].collect().toSet
     assert(got == direct, "compaction corrupted values")
     def files(tag: String): Seq[java.nio.file.Path] = {
-      val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_fmt_${tag}_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
+      val dir = java.nio.file.Paths.get(FormatQueries.scratch(sfDir, tag))
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala
         .filter(_.toString.endsWith(".parquet")).toSeq
@@ -338,8 +334,7 @@ class FormatQueriesSpec extends SparkSpecBase {
       .collect().map(_.getLong(1)).sum
     assert(kept == total - planted,
       s"DROPMALFORMED kept $kept of $total with $planted planted bad rows")
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_fmt_csvmal_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}").toString
+    val dir = FormatQueries.scratch(sfDir, "csvmal")
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("source", StringType), StructField("n_chars", LongType)))
     // PERMISSIVE: every line survives, the damage becomes nulls
@@ -368,8 +363,7 @@ class FormatQueriesSpec extends SparkSpecBase {
       .as[(Long, String, String, Long)].collect().map(_._1).toSet
     assert(got == FormatQueries.BloomProbeKeys.toSet, s"probe lost rows: $got")
     // open the written file with the parquet-hadoop API
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_fmt_bloom_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
+    val dir = java.nio.file.Paths.get(FormatQueries.scratch(sfDir, "bloom"))
     val file = java.nio.file.Files.list(dir).iterator().asScala
       .map(_.toString).filter(_.endsWith(".parquet")).toSeq match {
         case Seq(one) => one
